@@ -50,25 +50,36 @@ from rastr_spark.sources.documents import generate_documents
 from rastr_spark.tiles import RasterFrame
 
 # Oracle artifacts (Spark-materialized inputs the DuckDB twins replay from) live
-# under a PER-PROCESS directory by default: queries() and oracle_sql() are served
-# from the same module import, so the paths agree within a harness run, while
-# concurrent harness runs can never overwrite each other's artifacts
-# mid-comparison. A harness that runs the Spark queries and the DuckDB oracles in
-# SEPARATE processes must point both at the same dir via
-# RASTR_SPARK_ORACLE_ART_DIR (the per-PID default would otherwise diverge).
+# under ONE fixed directory by default, so oracle_sql() is byte-stable across
+# processes and a harness that runs the Spark queries and the DuckDB oracles in
+# separate processes finds the same paths. Concurrent harness runs must each
+# point RASTR_SPARK_ORACLE_ART_DIR at their own dir, or they overwrite each
+# other's artifacts mid-comparison.
+import atexit as _atexit
+import functools as _functools
 import os as _os
+import shutil as _shutil
 import tempfile as _tempfile
 
 _ORACLE_ART_DIR = _os.environ.get("RASTR_SPARK_ORACLE_ART_DIR") or _os.path.join(
-    _tempfile.gettempdir(), f"rastr_spark_oracle_{_os.getpid()}"
+    _tempfile.gettempdir(), "rastr_spark_oracle"
 )
 
-# the per-PID suffix means no later run overwrites these — without cleanup every
-# harness invocation would permanently leak its parquet artifacts into /tmp
-import atexit as _atexit
-import shutil as _shutil
 
-_atexit.register(lambda: _shutil.rmtree(_ORACLE_ART_DIR, ignore_errors=True))
+@_functools.cache
+def _remove_art_dir_at_exit() -> None:
+    _atexit.register(_shutil.rmtree, _ORACLE_ART_DIR, ignore_errors=True)
+
+
+def _art(name: str) -> str:
+    """Path of oracle artifact ``name``, for a query about to write it. Only a
+    process that writes artifacts removes the directory at exit — one that
+    merely imports this module (e.g. to read oracle_sql()) must not delete
+    another process's inputs; without the cleanup every writing run would leak
+    its parquet artifacts into the temp dir."""
+    _remove_art_dir_at_exit()
+    return f"{_ORACLE_ART_DIR}/{name}"
+
 
 GRID = 64
 CELL = 8.0
@@ -451,7 +462,7 @@ def _q_ngram_jaccard_fast(spark, sf_dir):
     threshold) independently in SQL."""
     d = _read(spark, sf_dir, "documents")
     grams = D.hashed_grams(d, n=3)
-    path = f"{_ORACLE_ART_DIR}/jaccard_grams"
+    path = _art("jaccard_grams")
     grams.write.mode("overwrite").parquet(path)
     g2 = spark.read.parquet(path)
     out = D.jaccard_pairs_from_grams(g2, threshold=0.5, max_doc_freq=_JACCARD_MAX_DF)
@@ -607,7 +618,7 @@ def _q_dedup_incremental(spark, sf_dir):
     signatures — the indexed corpus is never re-shingled. md5 hash family so
     DuckDB replays the banding bit-for-bit (production default xxhash64)."""
     idx_docs = _fuzzy_corpus(spark, sf_dir)
-    index_dir = f"{_ORACLE_ART_DIR}/dedup_index"
+    index_dir = _art("dedup_index")
     D.build_dedup_index(
         idx_docs, index_dir=index_dir, n=3, num_hashes=8, bands=4,
         threshold=0.5, hash_family="md5",
@@ -870,7 +881,7 @@ def _q_minhash_fast(spark, sf_dir):
     everything downstream of the hash function is independently verified."""
     d = _read(spark, sf_dir, "documents")
     sig = D.minhash_signatures_df(d, n=3, num_hashes=8, hash_family="xxhash64")
-    path = f"{_ORACLE_ART_DIR}/minhash_sigs"
+    path = _art("minhash_sigs")
     sig.write.mode("overwrite").parquet(path)
     sig2 = spark.read.parquet(path)
     b = D.lsh_buckets_from_signatures(sig2, num_hashes=8, bands=4, hash_family="xxhash64")
@@ -905,7 +916,7 @@ def _q_simhash_hamming(spark, sf_dir):
         (F.col("doc_id") + 200000).alias("doc_id"), F.concat("text", F.lit(" zzqx")).alias("text")
     )
     sh = D.simhash_table(d.unionByName(flipped))
-    path = f"{_ORACLE_ART_DIR}/simhash_planted"
+    path = _art("simhash_planted")
     sh.write.mode("overwrite").parquet(path)
     sh2 = spark.read.parquet(path)
     return D.simhash_hamming_pairs_from_table(sh2, max_hamming=3, bands=4).select(
@@ -1294,7 +1305,6 @@ WHERE (x > 10 AND x < 100 AND y > 10 AND y < 80)
 
 # -- flagship: oracled via a materialized doc table --------------------------
 
-_FLAGSHIP_DOCS_PATH = f"{_ORACLE_ART_DIR}/flagship_docs"
 _FLAGSHIP_N_DOCS = 2000
 
 
@@ -1311,8 +1321,9 @@ def _q_flagship(spark, sf_dir):
         spark, _FLAGSHIP_N_DOCS, seed=42, n_tile_rows=META.n_tile_rows,
         n_tile_cols=META.n_tile_cols, raster_id="li", world_size=WORLD,
     )
-    docs.write.mode("overwrite").parquet(_FLAGSHIP_DOCS_PATH)
-    docs = spark.read.parquet(_FLAGSHIP_DOCS_PATH)
+    path = _art("flagship_docs")
+    docs.write.mode("overwrite").parquet(path)
+    docs = spark.read.parquet(path)
     zones = [(zid, Geometry.box(*bb)) for zid, bb in _ZONES]
     out = doc_zonal_stats(docs, rf, zones, salt_threshold=200)
     # mean is NOT rounded: sums and counts are exact integers in doubles, so the
@@ -1325,7 +1336,7 @@ def _q_flagship(spark, sf_dir):
 
 
 _ORACLE_FLAGSHIP = f"""
-WITH docs AS (SELECT * FROM read_parquet('{_FLAGSHIP_DOCS_PATH}/*.parquet')),
+WITH docs AS (SELECT * FROM read_parquet('{_ORACLE_ART_DIR}/flagship_docs/*.parquet')),
 s AS (SELECT doc_id, unnest(spans) AS sp FROM docs),
 refs AS (
   SELECT doc_id,
@@ -1371,7 +1382,7 @@ def _q_simhash(spark, sf_dir):
     (id, simhash) artifact: DuckDB replays the grouping/count/min + HAVING
     independently — everything but the xxhash64-based fingerprint itself."""
     sh = D.simhash_table(_dup_docs(spark, sf_dir))
-    path = f"{_ORACLE_ART_DIR}/simhash_dups"
+    path = _art("simhash_dups")
     sh.write.mode("overwrite").parquet(path)
     sh2 = spark.read.parquet(path)
     return D.simhash_groups_from_table(sh2).select("simhash", "n", "canonical_id")
@@ -1439,9 +1450,6 @@ WHERE rank <= 5
 """
 
 
-_IVF_CENTROIDS_PATH = f"{_ORACLE_ART_DIR}/ivf_centroids"
-
-
 def _q_ivf_topk(spark, sf_dir):
     """IVF top-k with a DuckDB twin (the flagship-oracle pattern): the trained
     centroid matrix — the INDEX artifact — is materialized to parquet, and the
@@ -1461,7 +1469,7 @@ def _q_ivf_topk(spark, sf_dir):
     ]
     spark.createDataFrame(rows, "cid int, pos int, w double").coalesce(1).write.mode(
         "overwrite"
-    ).parquet(_IVF_CENTROIDS_PATH)
+    ).parquet(_art("ivf_centroids"))
     out = S.ivf_topk(e, qs, 5, nprobe=5, n_assign=2, centroids=cents)
     return out.select("query_id", "vec_id", "rank", F.round("score", 6).alias("score"))
 
@@ -1472,7 +1480,7 @@ def _q_ivf_topk(spark, sf_dir):
 # require two cosines equal to within ~1 ulp, which real embeddings do not
 # produce; all deliberate ties break on integer ids in both engines.
 _ORACLE_IVF = f"""
-WITH cent AS (SELECT * FROM read_parquet('{_IVF_CENTROIDS_PATH}/*.parquet')),
+WITH cent AS (SELECT * FROM read_parquet('{_ORACLE_ART_DIR}/ivf_centroids/*.parquet')),
 comps AS (
   SELECT vec_id, unnest(range(0, len(embedding))) AS pos, unnest(embedding)::double AS x
   FROM embeddings
@@ -1531,7 +1539,7 @@ def _q_contour(spark, sf_dir):
 
     rf = _lineitem_raster(spark, sf_dir)
     seg = contour_segments(rf, [200.0, 400.0])
-    path = f"{_ORACLE_ART_DIR}/contour_segments"
+    path = _art("contour_segments")
     seg.write.mode("overwrite").parquet(path)
     s = spark.read.parquet(path)
 
@@ -1789,7 +1797,7 @@ def _q_multimodal_features(spark, sf_dir):
     still runs the PRODUCTION mapInPandas path end-to-end."""
     media = synthesize_media(spark, 300)
     decoded_pixels(media, fake_decode=True).write.mode("overwrite").parquet(
-        f"{_ORACLE_ART_DIR}/media_pixels"
+        _art("media_pixels")
     )
     feats = image_features(media, grid=4, fake_decode=True)
     return feats.select(
@@ -1831,7 +1839,7 @@ def _q_png_features(spark, sf_dir):
     all hash-checked."""
     media = synthesize_media_lossless(spark, 200)
     decoded_pixels(media, fake_decode=False).write.mode("overwrite").parquet(
-        f"{_ORACLE_ART_DIR}/png_pixels"
+        _art("png_pixels")
     )
     feats = image_features(media, grid=4, fake_decode=False)
     return feats.select(
@@ -1870,7 +1878,7 @@ def _q_wav_features(spark, sf_dir):
     compared values at all."""
     media = synthesize_media_lossless(spark, 200)
     decoded_samples(media, 2048, fake_decode=False).write.mode("overwrite").parquet(
-        f"{_ORACLE_ART_DIR}/wav_pcm"
+        _art("wav_pcm")
     )
     feats = audio_features(media, n_windows=8, window_samples=256, fake_decode=False)
     return feats.select("media_id", F.posexplode("feature")).select(
@@ -1915,7 +1923,7 @@ def _q_media_neardup(spark, sf_dir):
         F.concat(F.lit("dup-"), "media_id").alias("media_id"), "kind", "payload", "meta"
     )
     feats = image_features(media.unionByName(dups), grid=4, fake_decode=True)
-    path = f"{_ORACLE_ART_DIR}/media_features"
+    path = _art("media_features")
     feats.write.mode("overwrite").parquet(path)
     feats2 = spark.read.parquet(path)
     pairs = S.embedding_near_dups(
@@ -2015,7 +2023,7 @@ def _q_streaming_dedup(spark, sf_dir):
     src = d.unionByName(dup).withColumn(
         "ts", F.timestamp_seconds(F.lit(_STREAM_EPOCH) + F.col("doc_id") % 300)
     )
-    path = f"{_ORACLE_ART_DIR}/stream_dedup_src"
+    path = _art("stream_dedup_src")
     src.repartition(4).write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema("doc_id bigint, text string, ts timestamp").parquet(path)
     out = streaming_dedup_exact(stream, text_col="text", ts_col="ts", watermark="10 minutes")
@@ -2096,7 +2104,7 @@ def _q_streaming_window_stats(spark, sf_dir):
         (F.col("l_suppkey") % 512).cast("int").alias("col"),
         F.col("l_quantity").cast("double").alias("value"),
     )
-    path = f"{_ORACLE_ART_DIR}/stream_updates_src"
+    path = _art("stream_updates_src")
     src.repartition(4).write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema("ts timestamp, row int, col int, value double").parquet(path)
     stats = windowed_tile_stats(stream, tile_size=256, window="1 minute", watermark="2 minutes")
@@ -2142,7 +2150,7 @@ def _q_streaming_neardup_index(spark, sf_dir):
 
     d = _read(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = d.filter(F.col("doc_id") % 2 == 0)
-    index_dir = f"{_ORACLE_ART_DIR}/stream_index"
+    index_dir = _art("stream_index")
     D.build_dedup_index(
         corpus, index_dir=index_dir, n=3, num_hashes=8, bands=4,
         threshold=0.8, hash_family="md5",
@@ -2152,7 +2160,7 @@ def _q_streaming_neardup_index(spark, sf_dir):
         F.concat("text", F.lit(" zzqx")).alias("text"),
     )
     stream_src = d.filter(F.col("doc_id") % 2 == 1).unionByName(planted)
-    path = f"{_ORACLE_ART_DIR}/stream_neardup_src"
+    path = _art("stream_neardup_src")
     stream_src.repartition(4).write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema("doc_id bigint, text string").parquet(path)
     hits = streaming_near_dup_hits_vs_index(

@@ -38,22 +38,13 @@ from .text import tokens, word_ngrams
 _FP_SEED = 0x5EED
 _FP_NAMES = ["_fp1", "_fp2", "_fpl"]
 
-# connected_components: edge count under which every per-round join broadcasts
-# its label/mapping side (labels ≤ 2·edges rows of ~24 bytes → ≤ ~50 MB built
-# relation at the bound). Verified near-dup edge sets are a tiny fraction of
-# corpus size, so corpora well past 10M docs stay under it; bigger graphs keep
-# the shuffle joins.
-CC_BROADCAST_MAX_EDGES = 1_000_000
-
 # connected_components: edge count under which the whole clustering runs as a
 # driver-local union-find over the (already materialized) edge list instead of
 # the distributed fixpoint loop. ≤ 16 MB of (u, v) longs cross to the driver
 # at the bound — the "tiny driver-bounded summary" class (hot-key tables,
 # centroid pulls) — replacing 3-5 small shuffle jobs whose per-job latency
 # dominates at this size. Verified near-dup edge sets are a minuscule
-# fraction of corpus size; graphs above the bound keep the distributed loop,
-# as does reliable (fenced) mode, whose per-round resume contract the
-# shortcut cannot honor.
+# fraction of corpus size; graphs above the bound keep the distributed loop.
 CC_DRIVER_MAX_EDGES = 1_000_000
 
 # fuzzy pipeline: distinct-text count under which the fixed-width rep table
@@ -62,7 +53,7 @@ CC_DRIVER_MAX_EDGES = 1_000_000
 # the final assignment join, so the text-bearing corpus is never shuffled by
 # either (guide §3.1: broadcast replaces a shuffle of the large side). Above
 # the bound both joins fall back to the shuffle plan. Same driver-known-count
-# gate pattern as CC_BROADCAST_MAX_EDGES.
+# gate pattern as CC_DRIVER_MAX_EDGES.
 REP_BROADCAST_MAX_ROWS = 2_000_000
 
 
@@ -516,7 +507,8 @@ def _minhash_sigs_arrow(th_df: DataFrame, *, n: int, num_hashes: int) -> DataFra
                 sig[i] = np.minimum.reduceat(xx_int(i, base).view(np.int64), seg)
             yield pd.DataFrame({"id": pdf["id"].to_numpy(), "sig": list(sig.T)})
 
-    return th_df.mapInPandas(kernel, "id long, sig array<bigint>")
+    id_type = th_df.schema["id"].dataType.simpleString()
+    return th_df.mapInPandas(kernel, f"id {id_type}, sig array<bigint>")
 
 
 def _distinct_window_hashes(th_df: DataFrame, window: int) -> DataFrame:
@@ -557,7 +549,8 @@ def _distinct_window_hashes(th_df: DataFrame, window: int) -> DataFrame:
                 out.append(np.unique(h).astype(np.int64))
             yield pd.DataFrame({"id": pdf["id"].to_numpy(), "ws": out})
 
-    return th_df.mapInPandas(kernel, "id long, ws array<bigint>")
+    id_type = th_df.schema["id"].dataType.simpleString()
+    return th_df.mapInPandas(kernel, f"id {id_type}, ws array<bigint>")
 
 
 def duplicated_window_stats(
@@ -904,8 +897,6 @@ def _cc_driver_local(edges: DataFrame, metrics: list | None = None) -> DataFrame
     tbl = edges.toArrow()
     u = tbl.column("u").to_numpy(zero_copy_only=False).astype(np.int64)
     v = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.int64)
-    if u.size == 0:
-        return spark.createDataFrame([], out_schema)
     nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
     ui, vi = inv[: u.size], inv[u.size:]
     parent = np.arange(nodes.size, dtype=np.int64)
@@ -1003,22 +994,25 @@ def connected_components(
     mid-clustering progress is observable/resumable (the north-rule lineage
     story applied to the one iterative operator).
 
-    Small graphs (edge count ≤ :data:`CC_DRIVER_MAX_EDGES`, non-reliable mode
-    only) skip the loop entirely: the materialized edge list is pulled to the
-    driver and clustered with a union-find whose labels are provably the same
-    min-node-id canonicals (:func:`_cc_driver_local`) — at that size the
-    loop's cost is per-job latency, not data.
+    Small graphs (edge count ≤ :data:`CC_DRIVER_MAX_EDGES`) skip the loop
+    entirely: the materialized edge list is pulled to the driver and clustered
+    with a union-find whose labels are provably the same min-node-id canonicals
+    (:func:`_cc_driver_local`) — at that size the loop's cost is per-job
+    latency, not data.
 
-    ``reliable_dir``: optional directory for RELIABLE per-round fences. The
-    default localCheckpoint state is fast but dies with its executor — fine
-    locally, but on a cluster a mid-loop executor loss fails the job. With a
-    directory, the edge list and every round's labels are parquet-fenced
-    instead: an executor loss recomputes from files, and a crashed DRIVER
-    resumes at the last committed round on re-invocation (the fuzzy plan's
-    stage fences resume BETWEEN stages; this resumes WITHIN the clustering
-    stage). The dir must be unique per (edge set, parameters) — stale label
-    tables from a different input would poison the resume; callers fold their
-    input fingerprint into the path (see plans.datapipe).
+    ``reliable_dir``: optional directory for RELIABLE fences. The default
+    localCheckpoint state is fast but dies with its executor — fine locally,
+    but on a cluster a mid-loop executor loss fails the job. With a directory,
+    the edge list is parquet-fenced, and so is every round's labels when the
+    graph is big enough to run the loop: an executor loss recomputes from
+    files, and a crashed DRIVER resumes at the last committed round on
+    re-invocation (the fuzzy plan's stage fences resume BETWEEN stages; this
+    resumes WITHIN the clustering stage). Below the bound the union-find runs
+    on the fenced edges in one driver step, so there is no round to resume;
+    the caller's stage fence commits its result. The dir must be unique per
+    (edge set, parameters) — stale label tables from a different input would
+    poison the resume; callers fold their input fingerprint into the path
+    (see plans.datapipe).
     """
     import time as _time
 
@@ -1035,16 +1029,9 @@ def connected_components(
         edges = edges.localCheckpoint(eager=True)
     # plan choice from the now-known edge count (the count is cheap — edges
     # is materialized): tiny graphs skip the distributed loop entirely
-    # (driver-local union-find, identical labels — see _cc_driver_local;
-    # never in reliable mode, whose per-round resume fences the loop
-    # provides). Below the broadcast bound, every per-round join broadcasts
-    # its label/mapping side, so no round ever shuffles the edge list — the
-    # loop's wide exchanges collapse to the quotient distinct + the basin
-    # groupBy. Above it (cluster-scale graphs), the shuffle joins stand.
-    n_edges = edges.count()
-    if not reliable and n_edges <= CC_DRIVER_MAX_EDGES:
+    # (driver-local union-find, identical labels — see _cc_driver_local)
+    if edges.count() <= CC_DRIVER_MAX_EDGES:
         return _cc_driver_local(edges, metrics=metrics)
-    _bc = (lambda df: F.broadcast(df)) if n_edges <= CC_BROADCAST_MAX_EDGES else (lambda df: df)
     nodes = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
@@ -1067,8 +1054,8 @@ def connected_components(
         t0 = _time.time()
         # quotient edges: one distinct row per adjacent basin pair
         e2 = (
-            edges.join(_bc(labels.select(F.col("node").alias("u"), F.col("comp").alias("cu"))), "u")
-            .join(_bc(labels.select(F.col("node").alias("v"), F.col("comp").alias("cv"))), "v")
+            edges.join(labels.select(F.col("node").alias("u"), F.col("comp").alias("cu")), "u")
+            .join(labels.select(F.col("node").alias("v"), F.col("comp").alias("cv")), "v")
             .select("cu", "cv")
             .filter(F.col("cu") != F.col("cv"))
             .distinct()
@@ -1094,7 +1081,7 @@ def connected_components(
                 # translate the hash-order component winners to min NODE ids:
                 # deterministic canonical labels, independent of the hash
                 roots = labels.groupBy("comp").agg(F.min("node").alias("_root"))
-                return labels.join(_bc(roots), "comp").select(
+                return labels.join(roots, "comp").select(
                     "node", F.col("_root").alias("comp")
                 )
             sym2 = e2.unionByName(e2.select(F.col("cv").alias("cu"), F.col("cu").alias("cv")))
@@ -1109,13 +1096,13 @@ def connected_components(
             # m is basin-sized (≪ nodes), so this join is cheap
             m = (
                 m.join(
-                    _bc(m.select(F.col("cu").alias("mv"), F.col("mv").alias("_mm"))),
+                    m.select(F.col("cu").alias("mv"), F.col("mv").alias("_mm")),
                     "mv",
                     "left",
                 )
                 .select("cu", F.coalesce("_mm", F.col("mv")).alias("mv"))
             )
-            labels = labels.join(_bc(m.withColumnRenamed("cu", "comp")), "comp", "left").select(
+            labels = labels.join(m.withColumnRenamed("cu", "comp"), "comp", "left").select(
                 "node", F.coalesce("mv", F.col("comp")).alias("comp")
             )
             if reliable:
@@ -1295,6 +1282,22 @@ def fuzzy_dedup_assign(
     ``cc_metrics``: optional list that receives the connected-components
     per-round telemetry dicts (see :func:`connected_components`).
     """
+    return _fuzzy_stages(
+        docs, key=key, n=n, num_hashes=num_hashes, bands=bands,
+        threshold=threshold, id_col=id_col, text_col=text_col,
+        hash_family=hash_family, max_iters=max_iters,
+        max_bucket_size=max_bucket_size, cc_metrics=cc_metrics,
+    )[3]
+
+
+def _fuzzy_stages(
+    docs: DataFrame, *, key: str, n: int, num_hashes: int, bands: int,
+    threshold: float, id_col: str, text_col: str, hash_family: str,
+    max_iters: int, max_bucket_size: int | None, cc_metrics: list | None,
+) -> tuple[list[str], DataFrame, DataFrame, DataFrame]:
+    """(keys, rep_min, reps, assign): the one-shot fuzzy stages shared by
+    :func:`fuzzy_dedup_assign` and :func:`build_dedup_index` — keying, rep
+    tables, verified edges, components, assignment."""
     keyed, keys = _group_keys(docs.select(id_col, text_col), text_col, key)
     # representatives WITH text (the LSH input): min-id row per distinct text.
     # rep_min is materialized once and (when small enough) broadcast, so the
@@ -1309,9 +1312,10 @@ def fuzzy_dedup_assign(
     # comp is an eager localCheckpoint (see connected_components): its storage
     # is GC-bounded by the result's lifetime, never a session-lifetime cache
     comp = connected_components(edges, max_iters=max_iters, metrics=cc_metrics)
-    return assign_canonical(
+    assign = assign_canonical(
         keyed, keys, rep_min, comp, id_col, broadcast_reps=bc_reps
     )
+    return keys, rep_min, reps, assign
 
 
 # ---------------------------------------------------------------------------
@@ -1349,16 +1353,11 @@ def build_dedup_index(
     Returns the canonical assignment DataFrame (read back from the index).
     """
     spark = docs.sparkSession
-    keyed, keys = _group_keys(docs.select(id_col, text_col), text_col, "fingerprint")
-    rep_min, reps, bc_reps = _rep_tables(keyed, keys, id_col)
-    edges = verified_near_dup_edges(
-        reps.select(id_col, text_col), n=n, num_hashes=num_hashes, bands=bands,
+    keys, rep_min, reps, assign = _fuzzy_stages(
+        docs, key="fingerprint", n=n, num_hashes=num_hashes, bands=bands,
         threshold=threshold, id_col=id_col, text_col=text_col,
-        hash_family=hash_family, max_bucket_size=max_bucket_size,
-    )
-    comp = connected_components(edges, max_iters=max_iters, metrics=cc_metrics)
-    assign = assign_canonical(
-        keyed, keys, rep_min, comp, id_col, broadcast_reps=bc_reps
+        hash_family=hash_family, max_iters=max_iters,
+        max_bucket_size=max_bucket_size, cc_metrics=cc_metrics,
     )
     assign.write.mode("overwrite").parquet(f"{index_dir}/canonical")
     canon = spark.read.parquet(f"{index_dir}/canonical")

@@ -8,11 +8,9 @@ One declarative plan over a raw document table:
 Every stage is an already-oracled operator (functions/text.py,
 functions/dedup.py). Execution shape: the annotation/filter/join stages are
 lazy Catalyst plans, but ``curate_corpus`` runs eager Spark jobs at CALL time
-in two places: the quality/lang-passing subset is localCheckpointed by default
-when the driver-known row bound permits (see ``materialize_passing`` /
-``MATERIALIZE_PASSING_MAX_ROWS`` — the dedup stack scans its input several
-times), and the fuzzy-dedup stage's connected-components loop runs a few
-small jobs to reach the label fixpoint (see connected_components), with the
+in two places: the annotated table is localCheckpointed (the dedup stack scans
+its input several times), and the fuzzy-dedup stage's connected-components
+step clusters the verified edges (see connected_components), with the
 resulting component table held in a GC-bounded localCheckpoint. Total cost is
 a handful of shuffles regardless of corpus size: one fingerprint-keyed
 groupBy for the exact pass (128-bit content fingerprints, never document
@@ -27,16 +25,6 @@ from pyspark.sql import functions as F
 
 from ..functions.dedup import fuzzy_dedup_assign
 from ..functions.text import doc_annotations
-
-# Ceiling for the auto (materialize_passing=None) localCheckpoint of the
-# passing subset. Below it the cut is a measured win (210k corpus A/B:
-# 16.8-20.6 s → 11.9-13.9 s) and the spilled copy is small next to the
-# pipeline's own shuffles; above it (~20M docs × ~KB text ≈ tens of GB) the
-# checkpoint pins roughly the whole corpus to executor storage, so the lazy
-# plan (re-reading the columnar source scan per consumer) is the correct
-# cluster-scale shape — same guard pattern as flagship's
-# BROADCAST_PARTIALS_MAX_ROWS.
-MATERIALIZE_PASSING_MAX_ROWS = 20_000_000
 
 
 def curate_corpus(
@@ -53,27 +41,14 @@ def curate_corpus(
     hash_family: str = "xxhash64",
     max_bucket_size: int | None = None,
     cc_metrics: list | None = None,
-    materialize_passing: bool | None = None,
-    input_rows_bound: int | None = None,
 ) -> DataFrame:
     """Per-doc curation decision table.
 
-    ``materialize_passing``: localCheckpoint the annotated table before the
-    fuzzy stage. The dedup pipeline scans its input several times (reps, LSH,
-    rep mapping) and the final keep-decision join reads the annotations again;
-    without the cut each scan re-executes the annotation expressions.
-    Interleaved A/B on the 210k bench corpus: 16.8-20.6 s → 11.9-13.9 s for
-    the original passing-subset cut (r5); r7 moves the cut above the filter
-    and fuses the annotation into one tokenization (doc_annotations — plan
-    shows 1 ``split`` instead of 11; the isolated annotation pass drops
-    1.2 → 0.9 s warm and no longer runs twice). Storage cost is the
-    annotated corpus spilled MEMORY_AND_DISK on executors. Default ``None`` =
-    size-aware auto: the cut is applied only when the driver-known
-    ``input_rows_bound`` (an upper bound on input rows — e.g. the shard
-    manifest's row count; callers that just built the corpus know it for free)
-    is at most ``MATERIALIZE_PASSING_MAX_ROWS``; with no bound supplied, auto
-    keeps the cut (single-node historical behavior — pass the bound, or
-    ``False``, on cluster-scale corpora). Explicit True/False always wins.
+    The annotated table is localCheckpointed (eagerly) before the fuzzy stage:
+    the dedup pipeline scans its input several times (reps, LSH, rep mapping)
+    and the final keep-decision join reads the annotations again, so without
+    the cut each scan would re-execute the annotation expressions. Storage
+    cost is the annotated corpus spilled MEMORY_AND_DISK on executors.
 
     Returns (doc_id, quality, lang, bpe_tokens, ws_tokens, canonical_id, keep):
 
@@ -99,17 +74,8 @@ def curate_corpus(
         F.col("_ann.bpe_tokens").alias("bpe_tokens"),
         F.col("_ann.ws_tokens").alias("ws_tokens"),
     )
-    if materialize_passing is None:
-        materialize_passing = (
-            input_rows_bound is None
-            or input_rows_bound <= MATERIALIZE_PASSING_MAX_ROWS
-        )
-    if materialize_passing:
-        # checkpoint the ANNOTATED table, not just the passing subset: the
-        # final keep-decision join consumes the annotations a second time, so
-        # checkpointing upstream of the filter halves the annotation work
-        # (the old cut still re-annotated every doc for the output join)
-        annotated = annotated.localCheckpoint(eager=True)
+    # annotate once for every later scan (210k-doc A/B: 16.8-20.6 s → 11.9-13.9 s)
+    annotated = annotated.localCheckpoint(eager=True)
     passing = annotated.filter(
         (F.col("quality") >= min_quality) & (F.col("lang").isin(list(langs)))
     ).select(id_col, text_col)

@@ -48,6 +48,12 @@ from ..tiles import RasterFrame
 # there, so the hint is dropped.
 BROADCAST_PARTIALS_MAX_ROWS = 10_000_000
 
+# Fraction of refs the hot-key pre-pass counts (seeded sample, counts scaled
+# back up): at 100 TB a full extra scan of the doc table just to find hot keys
+# is the dominant waste, and a tile at the salt threshold still appears
+# ~0.05·threshold times in the sample (thresholds are ≫ 1/fraction).
+SALT_SAMPLE_FRACTION = 0.05
+
 TILE_ZONE_PARTIAL_SCHEMA = T.StructType(
     [
         T.StructField("tile_row", T.IntegerType(), False),
@@ -145,21 +151,20 @@ def doc_zonal_stats(
     zones: Sequence[tuple[str, Geometry]],
     *,
     salt_threshold: int | None = None,
-    salt_sample_fraction: float | None = 0.05,
 ) -> DataFrame:
     """Flagship: per (zone_id, doc_id) zonal stats over each doc's referenced tiles.
 
     ``salt_threshold``: if set, a pre-pass counts media refs per tile; tiles above
     the threshold get a salt fan-out so the join's hot keys spread across
     ceil(count/threshold) reducers. The partials side replicates (it is the small
-    side per key — one row per (tile, zone)). The pre-pass runs on a sample
-    (``salt_sample_fraction``) so skew detection does not cost a full extra scan
-    of the doc table.
+    side per key — one row per (tile, zone)). The pre-pass counts a
+    ``SALT_SAMPLE_FRACTION`` sample of the refs, so skew detection does not cost
+    a full extra scan of the doc table.
     """
     refs = media_refs(docs).filter(F.col("raster_id") == rf.raster_id)
     partials = tile_zone_partials(rf, zones)
     return _join_refs_partials(
-        refs, partials, salt_threshold=salt_threshold, salt_sample_fraction=salt_sample_fraction,
+        refs, partials, salt_threshold=salt_threshold,
         partials_rows_bound=rf.meta.n_tile_rows * rf.meta.n_tile_cols * len(zones),
         n_zones=len(zones),
     )
@@ -170,38 +175,27 @@ def _join_refs_partials(
     partials: DataFrame,
     *,
     salt_threshold: int | None = None,
-    salt_sample_fraction: float | None = 0.05,
-    partials_rows_bound: int | None = None,
-    n_zones: int | None = None,
+    partials_rows_bound: int,
+    n_zones: int,
 ) -> DataFrame:
     """The flagship's skew-aware join + final agg, shared by the one-shot and
     checkpointed plans (the resumable variant is exactly the run that needs skew
     handling at scale).
 
-    ``salt_sample_fraction``: the hot-key pre-pass counts a deterministic-seed
-    SAMPLE of the refs instead of all of them (counts scaled back up). At 100 TB
-    a full extra scan of the doc table just to find hot keys is the dominant
-    waste — a 5% sample finds every tile hot enough to matter (a tile at the
-    salt threshold appears ~0.05·threshold times in the sample; thresholds are
-    ≫ 1/fraction). Set ``None`` for the exact pre-pass. Salting never affects
-    results, only key fan-out — equality is covered by the salted-vs-unsalted
-    tests either way.
+    The hot-key pre-pass counts a deterministic-seed ``SALT_SAMPLE_FRACTION``
+    sample of the refs. Salting never affects results, only key fan-out —
+    equality is covered by the salted-vs-unsalted tests.
 
     ``partials_rows_bound``: driver-known row bound of the partials side
     (n_tiles × n_zones — callers that hold the RasterMeta compute it for free).
     The explicit broadcast hint is applied only below
     ``BROADCAST_PARTIALS_MAX_ROWS``; above it (10⁶+ tiles × many zones) the
-    salted shuffle join runs instead. ``None`` keeps the hint (bound unknown —
-    the historical behavior for the checkpoint-resume path on already-
-    materialized tables, where the caller should pass the bound if known)."""
+    salted shuffle join runs instead."""
     if salt_threshold:
-        if salt_sample_fraction and salt_sample_fraction < 1.0:
-            sampled = refs.sample(fraction=salt_sample_fraction, seed=7)
-            counts = sampled.groupBy("tile_row", "tile_col").agg(
-                (F.count("*") / F.lit(salt_sample_fraction)).alias("count")
-            )
-        else:
-            counts = refs.groupBy("tile_row", "tile_col").count()
+        sampled = refs.sample(fraction=SALT_SAMPLE_FRACTION, seed=7)
+        counts = sampled.groupBy("tile_row", "tile_col").agg(
+            (F.count("*") / F.lit(SALT_SAMPLE_FRACTION)).alias("count")
+        )
         hot = counts.filter(F.col("count") > salt_threshold).select(
             "tile_row",
             "tile_col",
@@ -211,16 +205,15 @@ def _join_refs_partials(
         # not re-derived for the partials-side salt fan-out (.explain showed a
         # third full doc scan without this)
         hot = hot.cache()
-        if partials_rows_bound is not None and n_zones:
-            # the salt explode replicates each hot tile's n_zones partial rows
-            # n_salt times — the broadcast-size bound must include that fan-out
-            # or skewed refs could push the hinted side past the ceiling. hot
-            # is tiny and cached; one driver peek gives the EXACT fan-out.
-            hs = hot.agg(
-                F.count("*").alias("k"),
-                F.coalesce(F.sum("n_salt"), F.lit(0)).alias("s"),
-            ).collect()[0]
-            partials_rows_bound = partials_rows_bound + int(hs["s"] - hs["k"]) * n_zones
+        # the salt explode replicates each hot tile's n_zones partial rows
+        # n_salt times — the broadcast-size bound must include that fan-out
+        # or skewed refs could push the hinted side past the ceiling. hot
+        # is tiny and cached; one driver peek gives the EXACT fan-out.
+        hs = hot.agg(
+            F.count("*").alias("k"),
+            F.coalesce(F.sum("n_salt"), F.lit(0)).alias("s"),
+        ).collect()[0]
+        partials_rows_bound += int(hs["s"] - hs["k"]) * n_zones
         refs = refs.join(F.broadcast(hot), ["tile_row", "tile_col"], "left").withColumn(
             "salt",
             F.when(
@@ -245,9 +238,7 @@ def _join_refs_partials(
     # (see BROADCAST_PARTIALS_MAX_ROWS): below the bound the hint is a measured
     # 1.6× win; above it the hint would be the scale-killer, so the salted
     # shuffle join takes over.
-    broadcastable = (
-        partials_rows_bound is None or partials_rows_bound <= BROADCAST_PARTIALS_MAX_ROWS
-    )
+    broadcastable = partials_rows_bound <= BROADCAST_PARTIALS_MAX_ROWS
     right = F.broadcast(partials) if broadcastable else partials
     joined = refs.join(right, join_keys, "inner")
     return (
@@ -269,12 +260,8 @@ def flagship_query(
     zones: Sequence[tuple[str, Geometry]],
     *,
     salt_threshold: int | None = 50_000,
-    salt_sample_fraction: float | None = 0.05,
 ) -> DataFrame:
-    return doc_zonal_stats(
-        docs, rf, zones,
-        salt_threshold=salt_threshold, salt_sample_fraction=salt_sample_fraction,
-    )
+    return doc_zonal_stats(docs, rf, zones, salt_threshold=salt_threshold)
 
 
 def flagship_checkpointed(
@@ -286,7 +273,6 @@ def flagship_checkpointed(
     ckpt_dir: str,
     input_fingerprint: str,
     salt_threshold: int | None = 50_000,
-    salt_sample_fraction: float | None = 0.05,
 ):
     """Flagship with per-stage checkpoint fences (north rule: "resumable mid-join").
 
@@ -322,7 +308,7 @@ def flagship_checkpointed(
         # checkpointed refs/partials tables keeps the skew fan-out
         return _join_refs_partials(
             refs_stage.df, partials_stage.df,
-            salt_threshold=salt_threshold, salt_sample_fraction=salt_sample_fraction,
+            salt_threshold=salt_threshold,
             partials_rows_bound=rf.meta.n_tile_rows * rf.meta.n_tile_cols * len(zones),
             n_zones=len(zones),
         )

@@ -196,59 +196,27 @@ class TestCheckpointedFuzzyDedup:
         assert "d" in out.columns
 
 
-class TestSizeAwareMaterialize:
-    """curate_corpus's passing-subset localCheckpoint is gated on a
-    driver-known row bound (VERDICT r4 'What's wrong' #1)."""
-
-    def _count_eager_localckpt(self, monkeypatch):
+class TestAnnotatedCheckpoint:
+    def test_curate_checkpoints_annotated_table_once(self, spark, monkeypatch):
+        """curate_corpus makes exactly one eager localCheckpoint of its own:
+        the annotated table, before the fuzzy stage reads it."""
         import pyspark.sql.classic.dataframe as _cdf
 
         calls = []
         orig = _cdf.DataFrame.localCheckpoint
 
         def spy(self, eager=True, storageLevel=None):
-            calls.append(bool(eager))
+            if sys._getframe(1).f_globals.get("__name__") == "rastr_spark.plans.datapipe":
+                calls.append((bool(eager), self.columns))
             if storageLevel is None:
                 return orig(self, eager=eager)
             return orig(self, eager=eager, storageLevel=storageLevel)
 
         monkeypatch.setattr(_cdf.DataFrame, "localCheckpoint", spy)
-        return calls
-
-    def _run(self, spark, **kw):
         docs = spark.createDataFrame(
             [(i, f"the quick brown fox number {i} jumps over the lazy dog repeatedly today") for i in range(12)],
             "doc_id long, text string",
         )
-        return curate_corpus(docs, min_quality=0.5, langs=("en",), **kw).count()
-
-    def test_bound_below_threshold_materializes(self, spark, monkeypatch):
-        calls = self._count_eager_localckpt(monkeypatch)
-        self._run(spark, input_rows_bound=12)
-        below = calls.count(True)
-        calls.clear()
-        self._run(spark, materialize_passing=False)
-        baseline = calls.count(True)
-        assert below == baseline + 1  # exactly the passing-subset cut added
-
-    def test_bound_above_threshold_skips_cut(self, spark, monkeypatch):
-        import rastr_spark.plans.datapipe as dp
-
-        calls = self._count_eager_localckpt(monkeypatch)
-        monkeypatch.setattr(dp, "MATERIALIZE_PASSING_MAX_ROWS", 5)
-        self._run(spark, input_rows_bound=12)  # bound exceeds patched ceiling
-        above = calls.count(True)
-        calls.clear()
-        self._run(spark, materialize_passing=False)
-        assert above == calls.count(True)  # auto == off above the ceiling
-
-    def test_explicit_flag_overrides_bound(self, spark, monkeypatch):
-        import rastr_spark.plans.datapipe as dp
-
-        calls = self._count_eager_localckpt(monkeypatch)
-        monkeypatch.setattr(dp, "MATERIALIZE_PASSING_MAX_ROWS", 5)
-        self._run(spark, input_rows_bound=12, materialize_passing=True)
-        forced = calls.count(True)
-        calls.clear()
-        self._run(spark, materialize_passing=False)
-        assert forced == calls.count(True) + 1
+        curate_corpus(docs, min_quality=0.5, langs=("en",)).count()
+        annotated = ["doc_id", "text", "quality", "lang", "bpe_tokens", "ws_tokens"]
+        assert calls == [(True, annotated)]

@@ -324,6 +324,29 @@ class TestDuplicatedWindows:
         assert fast == md5
 
 
+class TestIntIdColumn:
+    """The Arrow stages hand back the caller's id type: an ``int`` id column
+    comes back ``int`` with its values unchanged, never widened to ``long``."""
+
+    def _docs(self, spark):
+        return spark.createDataFrame(
+            [(i, f"shared body of words here for doc number {i % 3}") for i in range(6)],
+            "doc_id int, text string",
+        )
+
+    def test_minhash_signatures(self, spark):
+        sig = D.minhash_signatures_df(
+            self._docs(spark), n=3, num_hashes=8, hash_family="xxhash64"
+        )
+        assert sig.schema["id"].dataType.simpleString() == "int"
+        assert sorted(r["id"] for r in sig.collect()) == list(range(6))
+
+    def test_duplicated_window_stats(self, spark):
+        out = D.duplicated_window_stats(self._docs(spark), window=4)
+        assert out.schema["doc_id"].dataType.simpleString() == "int"
+        assert sorted(r["doc_id"] for r in out.collect()) == list(range(6))
+
+
 class TestFuzzyDedup:
     def test_connected_components_chain_and_star(self, spark):
         edges = spark.createDataFrame(
@@ -404,6 +427,20 @@ class TestFuzzyDedupScaleGuards:
         # the planted distinct pair occupies its own (non-hot) buckets, so the
         # cap must NOT cost it: recall loss is confined to degenerate buckets
         assert (1000, 1001) in {(p["id_a"], p["id_b"]) for p in pairs}
+
+
+class TestConnectedComponentsTelemetry:
+    @pytest.mark.parametrize("reliable", [False, True])
+    def test_empty_edge_set_records_one_round(self, spark, tmp_path, reliable):
+        edges = spark.createDataFrame([], "id_a long, id_b long")
+        metrics: list[dict] = []
+        comp = D.connected_components(
+            edges, metrics=metrics,
+            reliable_dir=str(tmp_path / "cc") if reliable else None,
+        )
+        assert comp.count() == 0
+        assert len(metrics) == 1
+        assert metrics[0]["round"] == 0 and metrics[0]["changed"] == 0
 
 
 class TestConnectedComponentsLongChain:

@@ -2,6 +2,11 @@
 bit-identical regardless of input partitioning/parallelism (BASELINE.json), plus the
 reference's dtype-preservation matrix (tests/conftest.py:29-62) across operators."""
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -141,3 +146,36 @@ class TestQuantileVariants:
         np.testing.assert_allclose(exact, np.quantile(arr, [0.25, 0.5, 0.9]))
         approx = rf_quantile(rf, [0.25, 0.5, 0.9], exact=False)
         np.testing.assert_allclose(approx, exact, rtol=0.05)
+
+
+class TestOracleSqlStable:
+    """oracle_sql() is a pure function of the code: no per-process path or
+    hash-seed-dependent order leaks into the SQL a separate DuckDB process
+    replays."""
+
+    REPO = Path(__file__).resolve().parents[1]
+
+    def _run(self, code, **env):
+        base = {k: v for k, v in os.environ.items() if k != "RASTR_SPARK_ORACLE_ART_DIR"}
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=self.REPO, env={**base, **env},
+            capture_output=True, text=True, timeout=120,
+        )
+        assert out.returncode == 0, out.stderr
+        return out.stdout
+
+    def test_byte_identical_across_processes(self):
+        code = "import json, __spark_entry__ as E; print(json.dumps(E.oracle_sql()))"
+        a = self._run(code, PYTHONHASHSEED="1")
+        b = self._run(code, PYTHONHASHSEED="2")
+        assert a and a == b
+
+    def test_import_leaves_artifact_dir_alone(self, tmp_path):
+        # the artifact dir is shared by default: only a process that WRITES
+        # artifacts may remove it at exit, never one that reads oracle_sql()
+        (tmp_path / "keep").write_text("x")
+        self._run(
+            "import __spark_entry__ as E; E.oracle_sql()",
+            RASTR_SPARK_ORACLE_ART_DIR=str(tmp_path),
+        )
+        assert (tmp_path / "keep").exists()

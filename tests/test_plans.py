@@ -224,13 +224,14 @@ class TestFlagshipBroadcastGuard:
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            below = plan(_join_refs_partials(refs, partials, partials_rows_bound=4))
+            below = plan(_join_refs_partials(refs, partials, partials_rows_bound=4, n_zones=1))
             assert "BroadcastHashJoin" in below, (
                 f"small partials side lost its broadcast:\n{below}"
             )
             above = plan(
                 _join_refs_partials(
-                    refs, partials, partials_rows_bound=BROADCAST_PARTIALS_MAX_ROWS + 1
+                    refs, partials, partials_rows_bound=BROADCAST_PARTIALS_MAX_ROWS + 1,
+                    n_zones=1,
                 )
             )
             assert "BroadcastHashJoin" not in above, (
@@ -244,8 +245,8 @@ class TestFlagshipBroadcastGuard:
         from rastr_spark.plans.flagship import _join_refs_partials
 
         refs, partials = self._refs_partials(spark, rf)
-        a = _join_refs_partials(refs, partials, salt_threshold=1, partials_rows_bound=4)
-        b = _join_refs_partials(refs, partials, salt_threshold=1, partials_rows_bound=10**9)
+        a = _join_refs_partials(refs, partials, salt_threshold=1, partials_rows_bound=4, n_zones=1)
+        b = _join_refs_partials(refs, partials, salt_threshold=1, partials_rows_bound=10**9, n_zones=1)
         ra = sorted(map(tuple, a.collect()))
         rb = sorted(map(tuple, b.collect()))
         assert ra == rb and len(ra) > 0

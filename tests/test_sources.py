@@ -92,6 +92,13 @@ class TestCheckpoint:
         assert both.select("run_fp").distinct().count() == 2
         assert both.filter(F.col("run_fp") == "fp-A").count() == len(rounds)
 
+    @staticmethod
+    def _cc_edges(spark):
+        return spark.createDataFrame(
+            [(i * 37 % 1009, (i + 1) * 37 % 1009) for i in range(200)],
+            "id_a long, id_b long",
+        )
+
     def test_cc_reliable_fences_resume_mid_round(self, spark, tmp_path, monkeypatch):
         # reliable_dir swaps localCheckpoints for parquet fences: a driver
         # crash mid-clustering resumes at the last COMMITTED round instead of
@@ -101,10 +108,9 @@ class TestCheckpoint:
 
         import rastr_spark.functions.dedup as dd
 
-        edges = spark.createDataFrame(
-            [(i * 37 % 1009, (i + 1) * 37 % 1009) for i in range(200)],
-            "id_a long, id_b long",
-        )
+        # per-round fences exist only in the distributed loop: force it
+        monkeypatch.setattr(dd, "CC_DRIVER_MAX_EDGES", -1)
+        edges = self._cc_edges(spark)
         want = {
             (r["node"], r["comp"])
             for r in dd.connected_components(edges).collect()
@@ -129,6 +135,19 @@ class TestCheckpoint:
         assert {(r["node"], r["comp"]) for r in got.collect()} == want
         # resumed at the committed round, not from scratch
         assert rounds and rounds[0]["round"] == 2
+
+    def test_cc_reliable_small_graph_runs_on_driver(self, spark, tmp_path):
+        # below CC_DRIVER_MAX_EDGES reliable mode fences the edges and runs the
+        # driver union-find: volatile-mode labels, no per-round label tables
+        import rastr_spark.functions.dedup as dd
+
+        edges = self._cc_edges(spark)
+        want = {(r["node"], r["comp"]) for r in dd.connected_components(edges).collect()}
+        rel = tmp_path / "cc_rounds"
+        got = dd.connected_components(edges, reliable_dir=str(rel))
+        assert {(r["node"], r["comp"]) for r in got.collect()} == want
+        assert (rel / "edges" / "_SUCCESS").exists()
+        assert not list(rel.glob("labels_r*"))
 
 
 class TestRasterIO:
