@@ -42,7 +42,6 @@ from rastr_spark.functions.multimodal import (
 )
 from rastr_spark.geometry import Geometry
 from rastr_spark.meta import Affine, RasterMeta
-from rastr_spark.operators.aggregates import tile_partials
 from rastr_spark.operators.joins import knn_join, mosaic, zonal_stats
 from rastr_spark.operators.vectorize import contour_segments
 from rastr_spark.plans.flagship import doc_zonal_stats
@@ -163,22 +162,15 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _q_raster_stats(spark, sf_dir):
     rf = _lineitem_raster(spark, sf_dir)
-    part = rf.df.select(tile_partials(F.col("values")).alias("p"))
-    return part.agg(
-        F.sum("p.cnt").alias("n_cells"),
-        F.sum("p.s").alias("sum_v"),
-        F.round(F.sum("p.s") / F.sum("p.cnt"), 6).alias("mean_v"),
-        F.min("p.mn").alias("min_v"),
-        F.max("p.mx").alias("max_v"),
-        F.round(
-            F.sqrt(
-                F.greatest(
-                    F.sum("p.s2") / F.sum("p.cnt") - F.pow(F.sum("p.s") / F.sum("p.cnt"), 2),
-                    F.lit(0.0),
-                )
-            ),
-            6,
-        ).alias("std_v"),
+    v = F.col("value")
+    n, s = F.count(v), F.sum(v)
+    return _nonnan_cells(rf).agg(
+        n.alias("n_cells"),
+        s.alias("sum_v"),
+        F.round(s / n, 6).alias("mean_v"),
+        F.min(v).alias("min_v"),
+        F.max(v).alias("max_v"),
+        F.round(F.sqrt(F.greatest(F.sum(v * v) / n - F.pow(s / n, 2), F.lit(0.0))), 6).alias("std_v"),
     )
 
 

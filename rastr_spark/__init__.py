@@ -14,6 +14,9 @@ from .meta import Affine, Bounds, RasterMeta
 from .tiles import RasterFrame
 from .geometry import Geometry
 from . import operators  # attaches the fluent operator surface to RasterFrame
+from . import zipcache
+
+zipcache.install()  # Python workers import the package: no per-task zip re-reads
 
 __all__ = ["Affine", "Bounds", "RasterMeta", "RasterFrame", "Geometry"]
 __version__ = "0.1.0"

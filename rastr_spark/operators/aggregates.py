@@ -1,13 +1,16 @@
 """Whole-raster and zonal aggregations.
 
-Model: Spark's partial/final hash aggregation (SURVEY.md §2.4). Per-tile partials
-(count, sum, sumsq, min, max) are computed *inside the array* with Catalyst's
-``F.aggregate`` higher-order function — JVM-side, whole-stage-codegen, no Python —
-then finalized with one tiny ``groupBy``. NaN is ignored (np.nan* semantics,
-reference src/rastr/raster.py:919-985): all-NaN → NaN for max/min/mean/std, 0.0 for
-sum (raster.py:982).
+Model: Spark's partial/final hash aggregation (SURVEY.md §2.4). ``rf_stats``
+explodes the tile arrays, drops NaN cells and runs ONE plain aggregate
+(count/sum/min/max/``stddev_pop``) — generator, filter and aggregate all stay in
+whole-stage codegen, no higher-order function, no Python. NaN is ignored (np.nan*
+semantics, reference src/rastr/raster.py:919-985): all-NaN → NaN for
+max/min/mean/std, 0.0 for sum (raster.py:982).
 
-``std`` is population std (np.nanstd ddof=0) — deliberately NOT ``F.stddev`` (sample).
+``std`` is population std (np.nanstd ddof=0) — Spark's ``stddev_pop`` (a
+numerically stable central-moment merge), deliberately NOT ``F.stddev`` (sample)
+and NOT ``sqrt(E[x²] − mean²)``, which cancels catastrophically when the spread is
+small against the mean.
 ``quantile`` is exact with linear interpolation ≡ np.nanquantile via Spark's exact
 ``percentile`` over exploded cells (approx_percentile would break reference goldens,
 test_raster.py:4224-4241).
@@ -16,72 +19,41 @@ test_raster.py:4224-4241).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..tiles import RasterFrame
 
-_INF = float("inf")
 
-
-def tile_partials(values: Column) -> Column:
-    """(cnt, s, s2, mn, mx) over one tile array, NaN-ignoring — pure JVM."""
-    init = F.struct(
-        F.lit(0).cast("long").alias("cnt"),
-        F.lit(0.0).alias("s"),
-        F.lit(0.0).alias("s2"),
-        F.lit(_INF).alias("mn"),
-        F.lit(-_INF).alias("mx"),
-    )
-
-    def merge(acc, x):
-        ok = ~F.isnan(x)
-        return F.struct(
-            F.when(ok, acc["cnt"] + 1).otherwise(acc["cnt"]).alias("cnt"),
-            F.when(ok, acc["s"] + x).otherwise(acc["s"]).alias("s"),
-            F.when(ok, acc["s2"] + x * x).otherwise(acc["s2"]).alias("s2"),
-            F.when(ok & (x < acc["mn"]), x).otherwise(acc["mn"]).alias("mn"),
-            F.when(ok & (x > acc["mx"]), x).otherwise(acc["mx"]).alias("mx"),
-        )
-
-    return F.aggregate(values, init, merge)
-
-
-def _partials_df(rf: RasterFrame) -> DataFrame:
-    return rf.df.select("raster_id", tile_partials(F.col("values")).alias("p"))
-
-
-def _final(rf: RasterFrame) -> dict:
-    row = (
-        _partials_df(rf)
-        .groupBy("raster_id")
+def _stats_df(rf: RasterFrame) -> DataFrame:
+    """One row (cnt, s, mn, mx, std) over the raster's non-NaN cells."""
+    v = F.col("v")
+    return (
+        rf.df.select(F.explode("values").alias("v"))
+        .filter(~F.isnan(v))
         .agg(
-            F.sum("p.cnt").alias("cnt"),
-            F.sum("p.s").alias("s"),
-            F.sum("p.s2").alias("s2"),
-            F.min("p.mn").alias("mn"),
-            F.max("p.mx").alias("mx"),
+            F.count(v).alias("cnt"),
+            F.sum(v).alias("s"),
+            F.min(v).alias("mn"),
+            F.max(v).alias("mx"),
+            F.stddev_pop(v).alias("std"),
         )
-        .collect()[0]
     )
-    return {k: row[k] for k in ("cnt", "s", "s2", "mn", "mx")}
 
 
 def rf_stats(rf: RasterFrame) -> dict:
     """All scalar stats in ONE job: {count, sum, mean, std, min, max}."""
-    f = _final(rf)
-    n = f["cnt"]
+    row = _stats_df(rf).collect()[0]
+    n = row["cnt"]
     if n == 0:
         return {"count": 0, "sum": 0.0, "mean": np.nan, "std": np.nan, "min": np.nan, "max": np.nan}
-    mean = f["s"] / n
-    var = max(0.0, f["s2"] / n - mean * mean)  # population variance (np.nanstd ddof=0)
     return {
         "count": int(n),
-        "sum": float(f["s"]),
-        "mean": float(mean),
-        "std": float(np.sqrt(var)),
-        "min": float(f["mn"]),
-        "max": float(f["mx"]),
+        "sum": float(row["s"]),
+        "mean": float(row["s"] / n),
+        "std": float(row["std"]),
+        "min": float(row["mn"]),
+        "max": float(row["mx"]),
     }
 
 

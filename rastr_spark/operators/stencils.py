@@ -16,19 +16,20 @@ exist here):
 - sobel  ≡ skimage.filters.sobel: sqrt(2·(h²+v²)) with smooth [1,2,1]/4 ⊗ deriv
            [1,0,-1]/2 kernels, reflect border, / cell_size
            (reference src/rastr/raster.py:1164-1183; golden test_raster.py:1878-1906)
-- dilate ≡ skimage.morphology.dilation with disk(ceil(r/cell)) footprint, padded
-           with (global min − 1), NaN filled then restored
+- dilate ≡ skimage.morphology.dilation with disk(ceil(r/cell)) footprint; the
+           reference's (global min − 1) pad and NaN fill become −inf (same
+           output, no global-min job — see :func:`dilate`), NaN restored
            (reference src/rastr/raster.py:1223-1288)
 - extrapolate ≡ scipy NearestNDInterpolator on array indices, Euclidean distance,
            ties → lowest (row, col) (reference src/rastr/arr/fill.py:11-32).
-           Influence radius is unbounded → a cheap h=8 sweep proves/fills the
-           typical case, then a per-tile DONOR SUMMARY (one representative donor
-           per tile, computed JVM-side in a single pass) gives every remaining
-           NaN tile a proven-sufficient exact radius, and ONE targeted round at
-           per-tile radius finishes. A cell is filled only when its nearest
-           donor is *proven* within the window (min distance ≤ h ⇒ no unseen
-           donor can be nearer, and every tied donor is inside the window) —
-           exact for any donor layout.
+           Influence radius is unbounded → ONE per-tile census pass (NaN-run
+           bound, NaN bbox and up to five representative donors per tile,
+           one vectorized Arrow map pass read by one aggregate job) gives
+           every NaN tile a proven-sufficient exact radius, and ONE targeted
+           round at per-tile radius finishes. A cell is filled only when its
+           nearest donor is *proven* within the window (min distance ≤ h ⇒ no
+           unseen donor can be nearer, and every tied donor is inside the
+           window) — exact for any donor layout.
 """
 
 from __future__ import annotations
@@ -523,33 +524,25 @@ def _disk(radius: int) -> np.ndarray:
 
 def dilate(rf: RasterFrame, radius: float) -> RasterFrame:
     """Grey dilation with a disk footprint (reference src/rastr/raster.py:1223-1288):
-    pad with (global min − 1) beyond the grid, NaN→fill during the max-filter,
-    NaN mask restored after. All-NaN raster short-circuits to a copy."""
+    pad beyond the grid, NaN→fill during the max-filter, NaN mask restored after.
+
+    The reference pads and fills with (global min − 1); this kernel uses −inf,
+    which gives the same output without the global-min job: the disk always
+    contains its own centre, so every valid cell's max already includes a value
+    above ANY pad below the minimum — the pad never wins — and NaN cells are
+    restored afterwards. An all-NaN raster comes back all-NaN."""
     cell_radius = int(math.ceil(radius / rf.meta.cell_size))
-    # dedicated NaN-ignoring global min (Spark orders NaN greater than every
-    # double, so array_min/min skip NaN unless ALL cells are NaN): one codegen
-    # aggregate instead of rf_stats' interpreted struct-accumulator pass —
-    # which additionally deoptimizes to ~5 s/16.8M cells for the rest of the
-    # session once any applyInPandas job has run (measured; the dedicated min
-    # stays at ~0.1 s). All-NaN raster → NaN/None min → unchanged copy.
-    row = rf.df.agg(F.min(F.array_min("values")).alias("mn")).collect()[0]
-    if row["mn"] is None or math.isnan(row["mn"]):
-        return RasterFrame(rf.df, rf.meta, rf.raster_id)
-    fill_val = float(row["mn"]) - 1.0
     dtype = np.dtype(rf.meta.dtype)
     foot = _disk(cell_radius)
 
     def kern(padded, valid, info):
         r0, c0, th, tw, h = info
-        # original core NaN mask BEFORE the fill: the kernel restores the NaN
-        # cells itself — the core of the padded window IS the original tile,
-        # so the old post-stencil _binary join (a full shuffle join + second
-        # pass over the raster just to re-read the original mask) is dead
-        # weight. Identical semantics: orig NaN → NaN, else dilated value.
+        # original core NaN mask BEFORE the fill: the core of the padded
+        # window IS the original tile, so the kernel restores the NaN cells
+        # itself (orig NaN → NaN, else dilated value)
         nan_core = np.isnan(padded[h : h + th, h : h + tw])
         a = padded.copy()
-        a[~valid] = fill_val  # outside-grid = reference's pad(min-1)
-        a[np.isnan(a)] = fill_val
+        a[~valid | np.isnan(a)] = -np.inf
         a = a.astype(dtype)
         # max filter via shift-stack over the disk footprint
         out = np.full((th, tw), -np.inf, dtype=dtype)
@@ -566,8 +559,8 @@ def dilate(rf: RasterFrame, radius: float) -> RasterFrame:
 
 
 # Remaining-NaN-tile count under which extrapolate finishes with the exact-
-# radius donor-summary round. The radius computation is a broadcast-nested-loop
-# join of (remaining NaN tiles) × (donor-tile summary) with the smaller side
+# radius round. The radius computation is a broadcast-nested-loop
+# join of (remaining NaN tiles) × (census donor reps) with the smaller side
 # broadcast, and the targeted message builder broadcasts the radii table —
 # both need the remaining-tile set to be broadcast-sized. Above the bound the
 # plain doubling loop runs (targets-pruned, memory-safe) until the remaining
@@ -575,154 +568,107 @@ def dilate(rf: RasterFrame, radius: float) -> RasterFrame:
 EXTRAPOLATE_SUMMARY_MAX_TARGETS = 1_000_000
 
 
-def _donor_tile_summary(rf: RasterFrame) -> DataFrame:
-    """Up to 5 rows per tile containing ≥1 donor (non-NaN) cell: the donor
-    cells nearest the tile CENTRE and each of the 4 tile CORNERS, in GLOBAL
-    (row, col) coordinates (duplicates collapsed).
+def _tile_census(rf: RasterFrame) -> DataFrame:
+    """One row per tile, everything extrapolate plans from, in ONE vectorized
+    Arrow pass over the original raster:
 
-    Single JVM pass (``transform`` + ``array_min`` per anchor — the packed
-    d2·T²+i long orders by min anchor-distance, ties → lowest row-major
-    index), no shuffle: the coarse "where are the donors" table the
-    exact-radius round is planned from. Five representatives keep the radius bound tight for
-    the common shapes (a small hole inside a donor-rich tile sees the
-    centre-nearest donor; a donor band along one edge sees its corner
-    donors); the residual slack is paid only in window size, never in
-    correctness (the radius is an upper bound by construction; the kernel
-    still computes the true nearest donor)."""
+    - ``n_nan`` / ``n_donors``: NaN and non-NaN cell counts;
+    - ``max_run``: the longest NaN run of the row-major values array, or NULL
+      when it reaches the tile width (it may then cover a full row, so it is
+      no same-row donor bound). A flat run of length L < tile width never
+      crosses a full row, so every cell in it has a same-row donor within L —
+      a PROVEN radius. For the dense-raster-with-scattered-holes shape (blur's
+      preserve_nan pre-pass on real rasters) that settles every tile without
+      the donor reps, and the radius is the hole size, not ~half a tile
+      diagonal;
+    - ``rmin``/``rmax``/``cmin``/``cmax``: the tile-LOCAL NaN bounding box
+      (NULL without NaN) — the rep-bound input, so a small hole in a big tile
+      still gathers a hole-sized window;
+    - ``rep_r``/``rep_c``: up to 5 donor representatives in GLOBAL (row, col)
+      coordinates — the donor cells nearest the tile CENTRE and each of the 4
+      tile CORNERS (duplicates collapsed). The packed d2·T²+i long orders by
+      min anchor-distance with ties → lowest row-major index (i < th·tw ≤ T²,
+      d2 ≤ 8(T−1)² keeps the product far below 2⁶³); anchor coords are scaled
+      ×2 to stay integral. Five reps keep the radius bound tight for the
+      common shapes (a small hole inside a donor-rich tile sees the
+      centre-nearest donor; a donor band along one edge sees its corner
+      donors); the residual slack is paid only in window size, never in
+      correctness (every rep is a real donor, and the kernel still computes
+      the true nearest donor)."""
     meta = rf.meta
     Tsz = meta.tile_size
     H, W = meta.height, meta.width
-    # vectorized Arrow pass (r7): the original JVM form (five interpreted
-    # transform + array_min passes per tile, one per anchor) cost ~41 s on a
-    # dense 16.8M-cell raster and ~1-2 s on the sparse bench raster; the
-    # numpy pass is ~1 s regardless of density. Selection is IDENTICAL: the
-    # packed d2·T²+i long orders by min anchor-distance with ties → lowest
-    # row-major index (i < th·tw ≤ T², d2 ≤ 8(T−1)² keeps the product far
-    # below 2⁶³), anchor coords scaled ×2 to stay integral — centre
-    # ((th−1)/2, (tw−1)/2) and the 4 corners, duplicates collapsed.
     mult = np.int64(int(Tsz) * int(Tsz))
+    bbox = ("rmin", "rmax", "cmin", "cmax")
 
     def kernel(it):
         for pdf in it:
-            trs = pdf["tile_row"].to_numpy()
-            tcs = pdf["tile_col"].to_numpy()
-            out: dict = {"rep_r": [], "rep_c": []}
-            for i in range(len(pdf)):
-                vals = np.asarray(pdf["values"].iloc[i], dtype=np.float64)
-                idx = np.nonzero(~np.isnan(vals))[0].astype(np.int64)
-                if idx.size == 0:
-                    continue
-                tr, tc = int(trs[i]), int(tcs[i])
+            out: dict = {
+                k: [] for k in (
+                    "tile_row", "tile_col", "n_nan", "n_donors", "max_run", *bbox,
+                    "rep_r", "rep_c",
+                )
+            }
+            for tr, tc, vals in zip(
+                pdf["tile_row"].to_numpy(), pdf["tile_col"].to_numpy(), pdf["values"]
+            ):
+                tr, tc = int(tr), int(tc)
+                nan = np.isnan(np.asarray(vals, dtype=np.float64))
                 th_ = min(Tsz, H - tr * Tsz)
                 tw_ = min(Tsz, W - tc * Tsz)
-                r2 = 2 * (idx // tw_)
-                c2 = 2 * (idx % tw_)
-                anchors = (
-                    (th_ - 1, tw_ - 1),
-                    (0, 0),
-                    (0, 2 * (tw_ - 1)),
-                    (2 * (th_ - 1), 0),
-                    (2 * (th_ - 1), 2 * (tw_ - 1)),
-                )
-                best = {
-                    int(idx[np.argmin(((r2 - ar) ** 2 + (c2 - ac) ** 2) * mult + idx)])
-                    for ar, ac in anchors
-                }
-                for bi in best:
-                    out["rep_r"].append(tr * Tsz + bi // tw_)
-                    out["rep_c"].append(tc * Tsz + bi % tw_)
-            if out["rep_r"]:
-                yield pd.DataFrame(out)
+                holes = np.nonzero(nan)[0]
+                idx = np.nonzero(~nan)[0].astype(np.int64)
+                out["tile_row"].append(tr)
+                out["tile_col"].append(tc)
+                out["n_nan"].append(int(holes.size))
+                out["n_donors"].append(int(idx.size))
+                if holes.size:
+                    edges = np.diff(np.concatenate(([0], nan.view(np.int8), [0])))
+                    run = int((np.nonzero(edges == -1)[0] - np.nonzero(edges == 1)[0]).max())
+                    cols = holes % tw_
+                    out["max_run"].append(run if run < tw_ else None)
+                    out["rmin"].append(int(holes[0] // tw_))
+                    out["rmax"].append(int(holes[-1] // tw_))
+                    out["cmin"].append(int(cols.min()))
+                    out["cmax"].append(int(cols.max()))
+                else:
+                    out["max_run"].append(0)
+                    for k in bbox:
+                        out[k].append(None)
+                best: list = []
+                if idx.size:
+                    r2 = 2 * (idx // tw_)
+                    c2 = 2 * (idx % tw_)
+                    anchors = (
+                        (th_ - 1, tw_ - 1),
+                        (0, 0),
+                        (0, 2 * (tw_ - 1)),
+                        (2 * (th_ - 1), 0),
+                        (2 * (th_ - 1), 2 * (tw_ - 1)),
+                    )
+                    best = sorted({
+                        int(idx[np.argmin(((r2 - ar) ** 2 + (c2 - ac) ** 2) * mult + idx)])
+                        for ar, ac in anchors
+                    })
+                out["rep_r"].append([tr * Tsz + bi // tw_ for bi in best])
+                out["rep_c"].append([tc * Tsz + bi % tw_ for bi in best])
+            if out["tile_row"]:
+                df = pd.DataFrame(out)
+                for k in ("max_run", *bbox):  # nullable ints
+                    df[k] = pd.array(out[k], dtype="Int32")
+                yield df
 
     return rf.df.select("tile_row", "tile_col", "values").mapInPandas(
-        kernel, "rep_r int, rep_c int"
-    )
-
-
-def _nan_tile_flags(df: DataFrame, meta: RasterMeta) -> DataFrame:
-    """(tile_row, tile_col, max_run) for every tile with ≥1 NaN cell —
-    ``max_run`` is the longest NaN run of the row-major values array, or NULL
-    when the longest run reaches the tile width (it may then cover a full
-    row, so it is no same-row donor bound).
-
-    A flat run of length L < tile width never crosses a full row, so every
-    cell in it has a same-row donor within L — a PROVEN radius from this one
-    pass alone. For the dense-raster-with-scattered-holes shape (blur's
-    preserve_nan pre-pass on real rasters) that settles every tile without
-    the donor summary, and the radius is the hole size, not ~half a tile
-    diagonal. One packed-long ``aggregate`` ((cur, max) in one 62-bit long),
-    no struct allocation, no shuffle."""
-    th, tw = tile_dims_cols(meta)
-    base = df.select(
-        "tile_row", "tile_col", tw.alias("tw"), "values"
-    ).filter(F.exists("values", lambda v: F.isnan(v)))
-    tw_c = F.col("tw")
-    mask = F.lit((1 << 31) - 1).cast("long")
-
-    def step(acc, v):
-        cur2 = (
-            F.when(F.isnan(v), F.shiftright(acc, 31) + 1)
-            .otherwise(F.lit(0))
-            .cast("long")
-        )
-        return F.shiftleft(cur2, 31) + F.greatest(acc.bitwiseAND(mask), cur2)
-
-    run = F.aggregate(
-        "values",
-        F.lit(0).cast("long"),
-        step,
-        lambda acc: F.greatest(acc.bitwiseAND(mask), F.shiftright(acc, 31)),
-    )
-    return base.select(
-        "tile_row",
-        "tile_col",
-        F.when(run < tw_c, run).cast("int").alias("max_run"),
-    )
-
-
-def _nan_tile_bbox(df: DataFrame, meta: RasterMeta, keys: DataFrame) -> DataFrame:
-    """(tile_row, tile_col, rmin, rmax, cmin, cmax) — the tile-LOCAL NaN
-    bounding box, computed ONLY for the given key tiles (broadcast semi-join;
-    the rep-bound path's input, so a small hole in a big tile still gathers
-    a hole-sized window)."""
-    Tsz = meta.tile_size
-    W = meta.width
-    base = df.join(
-        F.broadcast(keys.select("tile_row", "tile_col")),
-        ["tile_row", "tile_col"],
-        "left_semi",
-    ).select("tile_row", "tile_col", "values")
-
-    # vectorized Arrow pass (r7, same treatment as _donor_tile_summary): the
-    # interpreted two-transform form re-evaluated a per-cell lambda twice per
-    # cell of every key tile
-    def kernel(it):
-        for pdf in it:
-            trs = pdf["tile_row"].to_numpy()
-            tcs = pdf["tile_col"].to_numpy()
-            out: dict = {
-                "tile_row": [], "tile_col": [],
-                "rmin": [], "rmax": [], "cmin": [], "cmax": [],
-            }
-            for i in range(len(pdf)):
-                vals = np.asarray(pdf["values"].iloc[i], dtype=np.float64)
-                idx = np.nonzero(np.isnan(vals))[0]
-                if idx.size == 0:
-                    continue
-                tw_ = min(Tsz, W - int(tcs[i]) * Tsz)
-                cols = idx % tw_
-                out["tile_row"].append(int(trs[i]))
-                out["tile_col"].append(int(tcs[i]))
-                out["rmin"].append(int(idx[0] // tw_))
-                out["rmax"].append(int(idx[-1] // tw_))
-                out["cmin"].append(int(cols.min()))
-                out["cmax"].append(int(cols.max()))
-            if out["tile_row"]:
-                yield pd.DataFrame(out)
-
-    return base.mapInPandas(
         kernel,
-        "tile_row int, tile_col int, rmin int, rmax int, cmin int, cmax int",
+        "tile_row int, tile_col int, n_nan long, n_donors long, max_run int, "
+        "rmin int, rmax int, cmin int, cmax int, rep_r array<int>, rep_c array<int>",
+    )
+
+
+def _donor_reps(census: DataFrame) -> DataFrame:
+    """(rep_r, rep_c): every tile's donor representatives from the census."""
+    return census.select(F.explode(F.arrays_zip("rep_r", "rep_c")).alias("r")).select(
+        "r.rep_r", "r.rep_c"
     )
 
 
@@ -911,7 +857,8 @@ def _exact_target_radii(
     *, broadcast_flags: bool, ring: bool = False,
 ) -> DataFrame:
     """(tile_row, tile_col, h) for every NaN tile: a PROVEN-sufficient per-tile
-    radius from the donor summary and the tile's NaN bounding box.
+    radius from the census donor reps (``summary``: rep_r, rep_c) and the
+    tile's NaN bounding box.
 
     For a fixed donor position, distance over the NaN bbox rectangle is convex
     and separable, so its max is max-over-row-interval + max-over-col-interval;
@@ -971,17 +918,17 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
     """NaN → nearest non-NaN by Euclidean index distance, ties → lowest (row, col)
     (reference src/rastr/raster.py:1290-1309 + arr/fill.py:11-32).
 
-    Two-level plan (SURVEY §2.2): cheap JVM map passes over the original
-    raster give every NaN tile an EXACT proven-sufficient radius — the
-    NaN-run bound from the flags pass alone when the tile's holes are small
-    (the common dense-raster shape: no donor summary at all), a 5-rep
-    donor-summary broadcast-nested-loop min only for tiles without a valid
-    run bound — and ONE targeted stencil round at per-tile radius finishes,
-    always filling from the ORIGINAL raster (scipy NearestNDInterpolator
-    semantics: chained propagation would drift). NaN-free tiles never enter
-    the shuffle at all. All-NaN rasters return unchanged. A halo-doubling
-    fallback covers the adversarial case where the NaN-tile set itself is
-    too big to broadcast.
+    Two-level plan (SURVEY §2.2): ONE Arrow census pass over the original
+    raster (:func:`_tile_census`, localCheckpointed and read by a single
+    aggregate job) gives every NaN tile an EXACT proven-sufficient radius —
+    the NaN-run bound alone when the tile's holes are small (the common
+    dense-raster shape), a 5-rep donor broadcast-nested-loop min over the
+    tile's NaN bbox only for tiles without a valid run bound — and ONE
+    targeted stencil round at per-tile radius finishes, always filling from
+    the ORIGINAL raster (scipy NearestNDInterpolator semantics: chained
+    propagation would drift). NaN-free tiles never enter the shuffle at all.
+    All-NaN rasters return unchanged. A halo-doubling fallback covers the
+    adversarial case where the NaN-tile set itself is too big to broadcast.
     """
     if method not in ("nearest",):
         raise NotImplementedError(f"Unsupported extrapolation method: {method}")
@@ -995,22 +942,21 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
     max_h = int(math.ceil(math.hypot(meta.height, meta.width)))
     has_nan = F.exists("values", lambda v: F.isnan(v))
 
-    flags = _nan_tile_flags(rf.df, meta).localCheckpoint(eager=False)
-    n_targets = flags.count()
-    if not n_targets:  # no NaN anywhere — nothing to fill
+    census = _tile_census(rf).localCheckpoint(eager=False)
+    flagged = F.col("n_nan") > 0
+    tot = census.agg(  # one job: materializes the census checkpoint
+        F.count_if(flagged).alias("n_targets"),
+        F.count_if(flagged & F.col("max_run").isNull()).alias("n_need"),
+        F.sum(F.size("rep_r")).alias("donor_reps"),
+        F.sum("n_donors").alias("n_donors"),
+    ).collect()[0]
+    n_targets, n_need = tot["n_targets"], tot["n_need"]
+    donor_reps, n_donors = tot["donor_reps"] or 0, tot["n_donors"] or 0
+    # no NaN anywhere — nothing to fill; all-NaN raster — reference returns
+    # it unchanged
+    if not n_targets or not n_donors:
         return RasterFrame(rf.df, meta, rf.raster_id)
-
-    # the donor summary is computed lazily: tiles whose run bound is valid
-    # never need it, and for the dense-holes shape that is ALL of them
-    summary = None
-    donor_reps = 0
-
-    def get_summary():
-        nonlocal summary, donor_reps
-        if summary is None:
-            summary = _donor_tile_summary(rf).localCheckpoint(eager=False)
-            donor_reps = summary.count()
-        return summary, donor_reps
+    flags = census.filter(flagged)
 
     out_df = rf.df
     if n_targets > EXTRAPOLATE_SUMMARY_MAX_TARGETS:
@@ -1021,8 +967,6 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
         # per-round plan — lineage stays one round deep however many rounds
         # run. Exits into the exact-radius round as soon as the remaining
         # set shrinks under the bound.
-        if get_summary()[1] == 0:  # all-NaN raster: returned unchanged
-            return RasterFrame(rf.df, meta, rf.raster_id)
         h = 8
         targets = flags.select("tile_row", "tile_col")
         for _ in range(64):  # 2^64 cells ≫ any grid; exits via remaining == 0
@@ -1048,41 +992,33 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
                 # round fills as donors and under-size the window (cells
                 # proven in earlier rounds get re-proven here, since the
                 # whole tile core is re-emitted). Only the tile SET comes
-                # from the partially-filled table.
+                # from the partially-filled table; the bounds are the
+                # census rows of those tiles.
                 keys = remaining.localCheckpoint(eager=True)
-                flags = (
-                    _nan_tile_flags(rf.df, meta)
-                    .join(F.broadcast(keys), ["tile_row", "tile_col"], "left_semi")
-                    .localCheckpoint(eager=True)
-                )
+                flags = flags.join(
+                    F.broadcast(keys), ["tile_row", "tile_col"], "left_semi"
+                ).localCheckpoint(eager=True)
+                n_need = flags.filter(F.col("max_run").isNull()).count()
                 break
             targets = remaining
             h = min(h * 2, max_h)
 
-    # exact-radius round: run-bound radii from the flags pass alone; tiles
-    # without a valid run bound get their NaN bbox (second pass over just
-    # those tiles) and the donor-summary broadcast-nested-loop min — then
-    # ONE targeted round (two-pass kernel, grid-clipped windows)
-    run_radii = flags.filter(F.col("max_run").isNotNull()).select(
+    # exact-radius round: run-bound radii straight from the census; tiles
+    # without a valid run bound get the donor-rep broadcast-nested-loop min
+    # over their NaN bbox (the ORIGINAL raster's NaN cells: the exact round
+    # re-fills every original NaN of the flagged tiles) — then ONE targeted
+    # round (two-pass kernel, grid-clipped windows)
+    radii = flags.filter(F.col("max_run").isNotNull()).select(
         "tile_row", "tile_col",
         F.greatest(F.lit(1), F.least("max_run", F.lit(max_h))).cast("int").alias("h"),
     )
-    need_rep = flags.filter(F.col("max_run").isNull()).localCheckpoint(eager=False)
-    n_need = need_rep.count()
     if n_need:
-        _, reps = get_summary()
-        if reps == 0:  # all-NaN raster: reference returns it unchanged
-            return RasterFrame(out_df, meta, rf.raster_id)
-        # bbox over the ORIGINAL raster's NaN cells (the exact round re-fills
-        # every original NaN of the flagged tiles, not just the remaining ones)
-        bbox = _nan_tile_bbox(rf.df, meta, need_rep)
         rep_radii = _exact_target_radii(
-            bbox, summary, meta, max_h, broadcast_flags=n_need <= reps,
-            ring=n_need * reps > EXTRAPOLATE_RADII_MAX_PAIRS,
+            flags.filter(F.col("max_run").isNull()), _donor_reps(census), meta, max_h,
+            broadcast_flags=n_need <= donor_reps,
+            ring=n_need * donor_reps > EXTRAPOLATE_RADII_MAX_PAIRS,
         )
-        radii = run_radii.unionByName(rep_radii)
-    else:
-        radii = run_radii
+        radii = radii.unionByName(rep_radii)
     # gather-representation choice for the one targeted round, from
     # driver-known volume estimates (radii is tiny — one row per NaN tile):
     # dense strips ship Σ(T+2h)² window cells; sparse donor lists ship each
@@ -1093,22 +1029,23 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
     # run-bound radius set has h < T, so the dense volume is bounded by
     # ~9× tile cells and the strip gather is the right plan — gating on it
     # keeps the common dense-raster-with-holes pre-pass (blur preserve_nan)
-    # free of the two extra driver actions.
+    # free of the extra driver action.
     use_sparse = False
     if n_need:
-        radii = radii.localCheckpoint(eager=True)
-        vol = radii.agg(
+        radii = radii.localCheckpoint(eager=False)
+        vol = radii.agg(  # one job: materializes the radii checkpoint
             F.sum(
                 (F.lit(float(Tsz)) + 2.0 * F.col("h")) * (F.lit(float(Tsz)) + 2.0 * F.col("h"))
             ).alias("dense")
         ).collect()[0]
         n_cells = float(meta.height) * float(meta.width)
-        if vol["dense"] is not None and vol["dense"] > SPARSE_GATHER_DENSE_BLOWUP * n_cells:
-            donors = _donor_cells(rf).localCheckpoint(eager=True)
-            n_donors = donors.agg(F.sum(F.size("di"))).collect()[0][0] or 0
-            use_sparse = n_donors <= SPARSE_GATHER_MAX_DONORS
+        use_sparse = (
+            vol["dense"] is not None
+            and vol["dense"] > SPARSE_GATHER_DENSE_BLOWUP * n_cells
+            and n_donors <= SPARSE_GATHER_MAX_DONORS
+        )
     if use_sparse:
-        filled_df = _sparse_nn_fill(rf, radii, donors)
+        filled_df = _sparse_nn_fill(rf, radii, _donor_cells(rf))
     else:
         filled_df = stencil_apply(
             rf, None, make_kernel(None), targets=radii, clip_to_grid=True

@@ -194,6 +194,18 @@ class TestStats:
         assert np.isnan(s["max"]) and np.isnan(s["mean"]) and np.isnan(s["std"])
         assert s["sum"] == 0.0  # reference raster.py:982
 
+    def test_std_small_spread_large_mean(self, spark):
+        # 1e4 ± 1e-3: sqrt(E[x²] − mean²) cancels catastrophically here (5 %
+        # off); the aggregate must stay at np.nanstd to 1e-6
+        rng = np.random.RandomState(0)
+        arr = 1e4 + rng.uniform(-1e-3, 1e-3, (128, 128))
+        arr[rng.rand(128, 128) < 0.05] = np.nan
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 128), 128, 128, tile_size=32)
+        s = RasterFrame.from_numpy(spark, arr, meta).stats()
+        assert s["std"] == pytest.approx(np.nanstd(arr), rel=1e-6)
+        assert s["mean"] == pytest.approx(np.nanmean(arr), rel=1e-12)
+        assert s["count"] == int((~np.isnan(arr)).sum())
+
     def test_quantile_median(self, stats_raster, stats_raster_nans):
         assert stats_raster.quantile(0.5) == 5.0
         assert stats_raster.quantile(0.25) == np.quantile(np.arange(1.0, 10.0), 0.25)

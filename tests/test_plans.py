@@ -18,6 +18,10 @@ from rastr_spark.tiles import RasterFrame
 
 SF001 = "/root/testdata/sf0.01"
 
+# rf_stats(extrapolate(x)) on a 16-tile mostly-NaN raster: 19 jobs with the
+# per-purpose flags/summary/bbox/donor passes, 10 with the one census pass
+MAX_EXTRAPOLATE_STATS_JOBS = 10
+
 
 def plan(df, mode="formatted") -> str:
     buf = io.StringIO()
@@ -269,3 +273,48 @@ class TestCropPartitionPruning:
         np.testing.assert_array_equal(
             q.to_numpy(), np.arange(64.0).reshape(8, 8)[:4, :4]
         )
+
+
+@contextlib.contextmanager
+def job_group(spark, name):
+    """Collects the ids of every Spark job launched inside the block."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    ids: list = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(name))
+
+
+class TestStencilFixedCosts:
+    def test_rf_stats_is_a_plain_codegen_aggregate(self, spark, rf):
+        from rastr_spark.operators.aggregates import _stats_df
+
+        df = _stats_df(rf)
+        df.collect()
+        p = df._jdf.queryExecution().executedPlan().toString()
+        assert "lambdafunction" not in p, f"rf_stats evaluates a higher-order function:\n{p}"
+        for node in ("PythonUDF", "EvalPython", "InPandas", "InArrow"):
+            assert node not in p, f"rf_stats runs Python ({node}):\n{p}"
+        assert "HashAggregate" in p and "stddev_pop" in p, p
+
+    def test_dilate_plans_without_a_job(self, spark, rf):
+        with job_group(spark, "dilate-plan") as jobs:
+            out = rf.dilate(1.0)
+        assert jobs == [], f"dilate launched {len(jobs)} job(s) before its stencil runs"
+        assert out.to_numpy().shape == (8, 8)
+
+    def test_extrapolate_then_stats_job_count(self, spark):
+        # mostly-NaN raster (one donor in two of the 16 tiles): census, radii
+        # volume probe, sparse donor fill and the stats aggregate
+        arr = np.full((32, 32), np.nan)
+        arr[3, 5], arr[27, 20] = 1.0, 2.0
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 32), 32, 32, tile_size=8)
+        src = RasterFrame.from_numpy(spark, arr, meta)
+        src.df.cache().count()
+        with job_group(spark, "extrapolate-stats") as jobs:
+            st = src.extrapolate().stats()
+        assert st["count"] == 32 * 32 and {st["min"], st["max"]} == {1.0, 2.0}
+        assert len(jobs) <= MAX_EXTRAPOLATE_STATS_JOBS, len(jobs)

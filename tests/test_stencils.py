@@ -564,6 +564,39 @@ class TestExtrapolateCappedRounds:
         # so it must pick the sparse broadcast-donor round
         assert calls == [("sparse", None)], calls
 
+    def test_gather_gate_branches_agree(self, spark, monkeypatch):
+        # the exact-radius round's two gather representations: a mostly-NaN
+        # raster takes the broadcast-donor sparse round; with the donor bound
+        # forced below any count it takes the dense strip round — bit-equal
+        import numpy as np
+
+        import rastr_spark.operators.stencils as st
+        from rastr_spark.meta import Affine, RasterMeta
+        from rastr_spark.tiles import RasterFrame
+
+        rng = np.random.RandomState(13)
+        H, W = 72, 88
+        arr = np.full((H, W), np.nan)
+        pts = rng.choice(H * W, 10, replace=False)
+        arr[pts // W, pts % W] = rng.rand(10) * 10
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, H), H, W, tile_size=16)
+        rf = RasterFrame.from_numpy(spark, arr, meta)
+
+        rounds = []
+        orig, orig_sparse = st.stencil_apply, st._sparse_nn_fill
+        monkeypatch.setattr(
+            st, "stencil_apply", lambda *a, **kw: rounds.append("dense") or orig(*a, **kw)
+        )
+        monkeypatch.setattr(
+            st, "_sparse_nn_fill", lambda *a: rounds.append("sparse") or orig_sparse(*a)
+        )
+        sparse = st.extrapolate(rf).to_numpy()
+        monkeypatch.setattr(st, "SPARSE_GATHER_MAX_DONORS", -1)
+        dense = st.extrapolate(rf).to_numpy()
+        assert rounds == ["sparse", "dense"], rounds
+        assert not np.isnan(sparse).any()
+        np.testing.assert_array_equal(dense, sparse)
+
     def test_exact_radius_is_tight_per_tile(self, spark):
         # the per-tile radii must bound the true worst-case nearest-donor
         # distance from above WITHOUT collapsing to the grid diagonal: a
@@ -580,7 +613,7 @@ class TestExtrapolateCappedRounds:
         arr[:, 0] = np.arange(H, dtype=float)  # donor column at c=0
         meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, H), H, W, tile_size=16)
         rf = RasterFrame.from_numpy(spark, arr, meta)
-        summary = st._donor_tile_summary(rf)
+        summary = st._donor_reps(st._tile_census(rf))
         # fully-NaN tiles: bbox = whole tile
         flags = spark.createDataFrame(
             [(r, c, 0, 15, 0, 15) for r in range(4) for c in range(1, 4)],
@@ -657,10 +690,10 @@ class TestExtrapolateCappedRounds:
         arr[holes // W, holes % W] = np.nan
         meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, H), H, W, tile_size=16)
         rf = RasterFrame.from_numpy(spark, arr, meta)
-        flags = st._nan_tile_flags(rf.df, meta).collect()
-        runs = [r["max_run"] for r in flags]
+        census = st._tile_census(rf).collect()
+        runs = [r["max_run"] for r in census if r["n_nan"]]
         # every flagged tile has a VALID hole-sized run bound → the donor
-        # summary is never computed for this shape
+        # reps are never joined for this shape
         assert runs and all(m is not None and m <= 8 for m in runs), runs
         # and the fill itself stays exact
         out = rf.extrapolate().to_numpy()
