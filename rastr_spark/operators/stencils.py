@@ -12,7 +12,9 @@ Numerics are replicated from the reference's scipy/skimage backends (none of whi
 exist here):
 
 - blur   ≡ scipy.ndimage.gaussian_filter(sigma, truncate=4.0, mode='reflect')
-           (reference src/rastr/raster.py:1185-1221)
+           (reference src/rastr/raster.py:1185-1221); preserve_nan's
+           extrapolate → blur → restore-mask composition runs as ONE fused
+           stencil round, and a radius-0 σ is the identity (no job)
 - sobel  ≡ skimage.filters.sobel: sqrt(2·(h²+v²)) with smooth [1,2,1]/4 ⊗ deriv
            [1,0,-1]/2 kernels, reflect border, / cell_size
            (reference src/rastr/raster.py:1164-1183; golden test_raster.py:1878-1906)
@@ -26,10 +28,10 @@ exist here):
            bound, NaN bbox and up to five representative donors per tile,
            one vectorized Arrow map pass read by one aggregate job) gives
            every NaN tile a proven-sufficient exact radius, and ONE targeted
-           round at per-tile radius finishes. A cell is filled only when its
-           nearest donor is *proven* within the window (min distance ≤ h ⇒ no
-           unseen donor can be nearer, and every tied donor is inside the
-           window) — exact for any donor layout.
+           round at per-tile radius finishes, for any number of NaN tiles. A
+           cell is filled only when its nearest donor is *proven* within the
+           window (min distance ≤ h ⇒ no unseen donor can be nearer, and
+           every tied donor is inside the window) — exact for any donor layout.
 """
 
 from __future__ import annotations
@@ -145,22 +147,19 @@ def halo_messages(rf: RasterFrame, h: int) -> DataFrame:
     return exploded
 
 
-def halo_messages_targeted(rf: RasterFrame, h: int | None, targets: DataFrame) -> DataFrame:
-    """Strip messages for a RESTRICTED target-tile set — the scale path for
-    wide-radius extrapolate rounds, where only a few NaN-remaining tiles need
-    a (very wide) halo but every tile is a potential donor.
+def halo_messages_targeted(rf: RasterFrame, targets: DataFrame) -> DataFrame:
+    """Strip messages for a RESTRICTED target-tile set, each target at its OWN
+    radius: ``targets`` is (tile_row, tile_col, h) — the exact-radius
+    extrapolate round, where only the NaN tiles need a (possibly very wide)
+    halo but every tile is a potential donor.
 
     The ring-offset builder (:func:`halo_messages`) enumerates (2R+1)² offsets
     per SOURCE tile — O(n_tiles · R²) generated rows regardless of how few
     targets survive a downstream filter, which explodes at R ≈ n_tile_rows
     (the full-radius round: every tile × every offset). Here the message set
-    is built as sources ⋈ broadcast(targets) filtered to the Chebyshev ring —
-    O(n_tiles · n_targets) rows — with the SAME strip-slice arithmetic, dr/dc
-    as columns instead of literals. Identical messages, different generator.
-
-    ``targets`` may carry a per-tile integer ``h`` column (the exact-radius
-    extrapolate round — each tile gathers only the window its own proven
-    donor distance needs); the scalar ``h`` is then ignored (pass ``None``).
+    is built as sources ⋈ broadcast(targets) filtered to each target's
+    Chebyshev ring — O(n_tiles · n_targets) rows — with the SAME strip-slice
+    arithmetic, dr/dc/h as columns instead of literals.
     """
     meta = rf.meta
     Tsz = meta.tile_size
@@ -174,19 +173,15 @@ def halo_messages_targeted(rf: RasterFrame, h: int | None, targets: DataFrame) -
         F.col("tile_row").alias("s_tr"), F.col("tile_col").alias("s_tc"),
         th.alias("th"), tw.alias("tw"), "values",
     )
-    if "h" in targets.columns:
-        tgt_sel = targets.select(
+    tgt = F.broadcast(
+        targets.select(
             F.col("tile_row").alias("ttr"), F.col("tile_col").alias("ttc"),
             F.col("h").cast("int").alias("t_h"),
         )
-    else:
-        tgt_sel = targets.select(
-            F.col("tile_row").alias("ttr"), F.col("tile_col").alias("ttc")
-        ).distinct().withColumn("t_h", F.lit(int(h)))
-    tgt = F.broadcast(tgt_sel)
+    )
     h_c = F.col("t_h")
     # per-row Chebyshev tile ring: R = max(1, ceil(h / T)) — same prefilter the
-    # scalar builder applies as a literal
+    # ring-offset builder applies as a literal
     R_c = F.greatest(F.lit(1), F.ceil(h_c / F.lit(float(Tsz)))).cast("int")
     pairs = src.join(
         tgt,
@@ -231,65 +226,37 @@ def halo_messages_targeted(rf: RasterFrame, h: int | None, targets: DataFrame) -
 
 def stencil_apply(
     rf: RasterFrame,
-    h: int,
+    h: int | None,
     kernel: Callable[[np.ndarray, np.ndarray, tuple], np.ndarray],
     *,
-    out_meta: RasterMeta | None = None,
     targets: DataFrame | None = None,
-    n_targets: int | None = None,
-    clip_to_grid: bool = False,
 ) -> RasterFrame:
-    """Run ``kernel(padded, valid_mask, (r0, c0, th, tw, h))`` per tile.
+    """Run ``kernel(padded, valid_mask, info)`` per tile; the kernel returns
+    the (th, tw) core. Two forms, one plan each:
 
-    ``padded`` is the (th+2h)×(tw+2h) window in float64 with NaN where no data was
-    received (outside-grid or missing tiles); ``valid_mask`` marks cells inside the
-    grid. The kernel returns the (th, tw) core. The h ≤ T constraint applies
-    only to the ring-offset builder path (``targets is None`` with small R);
-    the targeted builder routinely assembles per-tile radii far above T, up
-    to the grid diagonal (ADVICE r6 docstring fix).
-
-    ``targets``: optional (tile_row, tile_col) set — only these tiles are
-    computed (the caller merges untouched tiles back). Message generation
-    picks the cheaper builder from driver-known bounds: the ring-offset
-    builder costs O(n_tiles·(2R+1)²) generated rows, the broadcast-join
-    targeted builder O(n_tiles·n_targets); ``n_targets`` supplies the bound
-    (unknown → targeted builder, the safe choice at large R). If ``targets``
-    carries an integer ``h`` column, each tile is assembled at its OWN radius
-    (the exact-radius extrapolate round) and the scalar ``h`` may be ``None``;
-    the targeted builder is then always used.
-
-    ``clip_to_grid``: allocate only the window ∩ grid instead of the full
-    (th+2h)×(tw+2h) square — at h approaching the raster span the unclipped
-    allocation is (2h)² ≈ 4× the whole raster PER TILE (measured: the 16.8M
-    cell extrapolate bench OOM'd the JVM at h=5793); clipped it is bounded by
-    the raster's own footprint. The kernel then receives a 7-tuple info
-    ``(r0, c0, th, tw, h, top, left)`` where (top, left) is the core's offset
-    inside the clipped window, and an all-true valid mask (the window is
-    entirely in-grid). Only kernels that understand the 7-tuple may set this
-    (extrapolate's two-pass NN path); reflect-padding kernels (blur/sobel)
-    need the full square.
+    - ``targets is None``: every tile at radius ``h``, messages from the
+      ring-offset builder (:func:`halo_messages`). ``padded`` is the full
+      (th+2h)×(tw+2h) window in float64, NaN where no data was received;
+      ``valid_mask`` marks cells inside the grid; ``info`` is
+      ``(r0, c0, th, tw, h)``. Blur, sobel and dilate use this form.
+    - ``targets`` = (tile_row, tile_col, h): only these tiles, each at its
+      OWN radius (``h`` is ignored; pass ``None``), messages from
+      :func:`halo_messages_targeted`; the caller merges untouched tiles back.
+      The window is clipped to the grid — at h approaching the raster span
+      the full square is (2h)² ≈ 4× the whole raster PER TILE (measured: the
+      16.8M cell extrapolate bench OOM'd the JVM at h=5793); clipped it is
+      bounded by the raster's own footprint. ``info`` is then
+      ``(r0, c0, th, tw, h, top, left)``, (top, left) the core's offset
+      inside the clipped window, and ``valid_mask`` is all-true. Per-tile
+      radii routinely reach far above T, up to the grid diagonal. This is
+      the exact-radius extrapolate round.
     """
     meta = rf.meta
     Tsz = meta.tile_size
     H, W = meta.height, meta.width
     raster_id = rf.raster_id  # primitive capture — closures must not capture rf (DataFrame)
-    if targets is None:
-        msgs = halo_messages(rf, h)
-    elif "h" in targets.columns:
-        msgs = halo_messages_targeted(rf, None, targets)
-    else:
-        R = max(1, math.ceil(h / Tsz))
-        ring_cost = (2 * R + 1) ** 2
-        if n_targets is not None and ring_cost <= n_targets:
-            msgs = halo_messages(rf, h).join(
-                F.broadcast(targets.select("tile_row", "tile_col").distinct()),
-                ["tile_row", "tile_col"],
-                "left_semi",
-            )
-        else:
-            msgs = halo_messages_targeted(rf, h, targets)
-
-    clip = bool(clip_to_grid)
+    clip = targets is not None
+    msgs = halo_messages(rf, h) if targets is None else halo_messages_targeted(rf, targets)
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tr, tc = int(key[0]), int(key[1])
@@ -340,7 +307,7 @@ def stencil_apply(
 
     out = msgs.groupBy("tile_row", "tile_col").applyInPandas(assemble, TILE_SCHEMA)
     out = out.withColumn("values", denull(F.col("values")))
-    return RasterFrame(out, out_meta or meta, rf.raster_id)
+    return RasterFrame(out, meta, rf.raster_id)
 
 
 def _reflect_index(i: int, lo: int, hi: int) -> int:
@@ -401,63 +368,54 @@ def _corr1d(a: np.ndarray, w: np.ndarray, axis: int) -> np.ndarray:
 def blur(rf: RasterFrame, sigma: float, *, preserve_nan: bool = True) -> RasterFrame:
     """Gaussian blur, σ in world units (reference src/rastr/raster.py:1185-1221).
 
-    preserve_nan: NN-extrapolate → blur → restore NaN mask (exactly the reference
-    composition). The extrapolate pre-pass is skipped JVM-cheaply when the raster
-    has no NaN.
+    preserve_nan: the reference composition NN-extrapolate → blur → restore
+    NaN mask, run as ONE fused stencil round (see below); a raster without NaN
+    takes the plain round. A σ whose truncated kernel radius is 0 returns
+    ``rf`` unchanged without running a job: scipy's radius-0 kernel is
+    ``[1.0]``, so the blur is the identity and, with preserve_nan, extrapolate
+    → identity → restore mask gives back the input too.
     """
     cell_sigma = sigma / rf.meta.cell_size
     radius = int(4.0 * cell_sigma + 0.5)  # scipy truncate=4.0 default
+    if radius == 0:
+        return rf
     dtype = np.dtype(rf.meta.dtype)
 
-    src = rf
-    nan_mask_rf = None
-    if preserve_nan:
-        has_nan = (
-            rf.df.select(
-                F.max(F.exists("values", lambda v: F.isnan(v)).cast("int")).alias("x")
-            ).collect()[0]["x"]
-            or 0
-        )
-        if has_nan:
-            nan_mask_rf = rf
-            if radius == 0:
-                # degenerate σ: no smoothing happens, so extrapolate + NaN
-                # restore is the whole composition (the fused path below
-                # requires radius ≥ 1); extrapolate is only invoked here —
-                # the fused path never runs its planning jobs
-                src = extrapolate(rf)
-
-    if radius > 0 and nan_mask_rf is not None:
+    has_nan = preserve_nan and (
+        rf.df.select(
+            F.max(F.exists("values", lambda v: F.isnan(v)).cast("int")).alias("x")
+        ).collect()[0]["x"]
+        or 0
+    )
+    if has_nan:
         # FUSED single round (r7): local exact NN fill + reflect + blur + NaN
-        # restore in ONE stencil pass over the ORIGINAL raster, replacing the
-        # extrapolate pre-pass (its own flags scan + stencil round), the blur
-        # round, and the _binary restore join (guide §2.4: remove shuffles
-        # outright). Exactness: the restored output keeps only originally
-        # valid cells, and a valid cell's blur reads the ±radius Chebyshev
-        # box; every read NaN cell c therefore has a valid cell within
-        # Chebyshev radius, so its true nearest donor is within Euclidean
-        # radius·√2 — filling the extended core (core ± radius) with proof
-        # margin hp = ⌈radius·√2⌉ via the PROVEN extrapolate kernel
-        # reproduces extrapolate's fill (same donor, same tie-break) for
-        # every cell that can influence a surviving output. Deeper NaN cells
-        # stay NaN and contaminate only cells that are restored to NaN
-        # anyway. Reflection needs no extra margin: an out-of-grid position
-        # read by valid cell v mirrors to an in-grid cell within Chebyshev
-        # radius of v (|r_v − (k−1)| ≤ radius − 1 when r_v + k ≤ radius), so
-        # reflected reads obey the same bound. Interleaved A/B on the
-        # 16.8M-cell bench raster: 6.7-8.5 s → (see OPTIMIZATION_r07.md),
-        # full-raster bit-equality against the composed path verified on
-        # scattered-NaN, blob, edge-band, and mostly-NaN layouts.
+        # restore in ONE stencil pass over the ORIGINAL raster — no
+        # extrapolate pre-pass and no restore join. Exactness: the restored
+        # output keeps only originally valid cells, and a valid cell's blur
+        # reads the ±radius Chebyshev box; every read NaN cell c therefore has
+        # a valid cell within Chebyshev radius, so its true nearest donor is
+        # within Euclidean radius·√2 — filling the extended core (core ±
+        # radius) with proof margin hp = ⌈radius·√2⌉ via the PROVEN
+        # extrapolate kernel reproduces extrapolate's fill (same donor, same
+        # tie-break) for every cell that can influence a surviving output.
+        # Deeper NaN cells stay NaN and contaminate only cells that are
+        # restored to NaN anyway. Reflection needs no extra margin: an
+        # out-of-grid position read by valid cell v mirrors to an in-grid cell
+        # within Chebyshev radius of v (|r_v − (k−1)| ≤ radius − 1 when r_v +
+        # k ≤ radius), so reflected reads obey the same bound. Interleaved A/B
+        # on the 16.8M-cell bench raster: 6.7-8.5 s → (see
+        # OPTIMIZATION_r07.md), full-raster bit-equality against the composed
+        # path verified on scattered-NaN, blob, edge-band, and mostly-NaN
+        # layouts.
         ext = radius
         hp = int(math.ceil(radius * math.sqrt(2.0)))
         h_fused = ext + hp
-        fill_kern = _nn_fill_kernel(hp)
 
         def kern_fused(padded, valid, info):
             r0, c0, th, tw, h_ = info
             core_nan = np.isnan(padded[h_ : h_ + th, h_ : h_ + tw])
             sub_info = (r0 - ext, c0 - ext, th + 2 * ext, tw + 2 * ext, hp)
-            filled_ext = fill_kern(padded, valid, sub_info)
+            filled_ext = _nn_fill(padded, valid, sub_info)
             a = padded.copy()
             a[hp : hp + th + 2 * ext, hp : hp + tw + 2 * ext] = filled_ext
             a = _symmetric_fill(a, valid).astype(dtype)
@@ -468,32 +426,17 @@ def blur(rf: RasterFrame, sigma: float, *, preserve_nan: bool = True) -> RasterF
             out[core_nan] = np.nan
             return out
 
-        return stencil_apply(nan_mask_rf, h_fused, kern_fused)
+        return stencil_apply(rf, h_fused, kern_fused)
 
-    if radius == 0:
-        out = src
-    else:
-        def kern(padded, valid, info):
-            r0, c0, th, tw, h = info
-            a = _symmetric_fill(padded, valid).astype(dtype)
-            w = _gaussian_weights(cell_sigma, radius).astype(dtype)
-            tmp = _corr1d(a, w, axis=0)
-            tmp = _corr1d(tmp, w, axis=1)
-            return tmp[h : h + th, h : h + tw]
+    def kern(padded, valid, info):
+        r0, c0, th, tw, h = info
+        a = _symmetric_fill(padded, valid).astype(dtype)
+        w = _gaussian_weights(cell_sigma, radius).astype(dtype)
+        tmp = _corr1d(a, w, axis=0)
+        tmp = _corr1d(tmp, w, axis=1)
+        return tmp[h : h + th, h : h + tw]
 
-        out = stencil_apply(src, radius, kern)
-
-    if nan_mask_rf is not None:
-        # restore NaN mask: aligned zip keeping NaN where original was NaN
-        from .elementwise import _binary
-
-        out = _binary(
-            nan_mask_rf,
-            out,
-            lambda orig, b: F.when(F.isnan(orig), F.lit(float("nan"))).otherwise(b),
-            lambda orig, b: np.where(np.isnan(orig), np.nan, b),
-        )
-    return out
+    return stencil_apply(rf, radius, kern)
 
 
 def sobel(rf: RasterFrame) -> RasterFrame:
@@ -558,16 +501,6 @@ def dilate(rf: RasterFrame, radius: float) -> RasterFrame:
     return stencil_apply(rf, cell_radius, kern)
 
 
-# Remaining-NaN-tile count under which extrapolate finishes with the exact-
-# radius round. The radius computation is a broadcast-nested-loop
-# join of (remaining NaN tiles) × (census donor reps) with the smaller side
-# broadcast, and the targeted message builder broadcasts the radii table —
-# both need the remaining-tile set to be broadcast-sized. Above the bound the
-# plain doubling loop runs (targets-pruned, memory-safe) until the remaining
-# count shrinks under it; on real data the h=8 sweep alone gets there.
-EXTRAPOLATE_SUMMARY_MAX_TARGETS = 1_000_000
-
-
 def _tile_census(rf: RasterFrame) -> DataFrame:
     """One row per tile, everything extrapolate plans from, in ONE vectorized
     Arrow pass over the original raster:
@@ -577,10 +510,9 @@ def _tile_census(rf: RasterFrame) -> DataFrame:
       when it reaches the tile width (it may then cover a full row, so it is
       no same-row donor bound). A flat run of length L < tile width never
       crosses a full row, so every cell in it has a same-row donor within L —
-      a PROVEN radius. For the dense-raster-with-scattered-holes shape (blur's
-      preserve_nan pre-pass on real rasters) that settles every tile without
-      the donor reps, and the radius is the hole size, not ~half a tile
-      diagonal;
+      a PROVEN radius. For the dense-raster-with-scattered-holes shape (the
+      common one on real rasters) that settles every tile without the donor
+      reps, and the radius is the hole size, not ~half a tile diagonal;
     - ``rmin``/``rmax``/``cmin``/``cmax``: the tile-LOCAL NaN bounding box
       (NULL without NaN) — the rep-bound input, so a small hole in a big tile
       still gathers a hole-sized window;
@@ -714,7 +646,7 @@ def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> Dat
     collected once into three sorted numpy arrays and broadcast; a batched
     ``mapInPandas`` over the tiny radii table then box-queries each target's
     window out of the sorted arrays (``searchsorted`` on the row coordinate)
-    and runs the identical proven :func:`_nn_fill_kernel` on a window
+    and runs the identical proven :func:`_nn_fill` on a window
     re-assembled from those donors. Result is bit-equal to the dense-strip
     round — the window a kernel sees contains exactly the same donor cells.
 
@@ -745,7 +677,6 @@ def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> Dat
     dv = np.concatenate(dvs) if dvs else np.empty(0, np.float64)
     order = np.lexsort((gc, gr))
     bc = rf.df.sparkSession.sparkContext.broadcast((gr[order], gc[order], dv[order]))
-    kern = _nn_fill_kernel(None)
 
     def fill(it):
         G, C, V = bc.value
@@ -780,7 +711,7 @@ def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> Dat
                     padded = np.full((re2 - rs2, ce2 - cs2), np.nan)
                     padded[g2 - rs2, c2 - cs2] = v2
                     info = (r0, c0, th_, tw_, h_, r0 - rs2, c0 - cs2)
-                    core = kern(padded, np.ones(padded.shape, dtype=bool), info)
+                    core = _nn_fill(padded, np.ones(padded.shape, dtype=bool), info)
                 out["raster_id"].append(raster_id)
                 out["tile_row"].append(tr)
                 out["tile_col"].append(tc)
@@ -918,23 +849,24 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
     """NaN → nearest non-NaN by Euclidean index distance, ties → lowest (row, col)
     (reference src/rastr/raster.py:1290-1309 + arr/fill.py:11-32).
 
-    Two-level plan (SURVEY §2.2): ONE Arrow census pass over the original
-    raster (:func:`_tile_census`, localCheckpointed and read by a single
-    aggregate job) gives every NaN tile an EXACT proven-sufficient radius —
-    the NaN-run bound alone when the tile's holes are small (the common
-    dense-raster shape), a 5-rep donor broadcast-nested-loop min over the
-    tile's NaN bbox only for tiles without a valid run bound — and ONE
-    targeted stencil round at per-tile radius finishes, always filling from
-    the ORIGINAL raster (scipy NearestNDInterpolator semantics: chained
-    propagation would drift). NaN-free tiles never enter the shuffle at all.
-    All-NaN rasters return unchanged. A halo-doubling fallback covers the
-    adversarial case where the NaN-tile set itself is too big to broadcast.
+    One plan for every donor layout (SURVEY §2.2): ONE Arrow census pass over
+    the original raster (:func:`_tile_census`, localCheckpointed and read by a
+    single aggregate job) gives every NaN tile an EXACT proven-sufficient
+    radius — the NaN-run bound alone when the tile's holes are small (the
+    common dense-raster shape), a 5-rep donor min over the tile's NaN bbox
+    (:func:`_exact_target_radii`) only for tiles without a valid run bound —
+    and ONE round at per-tile radius finishes, always filling from the
+    ORIGINAL raster (scipy NearestNDInterpolator semantics: chained
+    propagation would drift). That round gathers either dense window strips
+    (:func:`stencil_apply` with ``targets``) or a broadcast donor set
+    (:func:`_sparse_nn_fill`), picked from driver-known volume estimates.
+    NaN-free tiles never enter the round at all. NaN-free and all-NaN
+    rasters return unchanged.
     """
     if method not in ("nearest",):
         raise NotImplementedError(f"Unsupported extrapolation method: {method}")
     meta = rf.meta
     Tsz = meta.tile_size
-    make_kernel = _nn_fill_kernel
 
     # full proof radius = the grid DIAGONAL: max(H, W) would leave a far
     # corner unproven when the only donors sit in the opposite corner
@@ -958,56 +890,8 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
         return RasterFrame(rf.df, meta, rf.raster_id)
     flags = census.filter(flagged)
 
-    out_df = rf.df
-    if n_targets > EXTRAPOLATE_SUMMARY_MAX_TARGETS:
-        # Doubling fallback ONLY while the NaN-tile set is too big to
-        # broadcast (adversarial dense-checkerboard layouts); each round
-        # recomputes just the still-NaN tiles (fills use only original
-        # donors, so a NaN-free tile is final) and localCheckpoint cuts the
-        # per-round plan — lineage stays one round deep however many rounds
-        # run. Exits into the exact-radius round as soon as the remaining
-        # set shrinks under the bound.
-        h = 8
-        targets = flags.select("tile_row", "tile_col")
-        for _ in range(64):  # 2^64 cells ≫ any grid; exits via remaining == 0
-            filled = stencil_apply(
-                rf, h, make_kernel(h), targets=targets, n_targets=n_targets,
-                clip_to_grid=h > 32,
-            )
-            out_df = out_df.filter(~has_nan).unionByName(filled.df)
-            # rebinding out_df each round drops the previous round's
-            # reference: its localCheckpoint blocks are reclaimed by the
-            # ContextCleaner once this round's checkpoint materializes (the
-            # old .cache() loop needed an explicit unpersist; checkpoint
-            # blocks are GC-owned)
-            out_df = out_df.localCheckpoint(eager=False)
-            remaining = out_df.filter(has_nan).select("tile_row", "tile_col")
-            n_targets = remaining.count()  # one job: materializes the checkpoint
-            if not n_targets or h >= max_h:
-                return RasterFrame(out_df, meta, rf.raster_id)
-            if n_targets <= EXTRAPOLATE_SUMMARY_MAX_TARGETS:
-                # the exact round fills from the ORIGINAL raster, so its
-                # radii must be measured on the ORIGINAL tiles too — a run
-                # bound taken from the partially-filled table would count
-                # round fills as donors and under-size the window (cells
-                # proven in earlier rounds get re-proven here, since the
-                # whole tile core is re-emitted). Only the tile SET comes
-                # from the partially-filled table; the bounds are the
-                # census rows of those tiles.
-                keys = remaining.localCheckpoint(eager=True)
-                flags = flags.join(
-                    F.broadcast(keys), ["tile_row", "tile_col"], "left_semi"
-                ).localCheckpoint(eager=True)
-                n_need = flags.filter(F.col("max_run").isNull()).count()
-                break
-            targets = remaining
-            h = min(h * 2, max_h)
-
-    # exact-radius round: run-bound radii straight from the census; tiles
-    # without a valid run bound get the donor-rep broadcast-nested-loop min
-    # over their NaN bbox (the ORIGINAL raster's NaN cells: the exact round
-    # re-fills every original NaN of the flagged tiles) — then ONE targeted
-    # round (two-pass kernel, grid-clipped windows)
+    # exact radii: run-bound radii straight from the census; tiles without a
+    # valid run bound get the donor-rep min over their NaN bbox
     radii = flags.filter(F.col("max_run").isNotNull()).select(
         "tile_row", "tile_col",
         F.greatest(F.lit(1), F.least("max_run", F.lit(max_h))).cast("int").alias("h"),
@@ -1028,8 +912,8 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
     # only when some tile lacked a valid NaN-run bound (n_need > 0): a pure
     # run-bound radius set has h < T, so the dense volume is bounded by
     # ~9× tile cells and the strip gather is the right plan — gating on it
-    # keeps the common dense-raster-with-holes pre-pass (blur preserve_nan)
-    # free of the extra driver action.
+    # keeps the common dense-raster-with-holes shape free of the extra driver
+    # action.
     use_sparse = False
     if n_need:
         radii = radii.localCheckpoint(eager=False)
@@ -1047,105 +931,98 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
     if use_sparse:
         filled_df = _sparse_nn_fill(rf, radii, _donor_cells(rf))
     else:
-        filled_df = stencil_apply(
-            rf, None, make_kernel(None), targets=radii, clip_to_grid=True
-        ).df
-    out_df = out_df.filter(~has_nan).unionByName(filled_df)
-    return RasterFrame(out_df, meta, rf.raster_id)
+        filled_df = stencil_apply(rf, None, _nn_fill, targets=radii).df
+    return RasterFrame(rf.df.filter(~has_nan).unionByName(filled_df), meta, rf.raster_id)
 
 
-def _nn_fill_kernel(h):
-    """Per-tile nearest-donor fill kernel with proof radius ``h`` (module level
+def _nn_fill(padded: np.ndarray, valid: np.ndarray, info: tuple) -> np.ndarray:
+    """Per-tile nearest-donor fill, proof radius = ``info``'s h (module level
     so the two code paths — offset sweep for h ≤ 32, two-pass column scan for
     larger radii — are directly testable against each other; semantics in
     :func:`extrapolate`)."""
-
-    def kern(padded, valid, info):
-        # 5-tuple = full (th+2h)×(tw+2h) window (core offset = h);
-        # 7-tuple = grid-clipped window with explicit core offsets (the
-        # large-radius memory path — see stencil_apply clip_to_grid)
-        if len(info) == 7:
-            r0, c0, th, tw, h_, top, left = info
-        else:
-            r0, c0, th, tw, h_ = info
-            top = left = h_
-        core = padded[top : top + th, left : left + tw]
-        out = core.copy()
-        nan_mask = np.isnan(core)
-        if not nan_mask.any() or np.isnan(padded).all():
-            return out
-        # offsets sorted by (d², dy, dx): first non-NaN donor in this order IS
-        # the min-distance donor with lowest-(row,col) tie-break — because for
-        # tied d², smaller dy ⇒ smaller donor row (dy = donor_row - cell_row),
-        # then smaller dx ⇒ smaller donor col. Only offsets with d ≤ h qualify
-        # (a donor outside the window is at Chebyshev > h ⇒ Euclid > h, so a
-        # hit within h is globally optimal and every tied donor is in-window).
-        if len(info) == 5 and h_ <= 32:
-            # small radius, full (unclipped) window: offset-ordered sweep,
-            # fully vectorized per offset. Clipped 7-tuple windows always take
-            # the two-pass scan — the sweep's padded[top+dy ...] indexing
-            # assumes a full h_ margin on every side.
-            offs = [
-                (dy * dy + dx * dx, dy, dx)
-                for dy in range(-h_, h_ + 1)
-                for dx in range(-h_, h_ + 1)
-                if 0 < dy * dy + dx * dx <= h_ * h_
-            ]
-            offs.sort()
-            pend = nan_mask.copy()
-            for _, dy, dx in offs:
-                if not pend.any():
-                    break
-                cand = padded[top + dy : top + dy + th, left + dx : left + dx + tw]
-                take = pend & ~np.isnan(cand)
-                out[take] = cand[take]
-                pend &= ~take
-            return out
-        # large radius (sparse data): exact two-pass nearest-donor search.
-        # Pass 1 — per COLUMN, the nearest donor row (two vectorized accumulate
-        # scans; tie |Δrow| above/below → the smaller row). Pass 2 — per output
-        # row, a vectorized lexicographic argmin over all padded columns: min
-        # total d², ties by (donor row, donor col) — exactly the reference's
-        # ordering. A donor that is not the nearest within its own column can
-        # never tie the global optimum (its column's nearest has strictly
-        # smaller total), so pass 1 loses nothing. O(core_cells × padded_width)
-        # numpy work instead of a Python loop per NaN cell with a full
-        # donor-array distance scan each iteration (VERDICT r3 item 3).
-        mask = ~np.isnan(padded)
-        P_r, P_c = padded.shape
-        ri = np.arange(P_r, dtype=np.int64)[:, None]
-        LARGE = P_r + P_c + 10  # > any real distance; empty columns never win
-        up = np.maximum.accumulate(np.where(mask, ri, -LARGE), axis=0)
-        down = np.minimum.accumulate(np.where(mask, ri, 3 * LARGE)[::-1], axis=0)[::-1]
-        d_up = ri - up
-        d_down = down - ri
-        nr = np.where(d_up <= d_down, up, down)  # tie → smaller donor row
-        dr = np.minimum(d_up, d_down)
-        dr2 = dr * dr  # ≥ LARGE² > h² wherever the column has no donor
-        cols = np.arange(P_c, dtype=np.int64)
-        h2 = h_ * h_
-        sentinel = np.iinfo(np.int64).max
-        for i in range(th):
-            row_nan = nan_mask[i]
-            if not row_nan.any():
-                continue
-            r = i + top
-            cc = (np.nonzero(row_nan)[0] + left)[:, None]
-            dc = cc - cols[None, :]
-            tot = dr2[r][None, :] + dc * dc
-            best = tot.min(axis=1)
-            sel = best <= h2
-            if not sel.any():
-                continue
-            tie_key = np.where(
-                tot == best[:, None], nr[r][None, :] * P_c + cols[None, :], sentinel
-            )
-            j = tie_key.argmin(axis=1)[sel]
-            fill_cols = np.nonzero(row_nan)[0][sel]
-            out[i, fill_cols] = padded[nr[r, j], j]
+    # 5-tuple = full (th+2h)×(tw+2h) window (core offset = h);
+    # 7-tuple = grid-clipped window with explicit core offsets (the
+    # targeted stencil_apply form and the sparse round)
+    if len(info) == 7:
+        r0, c0, th, tw, h_, top, left = info
+    else:
+        r0, c0, th, tw, h_ = info
+        top = left = h_
+    core = padded[top : top + th, left : left + tw]
+    out = core.copy()
+    nan_mask = np.isnan(core)
+    if not nan_mask.any() or np.isnan(padded).all():
         return out
-
-    return kern
+    # offsets sorted by (d², dy, dx): first non-NaN donor in this order IS
+    # the min-distance donor with lowest-(row,col) tie-break — because for
+    # tied d², smaller dy ⇒ smaller donor row (dy = donor_row - cell_row),
+    # then smaller dx ⇒ smaller donor col. Only offsets with d ≤ h qualify
+    # (a donor outside the window is at Chebyshev > h ⇒ Euclid > h, so a
+    # hit within h is globally optimal and every tied donor is in-window).
+    if len(info) == 5 and h_ <= 32:
+        # small radius, full (unclipped) window: offset-ordered sweep,
+        # fully vectorized per offset. Clipped 7-tuple windows always take
+        # the two-pass scan — the sweep's padded[top+dy ...] indexing
+        # assumes a full h_ margin on every side.
+        offs = [
+            (dy * dy + dx * dx, dy, dx)
+            for dy in range(-h_, h_ + 1)
+            for dx in range(-h_, h_ + 1)
+            if 0 < dy * dy + dx * dx <= h_ * h_
+        ]
+        offs.sort()
+        pend = nan_mask.copy()
+        for _, dy, dx in offs:
+            if not pend.any():
+                break
+            cand = padded[top + dy : top + dy + th, left + dx : left + dx + tw]
+            take = pend & ~np.isnan(cand)
+            out[take] = cand[take]
+            pend &= ~take
+        return out
+    # large radius (sparse data): exact two-pass nearest-donor search.
+    # Pass 1 — per COLUMN, the nearest donor row (two vectorized accumulate
+    # scans; tie |Δrow| above/below → the smaller row). Pass 2 — per output
+    # row, a vectorized lexicographic argmin over all padded columns: min
+    # total d², ties by (donor row, donor col) — exactly the reference's
+    # ordering. A donor that is not the nearest within its own column can
+    # never tie the global optimum (its column's nearest has strictly
+    # smaller total), so pass 1 loses nothing. O(core_cells × padded_width)
+    # numpy work instead of a Python loop per NaN cell with a full
+    # donor-array distance scan each iteration (VERDICT r3 item 3).
+    mask = ~np.isnan(padded)
+    P_r, P_c = padded.shape
+    ri = np.arange(P_r, dtype=np.int64)[:, None]
+    LARGE = P_r + P_c + 10  # > any real distance; empty columns never win
+    up = np.maximum.accumulate(np.where(mask, ri, -LARGE), axis=0)
+    down = np.minimum.accumulate(np.where(mask, ri, 3 * LARGE)[::-1], axis=0)[::-1]
+    d_up = ri - up
+    d_down = down - ri
+    nr = np.where(d_up <= d_down, up, down)  # tie → smaller donor row
+    dr = np.minimum(d_up, d_down)
+    dr2 = dr * dr  # ≥ LARGE² > h² wherever the column has no donor
+    cols = np.arange(P_c, dtype=np.int64)
+    h2 = h_ * h_
+    sentinel = np.iinfo(np.int64).max
+    for i in range(th):
+        row_nan = nan_mask[i]
+        if not row_nan.any():
+            continue
+        r = i + top
+        cc = (np.nonzero(row_nan)[0] + left)[:, None]
+        dc = cc - cols[None, :]
+        tot = dr2[r][None, :] + dc * dc
+        best = tot.min(axis=1)
+        sel = best <= h2
+        if not sel.any():
+            continue
+        tie_key = np.where(
+            tot == best[:, None], nr[r][None, :] * P_c + cols[None, :], sentinel
+        )
+        j = tie_key.argmin(axis=1)[sel]
+        fill_cols = np.nonzero(row_nan)[0][sel]
+        out[i, fill_cols] = padded[nr[r, j], j]
+    return out
 
 
 # -- attach ------------------------------------------------------------------

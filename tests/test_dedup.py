@@ -428,6 +428,32 @@ class TestFuzzyDedupScaleGuards:
         # cap must NOT cost it: recall loss is confined to degenerate buckets
         assert (1000, 1001) in {(p["id_a"], p["id_b"]) for p in pairs}
 
+    @pytest.mark.parametrize("cap", [None, 400])
+    def test_hot_bucket_pairs_match_self_join(self, spark, cap):
+        # a 300-id hot bucket plus ordinary buckets: the generated pairs must
+        # be exactly the brute-force (band, bucket) self-join's pair set, in
+        # both cap modes (a cap above the hot size keeps every bucket)
+        import random
+        from itertools import combinations
+
+        # one bucket per (doc, band), as minhash_lsh_buckets emits; band 1's
+        # bucket 7 is not band 0's hot bucket 7
+        rng = random.Random(5)
+        rows = [(i, 0, 7) for i in rng.sample(range(10_000), 300)]
+        rows += [(i, 0, rng.randrange(8, 60)) for i in range(10_000, 10_100)]
+        rows += [(i, band, rng.randrange(60)) for band in (1, 2) for i in range(400)]
+        buckets: dict = {}
+        for i, band, bucket in rows:
+            buckets.setdefault((band, bucket), set()).add(i)
+        want = {p for ids in buckets.values() for p in combinations(sorted(ids), 2)}
+        b = spark.createDataFrame(rows, "id long, band int, bucket long")
+        got = [
+            (r["id_a"], r["id_b"])
+            for r in D.candidate_pairs_from_buckets(b, max_bucket_size=cap).collect()
+        ]
+        assert len(got) == len(set(got))
+        assert set(got) == want
+
 
 class TestConnectedComponentsTelemetry:
     @pytest.mark.parametrize("reliable", [False, True])

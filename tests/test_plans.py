@@ -306,6 +306,21 @@ class TestStencilFixedCosts:
         assert jobs == [], f"dilate launched {len(jobs)} job(s) before its stencil runs"
         assert out.to_numpy().shape == (8, 8)
 
+    @pytest.mark.parametrize("preserve_nan", [True, False])
+    def test_blur_radius_zero_is_identity_without_a_job(self, spark, preserve_nan):
+        # σ = 0.1 cell truncates to a radius-0 kernel ([1.0]): the blur, and
+        # with preserve_nan the extrapolate → blur → restore composition, is
+        # the identity
+        rng = np.random.RandomState(4)
+        arr = rng.rand(12, 10)
+        arr[rng.rand(12, 10) < 0.2] = np.nan
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 12), 12, 10, tile_size=4)
+        src = RasterFrame.from_numpy(spark, arr, meta)
+        with job_group(spark, f"blur-r0-{preserve_nan}") as jobs:
+            out = src.blur(0.1, preserve_nan=preserve_nan)
+        assert jobs == [], f"radius-0 blur launched {len(jobs)} job(s)"
+        np.testing.assert_array_equal(out.to_numpy(), arr)
+
     def test_extrapolate_then_stats_job_count(self, spark):
         # mostly-NaN raster (one donor in two of the 16 tiles): census, radii
         # volume probe, sparse donor fill and the stats aggregate

@@ -402,7 +402,7 @@ class TestNNFillKernelLargeRadius:
         return out
 
     def test_matches_brute_force_with_ties(self):
-        from rastr_spark.operators.stencils import _nn_fill_kernel
+        from rastr_spark.operators.stencils import _nn_fill
 
         rng = np.random.default_rng(7)
         for _ in range(15):
@@ -414,14 +414,14 @@ class TestNNFillKernelLargeRadius:
             cc = rng.integers(0, tw + 2 * h, nd)
             # integer donor coords at random spots → plenty of exact d² ties
             padded[rr, cc] = rng.integers(0, 5, nd).astype(float)
-            got = _nn_fill_kernel(h)(padded.copy(), None, (0, 0, th, tw, h))
+            got = _nn_fill(padded.copy(), None, (0, 0, th, tw, h))
             want = self._brute(padded.copy(), th, tw, h)
             np.testing.assert_array_equal(got, want)
 
     def test_half_nan_256_tile_at_least_5x_faster_than_loop(self):
         import time
 
-        from rastr_spark.operators.stencils import _nn_fill_kernel
+        from rastr_spark.operators.stencils import _nn_fill
 
         rng = np.random.default_rng(3)
         th = tw = 256
@@ -453,7 +453,7 @@ class TestNNFillKernelLargeRadius:
         want = old_loop(padded.copy(), th, tw, h)
         t_loop = time.perf_counter() - t0
         t0 = time.perf_counter()
-        got = _nn_fill_kernel(h)(padded.copy(), None, (0, 0, th, tw, h))
+        got = _nn_fill(padded.copy(), None, (0, 0, th, tw, h))
         t_scan = time.perf_counter() - t0
         np.testing.assert_array_equal(got, want)
         assert t_scan * 5 <= t_loop, f"scan {t_scan:.3f}s vs loop {t_loop:.3f}s"
@@ -477,6 +477,8 @@ class TestTargetedHalo:
         return RasterFrame.from_numpy(spark, arr, meta)
 
     def test_messages_match_ring_builder(self, spark):
+        from pyspark.sql import functions as F
+
         from rastr_spark.operators.stencils import halo_messages, halo_messages_targeted
 
         rf = self._rf(spark)
@@ -492,15 +494,17 @@ class TestTargetedHalo:
             }
             tgt = {
                 (r["tile_row"], r["tile_col"], r["gr0"], r["gc0"], r["n_rows"], r["n_cols"], tuple(r["strip"]))
-                for r in halo_messages_targeted(rf, h, targets).collect()
+                for r in halo_messages_targeted(
+                    rf, targets.withColumn("h", F.lit(h))
+                ).collect()
             }
             assert ring == tgt, f"h={h}"
 
 
 class TestExtrapolateCappedRounds:
     def test_mostly_nan_exact_vs_brute(self, spark):
-        # sparse donors on a multi-tile grid: the loop's targeted rounds + the
-        # remaining-tile-gated jump to the full proof radius must stay EXACT
+        # sparse donors on a multi-tile grid: the census radii + the one
+        # exact-radius round must stay EXACT
         import numpy as np
 
         from rastr_spark.meta import Affine, RasterMeta
@@ -619,58 +623,64 @@ class TestExtrapolateCappedRounds:
             [(r, c, 0, 15, 0, 15) for r in range(4) for c in range(1, 4)],
             "tile_row int, tile_col int, rmin int, rmax int, cmin int, cmax int",
         )
-        radii = {
-            (r["tile_row"], r["tile_col"]): r["h"]
-            for r in st._exact_target_radii(
-                flags, summary, meta, 91, broadcast_flags=True
-            ).collect()
-        }
-        for (tr, tc), h in radii.items():
-            # true worst case: the tile's far-column cell to the donor column,
-            # same row (donor column is full) → distance = far col index
-            true_worst = tc * 16 + 15
-            assert h >= true_worst, (tr, tc, h)
-            # tight within a tile diagonal of slack (rep = centre-nearest
-            # donor of the best tile, ±half a tile in each axis)
-            assert h <= true_worst + 24, (tr, tc, h)
-        # the ring-doubling variant (the bounded-pair-count path for huge
-        # target × rep products) must agree wherever a ring contains the
-        # globally-best rep — here ring K=4 covers the whole 4-tile grid
-        ring = {
-            (r["tile_row"], r["tile_col"]): r["h"]
-            for r in st._exact_target_radii(
-                flags, summary, meta, 91, broadcast_flags=True, ring=True
-            ).collect()
-        }
-        assert ring == radii
+        # both broadcast sides of the cross join give the same radii
+        for broadcast_flags in (True, False):
+            radii = {
+                (r["tile_row"], r["tile_col"]): r["h"]
+                for r in st._exact_target_radii(
+                    flags, summary, meta, 91, broadcast_flags=broadcast_flags
+                ).collect()
+            }
+            for (tr, tc), h in radii.items():
+                # true worst case: the tile's far-column cell to the donor
+                # column, same row (donor column is full) → distance = far
+                # col index
+                true_worst = tc * 16 + 15
+                assert h >= true_worst, (broadcast_flags, tr, tc, h)
+                # tight within a tile diagonal of slack (rep = centre-nearest
+                # donor of the best tile, ±half a tile in each axis)
+                assert h <= true_worst + 24, (broadcast_flags, tr, tc, h)
+            # the ring-doubling variant (the bounded-pair-count path for huge
+            # target × rep products) must agree wherever a ring contains the
+            # globally-best rep — here ring K=4 covers the whole 4-tile grid
+            ring = {
+                (r["tile_row"], r["tile_col"]): r["h"]
+                for r in st._exact_target_radii(
+                    flags, summary, meta, 91, broadcast_flags=broadcast_flags, ring=True
+                ).collect()
+            }
+            assert ring == radii, broadcast_flags
 
-    def test_many_remaining_tiles_keep_doubling(self, spark, monkeypatch):
-        # above the broadcast guard the radii cross-join would be the
-        # scale-killer — doubling must continue (guard patched to 0 so ANY
-        # remaining count exceeds it)
-        import numpy as np
-
+    @pytest.mark.parametrize("layout", ["mostly-nan", "donor-column"])
+    def test_ring_radii_gate_end_to_end(self, spark, monkeypatch, layout):
+        # the radii gate's ring join (forced: any target × rep product
+        # exceeds a pair bound of -1) must fill bit-equal to the default
+        # single cross join
         import rastr_spark.operators.stencils as st
-        from rastr_spark.meta import Affine, RasterMeta
-        from rastr_spark.tiles import RasterFrame
 
-        calls = []
-        orig = st.stencil_apply
-
-        def spy(rf, h, kernel, **kw):
-            calls.append(h)
-            return orig(rf, h, kernel, **kw)
-
-        monkeypatch.setattr(st, "stencil_apply", spy)
-        monkeypatch.setattr(st, "EXTRAPOLATE_SUMMARY_MAX_TARGETS", 0)
-        H = W = 64
+        H, W = 72, 88
         arr = np.full((H, W), np.nan)
-        arr[0, 0] = 7.0
+        if layout == "mostly-nan":
+            rng = np.random.RandomState(13)
+            pts = rng.choice(H * W, 10, replace=False)
+            arr[pts // W, pts % W] = rng.rand(10) * 10
+        else:
+            arr[:, 0] = np.arange(H, dtype=float) + 1.0
         meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, H), H, W, tile_size=16)
-        out = st.extrapolate(RasterFrame.from_numpy(spark, arr, meta)).to_numpy()
-        assert (out == 7.0).all()
-        # pure doubling capped at the diagonal proof radius
-        assert calls == [8, 16, 32, 64, 91], calls
+        rf = RasterFrame.from_numpy(spark, arr, meta)
+
+        modes = []
+        orig = st._exact_target_radii
+        monkeypatch.setattr(
+            st, "_exact_target_radii",
+            lambda *a, **kw: modes.append(kw["ring"]) or orig(*a, **kw),
+        )
+        want = st.extrapolate(rf).to_numpy()
+        monkeypatch.setattr(st, "EXTRAPOLATE_RADII_MAX_PAIRS", -1)
+        got = st.extrapolate(rf).to_numpy()
+        assert modes == [False, True], modes
+        assert not np.isnan(got).any()
+        np.testing.assert_array_equal(got, want)
 
     def test_dense_with_scattered_holes_uses_run_bound(self, spark):
         # the dense-raster-with-small-holes shape (every tile flagged, donors
@@ -705,54 +715,6 @@ class TestExtrapolateCappedRounds:
             cand = cand[np.lexsort((cand[:, 1], cand[:, 0]))]
             assert out[r, c] == arr[cand[0, 0], cand[0, 1]], (r, c)
 
-    def test_fallback_and_summary_paths_agree(self, spark, monkeypatch):
-        # the doubling fallback and the exact-radius summary plan are two
-        # routes to the same semantics — byte-identical output on a random
-        # sparse raster
-        import numpy as np
-
-        import rastr_spark.operators.stencils as st
-        from rastr_spark.meta import Affine, RasterMeta
-        from rastr_spark.tiles import RasterFrame
-
-        rng = np.random.RandomState(11)
-        H = W = 80
-        arr = np.full((H, W), np.nan)
-        pts = rng.choice(H * W, 25, replace=False)
-        arr[pts // W, pts % W] = rng.rand(25) * 10
-        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, H), H, W, tile_size=16)
-        rf = RasterFrame.from_numpy(spark, arr, meta)
-        want = st.extrapolate(rf).to_numpy()
-        monkeypatch.setattr(st, "EXTRAPOLATE_SUMMARY_MAX_TARGETS", 0)
-        got = st.extrapolate(rf).to_numpy()
-        np.testing.assert_array_equal(got, want)
-
-    def test_fallback_exit_radii_measured_on_original_raster(self, spark, monkeypatch):
-        # regression (round-6 review): when the doubling fallback breaks into
-        # the exact-radius round, the run/bbox bounds must come from the
-        # ORIGINAL raster — measuring them on the partially-filled table
-        # counts round fills as donors, under-sizes the window, and leaves
-        # (or re-introduces) NaNs because the final round re-fills whole
-        # tiles from the original donors
-        import numpy as np
-
-        import rastr_spark.operators.stencils as st
-        from rastr_spark.meta import Affine, RasterMeta
-        from rastr_spark.tiles import RasterFrame
-
-        H = W = 64
-        arr = np.full((H, W), np.nan)
-        arr[:, 0] = np.arange(H, dtype=float) + 1.0  # donor column only
-        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, H), H, W, tile_size=16)
-        # remaining counts per round: 16 → 16 → 12 → 8: breaks into the exact
-        # round with the right-half tiles partially filled by earlier rounds
-        monkeypatch.setattr(st, "EXTRAPOLATE_SUMMARY_MAX_TARGETS", 8)
-        out = st.extrapolate(RasterFrame.from_numpy(spark, arr, meta)).to_numpy()
-        assert not np.isnan(out).any()
-        # nearest donor for (r, c) is always (r, 0): distance c beats any
-        # off-row donor at sqrt(k² + c²)
-        np.testing.assert_array_equal(out, np.tile(arr[:, [0]], (1, W)))
-
     def test_single_corner_donor_fills_entire_grid(self, spark):
         # regression: the proof radius must reach the grid DIAGONAL — with
         # max(H, W) a lone corner donor left the far corner NaN (820 cells on
@@ -769,3 +731,23 @@ class TestExtrapolateCappedRounds:
         meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, H), H, W, tile_size=16)
         out = extrapolate(RasterFrame.from_numpy(spark, arr, meta)).to_numpy()
         assert (out == 7.0).all()
+
+
+class TestBenchHooks:
+    def test_stencil_instrument_names_exist(self):
+        # the benchmark's traced stencil run wraps these attributes by name;
+        # a rename here would otherwise break only traced runs
+        from perfbench.workloads import Stencil
+
+        class Stub:
+            def __init__(self):
+                self.patched = []
+
+            def patch(self, module, attr, name, *, force=True):
+                assert callable(getattr(module, attr, None)), f"{module.__name__}.{attr}"
+                self.patched.append(attr)
+
+        stub = Stub()
+        Stencil(None, 0).instrument(stub)
+        for attr in ("stencil_apply", "halo_messages", "halo_messages_targeted", "extrapolate"):
+            assert attr in stub.patched, stub.patched
