@@ -6,10 +6,7 @@ from .dedup import (
     exact_duplicates,
     minhash_candidate_pairs,
     minhash_lsh_buckets,
-    minhash_signature,
     ngram_jaccard_pairs,
-    simhash64,
-    simhash_groups,
     simhash_hamming_pairs,
 )
 from .similarity import (
@@ -38,11 +35,8 @@ __all__ = [
     "lang_id",
     "minhash_candidate_pairs",
     "minhash_lsh_buckets",
-    "minhash_signature",
     "ngram_jaccard_pairs",
     "quality_score",
-    "simhash64",
-    "simhash_groups",
     "simhash_hamming_pairs",
     "srp_topk",
     "token_count",

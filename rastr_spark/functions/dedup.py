@@ -8,14 +8,20 @@ Four families (all distributed, shuffle-aware):
   intersection counts → Jaccard = ∩ / (|A|+|B|−∩). The join is on gram (never a
   cartesian); hot grams can be frequency-capped.
 - **MinHash + LSH**: signature = per-hash-function MIN over shingle hashes. Two
-  hash families: ``xxhash64`` (default — int signatures, one JVM hash per gram
-  then one 8-byte rehash per hash fn; the production path) and ``md5`` —
-  *portable*: identical hex strings in Spark and DuckDB, so the driver's oracle
-  reproduces signatures bit-for-bit (kept solely for that oracle). Banding
-  buckets docs by (band_idx, band_value); candidate pairs share ≥1 bucket.
+  hash families: ``xxhash64`` (default, the production path — tokens are
+  hashed once in the JVM, folded into n-token shingle hashes in a vectorized
+  Arrow stage, then one 8-byte rehash per hash fn; int signatures) and ``md5``
+  — the oracle twin: string shingles and hex-string mins, identical in Spark
+  and DuckDB, so the SQL oracle in ``__spark_entry__`` reproduces signatures
+  bit-for-bit (kept solely for that oracle). Banding buckets docs by
+  (band_idx, band_value); candidate pairs share ≥1 bucket.
 - **SimHash**: 64-bit sign-aggregated token hashes; near-dups = equal simhash,
   or Hamming distance ≤ r via banding (pigeonhole: split 64 bits into
   ``bands > r`` blocks — any pair within distance r agrees exactly on ≥1 block).
+
+Every exact-duplicate grouping (batch exact dedup, the fuzzy pipeline's exact
+pre-pass and rep mapping, the persisted index) keys on one 128-bit content
+fingerprint (:data:`_FP_NAMES`), never on the document bytes.
 
 At the 10^12-doc regime: exact + LSH are the scale paths (linear, bounded fan-out);
 full Jaccard runs only on LSH candidates. Embedding near-dup lives in similarity.py.
@@ -83,29 +89,13 @@ def _fp_cols(text_col: str) -> list[Column]:
     ]
 
 
-def _group_keys(docs: DataFrame, text_col: str, key: str) -> tuple[DataFrame, list[str]]:
-    """(docs-with-key-columns, key-column-names) for the chosen keying mode.
-
-    key='fingerprint' (default, the scale path): fixed-width 128-bit+length
-    content key. key='text': group on the raw text — the paranoid byte-exact
-    path (shuffles full document bytes as key material; identical results
-    unless a 128-bit fingerprint collision occurs).
-    """
-    if key == "text":
-        return docs, [text_col]
-    if key != "fingerprint":
-        raise ValueError(f"unknown key mode: {key!r} (use 'fingerprint' or 'text')")
-    return docs.select("*", *_fp_cols(text_col)), list(_FP_NAMES)
-
-
 def exact_duplicates(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
-    key: str = "fingerprint",
+    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Groups of byte-identical texts: (canonical_id, dup_count), dup_count ≥ 2."""
-    keyed, keys = _group_keys(docs, text_col, key)
     return (
-        keyed.groupBy(*keys)
+        docs.select(id_col, *_fp_cols(text_col))
+        .groupBy(*_FP_NAMES)
         .agg(F.min(id_col).alias("canonical_id"), F.count("*").alias("dup_count"))
         .filter(F.col("dup_count") >= 2)
         .select("canonical_id", "dup_count")
@@ -113,19 +103,15 @@ def exact_duplicates(
 
 
 def dedup_exact(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
-    key: str = "fingerprint",
+    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Keep one row per distinct text — min(id) survivor, deterministic.
 
-    The shuffle (groupBy + semi-join) is keyed on the 128-bit fingerprint by
-    default, never the document bytes; pass ``key='text'`` for the byte-exact
-    paranoid path.
+    The shuffle (groupBy + semi-join) is keyed on the 128-bit fingerprint,
+    never the document bytes (:func:`exact_rep_table`).
     """
-    keyed, keys = _group_keys(docs, text_col, key)
-    w_ids = keyed.groupBy(*keys).agg(F.min(id_col).alias(id_col))
-    out = keyed.join(w_ids, keys + [id_col], "left_semi")
-    return out.drop(*_FP_NAMES) if key == "fingerprint" else out
+    keyed = docs.select("*", *_fp_cols(text_col))
+    return exact_rep_table(keyed, id_col).drop(*_FP_NAMES)
 
 
 def ngram_jaccard_pairs(
@@ -158,12 +144,7 @@ def ngram_jaccard_pairs(
     identical up to 64-bit collisions (P ≈ n_grams²·2⁻⁶⁴ — negligible at any
     scale this runs at); leave off for the bit-exact oracle path.
     """
-    gram_arr = word_ngrams(F.col(text_col), n)
-    grams = _spread_small_scan(docs).select(
-        F.col(id_col).alias("id"), F.explode(gram_arr).alias("gram")
-    )
-    if hash_grams:
-        grams = grams.select("id", F.xxhash64("gram").alias("gram"))
+    grams = _grams(docs, n, id_col, text_col, hash_grams)
     if max_doc_freq is not None:
         # the capped path consumes the exploded gram table through THREE
         # distinct plans (hot-gram count, the join's exchange, the sizes
@@ -172,13 +153,26 @@ def ngram_jaccard_pairs(
         # would run ~3×. One eager materialization (the same rows the join
         # shuffles anyway, disk-backed) cuts it: interleaved A/B at sf0.1,
         # hash_grams=True: 8.4 s → 3.6 s.
-        grams = grams.localCheckpoint(eager=True)
-        grams = _drop_hot_grams(grams, max_doc_freq)
-        sizes = grams.groupBy("id").agg(F.count("*").alias("n_grams"))
-    else:
-        # per-doc gram count == array size: skip the whole sizes explode pass
-        sizes = docs.select(F.col(id_col).alias("id"), F.size(gram_arr).alias("n_grams"))
+        return jaccard_pairs_from_grams(
+            grams.localCheckpoint(eager=True), threshold=threshold,
+            max_doc_freq=max_doc_freq,
+        )
+    # per-doc gram count == array size: skip the whole sizes explode pass
+    sizes = docs.select(
+        F.col(id_col).alias("id"), F.size(word_ngrams(F.col(text_col), n)).alias("n_grams")
+    )
     return _jaccard_join(grams, sizes, threshold)
+
+
+def _grams(
+    docs: DataFrame, n: int, id_col: str, text_col: str, hashed: bool
+) -> DataFrame:
+    """Exploded (id, gram): distinct word-n-grams per doc, as strings or as
+    8-byte ``xxhash64(gram)`` keys."""
+    grams = _spread_small_scan(docs).select(
+        F.col(id_col).alias("id"), F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
+    )
+    return grams.select("id", F.xxhash64("gram").alias("gram")) if hashed else grams
 
 
 def _drop_hot_grams(grams: DataFrame, max_doc_freq: int) -> DataFrame:
@@ -221,12 +215,7 @@ def hashed_grams(
     """Exploded (id, gram) with 8-byte xxhash64 gram keys — the production
     Jaccard substrate, and the materializable artifact its DuckDB oracle
     replays from (everything downstream of the hash function is plain SQL)."""
-    gram_arr = word_ngrams(F.col(text_col), n)
-    return (
-        _spread_small_scan(docs)
-        .select(F.col(id_col).alias("id"), F.explode(gram_arr).alias("gram"))
-        .select("id", F.xxhash64("gram").alias("gram"))
-    )
+    return _grams(docs, n, id_col, text_col, hashed=True)
 
 
 def jaccard_pairs_from_grams(
@@ -240,42 +229,6 @@ def jaccard_pairs_from_grams(
         grams = _drop_hot_grams(grams, max_doc_freq)
     sizes = grams.groupBy("id").agg(F.count("*").alias("n_grams"))
     return _jaccard_join(grams, sizes, threshold)
-
-
-def minhash_signature(
-    text: Column, *, n: int = 3, num_hashes: int = 16, hash_family: str = "xxhash64"
-) -> Column:
-    """MinHash signature column.
-
-    hash_family='xxhash64' (default, production): element i =
-    min(xxhash64(xxhash64(gram), i)) as array<bigint> — integer min, no string
-    allocation; reference for banding semantics: the md5 variant proven against
-    the DuckDB oracle (dedup_minhash_lsh).
-    hash_family='md5': element i = min(md5(gram || ':' || i)) as array<string> —
-    portable across Spark and DuckDB (both lowercase hex), kept SOLELY so the
-    correctness oracle can verify signatures bit-for-bit.
-
-    Note: in the column form the per-gram base hash is inlined per hash fn;
-    :func:`minhash_lsh_buckets` materializes it once per doc — use that for the
-    hot path.
-    """
-    grams = word_ngrams(text, n)
-
-    # closure factories: Spark binds a 2-param lambda as (element, index), so the
-    # hash index must be captured via def, never as a lambda default arg
-    def _md5_min(i: int):
-        return F.array_min(F.transform(grams, lambda g: F.md5(F.concat(g, F.lit(f":{i}")))))
-
-    if hash_family == "md5":
-        return F.array(*[_md5_min(i) for i in range(num_hashes)])
-    if hash_family != "xxhash64":
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
-    base = F.transform(grams, lambda g: F.xxhash64(g))
-
-    def _xx_min(i: int):
-        return F.array_min(F.transform(base, lambda h: F.xxhash64(h, F.lit(i))))
-
-    return F.array(*[_xx_min(i) for i in range(num_hashes)])
 
 
 def minhash_lsh_buckets(
@@ -293,11 +246,10 @@ def minhash_lsh_buckets(
     Fast path (default 'xxhash64'): NO shingle strings are ever built — tokens
     are xxhash64'd once, the shingle hash is xxhash64 over the n token LONGS
     (8·n bytes instead of a concat'd string), distinct'd, then per hash fn i the
-    min of xxhash64(shingle_hash, i); bucket = one xxhash64 over the band's
-    longs (bigint bucket). Each projection stage is materialized as a column so
-    whole-stage codegen computes it once per row, not once per consuming
-    expression. Shingle identity matches word_ngrams' distinct word-n-grams
-    (modulo 64-bit hash collisions).
+    min of xxhash64(shingle_hash, i) — the fold, distinct and mins in one
+    vectorized Arrow stage (:func:`_minhash_sigs_arrow`); bucket = one
+    xxhash64 over the band's longs (bigint bucket). Shingle identity matches
+    word_ngrams' distinct word-n-grams (modulo 64-bit hash collisions).
 
     'md5' path: string shingles, hex-string mins, bucket = concat_ws of the
     band slice (string bucket) — bit-for-bit reproducible in DuckDB; used by
@@ -375,31 +327,17 @@ def lsh_buckets_from_signatures(
         )
     rows_per_band = num_hashes // bands
     if hash_family == "md5":
-        bands_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.concat_ws(
-                        "|", F.slice("sig", bi * rows_per_band + 1, rows_per_band)
-                    ).alias("bucket"),
-                )
-                for bi in range(bands)
-            ]
-        )
+        def bucket(lo: int) -> Column:
+            return F.concat_ws("|", F.slice("sig", lo + 1, rows_per_band))
     elif hash_family == "xxhash64":
-        bands_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.xxhash64(
-                        *[F.element_at("sig", bi * rows_per_band + k + 1) for k in range(rows_per_band)]
-                    ).alias("bucket"),
-                )
-                for bi in range(bands)
-            ]
-        )
+        def bucket(lo: int) -> Column:
+            return F.xxhash64(*[F.element_at("sig", lo + k + 1) for k in range(rows_per_band)])
     else:
         raise ValueError(f"unknown hash_family: {hash_family!r}")
+    bands_arr = F.array(*[
+        F.struct(F.lit(bi).alias("band"), bucket(bi * rows_per_band).alias("bucket"))
+        for bi in range(bands)
+    ])
     checked = F.when(F.size("sig") == num_hashes, bands_arr).otherwise(
         F.raise_error(
             F.concat(
@@ -702,20 +640,6 @@ def minhash_candidate_pairs(
     return candidate_pairs_from_buckets(b, max_bucket_size=max_bucket_size)
 
 
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash over tokens: bit j = sign of Σ_tokens (±1 by token-hash bit j).
-
-    JVM-only: per-token xxhash64, per-bit contribution via shiftright/bit-and,
-    aggregated with higher-order functions.
-
-    Column-form caveat: the token-hash array is inlined into each of the 64
-    per-bit aggregates (re-tokenize + re-hash ×64). The DataFrame functions
-    below materialize it once via :func:`_simhash_from_token_hashes` — use
-    those on the hot path.
-    """
-    return _simhash_from_token_hashes(F.transform(tokens(text), lambda t: F.xxhash64(t)))
-
-
 def _simhash_from_token_hashes(th: Column) -> Column:
     """SimHash from a (possibly materialized) array<bigint> of token hashes."""
 
@@ -737,10 +661,12 @@ def _simhash_from_token_hashes(th: Column) -> Column:
 def simhash_table(
     docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, simhash) with token hashes materialized ONCE per doc (the column form
-    of simhash64 would re-tokenize and re-hash per bit — 64×). Materialized to
-    parquet this is the artifact the DuckDB oracles replay grouping/banding
-    from (everything downstream of the xxhash64-based simhash is plain SQL)."""
+    """(id, simhash): 64-bit SimHash per doc, bit j = sign of Σ_tokens (±1 by
+    token-hash bit j). Token hashes are materialized ONCE per doc as a column
+    (inlining them into the 64 per-bit aggregates would re-tokenize and
+    re-hash per bit — 64×). Materialized to parquet this is the artifact the
+    DuckDB oracles replay grouping/banding from (everything downstream of the
+    xxhash64-based simhash is plain SQL)."""
     th = docs.select(
         F.col(id_col).alias("id"),
         F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t)).alias("_th"),
@@ -749,17 +675,13 @@ def simhash_table(
 
 
 def simhash_groups_from_table(sh: DataFrame) -> DataFrame:
-    """Grouping stage of :func:`simhash_groups` over a (id, simhash) table."""
+    """Docs grouped by identical simhash (near-dup clusters at Hamming distance
+    0) over a (id, simhash) table: (simhash, n, canonical_id), n ≥ 2."""
     return (
         sh.groupBy("simhash")
         .agg(F.count("*").alias("n"), F.min("id").alias("canonical_id"))
         .filter(F.col("n") >= 2)
     )
-
-
-def simhash_groups(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Docs grouped by identical simhash (near-dup clusters at Hamming distance 0)."""
-    return simhash_groups_from_table(simhash_table(docs, id_col=id_col, text_col=text_col))
 
 
 def simhash_hamming_pairs(
@@ -1112,61 +1034,64 @@ def connected_components(
     )
 
 
-def exact_rep_table(keyed: DataFrame, keys: list[str], id_col: str) -> DataFrame:
-    """Exact-collapse stage shared by fuzzy_dedup_assign and the checkpointed
-    plan: the min-``id_col`` row per key group, carrying ALL of ``keyed``'s
-    columns (text for the LSH stage, the key columns for the rep mapping)."""
-    rep_ids = keyed.groupBy(*keys).agg(F.min(id_col).alias(id_col))
-    return keyed.join(rep_ids, list(keys) + [id_col], "left_semi")
+def exact_rep_table(keyed: DataFrame, id_col: str) -> DataFrame:
+    """Exact-collapse stage shared by :func:`dedup_exact` and the checkpointed
+    fuzzy plan: the min-``id_col`` row per fingerprint group, carrying ALL of
+    ``keyed``'s columns (text for the LSH stage, the fingerprint columns for
+    the rep mapping). ``keyed`` carries the :func:`_fp_cols` columns."""
+    rep_ids = keyed.groupBy(*_FP_NAMES).agg(F.min(id_col).alias(id_col))
+    return keyed.join(rep_ids, [*_FP_NAMES, id_col], "left_semi")
 
 
-def _rep_tables(
-    keyed: DataFrame, keys: list[str], id_col: str
-) -> tuple[DataFrame, DataFrame, bool]:
+def _rep_tables(keyed: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame, bool]:
     """(rep_min, reps, broadcast_reps) for the one-shot fuzzy pipelines.
 
-    ``rep_min`` — the (keys → min id) table — is materialized ONCE (eager
+    ``rep_min`` — the (fingerprint → min id) table — is materialized ONCE (eager
     localCheckpoint of fixed-width rows: the same bytes its groupBy shuffle
     already wrote to disk). The downstream pipeline consumes the rep mapping
     three times (signature path, candidate-gram path, final assignment);
     without the cut each consumer re-ran the full groupBy — measured ~2.5 s
     per execution at 1.05M docs. With the row count now driver-known (the
     count is cheap on the checkpointed table), ``broadcast_reps`` gates the
-    guide §3.1 upgrade: under :data:`REP_BROADCAST_MAX_ROWS` (and only in
-    fingerprint key mode — text-mode keys are unbounded-width) the semi-join
+    guide §3.1 upgrade: under :data:`REP_BROADCAST_MAX_ROWS` the semi-join
     builds ``rep_min`` as a broadcast relation, so the text-bearing corpus is
     never shuffled by the exact collapse at all. Interleaved A/B of the full
     pipeline at 1.05M docs: 21.1-23.1 s → 13.9-20.0 s, full-row-identical
     output."""
     rep_min = (
-        keyed.groupBy(*keys).agg(F.min(id_col).alias(id_col)).localCheckpoint(eager=True)
+        keyed.groupBy(*_FP_NAMES).agg(F.min(id_col).alias(id_col)).localCheckpoint(eager=True)
     )
-    broadcast_reps = (
-        list(keys) == list(_FP_NAMES) and rep_min.count() <= REP_BROADCAST_MAX_ROWS
-    )
+    broadcast_reps = rep_min.count() <= REP_BROADCAST_MAX_ROWS
     bc = F.broadcast if broadcast_reps else (lambda df: df)
-    reps = keyed.join(bc(rep_min), list(keys) + [id_col], "left_semi")
+    reps = keyed.join(bc(rep_min), [*_FP_NAMES, id_col], "left_semi")
     return rep_min, reps, broadcast_reps
 
 
 def assign_canonical(
-    keyed: DataFrame, keys: list[str], reps: DataFrame, comp: DataFrame, id_col: str,
+    keyed: DataFrame, reps: DataFrame, comp: DataFrame, id_col: str,
     *, broadcast_reps: bool = False,
 ) -> DataFrame:
     """Assignment stage shared by fuzzy_dedup_assign and the checkpointed plan:
-    every doc maps key → representative → component minimum (singletons map to
-    their representative). Joins on the fixed-width key columns only — text is
-    projected out before the shuffle in fingerprint mode. ``reps`` may be any
-    table carrying the key columns + ``id_col`` (the full rep rows, or just
-    the fixed-width rep_min mapping). ``broadcast_reps`` broadcasts the rep
-    mapping into the key join (set by callers that know its row count)."""
-    rep_ids = reps.select(*keys, F.col(id_col).alias("_rep"))
+    every doc maps fingerprint → representative → component minimum
+    (singletons map to their representative). Joins on the fixed-width
+    fingerprint columns only — text is projected out before the shuffle.
+    ``reps`` may be any table carrying the fingerprint columns + ``id_col``
+    (the full rep rows, or just the fixed-width rep_min mapping).
+    ``broadcast_reps`` broadcasts the rep mapping into the fingerprint join
+    (set by callers that know its row count)."""
+    rep_ids = reps.select(*_FP_NAMES, F.col(id_col).alias("_rep"))
     if broadcast_reps:
         rep_ids = F.broadcast(rep_ids)
-    rep_of = keyed.select(id_col, *keys).join(rep_ids, list(keys))
+    rep_of = keyed.select(id_col, *_FP_NAMES).join(rep_ids, _FP_NAMES)
     return rep_of.join(
         comp.withColumnRenamed("node", "_rep"), "_rep", "left"
     ).select(id_col, F.coalesce("comp", F.col("_rep")).alias("canonical_id"))
+
+
+def _array_jaccard(a: str, b: str) -> Column:
+    """Jaccard of two distinct-element array columns, JVM-side."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter.cast("double") / (F.size(a) + F.size(b) - inter).cast("double")
 
 
 def verified_near_dup_edges(
@@ -1214,10 +1139,8 @@ def verified_near_dup_edges(
         cands.join(grams.select(F.col("_gid").alias("id_a"), F.col("_grams").alias("_ga")), "id_a")
         .join(grams.select(F.col("_gid").alias("id_b"), F.col("_grams").alias("_gb")), "id_b")
     )
-    inter = F.size(F.array_intersect("_ga", "_gb"))
-    union = F.size("_ga") + F.size("_gb") - inter
     return (
-        pairs.withColumn("_j", inter.cast("double") / union.cast("double"))
+        pairs.withColumn("_j", _array_jaccard("_ga", "_gb"))
         .filter(F.col("_j") >= threshold)
         .select("id_a", "id_b")
     )
@@ -1235,7 +1158,6 @@ def fuzzy_dedup_assign(
     hash_family: str = "xxhash64",
     max_iters: int = 25,
     max_bucket_size: int | None = None,
-    key: str = "fingerprint",
     cc_metrics: list | None = None,
 ) -> DataFrame:
     """End-to-end fuzzy dedup: (doc_id, canonical_id) for EVERY input doc.
@@ -1259,43 +1181,42 @@ def fuzzy_dedup_assign(
          arrays, no extra gram explode/shuffle (candidate count ≪ corpus²),
       3. cluster: connected components over verified edges (near-clique
          components from banding → 1-3 label-propagation rounds),
-      4. assign: every doc maps text → representative → component minimum;
-         singletons map to themselves.
+      4. assign: every doc maps fingerprint → representative → component
+         minimum; singletons map to themselves.
 
     Keep-one-per-cluster filter: ``out.filter(F.col(id_col) ==
     F.col("canonical_id"))`` semi-joined back to the docs.
 
     Shuffle-key discipline: both ends of the pipeline — the exact pre-pass
-    groupBy and the final text→representative join-back — are keyed on the
-    128-bit content fingerprint (``key='fingerprint'``, default), so document
-    bytes travel the wire exactly once (as VALUES into the LSH stage), never
-    as groupBy/join KEY material. ``key='text'`` restores raw-text keys.
+    groupBy and the final doc→representative join-back — are keyed on the
+    128-bit content fingerprint, so document bytes travel the wire exactly
+    once (as VALUES into the LSH stage), never as groupBy/join KEY material.
 
     ``cc_metrics``: optional list that receives the connected-components
     per-round telemetry dicts (see :func:`connected_components`).
     """
     return _fuzzy_stages(
-        docs, key=key, n=n, num_hashes=num_hashes, bands=bands,
+        docs, n=n, num_hashes=num_hashes, bands=bands,
         threshold=threshold, id_col=id_col, text_col=text_col,
         hash_family=hash_family, max_iters=max_iters,
         max_bucket_size=max_bucket_size, cc_metrics=cc_metrics,
-    )[3]
+    )[2]
 
 
 def _fuzzy_stages(
-    docs: DataFrame, *, key: str, n: int, num_hashes: int, bands: int,
+    docs: DataFrame, *, n: int, num_hashes: int, bands: int,
     threshold: float, id_col: str, text_col: str, hash_family: str,
     max_iters: int, max_bucket_size: int | None, cc_metrics: list | None,
-) -> tuple[list[str], DataFrame, DataFrame, DataFrame]:
-    """(keys, rep_min, reps, assign): the one-shot fuzzy stages shared by
-    :func:`fuzzy_dedup_assign` and :func:`build_dedup_index` — keying, rep
-    tables, verified edges, components, assignment."""
-    keyed, keys = _group_keys(docs.select(id_col, text_col), text_col, key)
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(rep_min, reps, assign): the one-shot fuzzy stages shared by
+    :func:`fuzzy_dedup_assign` and :func:`build_dedup_index` — fingerprints,
+    rep tables, verified edges, components, assignment."""
+    keyed = docs.select(id_col, text_col, *_fp_cols(text_col))
     # representatives WITH text (the LSH input): min-id row per distinct text.
     # rep_min is materialized once and (when small enough) broadcast, so the
     # text-bearing corpus is never shuffled by the exact collapse — see
     # _rep_tables.
-    rep_min, reps, bc_reps = _rep_tables(keyed, keys, id_col)
+    rep_min, reps, bc_reps = _rep_tables(keyed, id_col)
     edges = verified_near_dup_edges(
         reps.select(id_col, text_col), n=n, num_hashes=num_hashes, bands=bands,
         threshold=threshold, id_col=id_col, text_col=text_col,
@@ -1304,10 +1225,8 @@ def _fuzzy_stages(
     # comp is an eager localCheckpoint (see connected_components): its storage
     # is GC-bounded by the result's lifetime, never a session-lifetime cache
     comp = connected_components(edges, max_iters=max_iters, metrics=cc_metrics)
-    assign = assign_canonical(
-        keyed, keys, rep_min, comp, id_col, broadcast_reps=bc_reps
-    )
-    return keys, rep_min, reps, assign
+    assign = assign_canonical(keyed, rep_min, comp, id_col, broadcast_reps=bc_reps)
+    return rep_min, reps, assign
 
 
 # ---------------------------------------------------------------------------
@@ -1345,8 +1264,8 @@ def build_dedup_index(
     Returns the canonical assignment DataFrame (read back from the index).
     """
     spark = docs.sparkSession
-    keys, rep_min, reps, assign = _fuzzy_stages(
-        docs, key="fingerprint", n=n, num_hashes=num_hashes, bands=bands,
+    rep_min, reps, assign = _fuzzy_stages(
+        docs, n=n, num_hashes=num_hashes, bands=bands,
         threshold=threshold, id_col=id_col, text_col=text_col,
         hash_family=hash_family, max_iters=max_iters,
         max_bucket_size=max_bucket_size, cc_metrics=cc_metrics,
@@ -1354,7 +1273,7 @@ def build_dedup_index(
     assign.write.mode("overwrite").parquet(f"{index_dir}/canonical")
     canon = spark.read.parquet(f"{index_dir}/canonical")
     rep_min.join(canon, id_col).select(
-        *keys, "canonical_id"
+        *_FP_NAMES, "canonical_id"
     ).write.mode("overwrite").parquet(f"{index_dir}/fingerprints")
     sigs = minhash_signatures_df(
         reps.select(id_col, text_col), n=n, num_hashes=num_hashes,
@@ -1452,12 +1371,12 @@ def incremental_dedup_assign(
     )
     fps = spark.read.parquet(f"{index_dir}/fingerprints")
     sigs = spark.read.parquet(f"{index_dir}/signatures")
-    keyed = new_docs.select(id_col, text_col).select("*", *_fp_cols(text_col))
+    keyed = new_docs.select(id_col, text_col, *_fp_cols(text_col))
 
-    exact = keyed.join(fps, list(_FP_NAMES)).select(
+    exact = keyed.join(fps, _FP_NAMES).select(
         id_col, "canonical_id", F.lit("exact").alias("match_kind")
     )
-    rest = keyed.join(fps, list(_FP_NAMES), "left_anti")
+    rest = keyed.join(fps, _FP_NAMES, "left_anti")
 
     new_sigs = minhash_signatures_df(
         rest, n=n, num_hashes=num_hashes, id_col=id_col, text_col=text_col,
@@ -1486,12 +1405,10 @@ def incremental_dedup_assign(
     idx_grams = index_docs.select(
         F.col(id_col).alias("_iid"), word_ngrams(F.col(text_col), n).alias("_gb")
     )
-    inter = F.size(F.array_intersect("_ga", "_gb"))
-    union = F.size("_ga") + F.size("_gb") - inter
     verified = (
         cands.join(new_grams, "_nid")
         .join(idx_grams, "_iid")
-        .withColumn("_j", inter.cast("double") / union.cast("double"))
+        .withColumn("_j", _array_jaccard("_ga", "_gb"))
         .filter(F.col("_j") >= threshold)
         .join(sigs.select(F.col("id").alias("_iid"), "canonical_id"), "_iid")
     )

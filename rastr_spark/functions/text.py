@@ -21,10 +21,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def distinct_token_count(text: Column) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 def stopword_ratio(text: Column) -> Column:
     toks = tokens(text)
     stop = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))

@@ -1,8 +1,8 @@
-"""Hierarchical grid index (quadkey/Z-order) + fishnet generation + salting.
+"""Hierarchical grid index (quadkey/Z-order) + fishnet generation.
 
 The north rule asks for "batched H3/S2 cell encoding"; neither library exists in this
 environment, so the engine ships a deterministic hierarchical grid index with the same
-API shape (``cell(x, y, res)``, ``parent``, ``k_ring``) built on Morton/Z-order bit
+API shape (``morton_encode``, ``parent_cell``, ``k_ring``) built on Morton/Z-order bit
 interleaving over the raster's affine grid (SURVEY.md §2.12, §7 choice). All encoders
 are vectorized numpy — the Spark-side entry points are pandas UDFs / column expressions
 that call these on whole Arrow batches (no per-row Python).
@@ -13,8 +13,6 @@ Fishnet semantics mirror reference src/rastr/gis/fishnet.py:13-93.
 from __future__ import annotations
 
 import numpy as np
-
-from .meta import Affine, RasterMeta
 
 MAX_RES = 26  # 26 bits per axis → 52-bit Morton codes fit in a signed int64
 
@@ -54,24 +52,6 @@ def morton_decode(codes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     cols = _unpart1by1(z)
     rows = _unpart1by1(z >> np.uint64(1))
     return rows.astype(np.int64), cols.astype(np.int64)
-
-
-def cell_of_xy(xs: np.ndarray, ys: np.ndarray, meta: RasterMeta, res: int | None = None) -> np.ndarray:
-    """World coordinate → grid cell id at resolution ``res``.
-
-    Resolution r means cells of ``tile_size * cell_size`` at r = base; coarser
-    parents shift the Morton code. Default: tile-level cells (the partitioning key).
-    Out-of-grid coordinates are clamped into the index domain (they still receive
-    a deterministic cell so joins can reject them explicitly).
-    """
-    rows, cols = meta.world_to_index(np.asarray(xs), np.asarray(ys))
-    t = meta.tile_size
-    tr = np.clip(rows // t, 0, (1 << MAX_RES) - 1)
-    tc = np.clip(cols // t, 0, (1 << MAX_RES) - 1)
-    code = morton_encode(tr, tc)
-    if res is not None:
-        code = parent_cell(code, res)
-    return code
 
 
 def parent_cell(codes: np.ndarray, levels: int) -> np.ndarray:
@@ -191,27 +171,3 @@ def point_grid(bounds, cell_size: float) -> tuple[np.ndarray, np.ndarray]:
     gx, gy = np.meshgrid(xs, ys, indexing="xy")
     return gx.ravel(), gy.ravel()
 
-
-def fishnet_cell_bounds(cx: np.ndarray, cy: np.ndarray, cell_size: float) -> np.ndarray:
-    """Square cell polygons around centres as (xmin, ymin, xmax, ymax) rows
-    (fishnet.py:83-91 buffers; closed-form here — no buffer op needed)."""
-    h = cell_size / 2
-    return np.column_stack([cx - h, cy - h, cx + h, cy + h])
-
-
-# ---------------------------------------------------------------------------
-# Salting for skewed dense cells (north rule; SURVEY.md §2.12, §4.2)
-# ---------------------------------------------------------------------------
-
-def salt_factors(cell_counts: dict[int, int], target_per_partition: int) -> dict[int, int]:
-    """Per-cell salt fan-out from a pre-pass count aggregation.
-
-    Cells whose row count exceeds ``target_per_partition`` are split into
-    ``ceil(count / target)`` salted sub-keys; the broadcast side of a salted join
-    replicates each such cell's rows across all its salt values.
-    """
-    return {
-        cell: max(1, int(np.ceil(cnt / target_per_partition)))
-        for cell, cnt in cell_counts.items()
-        if cnt > target_per_partition
-    }

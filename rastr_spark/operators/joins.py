@@ -275,18 +275,6 @@ def sample(rf: RasterFrame, xy, *, na_action: str = "raise"):
 # zonal stats: PIP join + partial/final agg — the flagship substrate
 # ---------------------------------------------------------------------------
 
-ZONAL_PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("zone_id", T.StringType(), False),
-        T.StructField("cnt", T.LongType(), False),
-        T.StructField("s", T.DoubleType(), False),
-        T.StructField("s2", T.DoubleType(), False),
-        T.StructField("mn", T.DoubleType(), True),
-        T.StructField("mx", T.DoubleType(), True),
-    ]
-)
-
-
 def zonal_stats(rf: RasterFrame, zones: Sequence[tuple[str, Geometry]]) -> DataFrame:
     """NaN-ignoring (count, sum, mean, std, min, max) per polygon zone.
 

@@ -43,23 +43,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..meta import RasterMeta
 from ..tiles import RasterFrame, denull, tile_dims_cols
-
-HALO_MSG_SCHEMA = T.StructType(
-    [
-        T.StructField("tile_row", T.IntegerType(), False),
-        T.StructField("tile_col", T.IntegerType(), False),
-        T.StructField("gr0", T.IntegerType(), False),
-        T.StructField("gc0", T.IntegerType(), False),
-        T.StructField("n_rows", T.IntegerType(), False),
-        T.StructField("n_cols", T.IntegerType(), False),
-        T.StructField("strip", T.ArrayType(T.DoubleType()), False),
-        T.StructField("h", T.IntegerType(), False),
-    ]
-)
 
 
 def halo_messages(rf: RasterFrame, h: int) -> DataFrame:

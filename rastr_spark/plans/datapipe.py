@@ -141,12 +141,15 @@ def fuzzy_dedup_checkpointed(
     Stage identity = (stage name, input_fingerprint + ALL algorithm parameters):
     re-running with a different threshold/banding/cap against the same
     checkpoint dir recomputes instead of silently resuming the old-parameter
-    tables. The rep-collapse and assignment stages are the SAME helpers
-    fuzzy_dedup_assign uses (functions/dedup.py exact_rep_table /
-    assign_canonical) — the one-shot and fenced pipelines cannot drift.
+    tables. The rep-collapse stage is functions/dedup.py ``exact_rep_table``
+    (the min-id semi-join ``dedup_exact`` runs; the one-shot pipeline's
+    ``_rep_tables`` adds the materialized, broadcastable rep mapping), and the
+    edge and assignment stages are the SAME helpers fuzzy_dedup_assign uses
+    (``verified_near_dup_edges``, ``assign_canonical``), all keyed on the
+    128-bit content fingerprint — the one-shot and fenced pipelines cannot
+    drift.
     """
     from ..functions.dedup import (
-        _FP_NAMES,
         _fp_cols,
         assign_canonical,
         connected_components,
@@ -156,8 +159,7 @@ def fuzzy_dedup_checkpointed(
     from ..sources.checkpoint import CheckpointManager
 
     cm = CheckpointManager(ckpt_dir)
-    keyed = docs.select(id_col, text_col).select("*", *_fp_cols(text_col))
-    fp_names = list(_FP_NAMES)
+    keyed = docs.select(id_col, text_col, *_fp_cols(text_col))
     eff_fp = (
         f"{input_fingerprint}|n={n}|nh={num_hashes}|b={bands}|t={threshold}"
         f"|hf={hash_family}|cap={max_bucket_size}"
@@ -168,7 +170,7 @@ def fuzzy_dedup_checkpointed(
         spark,
         "dedup_reps",
         eff_fp,
-        lambda: exact_rep_table(keyed, fp_names, id_col),
+        lambda: exact_rep_table(keyed, id_col),
     )
     edges_stage = cm.run_stage(
         spark,
@@ -217,6 +219,6 @@ def fuzzy_dedup_checkpointed(
         spark,
         "dedup_assign",
         eff_fp,
-        lambda: assign_canonical(keyed, fp_names, reps_stage.df, comp_stage.df, id_col),
+        lambda: assign_canonical(keyed, reps_stage.df, comp_stage.df, id_col),
     )
     return assign_stage.df, [reps_stage, edges_stage, comp_stage, assign_stage]

@@ -253,17 +253,6 @@ def _join_refs_partials(
     )
 
 
-def flagship_query(
-    spark: SparkSession,
-    docs: DataFrame,
-    rf: RasterFrame,
-    zones: Sequence[tuple[str, Geometry]],
-    *,
-    salt_threshold: int | None = 50_000,
-) -> DataFrame:
-    return doc_zonal_stats(docs, rf, zones, salt_threshold=salt_threshold)
-
-
 def flagship_checkpointed(
     spark: SparkSession,
     docs: DataFrame,

@@ -41,14 +41,6 @@ TILE_FIELDS = [
 ]
 TILE_SCHEMA = T.StructType(TILE_FIELDS)
 
-CELL_SCHEMA = T.StructType(
-    [
-        T.StructField("row", T.IntegerType(), False),
-        T.StructField("col", T.IntegerType(), False),
-        T.StructField("value", T.DoubleType(), True),
-    ]
-)
-
 
 def denull(values: Column) -> Column:
     """NULL→NaN inside a values array.

@@ -6,6 +6,8 @@ elementwise hot path."""
 
 import contextlib
 import io
+import sys
+import types
 
 import numpy as np
 import pytest
@@ -154,13 +156,6 @@ class TestFingerprintShuffleKeys:
         assert all("text#" not in ln for ln in lines), (
             f"document text used as a shuffle key:\n{p}"
         )
-
-    def test_dedup_exact_text_mode_still_available(self, spark):
-        from rastr_spark.functions.dedup import dedup_exact
-
-        docs = spark.createDataFrame([(0, "a"), (1, "a")], "doc_id long, text string")
-        p = plan(dedup_exact(docs, key="text"))
-        assert any("text#" in ln for ln in self._hash_part_lines(p)), p
 
     def test_fuzzy_rep_mapping_keys_on_fingerprint(self, spark):
         from rastr_spark.functions.dedup import fuzzy_dedup_assign
@@ -333,3 +328,73 @@ class TestStencilFixedCosts:
             st = src.extrapolate().stats()
         assert st["count"] == 32 * 32 and {st["min"], st["max"]} == {1.0, 2.0}
         assert len(jobs) <= MAX_EXTRAPOLATE_STATS_JOBS, len(jobs)
+
+
+class _HookStub:
+    """Stands in for the benchmark's ``Instrument``: every attribute a
+    workload's traced run wraps by name must exist and be callable."""
+
+    def __init__(self):
+        self.patched: list[str] = []
+        self.swapped: dict = {}
+        self.tracer = self
+
+    def patch(self, module, attr, name, *, force=True):
+        assert callable(getattr(module, attr, None)), f"{module.__name__}.{attr}"
+        self.patched.append(attr)
+
+    def swap(self, orig, wrapper):
+        assert callable(orig) and callable(wrapper), orig
+        self.swapped[orig] = wrapper
+
+    def patch_method(self, cls, attr, caller_module, hook):
+        assert callable(getattr(cls, attr, None)), f"{cls.__name__}.{attr}"
+        assert caller_module in sys.modules, caller_module
+        self.patched.append(attr)
+
+    @contextlib.contextmanager
+    def span(self, name):
+        span = types.SimpleNamespace(counts={})
+        yield span
+        self.last_span = (name, span.counts)
+
+
+class TestBenchHooks:
+    """The benchmark's traced zonal and curate runs wrap these attributes by
+    name; a rename or signature change here would otherwise break only traced
+    runs."""
+
+    def test_zonal_instrument_names_exist(self, spark):
+        from perfbench.workloads import Zonal
+
+        w, stub = Zonal(spark, 0), _HookStub()
+        w.docs = spark.range(1)
+        w.instrument(stub)
+        for attr in ("media_refs", "tile_zone_partials", "_join_refs_partials", "collect"):
+            assert attr in stub.patched, stub.patched
+
+    def test_curate_instrument_names_exist(self, spark):
+        from perfbench.workloads import Curate
+        from rastr_spark.functions import dedup as D
+
+        w, stub = Curate(spark, 0), _HookStub()
+        w.docs = spark.range(1)
+        w.instrument(stub)
+        for attr in ("minhash_signatures_df", "minhash_candidate_pairs",
+                     "verified_near_dup_edges", "connected_components",
+                     "assign_canonical", "localCheckpoint"):
+            assert attr in stub.patched, stub.patched
+        assert list(stub.swapped) == [D._rep_tables]
+
+        # the swapped hook counts rep_min, which must be the checkpointed
+        # (fingerprint → min id) table, not a lineage that re-runs the groupBy
+        docs = spark.createDataFrame(
+            [(0, "a b"), (1, "a b"), (2, "c d"), (3, "e")], "doc_id long, text string"
+        )
+        keyed = docs.select("doc_id", "text", *D._fp_cols("text"))
+        rep_min = D._rep_tables(keyed, "doc_id")[0]
+        assert rep_min.columns == [*D._FP_NAMES, "doc_id"]
+        p = plan(rep_min, mode="simple")
+        assert "Aggregate" not in p and "Exchange" not in p, p
+        stub.swapped[D._rep_tables](keyed, "doc_id")
+        assert stub.last_span == ("dedup.reps", {"rows": 3})
