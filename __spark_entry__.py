@@ -170,7 +170,7 @@ def _q_raster_stats(spark, sf_dir):
         F.round(s / n, 6).alias("mean_v"),
         F.min(v).alias("min_v"),
         F.max(v).alias("max_v"),
-        F.round(F.sqrt(F.greatest(F.sum(v * v) / n - F.pow(s / n, 2), F.lit(0.0))), 6).alias("std_v"),
+        F.round(F.stddev_pop(v), 6).alias("std_v"),
     )
 
 
@@ -179,7 +179,7 @@ WITH cells AS ({_CELLS_SQL})
 SELECT count(value) AS n_cells, sum(value) AS sum_v,
        round(sum(value) / count(value), 6) AS mean_v,
        min(value) AS min_v, max(value) AS max_v,
-       round(sqrt(greatest(sum(value*value)/count(value) - (sum(value)/count(value))*(sum(value)/count(value)), 0.0)), 6) AS std_v
+       round(stddev_pop(value), 6) AS std_v
 FROM cells
 """
 
@@ -225,7 +225,7 @@ boxed AS (
 )
 SELECT zone_id, count(*) AS n_cells, sum(value) AS sum_v, min(value) AS min_v, max(value) AS max_v,
        round(sum(value)/count(*), 6) AS mean_v,
-       round(sqrt(greatest(sum(value*value)/count(*) - (sum(value)/count(*))*(sum(value)/count(*)), 0.0)), 6) AS std_v
+       round(stddev_pop(value), 6) AS std_v
 FROM boxed GROUP BY zone_id
 """
 

@@ -289,19 +289,21 @@ def zonal_stats(rf: RasterFrame, zones: Sequence[tuple[str, Geometry]]) -> DataF
     from ..plans.flagship import tile_zone_partials
 
     part = tile_zone_partials(rf, zones)
+    # population std by Chan et al.'s exact merge of the per-partial
+    # (cnt, s, m2 = Σ(v − s/cnt)²): Σ(m2 + cnt·(s/cnt − M)²) / Σcnt about
+    # the zone mean M, which a window over the tiny partials table supplies
+    zone = Window.partitionBy("zone_id")
+    dev = F.col("s") / F.col("cnt") - F.sum("s").over(zone) / F.sum("cnt").over(zone)
     return (
-        part.groupBy("zone_id")
+        part.withColumn("m2", F.col("m2") + F.col("cnt") * dev * dev)
+        .groupBy("zone_id")
         .agg(
             F.sum("cnt").alias("count"),
             F.sum("s").alias("sum"),
             F.min("mn").alias("min"),
             F.max("mx").alias("max"),
             (F.sum("s") / F.sum("cnt")).alias("mean"),
-            F.sqrt(
-                F.greatest(
-                    F.sum("s2") / F.sum("cnt") - F.pow(F.sum("s") / F.sum("cnt"), 2), F.lit(0.0)
-                )
-            ).alias("std"),
+            F.sqrt(F.sum("m2") / F.sum("cnt")).alias("std"),
         )
     )
 

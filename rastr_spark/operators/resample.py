@@ -12,20 +12,19 @@ Physical shape: **output-tile driven gather** — the output tile table is gener
 with ``spark.range`` (no driver data); each output tile computes (closed form,
 JVM) which input tiles its source window touches, explodes that tile-key list, and
 equi-joins the input tile table. One shuffle groups the gathered input fragments
-per output tile; a numpy kernel evaluates the bilinear weights for the whole tile
-at once. Never a cartesian join (SURVEY.md §2.3 "range joins ... never cartesian").
+per output tile (``groupBy(otr, otc).applyInArrow``); a numpy kernel evaluates the
+bilinear weights for the whole tile at once and returns Arrow float64, so NaN
+stays NaN without a pandas hop. Never a cartesian join (SURVEY.md §2.3 "range joins ... never cartesian").
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from ..meta import Affine, RasterMeta
-from ..tiles import TILE_SCHEMA, RasterFrame, denull, tile_dims_cols
+from ..meta import Affine
+from ..tiles import TILE_SCHEMA, RasterFrame, list_parts, tile_batch
 
 
 def resample(rf: RasterFrame, cell_size: float, *, method: str = "bilinear") -> RasterFrame:
@@ -85,26 +84,28 @@ def resample(rf: RasterFrame, cell_size: float, *, method: str = "bilinear") -> 
     gathered = needed.join(rf.df.select("tile_row", "tile_col", "values"), ["tile_row", "tile_col"])
     raster_id = rf.raster_id  # primitive capture (closure must not capture rf)
 
-    def kern(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        otr, otc = int(key[0]), int(key[1])
+    # no annotations: applyInArrow infers its eval type from them
+    def kern(key, table):
+        otr, otc = key[0].as_py(), key[1].as_py()
         or0, oc0 = otr * Tsz, otc * Tsz
         oth_ = min(Tsz, new_H - or0)
         otw_ = min(Tsz, new_W - oc0)
         # assemble the needed source window
-        srs = [int(r) for r in pdf["tile_row"]]
-        scs = [int(c) for c in pdf["tile_col"]]
+        srs = table.column("tile_row").to_pylist()
+        scs = table.column("tile_col").to_pylist()
         r_lo = min(srs) * Tsz
         c_lo = min(scs) * Tsz
         r_hi = min(max(srs) * Tsz + Tsz, H)
         c_hi = min(max(scs) * Tsz + Tsz, W)
         win = np.full((r_hi - r_lo, c_hi - c_lo), np.nan)
-        for tr_, tc_, vals in zip(pdf["tile_row"], pdf["tile_col"], pdf["values"]):
-            rr, cc = int(tr_) * Tsz, int(tc_) * Tsz
+        flat, offs = list_parts(table.column("values"))
+        for i, (tr_, tc_) in enumerate(zip(srs, scs)):
+            rr, cc = tr_ * Tsz, tc_ * Tsz
             th_ = min(Tsz, H - rr)
             tw_ = min(Tsz, W - cc)
-            win[rr - r_lo : rr - r_lo + th_, cc - c_lo : cc - c_lo + tw_] = np.asarray(
-                vals, dtype=np.float64
-            ).reshape(th_, tw_)
+            win[rr - r_lo : rr - r_lo + th_, cc - c_lo : cc - c_lo + tw_] = flat[
+                offs[i] : offs[i + 1]
+            ].reshape(th_, tw_)
         oy = np.arange(or0, or0 + oth_, dtype=np.float64)
         ox = np.arange(oc0, oc0 + otw_, dtype=np.float64)
         sy = (oy + 0.5) * ry - 0.5
@@ -125,24 +126,11 @@ def resample(rf: RasterFrame, cell_size: float, *, method: str = "bilinear") -> 
             + a10 * wy * (1 - wx)
             + a11 * wy * wx
         )
-        from ..grid import morton_encode
+        return pa.Table.from_batches([tile_batch(raster_id, [otr], [otc], [out])])
 
-        return pd.DataFrame(
-            {
-                "raster_id": [raster_id],
-                "tile_row": [otr],
-                "tile_col": [otc],
-                "cell_id": [int(morton_encode(np.array([otr]), np.array([otc]))[0])],
-                "values": [out.astype(np.float64).ravel()],
-            }
-        )
-
-    out_df = gathered.groupBy(
-        F.col("otr").alias("tile_row"), F.col("otc").alias("tile_col")
-    ).applyInPandas(
-        lambda key, pdf: kern(key, pdf), TILE_SCHEMA
-    )
-    out_df = out_df.withColumn("values", denull(F.col("values")))
+    # grouped by the output tile's own columns: aliasing otr/otc onto the
+    # input's tile_row/tile_col would duplicate a field of the Arrow struct
+    out_df = gathered.groupBy("otr", "otc").applyInArrow(kern, TILE_SCHEMA)
     return RasterFrame(out_df, new_meta, rf.raster_id)
 
 

@@ -4,9 +4,12 @@ extrapolate (nearest-neighbour NaN fill).
 Spark has no stencil concept; the engine builds one: each tile needs a ring of
 ``h`` boundary cells from its ≤8 neighbours, so ``with_halo`` turns the tile table
 into (target_tile ← neighbour strips) messages — **strips, not whole tiles**: the
-shuffle carries O(h·T) cells per neighbour edge instead of O(T²). Strip slicing is
-pure JVM (sequence/slice/flatten higher-order functions); only the per-tile padded
-assembly + numpy kernel crosses the Arrow boundary.
+shuffle carries O(h·T) cells per neighbour edge instead of O(T²). The Python
+boundary is Arrow end to end: one ``mapInArrow`` pass cuts the strips in numpy
+from each batch's flat ``values`` buffer, and one ``groupBy(tile).applyInArrow``
+assembles each padded window and runs the numpy kernel, whose output goes back
+as Arrow float64 — NaN stays NaN, with no pandas hop and no per-cell
+higher-order function anywhere in the plan.
 
 Numerics are replicated from the reference's scipy/skimage backends (none of which
 exist here):
@@ -40,12 +43,46 @@ import math
 from typing import Callable
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..meta import RasterMeta
-from ..tiles import RasterFrame, denull, tile_dims_cols
+from ..tiles import TILE_SCHEMA, RasterFrame, float_lists, list_parts, tile_batch
+
+
+def _cut_strips(meta: RasterMeta, values, src, s_tr, s_tc, ttr, ttc, h) -> pa.RecordBatch:
+    """The numpy strip cutter both halo builders share. Message i carries the
+    part of source tile (s_tr[i], s_tc[i]) — row ``src[i]`` of the Arrow
+    ``values`` column — that falls inside target (ttr[i], ttc[i])'s
+    (th+2h)×(tw+2h) window; empty and off-grid messages are dropped.
+
+    With dr = ttr − s_tr, the source-local row slice is the intersection of
+    the source tile [0, th) with the target window [dr·T − h, dr·T + tth + h);
+    columns likewise."""
+    Tsz = meta.tile_size
+    flat, offs = list_parts(values)
+    th = np.minimum(Tsz, meta.height - s_tr * Tsz)
+    tw = np.minimum(Tsz, meta.width - s_tc * Tsz)
+    r_lo = np.maximum(0, (ttr - s_tr) * Tsz - h)
+    r_hi = np.minimum(th, (ttr - s_tr) * Tsz + h + np.minimum(Tsz, meta.height - ttr * Tsz))
+    c_lo = np.maximum(0, (ttc - s_tc) * Tsz - h)
+    c_hi = np.minimum(tw, (ttc - s_tc) * Tsz + h + np.minimum(Tsz, meta.width - ttc * Tsz))
+    keep = np.nonzero(
+        (r_hi > r_lo) & (c_hi > c_lo) & (ttr >= 0) & (ttr < meta.n_tile_rows)
+        & (ttc >= 0) & (ttc < meta.n_tile_cols)
+    )[0]
+    strips = [
+        flat[offs[s] : offs[s + 1]].reshape(th[i], tw[i])[r_lo[i] : r_hi[i], c_lo[i] : c_hi[i]]
+        for i, s in zip(keep, src[keep])
+    ]
+    cols = (ttr, ttc, s_tr * Tsz + r_lo, s_tc * Tsz + c_lo, r_hi - r_lo, c_hi - c_lo)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c[keep].astype(np.int32)) for c in cols]
+        + [float_lists(strips), pa.array(np.broadcast_to(h, ttr.shape)[keep].astype(np.int32))],
+        names=["tile_row", "tile_col", "gr0", "gc0", "n_rows", "n_cols", "strip", "h"],
+    )
 
 
 def halo_messages(rf: RasterFrame, h: int) -> DataFrame:
@@ -54,83 +91,31 @@ def halo_messages(rf: RasterFrame, h: int) -> DataFrame:
 
     Generalized to halos larger than a tile: the offset ring spans ±⌈h/T⌉ tiles,
     so a blur with σ·4 > T still works (inner-ring offsets ship whole tiles,
-    boundary offsets ship strips). All slicing is JVM columnar; message =
-    (target tile, global strip origin, dims, row-major strip values).
-
-    Per offset (dr, dc), the source-local row slice is the intersection of the
-    source tile [0, th) with the target window [dr·T − h, dr·T + tth + h):
-    lo = max(0, dr·T − h) is a constant, hi = min(th, dr·T + tth + h) is a column.
+    boundary offsets ship strips). One ``mapInArrow`` pass cuts every ring
+    strip in numpy (:func:`_cut_strips`) from the batch's flat ``values``
+    buffer; message = (target tile, global strip origin, dims, row-major strip
+    values, h).
     """
     meta = rf.meta
-    Tsz = meta.tile_size
-    ntr, ntc = meta.n_tile_rows, meta.n_tile_cols
-    R = max(1, math.ceil(h / Tsz))
-    th, tw = tile_dims_cols(meta)
-    df = rf.df.select("tile_row", "tile_col", th.alias("th"), tw.alias("tw"), "values")
+    R = max(1, math.ceil(h / meta.tile_size))
+    d = np.arange(-R, R + 1)
+    dr, dc = np.repeat(d, d.size), np.tile(d, d.size)
 
-    msgs = []
-    for dr in range(-R, R + 1):
-        for dc in range(-R, R + 1):
-            if dr == 0 and dc == 0:
-                # the centre message always covers the whole tile (r_lo=0,
-                # r_hi=th, c_lo=0, c_hi=tw for the self offset) — pass the
-                # values array through instead of reconstructing it
-                # element-by-element with interpreted slice/flatten (one
-                # per-cell HOF eval per cell of the raster per stencil call)
-                msgs.append(
-                    F.struct(
-                        F.col("tile_row").cast("int").alias("tile_row"),
-                        F.col("tile_col").cast("int").alias("tile_col"),
-                        (F.col("tile_row") * Tsz).cast("int").alias("gr0"),
-                        (F.col("tile_col") * Tsz).cast("int").alias("gc0"),
-                        F.col("th").cast("int").alias("n_rows"),
-                        F.col("tw").cast("int").alias("n_cols"),
-                        F.col("values").alias("strip"),
-                        F.lit(int(h)).cast("int").alias("h"),
-                    )
-                )
-                continue
-            ttr = F.col("tile_row") + dr
-            ttc = F.col("tile_col") + dc
-            tth = F.least(F.lit(Tsz), F.lit(meta.height) - ttr * Tsz)
-            ttw = F.least(F.lit(Tsz), F.lit(meta.width) - ttc * Tsz)
-            r_lo = F.lit(max(0, dr * Tsz - h))
-            r_hi = F.least(F.col("th"), F.lit(dr * Tsz + h) + tth)
-            c_lo = F.lit(max(0, dc * Tsz - h))
-            c_hi = F.least(F.col("tw"), F.lit(dc * Tsz + h) + ttw)
-            n_rows = r_hi - r_lo
-            n_cols = c_hi - c_lo
-            tw_col = F.col("tw")
-
-            def _strip(r_lo=r_lo, r_hi=r_hi, c_lo=c_lo, n_cols=n_cols, tw_col=tw_col):
-                return F.flatten(
-                    F.transform(
-                        F.sequence(r_lo, r_hi - 1),
-                        lambda r: F.slice(F.col("values"), r * tw_col + c_lo + 1, n_cols),
-                    )
-                )
-
-            msgs.append(
-                F.struct(
-                    ttr.cast("int").alias("tile_row"),
-                    ttc.cast("int").alias("tile_col"),
-                    (F.col("tile_row") * Tsz + r_lo).cast("int").alias("gr0"),
-                    (F.col("tile_col") * Tsz + c_lo).cast("int").alias("gc0"),
-                    n_rows.cast("int").alias("n_rows"),
-                    n_cols.cast("int").alias("n_cols"),
-                    F.when(
-                        (n_rows > 0) & (n_cols > 0) & (ttr >= 0) & (ttr < ntr) & (ttc >= 0) & (ttc < ntc),
-                        _strip(),
-                    )
-                    .otherwise(F.lit(None))
-                    .alias("strip"),
-                    F.lit(int(h)).cast("int").alias("h"),
-                )
+    def cut(batches):
+        for b in batches:
+            n = b.num_rows
+            src = np.repeat(np.arange(n), dr.size)
+            tr = b.column("tile_row").to_numpy().astype(np.int64)[src]
+            tc = b.column("tile_col").to_numpy().astype(np.int64)[src]
+            yield _cut_strips(
+                meta, b.column("values"), src, tr, tc, tr + np.tile(dr, n), tc + np.tile(dc, n), h
             )
-    exploded = df.select(F.explode(F.array(*msgs)).alias("m")).select("m.*").filter(
-        F.col("strip").isNotNull()
+
+    return rf.df.select("tile_row", "tile_col", "values").mapInArrow(
+        cut,
+        "tile_row int, tile_col int, gr0 int, gc0 int, n_rows int, n_cols int, "
+        "strip array<double>, h int",
     )
-    return exploded
 
 
 def halo_messages_targeted(rf: RasterFrame, targets: DataFrame) -> DataFrame:
@@ -144,69 +129,38 @@ def halo_messages_targeted(rf: RasterFrame, targets: DataFrame) -> DataFrame:
     targets survive a downstream filter, which explodes at R ≈ n_tile_rows
     (the full-radius round: every tile × every offset). Here the message set
     is built as sources ⋈ broadcast(targets) filtered to each target's
-    Chebyshev ring — O(n_tiles · n_targets) rows — with the SAME strip-slice
-    arithmetic, dr/dc/h as columns instead of literals.
+    Chebyshev ring — O(n_tiles · n_targets) rows — and the same numpy cutter
+    (:func:`_cut_strips`) then runs in one ``mapInArrow`` pass with dr, dc
+    and h per row.
     """
     meta = rf.meta
-    Tsz = meta.tile_size
-    th, tw = tile_dims_cols(meta)
-    # source tile coords renamed: the output select aliases ttr/ttc BACK to
-    # tile_row/tile_col, and column references captured inside the strip
-    # lambda resolve against the PROJECTED schema (higher-order-function
-    # binding) — reusing the names would silently flip dr/dc to 0 there
-    # (found by the ring-vs-targeted message-equality test)
     src = rf.df.select(
-        F.col("tile_row").alias("s_tr"), F.col("tile_col").alias("s_tc"),
-        th.alias("th"), tw.alias("tw"), "values",
+        F.col("tile_row").alias("s_tr"), F.col("tile_col").alias("s_tc"), "values"
     )
     tgt = F.broadcast(
         targets.select(
             F.col("tile_row").alias("ttr"), F.col("tile_col").alias("ttc"),
-            F.col("h").cast("int").alias("t_h"),
+            F.col("h").cast("int").alias("h"),
         )
     )
-    h_c = F.col("t_h")
-    # per-row Chebyshev tile ring: R = max(1, ceil(h / T)) — same prefilter the
-    # ring-offset builder applies as a literal
-    R_c = F.greatest(F.lit(1), F.ceil(h_c / F.lit(float(Tsz)))).cast("int")
+    # per-row Chebyshev tile ring: R = max(1, ceil(h / T)) — the ring the
+    # offset builder enumerates
+    R_c = F.greatest(F.lit(1), F.ceil(F.col("h") / F.lit(float(meta.tile_size)))).cast("int")
     pairs = src.join(
         tgt,
         (F.abs(F.col("ttr") - F.col("s_tr")) <= R_c)
         & (F.abs(F.col("ttc") - F.col("s_tc")) <= R_c),
     )
-    drc = F.col("ttr") - F.col("s_tr")
-    dcc = F.col("ttc") - F.col("s_tc")
-    tth = F.least(F.lit(Tsz), F.lit(meta.height) - F.col("ttr") * Tsz)
-    ttw = F.least(F.lit(Tsz), F.lit(meta.width) - F.col("ttc") * Tsz)
-    r_lo = F.greatest(F.lit(0), drc * Tsz - h_c)
-    r_hi = F.least(F.col("th"), drc * Tsz + h_c + tth)
-    c_lo = F.greatest(F.lit(0), dcc * Tsz - h_c)
-    c_hi = F.least(F.col("tw"), dcc * Tsz + h_c + ttw)
-    n_rows = r_hi - r_lo
-    n_cols = c_hi - c_lo
-    tw_col = F.col("tw")
-    # self pair (dr=dc=0) always covers the whole tile — pass values through
-    # instead of the per-cell interpreted slice/flatten reconstruction
-    # (same fast path as the ring-offset builder's centre message)
-    strip = F.when(
-        (drc == 0) & (dcc == 0), F.col("values")
-    ).otherwise(
-        F.flatten(
-            F.transform(
-                F.sequence(r_lo, r_hi - 1),
-                lambda r: F.slice(F.col("values"), r * tw_col + c_lo + 1, n_cols),
-            )
-        )
-    )
-    return pairs.filter((n_rows > 0) & (n_cols > 0)).select(
-        F.col("ttr").cast("int").alias("tile_row"),
-        F.col("ttc").cast("int").alias("tile_col"),
-        (F.col("s_tr") * Tsz + r_lo).cast("int").alias("gr0"),
-        (F.col("s_tc") * Tsz + c_lo).cast("int").alias("gc0"),
-        n_rows.cast("int").alias("n_rows"),
-        n_cols.cast("int").alias("n_cols"),
-        strip.alias("strip"),
-        F.col("t_h").cast("int").alias("h"),
+
+    def cut(batches):
+        for b in batches:
+            ints = (b.column(k).to_numpy().astype(np.int64) for k in ("s_tr", "s_tc", "ttr", "ttc", "h"))
+            yield _cut_strips(meta, b.column("values"), np.arange(b.num_rows), *ints)
+
+    return pairs.mapInArrow(
+        cut,
+        "tile_row int, tile_col int, gr0 int, gc0 int, n_rows int, n_cols int, "
+        "strip array<double>, h int",
     )
 
 
@@ -217,8 +171,9 @@ def stencil_apply(
     *,
     targets: DataFrame | None = None,
 ) -> RasterFrame:
-    """Run ``kernel(padded, valid_mask, info)`` per tile; the kernel returns
-    the (th, tw) core. Two forms, one plan each:
+    """Run ``kernel(padded, valid_mask, info)`` per tile through one
+    ``groupBy(tile).applyInArrow``; the kernel returns the (th, tw) core,
+    emitted as Arrow float64 so NaN stays NaN. Two forms, one plan each:
 
     - ``targets is None``: every tile at radius ``h``, messages from the
       ring-offset builder (:func:`halo_messages`). ``padded`` is the full
@@ -244,11 +199,12 @@ def stencil_apply(
     clip = targets is not None
     msgs = halo_messages(rf, h) if targets is None else halo_messages_targeted(rf, targets)
 
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tr, tc = int(key[0]), int(key[1])
+    # no annotations: applyInArrow infers its eval type from them
+    def assemble(key, table):
+        tr, tc = key[0].as_py(), key[1].as_py()
         # per-group radius from the messages (constant within a target tile;
         # differs across tiles in the exact-radius extrapolate round)
-        h_ = int(pdf["h"].iloc[0])
+        h_ = table.column("h")[0].as_py()
         r0, c0 = tr * Tsz, tc * Tsz
         th_, tw_ = min(Tsz, H - r0), min(Tsz, W - c0)
         if clip:
@@ -258,14 +214,12 @@ def stencil_apply(
             rs, re = r0 - h_, r0 + th_ + h_
             cs, ce = c0 - h_, c0 + tw_ + h_
         padded = np.full((re - rs, ce - cs), np.nan)
-        for gr0, gc0, n_rows, n_cols, strip in zip(
-            pdf["gr0"].to_numpy(), pdf["gc0"].to_numpy(),
-            pdf["n_rows"].to_numpy(), pdf["n_cols"].to_numpy(), pdf["strip"].to_numpy(),
-        ):
-            rr = int(gr0) - rs
-            cc = int(gc0) - cs
-            frag = np.asarray(strip, dtype=np.float64).reshape(int(n_rows), int(n_cols))
-            padded[rr : rr + frag.shape[0], cc : cc + frag.shape[1]] = frag
+        flat, offs = list_parts(table.column("strip"))
+        dims = zip(*(table.column(k).to_numpy() for k in ("gr0", "gc0", "n_rows", "n_cols")))
+        for i, (gr0, gc0, n_rows, n_cols) in enumerate(dims):
+            padded[gr0 - rs : gr0 - rs + n_rows, gc0 - cs : gc0 - cs + n_cols] = flat[
+                offs[i] : offs[i + 1]
+            ].reshape(n_rows, n_cols)
         if clip:
             valid = np.ones(padded.shape, dtype=bool)
             info = (r0, c0, th_, tw_, h_, r0 - rs, c0 - cs)
@@ -277,22 +231,9 @@ def stencil_apply(
             )
             info = (r0, c0, th_, tw_, h_)
         core = kernel(padded, valid, info)
-        from ..grid import morton_encode
+        return pa.Table.from_batches([tile_batch(raster_id, [tr], [tc], [core])])
 
-        return pd.DataFrame(
-            {
-                "raster_id": [raster_id],
-                "tile_row": [tr],
-                "tile_col": [tc],
-                "cell_id": [int(morton_encode(np.array([tr]), np.array([tc]))[0])],
-                "values": [core.astype(np.float64).ravel()],
-            }
-        )
-
-    from ..tiles import TILE_SCHEMA
-
-    out = msgs.groupBy("tile_row", "tile_col").applyInPandas(assemble, TILE_SCHEMA)
-    out = out.withColumn("values", denull(F.col("values")))
+    out = msgs.groupBy("tile_row", "tile_col").applyInArrow(assemble, TILE_SCHEMA)
     return RasterFrame(out, meta, rf.raster_id)
 
 
@@ -518,20 +459,21 @@ def _tile_census(rf: RasterFrame) -> DataFrame:
     H, W = meta.height, meta.width
     mult = np.int64(int(Tsz) * int(Tsz))
     bbox = ("rmin", "rmax", "cmin", "cmax")
+    schema = pa.schema(
+        [(k, pa.int32()) for k in ("tile_row", "tile_col")]
+        + [(k, pa.int64()) for k in ("n_nan", "n_donors")]
+        + [(k, pa.int32()) for k in ("max_run", *bbox)]
+        + [(k, pa.list_(pa.int32())) for k in ("rep_r", "rep_c")]
+    )
 
-    def kernel(it):
-        for pdf in it:
-            out: dict = {
-                k: [] for k in (
-                    "tile_row", "tile_col", "n_nan", "n_donors", "max_run", *bbox,
-                    "rep_r", "rep_c",
-                )
-            }
-            for tr, tc, vals in zip(
-                pdf["tile_row"].to_numpy(), pdf["tile_col"].to_numpy(), pdf["values"]
+    def kernel(batches):
+        for b in batches:
+            out: dict = {k: [] for k in schema.names}
+            flat, offs = list_parts(b.column("values"))
+            for i, (tr, tc) in enumerate(
+                zip(b.column("tile_row").to_pylist(), b.column("tile_col").to_pylist())
             ):
-                tr, tc = int(tr), int(tc)
-                nan = np.isnan(np.asarray(vals, dtype=np.float64))
+                nan = np.isnan(flat[offs[i] : offs[i + 1]])
                 th_ = min(Tsz, H - tr * Tsz)
                 tw_ = min(Tsz, W - tc * Tsz)
                 holes = np.nonzero(nan)[0]
@@ -570,16 +512,10 @@ def _tile_census(rf: RasterFrame) -> DataFrame:
                     })
                 out["rep_r"].append([tr * Tsz + bi // tw_ for bi in best])
                 out["rep_c"].append([tc * Tsz + bi % tw_ for bi in best])
-            if out["tile_row"]:
-                df = pd.DataFrame(out)
-                for k in ("max_run", *bbox):  # nullable ints
-                    df[k] = pd.array(out[k], dtype="Int32")
-                yield df
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-    return rf.df.select("tile_row", "tile_col", "values").mapInPandas(
-        kernel,
-        "tile_row int, tile_col int, n_nan long, n_donors long, max_run int, "
-        "rmin int, rmax int, cmin int, cmax int, rep_r array<int>, rep_c array<int>",
+    return rf.df.select("tile_row", "tile_col", "values").mapInArrow(
+        kernel, from_arrow_schema(schema)
     )
 
 
@@ -596,33 +532,32 @@ def _donor_cells(rf: RasterFrame) -> DataFrame:
     one vectorized Arrow pass. The sparse-gather extrapolate round replicates
     these few-donor lists to target tiles instead of shipping dense
     mostly-NaN window strips (see :func:`_sparse_nn_fill`)."""
-    meta = rf.meta
-    Tsz = meta.tile_size
-    W = meta.width
+    Tsz = rf.meta.tile_size
+    W = rf.meta.width
+    schema = pa.schema(
+        [(k, pa.int32()) for k in ("tile_row", "tile_col", "tw")]
+        + [("di", pa.list_(pa.int64())), ("dv", pa.list_(pa.float64()))]
+    )
 
-    def kernel(it):
-        for pdf in it:
-            trs = pdf["tile_row"].to_numpy()
-            tcs = pdf["tile_col"].to_numpy()
-            rows: dict = {"tile_row": [], "tile_col": [], "tw": [], "di": [], "dv": []}
-            for i in range(len(pdf)):
-                vals = np.asarray(pdf["values"].iloc[i], dtype=np.float64)
+    def kernel(batches):
+        for b in batches:
+            flat, offs = list_parts(b.column("values"))
+            out: dict = {k: [] for k in schema.names}
+            for i, (tr, tc) in enumerate(
+                zip(b.column("tile_row").to_pylist(), b.column("tile_col").to_pylist())
+            ):
+                vals = flat[offs[i] : offs[i + 1]]
                 idx = np.nonzero(~np.isnan(vals))[0]
-                if idx.size == 0:
-                    continue
-                rows["tile_row"].append(int(trs[i]))
-                rows["tile_col"].append(int(tcs[i]))
-                rows["tw"].append(min(Tsz, W - int(tcs[i]) * Tsz))
-                rows["di"].append(idx)
-                rows["dv"].append(vals[idx])
-            if rows["di"]:
-                # an empty dict-of-lists DataFrame gets float64 columns,
-                # which Arrow cannot convert to the declared list types —
-                # skip empty batches instead
-                yield pd.DataFrame(rows)
+                if idx.size:
+                    out["tile_row"].append(tr)
+                    out["tile_col"].append(tc)
+                    out["tw"].append(min(Tsz, W - tc * Tsz))
+                    out["di"].append(idx)
+                    out["dv"].append(vals[idx])
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-    return rf.df.select("tile_row", "tile_col", "values").mapInPandas(
-        kernel, "tile_row int, tile_col int, tw int, di array<long>, dv array<double>"
+    return rf.df.select("tile_row", "tile_col", "values").mapInArrow(
+        kernel, from_arrow_schema(schema)
     )
 
 
@@ -630,7 +565,7 @@ def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> Dat
     """The exact-radius extrapolate round over a BROADCAST donor set: the
     (driver-bounded, see ``SPARSE_GATHER_MAX_DONORS``) donor cells are
     collected once into three sorted numpy arrays and broadcast; a batched
-    ``mapInPandas`` over the tiny radii table then box-queries each target's
+    ``mapInArrow`` over the tiny radii table then box-queries each target's
     window out of the sorted arrays (``searchsorted`` on the row coordinate)
     and runs the identical proven :func:`_nn_fill` on a window
     re-assembled from those donors. Result is bit-equal to the dense-strip
@@ -664,20 +599,12 @@ def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> Dat
     order = np.lexsort((gc, gr))
     bc = rf.df.sparkSession.sparkContext.broadcast((gr[order], gc[order], dv[order]))
 
-    def fill(it):
+    def fill(batches):
         G, C, V = bc.value
-        from ..grid import morton_encode
-
-        for pdf in it:
-            out: dict = {
-                "raster_id": [], "tile_row": [], "tile_col": [],
-                "cell_id": [], "values": [],
-            }
-            for tr, tc, h_ in zip(
-                pdf["tile_row"].to_numpy(), pdf["tile_col"].to_numpy(),
-                pdf["h"].to_numpy(),
-            ):
-                tr, tc, h_ = int(tr), int(tc), int(h_)
+        for b in batches:
+            trs, tcs = b.column("tile_row").to_pylist(), b.column("tile_col").to_pylist()
+            cores = []
+            for tr, tc, h_ in zip(trs, tcs, b.column("h").to_pylist()):
                 r0, c0 = tr * Tsz, tc * Tsz
                 th_, tw_ = min(Tsz, H - r0), min(Tsz, W - c0)
                 rs, re = max(r0 - h_, 0), min(r0 + th_ + h_, H)
@@ -688,29 +615,17 @@ def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> Dat
                 if g2.size == 0:
                     # no donor in the window (defensive — proven radii imply
                     # one): emit the all-NaN core, like the dense round would
-                    core = np.full((th_, tw_), np.nan)
-                else:
-                    rs2 = min(int(g2.min()), r0)
-                    re2 = max(int(g2.max()) + 1, r0 + th_)
-                    cs2 = min(int(c2.min()), c0)
-                    ce2 = max(int(c2.max()) + 1, c0 + tw_)
-                    padded = np.full((re2 - rs2, ce2 - cs2), np.nan)
-                    padded[g2 - rs2, c2 - cs2] = v2
-                    info = (r0, c0, th_, tw_, h_, r0 - rs2, c0 - cs2)
-                    core = _nn_fill(padded, np.ones(padded.shape, dtype=bool), info)
-                out["raster_id"].append(raster_id)
-                out["tile_row"].append(tr)
-                out["tile_col"].append(tc)
-                out["cell_id"].append(
-                    int(morton_encode(np.array([tr]), np.array([tc]))[0])
-                )
-                out["values"].append(core.astype(np.float64).ravel())
-            if out["values"]:
-                # skip empty batches (see _donor_cells: Arrow cannot convert
-                # an empty float64 column to the declared array type)
-                yield pd.DataFrame(out)
-
-    from ..tiles import TILE_SCHEMA
+                    cores.append(np.full((th_, tw_), np.nan))
+                    continue
+                rs2 = min(int(g2.min()), r0)
+                re2 = max(int(g2.max()) + 1, r0 + th_)
+                cs2 = min(int(c2.min()), c0)
+                ce2 = max(int(c2.max()) + 1, c0 + tw_)
+                padded = np.full((re2 - rs2, ce2 - cs2), np.nan)
+                padded[g2 - rs2, c2 - cs2] = v2
+                info = (r0, c0, th_, tw_, h_, r0 - rs2, c0 - cs2)
+                cores.append(_nn_fill(padded, np.ones(padded.shape, dtype=bool), info))
+            yield tile_batch(raster_id, trs, tcs, cores)
 
     # the radii table is tiny in BYTES but each row is ~5 ms of kernel work —
     # AQE's byte-based coalescing would collapse it to one partition and run
@@ -718,10 +633,9 @@ def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> Dat
     # Round-robin repartition to the session's parallelism before the Python
     # stage; the 1-row-per-tile shuffle is negligible.
     n_parts = max(rf.df.sparkSession.sparkContext.defaultParallelism, 1) * 2
-    out = radii.select(
+    return radii.select(
         "tile_row", "tile_col", F.col("h").cast("int").alias("h")
-    ).repartition(n_parts).mapInPandas(fill, TILE_SCHEMA)
-    return out.withColumn("values", denull(F.col("values")))
+    ).repartition(n_parts).mapInArrow(fill, TILE_SCHEMA)
 
 
 # dense-window volume bound for the exact-radius round, as a multiple of the

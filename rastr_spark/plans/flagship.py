@@ -61,7 +61,7 @@ TILE_ZONE_PARTIAL_SCHEMA = T.StructType(
         T.StructField("zone_id", T.StringType(), False),
         T.StructField("cnt", T.LongType(), False),
         T.StructField("s", T.DoubleType(), False),
-        T.StructField("s2", T.DoubleType(), False),
+        T.StructField("m2", T.DoubleType(), False),
         T.StructField("mn", T.DoubleType(), True),
         T.StructField("mx", T.DoubleType(), True),
     ]
@@ -121,7 +121,11 @@ def tile_zone_partials(rf: RasterFrame, zones: Sequence[tuple[str, Geometry]]) -
                         continue
                     Vh = V[hit]
                     s = np.where(m, Vh, 0.0).sum(axis=1)
-                    s2 = np.where(m, Vh * Vh, 0.0).sum(axis=1)
+                    # squared deviations about the partial's own mean: exact
+                    # to merge (joins.zonal_stats), unlike raw Σv², which
+                    # cancels when |mean| ≫ std
+                    dev = Vh - (s / np.maximum(cnt, 1))[:, None]
+                    m2 = np.where(m, dev * dev, 0.0).sum(axis=1)
                     mn = np.where(m, Vh, np.inf).min(axis=1)
                     mx = np.where(m, Vh, -np.inf).max(axis=1)
                     for k in keep:
@@ -133,13 +137,13 @@ def tile_zone_partials(rf: RasterFrame, zones: Sequence[tuple[str, Geometry]]) -
                                 zid,
                                 int(cnt[k]),
                                 float(s[k]),
-                                float(s2[k]),
+                                float(m2[k]),
                                 float(mn[k]),
                                 float(mx[k]),
                             )
                         )
             yield pd.DataFrame(
-                recs, columns=["tile_row", "tile_col", "zone_id", "cnt", "s", "s2", "mn", "mx"]
+                recs, columns=["tile_row", "tile_col", "zone_id", "cnt", "s", "m2", "mn", "mx"]
             )
 
     return rf.df.select("tile_row", "tile_col", "values").mapInPandas(kernel, TILE_ZONE_PARTIAL_SCHEMA)

@@ -25,6 +25,7 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,10 +49,48 @@ def denull(values: Column) -> Column:
     Spark's Arrow serializer converts NaN to SQL NULL when a pandas UDF returns
     float arrays (pandas from_pandas semantics). The engine's contract is the
     reference's: NaN is the nodata sentinel INSIDE arrays, SQL NULL never appears
-    (SURVEY.md §1.2) — so every kernel-output boundary re-normalizes with this
-    cheap JVM transform (stays in whole-stage codegen).
+    (SURVEY.md §1.2) — so every pandas-UDF output boundary re-normalizes with
+    this transform. It is a higher-order function, evaluated interpretively per
+    cell, so kernels that can emit Arrow directly (:func:`tile_batch` from
+    ``mapInArrow``/``applyInArrow``) keep NaN as NaN and skip it.
     """
     return F.transform(values, lambda v: F.coalesce(v, F.lit(float("nan"))))
+
+
+def list_parts(col) -> tuple[np.ndarray, np.ndarray]:
+    """(flat float64 values, offsets) of an Arrow ``list<double>`` column, so
+    row i is ``flat[offs[i]:offs[i + 1]]``. Zero-copy for one chunk without
+    NULL elements; a NULL element reads as NaN."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    return col.values.to_numpy(zero_copy_only=False), col.offsets.to_numpy()
+
+
+def float_lists(parts) -> pa.ListArray:
+    """Arrow ``list<double>`` from a sequence of numpy arrays (each raveled).
+    NaN stays NaN: a float64 numpy buffer carries no validity bitmap."""
+    sizes = np.fromiter((p.size for p in parts), np.int64, len(parts))
+    offs = np.zeros(len(parts) + 1, np.int32)
+    np.cumsum(sizes, out=offs[1:])
+    flat = np.concatenate([np.ravel(p) for p in parts]) if parts else np.empty(0)
+    return pa.ListArray.from_arrays(pa.array(offs), pa.array(flat.astype(np.float64, copy=False)))
+
+
+def tile_batch(raster_id: str, tile_rows, tile_cols, cores) -> pa.RecordBatch:
+    """TILE_SCHEMA rows as one Arrow batch, for kernels run through
+    ``mapInArrow``/``applyInArrow``: ``cores[i]`` is tile i's (th, tw) array."""
+    trs = np.asarray(tile_rows, np.int32)
+    tcs = np.asarray(tile_cols, np.int32)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([raster_id] * len(trs), pa.string()),
+            pa.array(trs),
+            pa.array(tcs),
+            pa.array(morton_encode(trs, tcs)),
+            float_lists(cores),
+        ],
+        names=[f.name for f in TILE_FIELDS],
+    )
 
 
 def tile_spans(meta: RasterMeta) -> Iterator[tuple[int, int, int, int, int, int]]:

@@ -153,6 +153,20 @@ class TestZonalStats:
         assert out["all"]["count"] == 16
         assert out["corner"]["count"] == 1 and out["corner"]["sum"] == 1.0
 
+    def test_std_stable_at_large_offset(self, spark):
+        # 1e6 ± 1e-3 over 16 tiles: Σv² − (Σv)²/n cancels to noise at this
+        # offset; the per-partial m2 merge keeps np.nanstd's answer
+        rng = np.random.RandomState(11)
+        arr = 1e6 + rng.uniform(-1e-3, 1e-3, (64, 64))
+        arr[rng.rand(64, 64) < 0.05] = np.nan
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 64), 64, 64, tile_size=16)
+        rf = RasterFrame.from_numpy(spark, arr, meta)
+        zones = [("all", Geometry.box(0, 0, 64, 64)), ("left", Geometry.box(0, 0, 24, 64))]
+        out = {r["zone_id"]: r for r in zonal_stats(rf, zones).collect()}
+        assert out["all"]["std"] == pytest.approx(np.nanstd(arr), rel=1e-6)
+        assert out["left"]["std"] == pytest.approx(np.nanstd(arr[:, :24]), rel=1e-6)
+        assert out["all"]["count"] == int((~np.isnan(arr)).sum())
+
 
 class TestKnn:
     def test_knn_basic(self, spark):

@@ -316,6 +316,57 @@ class TestStencilFixedCosts:
         assert jobs == [], f"radius-0 blur launched {len(jobs)} job(s)"
         np.testing.assert_array_equal(out.to_numpy(), arr)
 
+    @staticmethod
+    def _nan_raster(spark):
+        rng = np.random.RandomState(6)
+        arr = rng.rand(20, 18)
+        arr[rng.rand(20, 18) < 0.15] = np.nan
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 20), 20, 18, tile_size=8)
+        return RasterFrame.from_numpy(spark, arr, meta)
+
+    def _stencil_ops(self, spark, rf):
+        from rastr_spark.operators.resample import resample
+
+        nan_rf = self._nan_raster(spark)
+        return {
+            "blur": rf.blur(1.0),
+            "blur_fused_nan": nan_rf.blur(1.0),
+            "dilate": nan_rf.dilate(1.0),
+            "sobel": nan_rf.sobel(),
+            "resample": resample(nan_rf, 0.5),
+        }
+
+    def test_stencil_plans_run_arrow_kernels_without_hofs(self, spark, rf):
+        # the halo strips are cut and the kernels run through mapInArrow /
+        # applyInArrow: no interpreted higher-order function, no pandas hop
+        for name, out in self._stencil_ops(spark, rf).items():
+            out.df.collect()
+            p = out.df._jdf.queryExecution().executedPlan().toString()
+            assert "lambdafunction" not in p, f"{name} evaluates a higher-order function:\n{p}"
+            assert "InPandas" not in p, f"{name} crosses pandas:\n{p}"
+            assert "FlatMapGroupsInArrow" in p, f"{name} lost its grouped Arrow kernel:\n{p}"
+
+    def test_stencil_outputs_hold_nan_never_null(self, spark, rf):
+        # the contract denull used to enforce: NaN is the nodata sentinel
+        # inside values, SQL NULL never appears
+        from rastr_spark.operators.stencils import extrapolate
+
+        ops = self._stencil_ops(spark, rf)
+        ops.pop("blur")
+        ops["extrapolate"] = extrapolate(self._nan_raster(spark))
+        sparse = np.full((32, 32), np.nan)
+        sparse[3, 5], sparse[27, 20] = 1.0, 2.0  # the sparse broadcast round
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 32), 32, 32, tile_size=8)
+        ops["extrapolate_sparse"] = extrapolate(RasterFrame.from_numpy(spark, sparse, meta))
+        for name, out in ops.items():
+            st = out.df.agg(
+                F.sum(F.exists("values", F.isnull).cast("int")).alias("null_tiles"),
+                F.sum(F.exists("values", F.isnan).cast("int")).alias("nan_tiles"),
+            ).collect()[0]
+            assert st["null_tiles"] == 0, f"{name} emits SQL NULL inside values"
+            if not name.startswith("extrapolate"):
+                assert st["nan_tiles"] > 0, f"{name} lost its NaN cells"
+
     def test_extrapolate_then_stats_job_count(self, spark):
         # mostly-NaN raster (one donor in two of the 16 tiles): census, radii
         # volume probe, sparse donor fill and the stats aggregate

@@ -500,6 +500,50 @@ class TestTargetedHalo:
             }
             assert ring == tgt, f"h={h}"
 
+    def test_builders_match_numpy_oracle(self, spark):
+        # every (target tile, source tile) pair whose window and tile overlap,
+        # cut straight from the dense array — independent of both builders
+        import numpy as np
+
+        from rastr_spark.meta import Affine, RasterMeta
+        from rastr_spark.operators.stencils import halo_messages, halo_messages_targeted
+        from rastr_spark.tiles import RasterFrame, tile_spans
+
+        H, W, T = 27, 23, 10  # edge tiles on both axes
+        arr = np.random.RandomState(9).rand(H, W)
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, H), H, W, tile_size=T)
+        rf = RasterFrame.from_numpy(spark, arr, meta)
+        a = rf.to_numpy()
+
+        def oracle(tr, tc, h):
+            r0, c0 = tr * T, tc * T
+            rs, re = r0 - h, r0 + min(T, H - r0) + h
+            cs, ce = c0 - h, c0 + min(T, W - c0) + h
+            msgs = set()
+            for _, _, sr0, sc0, sth, stw in tile_spans(meta):
+                g0, g1 = max(rs, sr0), min(re, sr0 + sth)
+                k0, k1 = max(cs, sc0), min(ce, sc0 + stw)
+                if g1 > g0 and k1 > k0:
+                    strip = tuple(a[g0:g1, k0:k1].ravel())
+                    msgs.add((tr, tc, g0, k0, g1 - g0, k1 - k0, strip))
+            return msgs
+
+        def got(df):
+            return {
+                (r["tile_row"], r["tile_col"], r["gr0"], r["gc0"], r["n_rows"], r["n_cols"], tuple(r["strip"]))
+                for r in df.collect()
+            }
+
+        tiles = [(tr, tc) for tr, tc, *_ in tile_spans(meta)]
+        for h in (1, T - 1, T, T + 1, 40):  # 40 > the grid's span on both axes
+            want = set().union(*(oracle(tr, tc, h) for tr, tc in tiles))
+            assert got(halo_messages(rf, h)) == want, f"ring h={h}"
+        # targeted: a subset of tiles, each at its own radius
+        per = [(0, 0, 1), (1, 2, T - 1), (2, 1, T), (2, 2, T + 1), (1, 0, 40)]
+        targets = spark.createDataFrame(per, "tile_row int, tile_col int, h int")
+        want = set().union(*(oracle(tr, tc, h) for tr, tc, h in per))
+        assert got(halo_messages_targeted(rf, targets)) == want
+
 
 class TestExtrapolateCappedRounds:
     def test_mostly_nan_exact_vs_brute(self, spark):
