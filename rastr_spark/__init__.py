@@ -16,7 +16,10 @@ from .geometry import Geometry
 from . import operators  # attaches the fluent operator surface to RasterFrame
 from . import zipcache
 
-zipcache.install()  # Python workers import the package: no per-task zip re-reads
+# a worker imports the package, and so stops re-reading zips on every task,
+# when it unpickles a kernel that references a module-level engine function
+# (see zipcache)
+zipcache.install()
 
 __all__ = ["Affine", "Bounds", "RasterMeta", "RasterFrame", "Geometry"]
 __version__ = "0.1.0"

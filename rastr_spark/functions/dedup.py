@@ -29,6 +29,8 @@ full Jaccard runs only on LSH candidates. Embedding near-dup lives in similarity
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -352,143 +354,142 @@ def lsh_buckets_from_signatures(
     )
 
 
-def _xx64_numpy():
-    """Vectorized numpy replication of Spark's XXH64 primitives (the
-    ``xxhash64`` expression, seed 42): ``xx_long(x, seed)`` = hash of one
-    LongType child, ``xx_int(i, seed)`` = hash of one IntegerType child; a
-    multi-child ``xxhash64(a, b, ...)`` folds left-to-right with the running
-    hash as seed. Verified bit-equal against the Spark expression for single
-    longs, 3-long folds, and long+int-literal folds (1000 random values
-    each). All arithmetic is wrap-around uint64, matching Java longs."""
-    import numpy as np
+# Spark's XXH64 (the ``xxhash64`` expression) in numpy: ``_xx_long(x, seed)``
+# hashes one LongType child, ``_xx_int(i, seed)`` one IntegerType child; a
+# multi-child ``xxhash64(a, b, ...)`` folds left-to-right with the running
+# hash as seed. Bit-equal to Spark (test-locked); wrap-around uint64 arithmetic
+# on arrays matches Java longs.
+_P1, _P2, _P3, _P4, _P5 = map(np.uint64, (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5))
+_U = np.uint64
 
-    P1 = np.uint64(0x9E3779B185EBCA87)
-    P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    P3 = np.uint64(0x165667B19E3779F9)
-    P4 = np.uint64(0x85EBCA77C2B2AE63)
-    P5 = np.uint64(0x27D4EB2F165667C5)
-    U = np.uint64
 
-    def rotl(x, r):
-        return (x << U(r)) | (x >> U(64 - r))
+def _rotl(x, r):
+    return (x << _U(r)) | (x >> _U(64 - r))
 
-    def fmix(h):
-        h ^= h >> U(33)
-        h *= P2
-        h ^= h >> U(29)
-        h *= P3
-        h ^= h >> U(32)
-        return h
 
-    def xx_long(x, seed):
-        h = seed + P5 + U(8)
-        h ^= rotl(x * P2, 31) * P1
-        h = rotl(h, 27) * P1 + P4
-        return fmix(h)
+def _fmix(h):
+    h ^= h >> _U(33)
+    h *= _P2
+    h ^= h >> _U(29)
+    h *= _P3
+    h ^= h >> _U(32)
+    return h
 
-    def xx_int(i, seed):
-        h = seed + P5 + U(4)
-        h ^= U(i & 0xFFFFFFFF) * P1
-        h = rotl(h, 23) * P2 + P3
-        return fmix(h)
 
-    return xx_long, xx_int
+def _xx_long(x, seed):
+    h = seed + _P5 + _U(8)
+    h ^= _rotl(x * _P2, 31) * _P1
+    h = _rotl(h, 27) * _P1 + _P4
+    return _fmix(h)
+
+
+def _xx_int(i: int, seed):
+    h = seed + _P5 + _U(4)
+    h ^= _U((i & 0xFFFFFFFF) * int(_P1) % 2**64)  # a numpy scalar product warns
+    h = _rotl(h, 23) * _P2 + _P3
+    return _fmix(h)
+
+
+def _doc_windows(th: pa.ListArray, width: int):
+    """(flat, starts, doc_of) of an Arrow ``list<bigint>`` column: window j is
+    ``flat[starts[j]:starts[j] + width]`` (uint64 view of the values buffer)
+    in row ``doc_of[j]``; NULL rows and rows shorter than ``width`` have none."""
+    flat = th.values.to_numpy().view(np.uint64)
+    offs = th.offsets.to_numpy()
+    m = np.maximum(np.diff(offs) - (width - 1), 0)
+    if th.null_count:
+        m[th.is_null().to_numpy(zero_copy_only=False)] = 0
+    doc_of = np.repeat(np.arange(m.size), m)
+    starts = np.arange(doc_of.size) - (np.cumsum(m) - m)[doc_of] + offs[:-1][doc_of]
+    return flat, starts, doc_of
+
+
+def _distinct_per_doc(h, doc_of):
+    """(hashes, docs) without repeated (doc, hash) pairs, sorted by (doc, hash)."""
+    order = np.lexsort((h, doc_of))
+    hs, ds = h[order], doc_of[order]
+    keep = np.ones(hs.size, dtype=bool)
+    keep[1:] = (hs[1:] != hs[:-1]) | (ds[1:] != ds[:-1])
+    return hs[keep], ds[keep]
+
+
+def _minhash_sig_batch(b: pa.RecordBatch, n: int, num_hashes: int) -> pa.RecordBatch:
+    """(id, sig) for one Arrow batch of (id, th) rows, each with ≥ n token
+    hashes: per doc the distinct n-token shingle hashes ``xxhash64(th[i..i+n-1])``
+    (left fold, seed 42), and per hash function i the signed min of
+    ``xxhash64(h, lit(i))``."""
+    flat, starts, doc_of = _doc_windows(b.column("th"), n)
+    h = _xx_long(flat[starts], _U(42))
+    for k in range(1, n):
+        h = _xx_long(flat[starts + k], h)
+    hu, du = _distinct_per_doc(h, doc_of)
+    seg = np.flatnonzero(np.diff(du, prepend=-1))  # first shingle of each doc
+    base = _xx_long(hu, _U(42))
+    sig = np.empty((b.num_rows, num_hashes), dtype=np.int64)
+    for i in range(num_hashes):
+        # Spark's array_min over BIGINT is SIGNED — compare as int64
+        sig[:, i] = np.minimum.reduceat(_xx_int(i, base).view(np.int64), seg)
+    offs = np.arange(b.num_rows + 1, dtype=np.int32) * num_hashes
+    sigs = pa.ListArray.from_arrays(pa.array(offs), pa.array(sig.ravel()))
+    return pa.RecordBatch.from_arrays([b.column("id"), sigs], names=["id", "sig"])
 
 
 def _minhash_sigs_arrow(th_df: DataFrame, *, n: int, num_hashes: int) -> DataFrame:
     """(id, sig) from an (id, th) token-hash table — the vectorized Arrow
-    stage of the xxhash64 ``minhash_signatures_df`` path.
+    stage of the xxhash64 ``minhash_signatures_df`` path, BIT-IDENTICAL to
+    the interpreted JVM higher-order expression it replaced (~2 s per
+    execution at 950k reps; equality test-locked). One ``mapInArrow`` pass
+    runs :func:`_minhash_sig_batch` over each batch's flat ``th`` buffer
+    (guide §4.2: batch work belongs in vectorized native code); the kernel
+    calls that module-level function, so unpickling it on a worker imports
+    the package and installs :mod:`rastr_spark.zipcache`. Every input doc
+    must have ≥ n token hashes (callers filter first)."""
 
-    Computes, BIT-IDENTICALLY to the JVM higher-order expression it replaces
-    (equality test-locked on a generated corpus): per doc the n-token shingle
-    hashes ``xxhash64(th[i..i+n-1])`` (left fold, seed 42), the distinct set,
-    and per hash function i the signed min of ``xxhash64(h, lit(i))``. The
-    JVM expression evaluated interpreted (~2 s per execution at 950k reps);
-    here each batch is ~15 numpy passes: one concatenated shingle fold,
-    one lexsort dedup per (doc, hash), one ``minimum.reduceat`` per hash
-    function (guide §4.2: batch work belongs in vectorized native code).
-    Every input doc must have ≥ n token hashes (callers filter first)."""
-    import numpy as np
-    import pandas as pd
-
-    xx_long, xx_int = _xx64_numpy()
-    U = np.uint64
-
-    def kernel(it):
-        for pdf in it:
-            nd = len(pdf)
-            if nd == 0:
-                continue
-            arrs = [np.asarray(t, dtype=np.int64) for t in pdf["th"]]
-            lens = np.array([a.size for a in arrs], dtype=np.int64)
-            flat = np.concatenate(arrs).view(U)
-            m = lens - (n - 1)  # shingles per doc (≥ 1 by the caller's filter)
-            tot = int(m.sum())
-            doc_of = np.repeat(np.arange(nd), m)
-            m_start = np.concatenate(([0], np.cumsum(m)))[:-1]
-            d_start = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            starts = (np.arange(tot) - m_start[doc_of]) + d_start[doc_of]
-            h = xx_long(flat[starts], U(42))
-            for k in range(1, n):
-                h = xx_long(flat[starts + k], h)
-            order = np.lexsort((h, doc_of))
-            hs, ds = h[order], doc_of[order]
-            keep = np.empty(tot, dtype=bool)
-            keep[0] = True
-            keep[1:] = (hs[1:] != hs[:-1]) | (ds[1:] != ds[:-1])
-            hu, du = hs[keep], ds[keep]
-            seg = np.flatnonzero(np.concatenate(([True], du[1:] != du[:-1])))
-            base = xx_long(hu, U(42))
-            sig = np.empty((num_hashes, nd), dtype=np.int64)
-            for i in range(num_hashes):
-                # Spark's array_min over BIGINT is SIGNED — compare as int64
-                sig[i] = np.minimum.reduceat(xx_int(i, base).view(np.int64), seg)
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "sig": list(sig.T)})
+    def kernel(batches):
+        for b in batches:
+            yield _minhash_sig_batch(b, n, num_hashes)
 
     id_type = th_df.schema["id"].dataType.simpleString()
-    return th_df.mapInPandas(kernel, f"id {id_type}, sig array<bigint>")
+    return th_df.mapInArrow(kernel, f"id {id_type}, sig array<bigint>")
+
+
+def _window_hash_batch(b: pa.RecordBatch, window: int) -> pa.RecordBatch:
+    """(id, ws) for one Arrow batch of (id, th) rows: each doc's distinct
+    ``window``-token hashes, ascending as uint64 (none if it is shorter)."""
+    flat, starts, doc_of = _doc_windows(b.column("th"), window)
+    h = np.zeros(starts.size, dtype=np.uint64)
+    for k in range(window):
+        h *= _U(0x9E3779B97F4A7C15)
+        h += flat[starts + k]
+    hu, du = _distinct_per_doc(h, doc_of)
+    offs = np.zeros(b.num_rows + 1, dtype=np.int32)
+    np.cumsum(np.bincount(du, minlength=b.num_rows), out=offs[1:])
+    ws = pa.ListArray.from_arrays(pa.array(offs), pa.array(hu.view(np.int64)))
+    return pa.RecordBatch.from_arrays([b.column("id"), ws], names=["id", "ws"])
 
 
 def _distinct_window_hashes(th_df: DataFrame, window: int) -> DataFrame:
     """(id, ws): per-doc DISTINCT 64-bit window hashes from an (id, th)
-    token-hash table — the vectorized Arrow stage of the xxhash64
-    ``duplicated_window_stats`` path.
-
+    token-hash table, for the xxhash64 ``duplicated_window_stats`` path.
     Each window's hash is a degree-``window`` polynomial combine (odd 64-bit
-    multiplier, wrap-around arithmetic) of its token xxhash64s — computed as
-    ``window`` shifted multiply-adds over the whole doc's hash array at numpy
-    speed, then ``np.unique`` for the per-doc distinct. The JVM higher-order
-    expression this replaces (one 16-arg xxhash64 + 16 ``element_at`` per
-    window) evaluates interpreted, ~500 ns per element access — measured
-    41.9 s for the 210k-doc bench corpus vs under 2 s for this stage (guide
-    §4.2: batch work belongs in vectorized native code). Window identity is
-    unchanged (injective in the token-hash sequence up to 64-bit collisions:
-    the multiplier is odd, hence invertible mod 2⁶⁴); only the concrete hash
-    VALUES differ from the old expression, which nothing persists or
-    oracle-checks — the md5 oracle family has its own pure-JVM path."""
-    import numpy as np
-    import pandas as pd
+    multiplier, wrap-around arithmetic) of its token xxhash64s: ``window``
+    shifted multiply-adds over the batch's flat ``th`` buffer, then one
+    lexsort for the per-doc distinct, in one ``mapInArrow`` pass through the
+    module-level :func:`_window_hash_batch` (so unpickling the kernel installs
+    :mod:`rastr_spark.zipcache`); the interpreted JVM expression it replaced
+    took 41.9 s on the 210k-doc bench corpus vs under 2 s here. Windows are
+    identified injectively up to 64-bit collisions (the multiplier is odd,
+    hence invertible mod 2⁶⁴); nothing persists or oracle-checks the hash
+    VALUES — the md5 oracle family has its own pure-JVM path."""
 
-    mult = np.uint64(0x9E3779B97F4A7C15)
-
-    def kernel(it):
-        for pdf in it:
-            out = []
-            for th in pdf["th"]:
-                if th is None or len(th) < window:
-                    out.append(np.empty(0, dtype=np.int64))
-                    continue
-                a = np.asarray(th, dtype=np.int64).astype(np.uint64)
-                m = a.size - window + 1
-                h = np.zeros(m, dtype=np.uint64)
-                for k in range(window):
-                    h *= mult
-                    h += a[k : k + m]
-                out.append(np.unique(h).astype(np.int64))
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "ws": out})
+    def kernel(batches):
+        for b in batches:
+            yield _window_hash_batch(b, window)
 
     id_type = th_df.schema["id"].dataType.simpleString()
-    return th_df.mapInPandas(kernel, f"id {id_type}, ws array<bigint>")
+    return th_df.mapInArrow(kernel, f"id {id_type}, ws array<bigint>")
 
 
 def duplicated_window_stats(
@@ -551,7 +552,7 @@ def duplicated_window_stats(
         raise ValueError(f"unknown hash_family: {hash_family!r}")
     wins = wins.localCheckpoint(eager=False)
     exploded = wins.select("id", F.explode("ws").alias("wh"))
-    # windows are DISTINCT per doc already (array_distinct above), so a plain
+    # windows are DISTINCT per doc already (both branches above), so a plain
     # count(*) per window hash IS the distinct-doc count — no count_distinct
     # (two-phase dedup agg) needed on the hot shuffle
     shared = (
@@ -802,7 +803,6 @@ def _cc_driver_local(edges: DataFrame, metrics: list | None = None) -> DataFrame
     (50k edges): 3.5-4.2 s → 1.6-1.8 s, identical components."""
     import time as _time
 
-    import numpy as np
     import pandas as pd
 
     t0 = _time.time()

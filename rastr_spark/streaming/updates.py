@@ -10,6 +10,7 @@ store; per-tile partial aggregates mirror the batch partial/final model
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,6 +57,43 @@ def windowed_tile_stats(
     )
 
 
+def _merge_tile_cells(key, pdf_iter, state, policy: str):
+    """``running_tile_state``'s per-tile update: merge the micro-batch into
+    the state's {cell → (value, ts)} map and emit the tile's summary row."""
+    tr, tc = int(key[0]), int(key[1])
+    if state.exists:
+        s_rows, s_cols, s_vals, s_ts = state.get
+        cells = {
+            (r, c): (v, t)
+            for r, c, v, t in zip(s_rows, s_cols, s_vals, s_ts)
+        }
+    else:
+        cells = {}
+    for pdf in pdf_iter:
+        ts = pdf["ts"].astype("int64").to_numpy() / 1e9
+        for r, c, v, t in zip(pdf["row"], pdf["col"], pdf["value"], ts):
+            if v != v:  # NaN update = no-op
+                continue
+            k = (int(r), int(c))
+            if k not in cells:
+                cells[k] = (float(v), float(t))
+            elif policy == "last" and t >= cells[k][1]:
+                cells[k] = (float(v), float(t))
+            # policy == "first": keep existing
+    state.update(
+        (
+            [k[0] for k in cells],
+            [k[1] for k in cells],
+            [v[0] for v in cells.values()],
+            [v[1] for v in cells.values()],
+        )
+    )
+    total = sum(v[0] for v in cells.values())
+    yield pd.DataFrame(
+        {"tile_row": [tr], "tile_col": [tc], "n_cells": [len(cells)], "sum_value": [total]}
+    )
+
+
 def running_tile_state(
     updates: DataFrame,
     *,
@@ -71,45 +109,15 @@ def running_tile_state(
     tile's current non-NaN cell count and sum — a live, resumable (state-store
     checkpointed) version of the batch tile table.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     out_schema = "tile_row INT, tile_col INT, n_cells BIGINT, sum_value DOUBLE"
     state_schema = "rows ARRAY<INT>, cols ARRAY<INT>, vals ARRAY<DOUBLE>, ts ARRAY<DOUBLE>"
 
-    def update_fn(key, pdf_iter, state: GroupState):
-        tr, tc = int(key[0]), int(key[1])
-        if state.exists:
-            s_rows, s_cols, s_vals, s_ts = state.get
-            cells = {
-                (r, c): (v, t)
-                for r, c, v, t in zip(s_rows, s_cols, s_vals, s_ts)
-            }
-        else:
-            cells = {}
-        for pdf in pdf_iter:
-            ts = pdf["ts"].astype("int64").to_numpy() / 1e9
-            for r, c, v, t in zip(pdf["row"], pdf["col"], pdf["value"], ts):
-                if v != v:  # NaN update = no-op
-                    continue
-                k = (int(r), int(c))
-                if k not in cells:
-                    cells[k] = (float(v), float(t))
-                elif policy == "last" and t >= cells[k][1]:
-                    cells[k] = (float(v), float(t))
-                # policy == "first": keep existing
-        state.update(
-            (
-                [k[0] for k in cells],
-                [k[1] for k in cells],
-                [v[0] for v in cells.values()],
-                [v[1] for v in cells.values()],
-            )
-        )
-        total = sum(v[0] for v in cells.values())
-        yield pd.DataFrame(
-            {"tile_row": [tr], "tile_col": [tc], "n_cells": [len(cells)], "sum_value": [total]}
-        )
+    # ships the module-level merge by reference: unpickling it on a worker
+    # imports the package (rastr_spark/zipcache.py)
+    def update_fn(key, pdf_iter, state):
+        return _merge_tile_cells(key, pdf_iter, state, policy)
 
     # applyInPandasWithState resolves grouping keys by column name — materialize
     # the tile key as real columns first

@@ -12,6 +12,16 @@ re-read only when its ``(st_mtime_ns, st_size)`` changed since it was last
 read through the wrapper; importers of an unchanged archive adopt the shared
 cached directory instead. A rewritten archive is still picked up on the next
 invalidation. Installing twice is a no-op.
+
+``import rastr_spark`` installs it, and a worker imports the package only when
+it unpickles a kernel that references a module-level engine function:
+cloudpickle ships such functions by reference, while a self-contained closure
+ships by value and imports nothing of the package. So a kernel the engine
+hands to Spark must reference one: the stencil, resample, contour, flagship,
+dedup and streaming kernels are thin closures over module-level functions
+(``stencils._cut_strips``, ``dedup._minhash_sig_batch``, ...), and
+``tests/test_zipcache.py`` unpickles each of them in a fresh interpreter and
+fails if the cache is not installed.
 """
 
 from __future__ import annotations

@@ -106,6 +106,26 @@ class TestMinHashFamilies:
         }
         assert jvm == arrow
 
+    def test_signature_batch_emits_no_warning(self):
+        """The numpy XXH64 wraps without numpy's scalar-overflow warning
+        (raised here as an error); equal token streams give equal signatures."""
+        import warnings
+
+        import numpy as np
+        import pyarrow as pa
+
+        rng = np.random.default_rng(3)
+        toks = [list(rng.integers(-2**63, 2**63 - 1, size=L, dtype=np.int64)) for L in (3, 9, 20)]
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array([10, 11, 12, 13]), pa.array(toks + [toks[1]], pa.list_(pa.int64()))],
+            names=["id", "th"],
+        )
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            out = D._minhash_sig_batch(batch, 3, 16).to_pydict()
+        assert out["id"] == [10, 11, 12, 13]
+        assert [len(s) for s in out["sig"]] == [16] * 4 and out["sig"][1] == out["sig"][3]
+
 
 class TestHotGramCap:
     def test_cap_bounds_pair_fanout_under_zipf_skew(self, spark):
@@ -300,6 +320,36 @@ class TestDuplicatedWindows:
         ])
         out = D.duplicated_window_stats(docs, window=8).collect()
         assert all(r["dup_fraction"] == 1.0 for r in out)
+
+    def test_window_batch_matches_per_doc_loop(self):
+        """The flat-buffer window stage against the per-doc loop it replaced:
+        same hashes in the same order, on a sliced batch with NULL, empty and
+        short rows."""
+        import numpy as np
+        import pyarrow as pa
+
+        rng = np.random.default_rng(7)
+        vocab = rng.integers(-2**63, 2**63 - 1, size=5, dtype=np.int64)
+        th = [list(vocab[rng.integers(0, 5, size=L)]) for L in rng.integers(0, 30, size=40)]
+        th[3], th[8] = None, []
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(range(40)), pa.array(th, pa.list_(pa.int64()))], names=["id", "th"]
+        ).slice(2)
+
+        def loop(t, window):
+            if t is None or len(t) < window:
+                return []
+            a = np.asarray(t, dtype=np.int64).astype(np.uint64)
+            h = np.zeros(a.size - window + 1, dtype=np.uint64)
+            for k in range(window):
+                h *= np.uint64(0x9E3779B97F4A7C15)
+                h += a[k : k + h.size]
+            return np.unique(h).astype(np.int64).tolist()
+
+        for window in (1, 4, 8):
+            out = D._window_hash_batch(batch, window).to_pydict()
+            assert out["id"] == list(range(2, 40))
+            assert out["ws"] == [loop(t, window) for t in th[2:]]
 
     def test_fast_path_matches_md5_on_generated_corpus(self, spark):
         """The vectorized Arrow window-hash stage (r7: numpy polynomial

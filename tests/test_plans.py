@@ -250,6 +250,65 @@ class TestFlagshipBroadcastGuard:
         rb = sorted(map(tuple, b.collect()))
         assert ra == rb and len(ra) > 0
 
+    def test_shuffle_branch_returns_broadcast_rows(self, spark, rf):
+        from rastr_spark.plans.flagship import (
+            BROADCAST_PARTIALS_MAX_ROWS,
+            _join_refs_partials,
+        )
+
+        refs, partials = self._refs_partials(spark, rf)
+        # threshold -1: Catalyst would otherwise broadcast the tiny partials
+        # side on its own, and the branch above the bound would never run
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            bc = _join_refs_partials(refs, partials, partials_rows_bound=4, n_zones=1)
+            shuffled = _join_refs_partials(
+                refs, partials, partials_rows_bound=BROADCAST_PARTIALS_MAX_ROWS + 1, n_zones=1
+            )
+            assert "BroadcastHashJoin" not in plan(shuffled), plan(shuffled)
+            want = sorted(map(tuple, bc.collect()))
+            got = sorted(map(tuple, shuffled.collect()))
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        assert got == want and len(want) > 0
+
+
+class TestRepBroadcastGate:
+    """The fuzzy pipeline's rep-table gate (``REP_BROADCAST_MAX_ROWS``) forced
+    to its shuffle branch: the same assignment as the broadcast branch, and
+    no broadcast in the exact-collapse semi-join."""
+
+    DOCS = [
+        (0, "a b c d e"), (1, "a b c d e"), (2, "a b c d e f"), (3, "x y z w v"),
+        (4, "x y z w v u"), (5, "p q r s t"),
+    ]
+
+    def test_shuffle_branch_matches_broadcast(self, spark, monkeypatch):
+        from rastr_spark.functions import dedup as D
+
+        docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
+        keyed = docs.select("doc_id", "text", *D._fp_cols("text"))
+
+        def run():
+            _, reps, bc_reps = D._rep_tables(keyed, "doc_id")
+            assign = D.fuzzy_dedup_assign(docs, n=2, num_hashes=8, bands=4, threshold=0.5)
+            return bc_reps, plan(reps), {tuple(r) for r in assign.collect()}
+
+        # threshold -1: only the gate's hint can broadcast
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            bc_reps, p, want = run()
+            assert bc_reps and "BroadcastHashJoin" in p, p
+            monkeypatch.setattr(D, "REP_BROADCAST_MAX_ROWS", -1)
+            bc_reps, p, got = run()
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        assert not bc_reps and "Broadcast" not in p, p
+        assert got == want and len(want) == len(self.DOCS)
+        assert len({c for _, c in want}) < len(self.DOCS)  # some docs merged
+
 
 class TestCropPartitionPruning:
     def test_bbox_crop_prunes_store_partitions(self, spark, rf, tmp_path):

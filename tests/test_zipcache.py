@@ -1,12 +1,30 @@
 """Importing rastr_spark makes zip importers re-read an archive's directory only
 when the archive changed (rastr_spark/zipcache.py) — a reused Python worker
-calls importlib.invalidate_caches() before every task."""
+calls importlib.invalidate_caches() before every task. A worker installs the
+cache only if it imports the package, so every kernel an operator hands to
+Spark's map and grouped-map builders must import it when unpickled."""
 
 import json
 import os
 import subprocess
 import sys
 from pathlib import Path
+
+import numpy as np
+import pytest
+from pyspark import cloudpickle
+from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
+from pyspark.sql.pandas.map_ops import PandasMapOpsMixin
+
+from rastr_spark.functions import dedup
+from rastr_spark.geometry import Geometry
+from rastr_spark.meta import Affine, RasterMeta
+from rastr_spark.operators import stencils
+from rastr_spark.operators.resample import resample
+from rastr_spark.operators.vectorize import contour_segments
+from rastr_spark.plans.flagship import tile_zone_partials
+from rastr_spark.streaming import updates
+from rastr_spark.tiles import RasterFrame
 
 ROOT = Path(__file__).resolve().parents[1]
 
@@ -76,3 +94,110 @@ def test_install_is_idempotent():
     guarded = zipimport.zipimporter.invalidate_caches
     zipcache.install()
     assert guarded._stat_guarded and zipimport.zipimporter.invalidate_caches is guarded
+
+
+# --- each swept operator's kernels install the cache when unpickled --------
+
+KERNEL_BUILDERS = {
+    PandasMapOpsMixin: ("mapInPandas", "mapInArrow"),
+    PandasGroupedOpsMixin: ("applyInPandas", "applyInArrow", "applyInPandasWithState"),
+}
+
+UNPICKLE = r"""
+import json, pickle, sys, zipimport
+import pyspark.core.broadcast as bc
+
+class Registered(dict):  # a worker registers the task's broadcasts before unpickling
+    def __contains__(self, bid):
+        return True
+
+    def __missing__(self, bid):
+        return None
+
+bc._broadcastRegistry = Registered()
+pickle.load(sys.stdin.buffer)
+print(json.dumps({
+    "imported": "rastr_spark" in sys.modules,
+    "guarded": getattr(zipimport.zipimporter.invalidate_caches, "_stat_guarded", False),
+}))
+"""
+
+
+def _on_grid(op, nan_rows=False):
+    def build(spark, tmp_path):
+        arr = np.arange(16.0).reshape(4, 4)
+        if nan_rows:
+            arr[1:, :] = np.nan
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1.0, 0, 0, 0, -1.0, 4), 4, 4, tile_size=2)
+        return op(RasterFrame.from_numpy(spark, arr, meta))
+
+    return build
+
+
+def _on_docs(op):
+    def build(spark, tmp_path):
+        base = "the quick brown fox jumps over the lazy dog"
+        return op(spark.createDataFrame(
+            [(0, base), (1, base + " again"), (2, "an unrelated short text here")],
+            "doc_id long, text string",
+        ))
+
+    return build
+
+
+def _stream_hits(spark, tmp_path):
+    stream = spark.readStream.schema("doc_id long, text string").parquet(str(tmp_path))
+    ref = spark.createDataFrame([(0, 0, 1)], "id long, band int, bucket long")
+    return updates.streaming_near_dup_hits(stream, ref, num_hashes=4, bands=2)
+
+
+def _tile_state(spark, tmp_path):
+    return updates.running_tile_state(updates.read_update_stream(spark, str(tmp_path)), tile_size=2)
+
+
+SWEEP = {
+    "minhash_signatures_df": _on_docs(lambda d: dedup.minhash_signatures_df(d, n=2, num_hashes=4)),
+    "duplicated_window_stats": _on_docs(lambda d: dedup.duplicated_window_stats(d, window=2)),
+    "streaming_near_dup_hits": _stream_hits,
+    "running_tile_state": _tile_state,
+    "blur": _on_grid(lambda rf: stencils.blur(rf, 0.5)),
+    "sobel": _on_grid(stencils.sobel),
+    "dilate": _on_grid(lambda rf: stencils.dilate(rf, 1.0)),
+    "extrapolate": _on_grid(stencils.extrapolate, nan_rows=True),
+    "resample": _on_grid(lambda rf: resample(rf, 2.0)),
+    "contour_segments": _on_grid(lambda rf: contour_segments(rf, [5.5])),
+    "tile_zone_partials": _on_grid(
+        lambda rf: tile_zone_partials(rf, [("z", Geometry.box(0, 0, 2, 2))])
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(SWEEP))
+def test_kernel_unpickle_installs_cache(spark, tmp_path, monkeypatch, op):
+    """A worker installs the cache only by importing rastr_spark, and it does
+    so only when a kernel references a module-level engine function (cloudpickle
+    ships those by reference). Captures every callable the operator hands to
+    Spark's Python-kernel builders and unpickles each in a fresh interpreter."""
+    kernels = []
+    for cls, names in KERNEL_BUILDERS.items():
+        for name in names:
+            def capture(self, func, *args, _orig=getattr(cls, name), **kwargs):
+                kernels.append(func)
+                return _orig(self, func, *args, **kwargs)
+
+            monkeypatch.setattr(cls, name, capture)
+    SWEEP[op](spark, tmp_path)
+    assert kernels, f"{op} built no Python kernel"
+    procs = [
+        (k.__qualname__, subprocess.Popen(
+            [sys.executable, "-c", UNPICKLE], cwd=ROOT, stdin=subprocess.PIPE,
+            stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+            env={**os.environ, "PYTHONPATH": str(ROOT)},
+        ))
+        for k in kernels
+    ]
+    for (qualname, proc), k in zip(procs, kernels):
+        out, err = proc.communicate(cloudpickle.dumps(k), timeout=120)
+        assert proc.returncode == 0, err.decode()
+        got = json.loads(out.decode().strip().splitlines()[-1])
+        assert got == {"imported": True, "guarded": True}, f"{op}: {qualname} {got}"
