@@ -166,10 +166,10 @@ def main():
 
     # -- flagship under a hot-tile distribution (VERDICT r5 item 3) -------------
     # ~20% of docs get ALL their media refs rewritten to ONE tile — the
-    # Zipfian-web shape the sampled salt pre-pass exists for. The salted wall
-    # should stay ≈ the uniform flagship line (ratio ~1) while the unsalted run
-    # pays the single-reducer hot key; both are recorded so the gap is evidence,
-    # not an assertion.
+    # Zipfian-web shape the sampled salt pre-pass exists for. Salting runs only
+    # when the flagship join shuffles (partials past BROADCAST_PARTIALS_MAX_ROWS);
+    # at this size the partials are broadcast and both leaves run the same
+    # unsalted plan, so their ratio measures noise, not salting.
     hot_ref = F.lit(f"{rf.raster_id}/0/0")
     skew_docs_df = docs.withColumn(
         "spans",

@@ -45,6 +45,18 @@ def _elementwise(
     return rf.map_kernel(np_fn)
 
 
+def _zip_tiles(va: pd.Series, vb: pd.Series, np_fn, dtype) -> pd.Series:
+    """``_binary``'s reduced-dtype kernel body: ``np_fn`` on each tile pair in
+    ``dtype``. Module-level, so unpickling the kernel that calls it imports the
+    package and installs :mod:`rastr_spark.zipcache` on the worker."""
+    return pd.Series(
+        [
+            np_fn(np.asarray(x, dtype=dtype), np.asarray(y, dtype=dtype)).astype(np.float64)
+            for x, y in zip(va, vb)
+        ]
+    )
+
+
 def _binary(
     a: RasterFrame,
     b: RasterFrame,
@@ -71,12 +83,7 @@ def _binary(
 
         @F.pandas_udf(_ARR)
         def _k(va: pd.Series, vb: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    np_fn(np.asarray(x, dtype=dtype), np.asarray(y, dtype=dtype)).astype(np.float64)
-                    for x, y in zip(va, vb)
-                ]
-            )
+            return _zip_tiles(va, vb, np_fn, dtype)
 
         from ..tiles import denull
 
@@ -250,6 +257,35 @@ def normalize(rf: RasterFrame, *, vmin: float | None = None, vmax: float | None 
     return rf.full_like(0.0)
 
 
+def _taper_tiles(values, trs, tcs, meta: RasterMeta, width_cells: float, lim: float) -> pd.Series:
+    """``taper_border``'s kernel body, module-level so that unpickling the
+    kernel imports the package (installs :mod:`rastr_spark.zipcache`)."""
+    H, W, Tsz = meta.height, meta.width, meta.tile_size
+    dtype = np.dtype(meta.dtype)
+    out = []
+    for v, tr, tc in zip(values, trs, tcs):
+        r0, c0 = int(tr) * Tsz, int(tc) * Tsz
+        th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
+        arr = np.asarray(v, dtype=dtype).reshape(th, tw)
+        rows = np.arange(r0, r0 + th)[:, None]
+        cols = np.arange(c0, c0 + tw)[None, :]
+        dist = np.minimum.reduce(
+            [
+                np.broadcast_to(cols, (th, tw)),
+                np.broadcast_to(W - 1 - cols, (th, tw)),
+                np.broadcast_to(rows, (th, tw)),
+                np.broadcast_to(H - 1 - rows, (th, tw)),
+            ]
+        )
+        mask = dist < np.ceil(width_cells)
+        factor = np.clip(dist / width_cells, 0.0, 1.0)
+        tapered = lim + (arr - lim) * factor
+        new = arr.copy()
+        new[mask] = tapered[mask].astype(dtype)
+        out.append(new.ravel().astype(np.float64))
+    return pd.Series(out)
+
+
 def taper_border(rf: RasterFrame, width: float, *, limit: float = 0.0) -> RasterFrame:
     """Linear ramp toward ``limit`` within ``width`` of the grid edge
     (reference src/rastr/raster.py:1461-1510). Distance is measured in cell
@@ -257,35 +293,12 @@ def taper_border(rf: RasterFrame, width: float, *, limit: float = 0.0) -> Raster
     kernel receives (tile_row, tile_col) and computes absolute indices; no halo.
     """
     meta = rf.meta
-    H, W, Tsz = meta.height, meta.width, meta.tile_size
     width_cells = width / meta.cell_size
     lim = float(limit)
-    dtype = np.dtype(meta.dtype)
 
     @F.pandas_udf(_ARR)
     def _k(values: pd.Series, trs: pd.Series, tcs: pd.Series) -> pd.Series:
-        out = []
-        for v, tr, tc in zip(values, trs, tcs):
-            r0, c0 = int(tr) * Tsz, int(tc) * Tsz
-            th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
-            arr = np.asarray(v, dtype=dtype).reshape(th, tw)
-            rows = np.arange(r0, r0 + th)[:, None]
-            cols = np.arange(c0, c0 + tw)[None, :]
-            dist = np.minimum.reduce(
-                [
-                    np.broadcast_to(cols, (th, tw)),
-                    np.broadcast_to(W - 1 - cols, (th, tw)),
-                    np.broadcast_to(rows, (th, tw)),
-                    np.broadcast_to(H - 1 - rows, (th, tw)),
-                ]
-            )
-            mask = dist < np.ceil(width_cells)
-            factor = np.clip(dist / width_cells, 0.0, 1.0)
-            tapered = lim + (arr - lim) * factor
-            new = arr.copy()
-            new[mask] = tapered[mask].astype(dtype)
-            out.append(new.ravel().astype(np.float64))
-        return pd.Series(out)
+        return _taper_tiles(values, trs, tcs, meta, width_cells, lim)
 
     from ..tiles import denull
 

@@ -9,8 +9,12 @@ the interleaved document table.
 Physical shape, by design:
 - the docs⋈tiles join is an **equi-join on (raster_id, tile_row, tile_col)**; the
   tile side is pre-partitioned by cell_id, the doc side is exploded media refs.
-  Zipf-hot tiles are handled by **salting**: a pre-pass count picks per-tile salt
-  fan-outs, the tile side replicates salted rows, the doc side gets
+  The plan is picked from the driver-known partials bound n_tiles × n_zones:
+  at or below ``BROADCAST_PARTIALS_MAX_ROWS`` the partials are **broadcast**
+  unsalted — the refs side never repartitions, so a Zipf-hot tile cannot pile
+  onto one reducer. Only above the bound, where the join shuffles, are hot
+  tiles **salted**: a sampled count picks per-tile salt fan-outs, the partials
+  side replicates salted rows, the doc side gets
   ``salt = xxhash64(doc_id) % S`` (north rule "explicit salting for skewed dense
   regions").
 - polygons are **broadcast** (closure-captured ndarray coords — tiny).
@@ -39,13 +43,13 @@ from ..sources.documents import media_refs
 from ..tiles import RasterFrame
 
 # Broadcast guard for the partials side of the flagship join: rows are bounded
-# by n_tiles × n_zones (× per-hot-tile salt fan-out). Below this row bound the
-# explicit broadcast hint is ESSENTIAL (the salt explode hides the side's size
-# from AQE and the refs side would shuffle — measured 33.4 → 20.3 s at
-# local[8]/2M docs); above it, ~8 scalar columns × 10⁷ rows approaches the
+# by n_tiles × n_zones. At or below this row bound the partials are broadcast
+# by explicit hint, not by Catalyst's size estimate of a Python map's output
+# (the hint measured 33.4 → 20.3 s at local[8]/2M docs), and no salting runs:
+# a broadcast join never repartitions the refs side, so a hot tile cannot pile
+# onto one reducer. Above it, ~8 scalar columns × 10⁷ rows approaches the
 # executor broadcast memory ceiling and the hint would ship gigabytes to every
-# executor (or OOM the driver) — the salted shuffle join is the correct plan
-# there, so the hint is dropped.
+# executor (or OOM the driver) — the salted shuffle join is the plan there.
 BROADCAST_PARTIALS_MAX_ROWS = 10_000_000
 
 # Fraction of refs the hot-key pre-pass counts (seeded sample, counts scaled
@@ -158,19 +162,21 @@ def doc_zonal_stats(
 ) -> DataFrame:
     """Flagship: per (zone_id, doc_id) zonal stats over each doc's referenced tiles.
 
-    ``salt_threshold``: if set, a pre-pass counts media refs per tile; tiles above
-    the threshold get a salt fan-out so the join's hot keys spread across
+    ``salt_threshold``: used only when the partials side is too large to
+    broadcast (n_tiles × n_zones above ``BROADCAST_PARTIALS_MAX_ROWS``) and the
+    join shuffles. There a pre-pass counts media refs per tile; tiles above the
+    threshold get a salt fan-out so the join's hot keys spread across
     ceil(count/threshold) reducers. The partials side replicates (it is the small
     side per key — one row per (tile, zone)). The pre-pass counts a
     ``SALT_SAMPLE_FRACTION`` sample of the refs, so skew detection does not cost
-    a full extra scan of the doc table.
+    a full extra scan of the doc table. At or below the bound the threshold is
+    ignored.
     """
     refs = media_refs(docs).filter(F.col("raster_id") == rf.raster_id)
     partials = tile_zone_partials(rf, zones)
     return _join_refs_partials(
         refs, partials, salt_threshold=salt_threshold,
         partials_rows_bound=rf.meta.n_tile_rows * rf.meta.n_tile_cols * len(zones),
-        n_zones=len(zones),
     )
 
 
@@ -180,71 +186,44 @@ def _join_refs_partials(
     *,
     salt_threshold: int | None = None,
     partials_rows_bound: int,
-    n_zones: int,
 ) -> DataFrame:
     """The flagship's skew-aware join + final agg, shared by the one-shot and
     checkpointed plans (the resumable variant is exactly the run that needs skew
-    handling at scale).
-
-    The hot-key pre-pass counts a deterministic-seed ``SALT_SAMPLE_FRACTION``
-    sample of the refs. Salting never affects results, only key fan-out —
-    equality is covered by the salted-vs-unsalted tests.
+    handling at scale). Building it launches no Spark job.
 
     ``partials_rows_bound``: driver-known row bound of the partials side
     (n_tiles × n_zones — callers that hold the RasterMeta compute it for free).
-    The explicit broadcast hint is applied only below
-    ``BROADCAST_PARTIALS_MAX_ROWS``; above it (10⁶+ tiles × many zones) the
-    salted shuffle join runs instead."""
-    if salt_threshold:
+    At or below ``BROADCAST_PARTIALS_MAX_ROWS`` the unsalted partials are
+    broadcast and ``salt_threshold`` is ignored: the refs side is never
+    repartitioned, and the final aggregate's key (zone_id, doc_id) carries no
+    salt. Above it (10⁶+ tiles × many zones) the join shuffles, and with
+    ``salt_threshold`` set the hot tiles are salted: a deterministic-seed
+    ``SALT_SAMPLE_FRACTION`` sample of the refs counts refs per tile. Salting
+    never affects results, only key fan-out — equality is covered by the
+    salted-vs-unsalted tests."""
+    keys = ["tile_row", "tile_col"]
+    if partials_rows_bound <= BROADCAST_PARTIALS_MAX_ROWS:
+        partials = F.broadcast(partials)
+    elif salt_threshold:
         sampled = refs.sample(fraction=SALT_SAMPLE_FRACTION, seed=7)
-        counts = sampled.groupBy("tile_row", "tile_col").agg(
+        counts = sampled.groupBy(*keys).agg(
             (F.count("*") / F.lit(SALT_SAMPLE_FRACTION)).alias("count")
-        )
-        hot = counts.filter(F.col("count") > salt_threshold).select(
-            "tile_row",
-            "tile_col",
-            F.ceil(F.col("count") / salt_threshold).cast("int").alias("n_salt"),
         )
         # tiny (hot tiles only) but referenced twice — cache so the doc table is
         # not re-derived for the partials-side salt fan-out (.explain showed a
         # third full doc scan without this)
-        hot = hot.cache()
-        # the salt explode replicates each hot tile's n_zones partial rows
-        # n_salt times — the broadcast-size bound must include that fan-out
-        # or skewed refs could push the hinted side past the ceiling. hot
-        # is tiny and cached; one driver peek gives the EXACT fan-out.
-        hs = hot.agg(
-            F.count("*").alias("k"),
-            F.coalesce(F.sum("n_salt"), F.lit(0)).alias("s"),
-        ).collect()[0]
-        partials_rows_bound += int(hs["s"] - hs["k"]) * n_zones
-        refs = refs.join(F.broadcast(hot), ["tile_row", "tile_col"], "left").withColumn(
-            "salt",
-            F.when(
-                F.col("n_salt").isNotNull(),
-                F.pmod(F.xxhash64("doc_id"), F.col("n_salt")).cast("int"),
-            ).otherwise(F.lit(0)),
+        hot = counts.filter(F.col("count") > salt_threshold).select(
+            *keys, F.ceil(F.col("count") / salt_threshold).cast("int").alias("n_salt"),
+        ).cache()
+        n_salt = F.coalesce(F.col("n_salt"), F.lit(1))  # a cold tile keeps salt 0
+        refs = refs.join(F.broadcast(hot), keys, "left").withColumn(
+            "salt", F.pmod(F.xxhash64("doc_id"), n_salt).cast("int")
         ).drop("n_salt")
-        partials = partials.join(F.broadcast(hot), ["tile_row", "tile_col"], "left").withColumn(
-            "salt_arr",
-            F.when(
-                F.col("n_salt").isNotNull(),
-                F.sequence(F.lit(0), F.col("n_salt") - 1),
-            ).otherwise(F.array(F.lit(0))),
-        ).withColumn("salt", F.explode("salt_arr")).withColumn(
-            "salt", F.col("salt").cast("int")
-        ).drop("salt_arr", "n_salt")
-        join_keys = ["tile_row", "tile_col", "salt"]
-    else:
-        join_keys = ["tile_row", "tile_col"]
-
-    # Broadcast only when the driver-side bound says the partials side fits
-    # (see BROADCAST_PARTIALS_MAX_ROWS): below the bound the hint is a measured
-    # 1.6× win; above it the hint would be the scale-killer, so the salted
-    # shuffle join takes over.
-    broadcastable = partials_rows_bound <= BROADCAST_PARTIALS_MAX_ROWS
-    right = F.broadcast(partials) if broadcastable else partials
-    joined = refs.join(right, join_keys, "inner")
+        partials = partials.join(F.broadcast(hot), keys, "left").withColumn(
+            "salt", F.explode(F.sequence(F.lit(0), n_salt - 1))
+        ).drop("n_salt")
+        keys = [*keys, "salt"]
+    joined = refs.join(partials, keys, "inner")
     return (
         joined.groupBy("zone_id", "doc_id")
         .agg(
@@ -297,13 +276,12 @@ def flagship_checkpointed(
     )
 
     def build_final() -> DataFrame:
-        # same salted join as the one-shot plan — stage 3 rebuilt from the
-        # checkpointed refs/partials tables keeps the skew fan-out
+        # same join as the one-shot plan — stage 3 rebuilt from the
+        # checkpointed refs/partials tables keeps its regime and salt fan-out
         return _join_refs_partials(
             refs_stage.df, partials_stage.df,
             salt_threshold=salt_threshold,
             partials_rows_bound=rf.meta.n_tile_rows * rf.meta.n_tile_cols * len(zones),
-            n_zones=len(zones),
         )
 
     final_stage = cm.run_stage(spark, "doc_zonal", input_fingerprint, build_final)

@@ -113,6 +113,13 @@ def tile_dims_cols(meta: RasterMeta) -> tuple[Column, Column]:
     return th.cast("int"), tw.cast("int")
 
 
+def _map_tiles(s: pd.Series, np_fn: Callable[[np.ndarray], np.ndarray], dtype) -> pd.Series:
+    """``RasterFrame.map_kernel``'s kernel body: ``np_fn`` on each tile's values
+    in ``dtype``. Module-level, so unpickling the kernel that calls it imports
+    the package and installs :mod:`rastr_spark.zipcache` on the worker."""
+    return s.map(lambda v: np_fn(np.asarray(v, dtype=dtype)).astype(np.float64))
+
+
 @dataclass
 class RasterFrame:
     """Distributed raster = tile DataFrame + driver-side meta."""
@@ -346,7 +353,7 @@ class RasterFrame:
 
         @F.pandas_udf(T.ArrayType(T.DoubleType()))
         def _k(s: pd.Series) -> pd.Series:
-            return s.map(lambda v: np_fn(np.asarray(v, dtype=dtype)).astype(np.float64))
+            return _map_tiles(s, np_fn, dtype)
 
         return self.with_values(denull(_k(F.col("values"))))
 

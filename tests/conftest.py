@@ -33,6 +33,20 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def shuffle_join(spark, monkeypatch):
+    """Forces the flagship join into its shuffle regime, the only one that
+    salts: every partials bound is above BROADCAST_PARTIALS_MAX_ROWS, and
+    Catalyst broadcasts neither tiny test side on its own."""
+    from rastr_spark.plans import flagship
+
+    monkeypatch.setattr(flagship, "BROADCAST_PARTIALS_MAX_ROWS", 0)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
 # --- reference golden fixtures (FIXTURES.md §3) ---------------------------------
 
 @pytest.fixture

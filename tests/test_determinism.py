@@ -2,6 +2,7 @@
 bit-identical regardless of input partitioning/parallelism (BASELINE.json), plus the
 reference's dtype-preservation matrix (tests/conftest.py:29-62) across operators."""
 
+import math
 import os
 import subprocess
 import sys
@@ -38,7 +39,7 @@ class TestBitIdentity:
         b = RasterFrame.from_cells(cells.repartition(13), meta)
         assert tile_table(a) == tile_table(b)  # bit-identical incl. cell_id
 
-    def test_flagship_rows_invariant_to_parallelism(self, spark):
+    def test_flagship_rows_invariant_to_parallelism(self, spark, shuffle_join):
         meta = RasterMeta(32.0, "EPSG:2193", Affine(32, 0, 0, 0, -32, 512), 16, 16, tile_size=4)
         rf = RasterFrame.from_numpy(spark, np.arange(256.0).reshape(16, 16), meta)
         docs = generate_documents(spark, 300, seed=42, n_tile_rows=4, n_tile_cols=4)
@@ -112,9 +113,12 @@ class TestTextSpanGeometries:
 
 
 class TestSaltingSpreadsHotKeys:
-    def test_hot_tile_gets_multiple_salts(self, spark):
-        from rastr_spark.plans.flagship import media_refs
-        from pyspark.sql import functions as F
+    def test_hot_tile_gets_multiple_salts(self, spark, monkeypatch, shuffle_join):
+        from rastr_spark.plans.flagship import (
+            SALT_SAMPLE_FRACTION,
+            _join_refs_partials,
+            media_refs,
+        )
 
         # 500 docs all referencing ONE tile → ultra-hot key
         docs = spark.createDataFrame(
@@ -122,15 +126,30 @@ class TestSaltingSpreadsHotKeys:
             "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
         )
         refs = media_refs(docs)
-        counts = refs.groupBy("tile_row", "tile_col").count()
-        hot = counts.filter(F.col("count") > 100).select(
-            "tile_row", "tile_col", F.ceil(F.col("count") / 100).cast("int").alias("n_salt")
+        partials = spark.createDataFrame(
+            [(0, 0, "z", 1, 1.0, 0.0, 1.0, 1.0)],
+            "tile_row int, tile_col int, zone_id string, cnt long, s double, m2 double, mn double, mx double",
         )
-        salted = refs.join(F.broadcast(hot), ["tile_row", "tile_col"], "left").withColumn(
-            "salt", F.when(F.col("n_salt").isNotNull(), F.pmod(F.xxhash64("doc_id"), F.col("n_salt"))).otherwise(F.lit(0))
-        )
-        n_distinct = salted.select("salt").distinct().count()
-        assert n_distinct == 5  # ceil(500/100): hot key fans out across 5 sub-keys
+        # the salted refs side is the left input of the join keyed on salt
+        joins = []
+        orig = type(refs).join
+
+        def spy(self, other, on=None, how=None):
+            joins.append((self, list(on or [])))
+            return orig(self, other, on, how)
+
+        monkeypatch.setattr(type(refs), "join", spy)
+        out = _join_refs_partials(refs, partials, salt_threshold=100, partials_rows_bound=1)
+        salted = [df for df, on in joins if "salt" in on]
+        assert len(salted) == 1, [on for _, on in joins]
+        n_salt = math.ceil(refs.sample(fraction=SALT_SAMPLE_FRACTION, seed=7).count()
+                           / SALT_SAMPLE_FRACTION / 100)
+        assert n_salt >= 4
+        # the hot key fans out across ceil(count/threshold) sub-keys
+        assert salted[0].select("salt").distinct().count() == n_salt
+        # the replicated partials rows meet each ref exactly once
+        rows = out.collect()
+        assert len(rows) == 500 and {r["cell_count"] for r in rows} == {1}
 
 
 class TestQuantileVariants:

@@ -87,7 +87,7 @@ class TestFlagship:
         # top half = rows 0..7 (y from 512 down), values 0..7
         assert agg["top"]["s"] == sum(r * 16 for r in range(8))
 
-    def test_doc_zonal_stats_matches_unsalted(self, spark, docs, raster, zones):
+    def test_doc_zonal_stats_matches_unsalted(self, spark, docs, raster, zones, shuffle_join):
         salted = doc_zonal_stats(docs, raster, zones, salt_threshold=5)
         unsalted = doc_zonal_stats(docs, raster, zones, salt_threshold=None)
         a = {(r["zone_id"], r["doc_id"]): (r["cell_count"], r["sum"]) for r in salted.collect()}

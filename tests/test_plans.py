@@ -6,6 +6,7 @@ elementwise hot path."""
 
 import contextlib
 import io
+import re
 import sys
 import types
 
@@ -60,7 +61,7 @@ class TestJoinShapes:
         for name, p in plans.items():
             assert "CartesianProduct" not in p, f"{name} plan degraded to cartesian:\n{p}"
 
-    def test_flagship_salt_key_in_plan(self, spark, rf):
+    def test_flagship_salt_key_in_plan(self, spark, rf, shuffle_join):
         from rastr_spark.plans.flagship import doc_zonal_stats
         from rastr_spark.sources.documents import generate_documents
 
@@ -223,14 +224,13 @@ class TestFlagshipBroadcastGuard:
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            below = plan(_join_refs_partials(refs, partials, partials_rows_bound=4, n_zones=1))
+            below = plan(_join_refs_partials(refs, partials, partials_rows_bound=4))
             assert "BroadcastHashJoin" in below, (
                 f"small partials side lost its broadcast:\n{below}"
             )
             above = plan(
                 _join_refs_partials(
                     refs, partials, partials_rows_bound=BROADCAST_PARTIALS_MAX_ROWS + 1,
-                    n_zones=1,
                 )
             )
             assert "BroadcastHashJoin" not in above, (
@@ -244,8 +244,8 @@ class TestFlagshipBroadcastGuard:
         from rastr_spark.plans.flagship import _join_refs_partials
 
         refs, partials = self._refs_partials(spark, rf)
-        a = _join_refs_partials(refs, partials, salt_threshold=1, partials_rows_bound=4, n_zones=1)
-        b = _join_refs_partials(refs, partials, salt_threshold=1, partials_rows_bound=10**9, n_zones=1)
+        a = _join_refs_partials(refs, partials, salt_threshold=1, partials_rows_bound=4)
+        b = _join_refs_partials(refs, partials, salt_threshold=1, partials_rows_bound=10**9)
         ra = sorted(map(tuple, a.collect()))
         rb = sorted(map(tuple, b.collect()))
         assert ra == rb and len(ra) > 0
@@ -262,9 +262,9 @@ class TestFlagshipBroadcastGuard:
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            bc = _join_refs_partials(refs, partials, partials_rows_bound=4, n_zones=1)
+            bc = _join_refs_partials(refs, partials, partials_rows_bound=4)
             shuffled = _join_refs_partials(
-                refs, partials, partials_rows_bound=BROADCAST_PARTIALS_MAX_ROWS + 1, n_zones=1
+                refs, partials, partials_rows_bound=BROADCAST_PARTIALS_MAX_ROWS + 1
             )
             assert "BroadcastHashJoin" not in plan(shuffled), plan(shuffled)
             want = sorted(map(tuple, bc.collect()))
@@ -272,6 +272,37 @@ class TestFlagshipBroadcastGuard:
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         assert got == want and len(want) > 0
+
+    def _flagship(self, spark, rf, salt_threshold):
+        from rastr_spark.plans.flagship import doc_zonal_stats
+        from rastr_spark.sources.documents import generate_documents
+
+        docs = generate_documents(spark, 50, seed=1, n_tile_rows=2, n_tile_cols=2)
+        return doc_zonal_stats(
+            docs, rf, [("z", Geometry.box(0, 0, 8, 8))], salt_threshold=salt_threshold
+        )
+
+    def test_broadcast_regime_does_not_salt(self, spark, rf):
+        # under the bound the refs side never repartitions, so salting could
+        # not spread a hot tile: the threshold is ignored
+        out = self._flagship(spark, rf, salt_threshold=1)
+        got = sorted(map(tuple, out.collect()))
+        p = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+        assert not re.search(r"\bsalt#", p), f"broadcast regime carries a salt key:\n{p}"
+        assert "Generate explode" not in p, f"broadcast regime replicates partials:\n{p}"
+        shuffles = [ln for ln in p.splitlines() if re.search(r"(?<!Broadcast)Exchange ", ln)]
+        assert len(shuffles) == 1 and "hashpartitioning(zone_id" in shuffles[0], p
+        want = sorted(map(tuple, self._flagship(spark, rf, salt_threshold=None).collect()))
+        assert got == want and len(want) > 0
+
+    @pytest.mark.parametrize("regime", ["broadcast", "shuffle"])
+    def test_building_the_plan_launches_no_job(self, spark, rf, request, regime):
+        if regime == "shuffle":
+            request.getfixturevalue("shuffle_join")
+        with job_group(spark, f"flagship-plan-{regime}") as jobs:
+            out = self._flagship(spark, rf, salt_threshold=1)
+        assert jobs == [], f"building the {regime} flagship plan launched {len(jobs)} job(s)"
+        assert out.count() > 0
 
 
 class TestRepBroadcastGate:

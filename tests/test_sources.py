@@ -310,7 +310,7 @@ class TestCheckpointedFlagship:
         r3 = {(r["zone_id"], r["doc_id"]): r["sum"] for r in direct.collect()}
         assert r1 == r3
 
-    def test_salted_stage3_matches_unsalted_and_survives_resume(self, spark, tmp_path):
+    def test_salted_stage3_matches_unsalted_and_survives_resume(self, spark, tmp_path, shuffle_join):
         # the resumable plan is the one you'd run at 100 TB — its stage-3 join
         # must share doc_zonal_stats' salt fan-out (VERDICT r1 wrong #3)
         import numpy as np

@@ -2,7 +2,8 @@
 when the archive changed (rastr_spark/zipcache.py) — a reused Python worker
 calls importlib.invalidate_caches() before every task. A worker installs the
 cache only if it imports the package, so every kernel an operator hands to
-Spark's map and grouped-map builders must import it when unpickled."""
+Spark's map and grouped-map builders and to ``pandas_udf`` must import it when
+unpickled."""
 
 import json
 import os
@@ -13,13 +14,14 @@ from pathlib import Path
 import numpy as np
 import pytest
 from pyspark import cloudpickle
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
 from pyspark.sql.pandas.map_ops import PandasMapOpsMixin
 
 from rastr_spark.functions import dedup
 from rastr_spark.geometry import Geometry
 from rastr_spark.meta import Affine, RasterMeta
-from rastr_spark.operators import stencils
+from rastr_spark.operators import elementwise, interpolate, joins, rasterize, stencils
 from rastr_spark.operators.resample import resample
 from rastr_spark.operators.vectorize import contour_segments
 from rastr_spark.plans.flagship import tile_zone_partials
@@ -123,13 +125,16 @@ print(json.dumps({
 """
 
 
-def _on_grid(op, nan_rows=False):
+META = RasterMeta(1.0, "EPSG:2193", Affine(1.0, 0, 0, 0, -1.0, 4), 4, 4, tile_size=2)
+BOX = Geometry.box(0, 0, 2, 2)
+
+
+def _on_grid(op, nan_rows=False, dtype="float64"):
     def build(spark, tmp_path):
-        arr = np.arange(16.0).reshape(4, 4)
+        arr = np.arange(16.0).reshape(4, 4).astype(dtype)
         if nan_rows:
             arr[1:, :] = np.nan
-        meta = RasterMeta(1.0, "EPSG:2193", Affine(1.0, 0, 0, 0, -1.0, 4), 4, 4, tile_size=2)
-        return op(RasterFrame.from_numpy(spark, arr, meta))
+        return op(RasterFrame.from_numpy(spark, arr, META.with_(dtype=dtype)))
 
     return build
 
@@ -166,8 +171,25 @@ SWEEP = {
     "extrapolate": _on_grid(stencils.extrapolate, nan_rows=True),
     "resample": _on_grid(lambda rf: resample(rf, 2.0)),
     "contour_segments": _on_grid(lambda rf: contour_segments(rf, [5.5])),
-    "tile_zone_partials": _on_grid(
-        lambda rf: tile_zone_partials(rf, [("z", Geometry.box(0, 0, 2, 2))])
+    "tile_zone_partials": _on_grid(lambda rf: tile_zone_partials(rf, [("z", BOX)])),
+    "map_kernel": _on_grid(lambda rf: rf + 0.5, dtype="float32"),
+    "binary": _on_grid(lambda rf: rf + rf, dtype="float32"),
+    "taper_border": _on_grid(lambda rf: elementwise.taper_border(rf, 1.0)),
+    "clip": _on_grid(lambda rf: joins.clip(rf, BOX)),
+    "replace_polygon": _on_grid(lambda rf: joins.replace_polygon(rf, BOX, 1.0)),
+    "rasterize_geometries": lambda spark, tmp_path: rasterize.rasterize_geometries(
+        spark, [BOX], [1.0], META
+    ),
+    "rasterize_z_gdf": lambda spark, tmp_path: rasterize.rasterize_z_gdf(
+        spark, [Geometry.box(0, 0, 3, 3)], [np.arange(5.0)], cell_size=1.0, crs="EPSG:2193",
+        tile_size=2,
+    ),
+    "raster_from_point_cloud": lambda spark, tmp_path: interpolate.raster_from_point_cloud(
+        spark, [0.0, 3.0, 0.0, 3.0], [0.0, 0.0, 3.0, 3.0], [1.0, 2.0, 3.0, 4.0],
+        crs="EPSG:2193", cell_size=1.0, tile_size=2,
+    ),
+    "raster_distance_from_polygon": lambda spark, tmp_path: interpolate.raster_distance_from_polygon(
+        spark, BOX, raster_meta=META, extent_polygon=Geometry.box(0, 0, 4, 4)
     ),
 }
 
@@ -177,7 +199,8 @@ def test_kernel_unpickle_installs_cache(spark, tmp_path, monkeypatch, op):
     """A worker installs the cache only by importing rastr_spark, and it does
     so only when a kernel references a module-level engine function (cloudpickle
     ships those by reference). Captures every callable the operator hands to
-    Spark's Python-kernel builders and unpickles each in a fresh interpreter."""
+    Spark's Python-kernel builders or to ``F.pandas_udf`` (called with the
+    function or as a decorator) and unpickles each in a fresh interpreter."""
     kernels = []
     for cls, names in KERNEL_BUILDERS.items():
         for name in names:
@@ -186,6 +209,20 @@ def test_kernel_unpickle_installs_cache(spark, tmp_path, monkeypatch, op):
                 return _orig(self, func, *args, **kwargs)
 
             monkeypatch.setattr(cls, name, capture)
+
+    def capture_udf(f=None, *args, _orig=F.pandas_udf, **kwargs):
+        if callable(f):
+            kernels.append(f)
+            return _orig(f, *args, **kwargs)
+        decorate = _orig(f, *args, **kwargs)
+
+        def wrap(fn):
+            kernels.append(fn)
+            return decorate(fn)
+
+        return wrap
+
+    monkeypatch.setattr(F, "pandas_udf", capture_udf)
     SWEEP[op](spark, tmp_path)
     assert kernels, f"{op} built no Python kernel"
     procs = [
