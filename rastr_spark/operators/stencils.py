@@ -29,12 +29,14 @@ exist here):
            ties → lowest (row, col) (reference src/rastr/arr/fill.py:11-32).
            Influence radius is unbounded → ONE per-tile census pass (NaN-run
            bound, NaN bbox and up to five representative donors per tile,
-           one vectorized Arrow map pass read by one aggregate job) gives
-           every NaN tile a proven-sufficient exact radius, and ONE targeted
-           round at per-tile radius finishes, for any number of NaN tiles. A
-           cell is filled only when its nearest donor is *proven* within the
-           window (min distance ≤ h ⇒ no unseen donor can be nearer, and
-           every tied donor is inside the window) — exact for any donor layout.
+           one vectorized Arrow map pass read once with ``toArrow()``) is all
+           the driver plans from: it gives every NaN tile a proven-sufficient
+           exact radius in numpy, picks the gather from the window volume,
+           and ONE targeted round at per-tile radius finishes, for any number
+           of NaN tiles — no checkpoint, no radii join. A cell is filled only
+           when its nearest donor is *proven* within the window (min distance
+           ≤ h ⇒ no unseen donor can be nearer, and every tied donor is
+           inside the window) — exact for any donor layout.
 """
 
 from __future__ import annotations
@@ -44,6 +46,7 @@ from typing import Callable
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
@@ -430,7 +433,9 @@ def dilate(rf: RasterFrame, radius: float) -> RasterFrame:
 
 def _tile_census(rf: RasterFrame) -> DataFrame:
     """One row per tile, everything extrapolate plans from, in ONE vectorized
-    Arrow pass over the original raster:
+    Arrow pass over the original raster. :func:`extrapolate` reads it once
+    with ``toArrow()`` — ~60-100 bytes per tile, so even 10⁶ tiles stay in the
+    size class of the broadcast donor set — and plans the rest on the driver:
 
     - ``n_nan`` / ``n_donors``: NaN and non-NaN cell counts;
     - ``max_run``: the longest NaN run of the row-major values array, or NULL
@@ -519,13 +524,6 @@ def _tile_census(rf: RasterFrame) -> DataFrame:
     )
 
 
-def _donor_reps(census: DataFrame) -> DataFrame:
-    """(rep_r, rep_c): every tile's donor representatives from the census."""
-    return census.select(F.explode(F.arrays_zip("rep_r", "rep_c")).alias("r")).select(
-        "r.rep_r", "r.rep_c"
-    )
-
-
 def _donor_cells(rf: RasterFrame) -> DataFrame:
     """(tile_row, tile_col, tw, di, dv): per-tile SPARSE donor lists — the
     positions (row-major index) and values of every non-NaN cell, extracted in
@@ -563,11 +561,11 @@ def _donor_cells(rf: RasterFrame) -> DataFrame:
 
 def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> DataFrame:
     """The exact-radius extrapolate round over a BROADCAST donor set: the
-    (driver-bounded, see ``SPARSE_GATHER_MAX_DONORS``) donor cells are
-    collected once into three sorted numpy arrays and broadcast; a batched
-    ``mapInArrow`` over the tiny radii table then box-queries each target's
-    window out of the sorted arrays (``searchsorted`` on the row coordinate)
-    and runs the identical proven :func:`_nn_fill` on a window
+    (driver-bounded, see ``SPARSE_GATHER_MAX_DONORS``) donor cells are read
+    once with ``toArrow()`` into three sorted numpy arrays and broadcast; a
+    batched ``mapInArrow`` over the driver-built radii table then box-queries
+    each target's window out of the sorted arrays (``searchsorted`` on the row
+    coordinate) and runs the identical proven :func:`_nn_fill` on a window
     re-assembled from those donors. Result is bit-equal to the dense-strip
     round — the window a kernel sees contains exactly the same donor cells.
 
@@ -578,24 +576,24 @@ def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> Dat
     pays ~2 ms × n_targets of per-group Arrow overhead in applyInPandas
     (measured 8 s for 4096 groups with a trivial kernel). Here NOTHING is
     shuffled: no raster scan, no per-group machinery — the only moving parts
-    are one bounded collect+broadcast and one Python crossing of the
-    one-row-per-NaN-tile radii table. The padded window is additionally
-    shrunk to the bbox of core ∪ in-window donors: excluded cells are
-    donor-free by construction, so the kernel's scan result is unchanged."""
+    are one bounded read+broadcast and one Python crossing of the
+    one-row-per-NaN-tile radii table. That table is a local one (a
+    ``LocalTableScan`` spread over min(n_targets, defaultParallelism)
+    partitions), so each row's ~5 ms of kernel work runs in parallel without
+    a repartition. The padded window is additionally shrunk to the bbox of
+    core ∪ in-window donors: excluded cells are donor-free by construction,
+    so the kernel's scan result is unchanged."""
     meta = rf.meta
     Tsz = meta.tile_size
     H, W = meta.height, meta.width
     raster_id = rf.raster_id
-    rows = donors.select("tile_row", "tile_col", "tw", "di", "dv").collect()
-    grs, gcs, dvs = [], [], []
-    for r in rows:
-        di = np.asarray(r["di"], dtype=np.int64)
-        grs.append(r["tile_row"] * Tsz + di // r["tw"])
-        gcs.append(r["tile_col"] * Tsz + di % r["tw"])
-        dvs.append(np.asarray(r["dv"], dtype=np.float64))
-    gr = np.concatenate(grs) if grs else np.empty(0, np.int64)
-    gc = np.concatenate(gcs) if gcs else np.empty(0, np.int64)
-    dv = np.concatenate(dvs) if dvs else np.empty(0, np.float64)
+    t = donors.select("tile_row", "tile_col", "tw", "di", "dv").toArrow()
+    n = pc.list_value_length(t.column("di")).to_numpy()
+    di = pc.list_flatten(t.column("di")).to_numpy()
+    tw = np.repeat(t.column("tw").to_numpy().astype(np.int64), n)
+    gr = np.repeat(t.column("tile_row").to_numpy().astype(np.int64) * Tsz, n) + di // tw
+    gc = np.repeat(t.column("tile_col").to_numpy().astype(np.int64) * Tsz, n) + di % tw
+    dv = pc.list_flatten(t.column("dv")).to_numpy()
     order = np.lexsort((gc, gr))
     bc = rf.df.sparkSession.sparkContext.broadcast((gr[order], gc[order], dv[order]))
 
@@ -627,15 +625,7 @@ def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> Dat
                 cores.append(_nn_fill(padded, np.ones(padded.shape, dtype=bool), info))
             yield tile_batch(raster_id, trs, tcs, cores)
 
-    # the radii table is tiny in BYTES but each row is ~5 ms of kernel work —
-    # AQE's byte-based coalescing would collapse it to one partition and run
-    # every kernel on one core (measured: 28 s single-core vs ~1 s spread).
-    # Round-robin repartition to the session's parallelism before the Python
-    # stage; the 1-row-per-tile shuffle is negligible.
-    n_parts = max(rf.df.sparkSession.sparkContext.defaultParallelism, 1) * 2
-    return radii.select(
-        "tile_row", "tile_col", F.col("h").cast("int").alias("h")
-    ).repartition(n_parts).mapInArrow(fill, TILE_SCHEMA)
+    return radii.mapInArrow(fill, TILE_SCHEMA)
 
 
 # dense-window volume bound for the exact-radius round, as a multiple of the
@@ -649,100 +639,95 @@ def _sparse_nn_fill(rf: RasterFrame, radii: DataFrame, donors: DataFrame) -> Dat
 SPARSE_GATHER_DENSE_BLOWUP = 4.0
 
 # donor-cell count above which the broadcast round is not attempted (the
-# collect+broadcast is ~24 bytes/donor — the bound keeps it a few dozen MB,
-# same class as the radii broadcast the targeted builder already relies on)
+# read+broadcast is ~24 bytes/donor — the bound keeps it a few dozen MB,
+# same class as the census the driver already holds at ~10⁶ tiles)
 SPARSE_GATHER_MAX_DONORS = 2_000_000
 
-# pair-count bound above which _exact_target_radii switches from the single
-# cross join to the Chebyshev-ring-doubling join: with BOTH sides large
-# (~10⁶ rep-needing tiles × ~10⁷ donor reps on a sparse mega-raster) the
-# broadcast-nested-loop cross would generate ~10¹³ pair rows — the planner
-# itself becoming the scale-killer the plan exists to avoid
-EXTRAPOLATE_RADII_MAX_PAIRS = 64_000_000
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(s, s + n)`` for every (s, n) pair, vectorized."""
+    return np.repeat(starts - (np.cumsum(lens) - lens), lens) + np.arange(lens.sum())
 
 
-def _radii_from_pairs(j, Tsz: int, max_h: int) -> DataFrame:
-    """min corner-max distance per target over (target × donor-rep) pair rows."""
-    gr0 = F.col("ttr").cast("long") * Tsz + F.col("rmin")
-    gr1 = F.col("ttr").cast("long") * Tsz + F.col("rmax")
-    gc0 = F.col("ttc").cast("long") * Tsz + F.col("cmin")
-    gc1 = F.col("ttc").cast("long") * Tsz + F.col("cmax")
-    dr = F.greatest(F.abs(gr0 - F.col("rep_r")), F.abs(gr1 - F.col("rep_r")))
-    dc = F.greatest(F.abs(gc0 - F.col("rep_c")), F.abs(gc1 - F.col("rep_c")))
-    d2 = dr * dr + dc * dc
-    return (
-        j.groupBy("ttr", "ttc")
-        .agg(F.min(d2).alias("d2"))
-        .select(
-            F.col("ttr").alias("tile_row"),
-            F.col("ttc").alias("tile_col"),
-            F.greatest(
-                F.lit(1), F.least(F.ceil(F.sqrt("d2")), F.lit(max_h))
-            ).cast("int").alias("h"),
-        )
-    )
+def _census_radii(census: pa.Table, meta: RasterMeta) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(tile_row, tile_col, h) int64 arrays for every NaN tile of a
+    :func:`_tile_census` table: a PROVEN-sufficient per-tile radius, planned
+    on the driver in numpy.
 
+    A valid NaN-run bound is the radius, clipped to [1, max_h]. Every other
+    NaN tile takes the census donor reps: for a fixed donor, distance over the
+    tile's NaN bbox is convex and separable, so its max sits at a corner
+    (d² = the largest row offset² + the largest column offset²); the min
+    over reps of that corner-max bounds every NaN cell's
+    nearest-donor distance from above (every rep IS a real donor). The reps
+    searched are those within Chebyshev tile rings K = 4, 16, … of the tile,
+    the first ring that holds one deciding: any in-ring rep gives a valid
+    bound, and a tile never meets the reps of far-away tiles. Reps are
+    bucketed by tile (sorted by row-major tile key, so one ring row is one
+    contiguous slice; a summed-area table counts a ring's reps in O(1)), and
+    tiles are evaluated in blocks of ~2¹⁸ (tile, rep) pairs — memory stays
+    bounded, and no target × rep product is ever built.
 
-def _exact_target_radii(
-    flags: DataFrame, summary: DataFrame, meta: RasterMeta, max_h: int,
-    *, broadcast_flags: bool, ring: bool = False,
-) -> DataFrame:
-    """(tile_row, tile_col, h) for every NaN tile: a PROVEN-sufficient per-tile
-    radius from the census donor reps (``summary``: rep_r, rep_c) and the
-    tile's NaN bounding box.
+    ``max_h`` is the grid DIAGONAL: max(H, W) would leave a far corner
+    unproven when the only donors sit in the opposite corner (distance up to
+    √(H²+W²) — found by the single-corner-donor test)."""
+    Tsz, ntr, ntc = meta.tile_size, meta.n_tile_rows, meta.n_tile_cols
+    max_h = int(math.ceil(math.hypot(meta.height, meta.width)))
 
-    For a fixed donor position, distance over the NaN bbox rectangle is convex
-    and separable, so its max is max-over-row-interval + max-over-col-interval;
-    min over donor reps of that corner-max bounds every NaN cell's nearest-donor
-    distance from above (the rep IS a real donor). Broadcast-nested-loop join
-    with the smaller side broadcast, partial-aggregated min per target — the
-    only shuffle carries one row per remaining tile.
+    def ints(k):
+        return census.column(k).fill_null(0).to_numpy().astype(np.int64)
 
-    ``ring``: bound the pair count when BOTH sides are large — iterate a
-    Chebyshev tile-ring join (targets × reps within K tile rings, K×4 per
-    pass) instead of the full cross product; any in-ring rep still yields a
-    valid upper bound (every rep is a real donor), only possibly looser than
-    the global min, and targets resolve as soon as a ring contains a donor.
-    Each pass streams the summary once against the broadcast unresolved set."""
-    Tsz = meta.tile_size
-    t = flags.select(
-        F.col("tile_row").alias("ttr"), F.col("tile_col").alias("ttc"),
-        "rmin", "rmax", "cmin", "cmax",
-    )
-    if not ring:
-        if broadcast_flags:
-            j = F.broadcast(t).crossJoin(summary)
-        else:
-            j = t.crossJoin(F.broadcast(summary))
-        return _radii_from_pairs(j, Tsz, max_h)
+    tgt = np.flatnonzero(ints("n_nan") > 0)
+    tr, tc, run = ints("tile_row")[tgt], ints("tile_col")[tgt], ints("max_run")[tgt]
+    h = np.clip(run, 1, max_h)  # max_run is NULL (→ 0) where no run bound holds
+    need = np.flatnonzero(run == 0)
+    nr, nc = tr[need], tc[need]
+    r0, r1 = nr * Tsz + ints("rmin")[tgt][need], nr * Tsz + ints("rmax")[tgt][need]
+    c0, c1 = nc * Tsz + ints("cmin")[tgt][need], nc * Tsz + ints("cmax")[tgt][need]
 
-    rep_tr = F.floor(F.col("rep_r") / Tsz)
-    rep_tc = F.floor(F.col("rep_c") / Tsz)
-    max_ring = max(1, math.ceil(max_h / Tsz)) + 1
-    unresolved = t.localCheckpoint(eager=True)
-    parts = []
+    rr = pc.list_flatten(census.column("rep_r")).to_numpy().astype(np.int64)
+    rc = pc.list_flatten(census.column("rep_c")).to_numpy().astype(np.int64)
+    key = (rr // Tsz) * ntc + rc // Tsz
+    order = np.argsort(key, kind="stable")
+    rr, rc = rr[order], rc[order]
+    counts = np.bincount(key, minlength=ntr * ntc)
+    ptr = np.concatenate(([0], np.cumsum(counts)))
+    sat = np.zeros((ntr + 1, ntc + 1), np.int64)
+    sat[1:, 1:] = counts.reshape(ntr, ntc).cumsum(0).cumsum(1)
+
+    best = np.full(need.size, np.iinfo(np.int64).max)  # min corner-max d²
+    todo = np.arange(need.size)
+    budget = 1 << 18
     K = 4
-    while True:
-        in_ring = (F.abs(rep_tr - F.col("ttr")) <= K) & (
-            F.abs(rep_tc - F.col("ttc")) <= K
-        )
-        j = F.broadcast(unresolved).join(summary, in_ring)
-        part = _radii_from_pairs(j, Tsz, max_h).localCheckpoint(eager=True)
-        parts.append(part)
-        unresolved = unresolved.join(
-            part.select(
-                F.col("tile_row").alias("ttr"), F.col("tile_col").alias("ttc")
-            ),
-            ["ttr", "ttc"],
-            "left_anti",
-        ).localCheckpoint(eager=True)
-        if not unresolved.count() or K >= max_ring:
+    while todo.size:
+        ra, rb = np.maximum(nr[todo] - K, 0), np.minimum(nr[todo] + K, ntr - 1)
+        ca, cb = np.maximum(nc[todo] - K, 0), np.minimum(nc[todo] + K, ntc - 1)
+        cnt = sat[rb + 1, cb + 1] - sat[ra, cb + 1] - sat[rb + 1, ca] + sat[ra, ca]
+        hit = cnt > 0
+        ids, ra, ca, cb, cnt = todo[hit], ra[hit], ca[hit], cb[hit], cnt[hit]
+        rows = rb[hit] - ra + 1
+        cost = np.cumsum(cnt + rows)
+        start = 0
+        while start < ids.size:
+            base = cost[start - 1] if start else 0
+            stop = max(start + 1, int(np.searchsorted(cost, base + budget, "right")))
+            b = slice(start, stop)
+            # one segment per (tile, ring row): a contiguous slice of the reps
+            seg = np.repeat(np.arange(stop - start), rows[b])
+            seg_row = _ranges(ra[b], rows[b])
+            lo = ptr[seg_row * ntc + ca[b][seg]]
+            n = ptr[seg_row * ntc + cb[b][seg] + 1] - lo
+            t, rep = ids[b][np.repeat(seg, n)], _ranges(lo, n)
+            dr = np.maximum(np.abs(r0[t] - rr[rep]), np.abs(r1[t] - rr[rep]))
+            dc = np.maximum(np.abs(c0[t] - rc[rep]), np.abs(c1[t] - rc[rep]))
+            best[ids[b]] = np.minimum.reduceat(dr * dr + dc * dc, np.cumsum(cnt[b]) - cnt[b])
+            start = stop
+        todo = todo[~hit]
+        if K >= max(ntr, ntc):  # the ring covered the grid: no rep anywhere
             break
         K *= 4
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    h[need] = np.clip(np.ceil(np.sqrt(best.astype(np.float64))), 1, max_h).astype(np.int64)
+    return tr, tc, h
 
 
 def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
@@ -750,89 +735,51 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
     (reference src/rastr/raster.py:1290-1309 + arr/fill.py:11-32).
 
     One plan for every donor layout (SURVEY §2.2): ONE Arrow census pass over
-    the original raster (:func:`_tile_census`, localCheckpointed and read by a
-    single aggregate job) gives every NaN tile an EXACT proven-sufficient
-    radius — the NaN-run bound alone when the tile's holes are small (the
-    common dense-raster shape), a 5-rep donor min over the tile's NaN bbox
-    (:func:`_exact_target_radii`) only for tiles without a valid run bound —
-    and ONE round at per-tile radius finishes, always filling from the
-    ORIGINAL raster (scipy NearestNDInterpolator semantics: chained
-    propagation would drift). That round gathers either dense window strips
+    the original raster (:func:`_tile_census`, read once with ``toArrow()``)
+    and the driver plans the rest in numpy. :func:`_census_radii` gives every
+    NaN tile an EXACT proven-sufficient radius — the NaN-run bound alone when
+    the tile's holes are small (the common dense-raster shape), the min
+    corner-max distance to the nearby census donor reps otherwise — and ONE
+    round at per-tile radius finishes, always filling from the ORIGINAL
+    raster (scipy NearestNDInterpolator semantics: chained propagation would
+    drift). That round gathers either dense window strips
     (:func:`stencil_apply` with ``targets``) or a broadcast donor set
-    (:func:`_sparse_nn_fill`), picked from driver-known volume estimates.
-    NaN-free tiles never enter the round at all. NaN-free and all-NaN
-    rasters return unchanged.
+    (:func:`_sparse_nn_fill`), picked from the driver-known dense window
+    volume Σ(T+2h)². The radii travel as one driver-built table, which also
+    merges the untouched tiles back through a broadcast left-anti join:
+    NaN-free tiles never enter the round. NaN-free and all-NaN rasters return
+    unchanged after the census read.
     """
     if method not in ("nearest",):
         raise NotImplementedError(f"Unsupported extrapolation method: {method}")
     meta = rf.meta
-    Tsz = meta.tile_size
-
-    # full proof radius = the grid DIAGONAL: max(H, W) would leave a far
-    # corner unproven when the only donors sit in the opposite corner
-    # (distance up to √(H²+W²) — found by the single-corner-donor test)
-    max_h = int(math.ceil(math.hypot(meta.height, meta.width)))
-    has_nan = F.exists("values", lambda v: F.isnan(v))
-
-    census = _tile_census(rf).localCheckpoint(eager=False)
-    flagged = F.col("n_nan") > 0
-    tot = census.agg(  # one job: materializes the census checkpoint
-        F.count_if(flagged).alias("n_targets"),
-        F.count_if(flagged & F.col("max_run").isNull()).alias("n_need"),
-        F.sum(F.size("rep_r")).alias("donor_reps"),
-        F.sum("n_donors").alias("n_donors"),
-    ).collect()[0]
-    n_targets, n_need = tot["n_targets"], tot["n_need"]
-    donor_reps, n_donors = tot["donor_reps"] or 0, tot["n_donors"] or 0
+    census = _tile_census(rf).toArrow()
+    n_donors = pc.sum(census.column("n_donors")).as_py() or 0
     # no NaN anywhere — nothing to fill; all-NaN raster — reference returns
     # it unchanged
-    if not n_targets or not n_donors:
+    if not n_donors or not pc.any(pc.greater(census.column("n_nan"), 0)).as_py():
         return RasterFrame(rf.df, meta, rf.raster_id)
-    flags = census.filter(flagged)
 
-    # exact radii: run-bound radii straight from the census; tiles without a
-    # valid run bound get the donor-rep min over their NaN bbox
-    radii = flags.filter(F.col("max_run").isNotNull()).select(
-        "tile_row", "tile_col",
-        F.greatest(F.lit(1), F.least("max_run", F.lit(max_h))).cast("int").alias("h"),
+    tr, tc, h = _census_radii(census, meta)
+    radii = rf.df.sparkSession.createDataFrame(
+        pa.table({k: v.astype(np.int32) for k, v in (("tile_row", tr), ("tile_col", tc), ("h", h))})
     )
-    if n_need:
-        rep_radii = _exact_target_radii(
-            flags.filter(F.col("max_run").isNull()), _donor_reps(census), meta, max_h,
-            broadcast_flags=n_need <= donor_reps,
-            ring=n_need * donor_reps > EXTRAPOLATE_RADII_MAX_PAIRS,
-        )
-        radii = radii.unionByName(rep_radii)
-    # gather-representation choice for the one targeted round, from
-    # driver-known volume estimates (radii is tiny — one row per NaN tile):
-    # dense strips ship Σ(T+2h)² window cells; sparse donor lists ship each
-    # donor once per ring tile. Mostly-NaN rasters have necessarily wide
-    # proven radii (the nearest donor IS far), where dense windows move the
-    # raster 10-20× — the sparse path moves only the donors. The probe runs
-    # only when some tile lacked a valid NaN-run bound (n_need > 0): a pure
-    # run-bound radius set has h < T, so the dense volume is bounded by
-    # ~9× tile cells and the strip gather is the right plan — gating on it
-    # keeps the common dense-raster-with-holes shape free of the extra driver
-    # action.
-    use_sparse = False
-    if n_need:
-        radii = radii.localCheckpoint(eager=False)
-        vol = radii.agg(  # one job: materializes the radii checkpoint
-            F.sum(
-                (F.lit(float(Tsz)) + 2.0 * F.col("h")) * (F.lit(float(Tsz)) + 2.0 * F.col("h"))
-            ).alias("dense")
-        ).collect()[0]
-        n_cells = float(meta.height) * float(meta.width)
-        use_sparse = (
-            vol["dense"] is not None
-            and vol["dense"] > SPARSE_GATHER_DENSE_BLOWUP * n_cells
-            and n_donors <= SPARSE_GATHER_MAX_DONORS
-        )
-    if use_sparse:
+    # gather-representation choice for the one targeted round: dense strips
+    # ship Σ(T+2h)² window cells; sparse donor lists ship each donor once.
+    # Mostly-NaN rasters have necessarily wide proven radii (the nearest
+    # donor IS far), where dense windows move the raster 10-20× — the sparse
+    # path moves only the donors.
+    dense = float(np.sum((meta.tile_size + 2.0 * h) ** 2))
+    if (
+        dense > SPARSE_GATHER_DENSE_BLOWUP * float(meta.height) * float(meta.width)
+        and n_donors <= SPARSE_GATHER_MAX_DONORS
+    ):
         filled_df = _sparse_nn_fill(rf, radii, _donor_cells(rf))
     else:
         filled_df = stencil_apply(rf, None, _nn_fill, targets=radii).df
-    return RasterFrame(rf.df.filter(~has_nan).unionByName(filled_df), meta, rf.raster_id)
+    keys = F.broadcast(radii.select("tile_row", "tile_col"))
+    kept = rf.df.join(keys, ["tile_row", "tile_col"], "left_anti").select(*rf.df.columns)
+    return RasterFrame(kept.unionByName(filled_df), meta, rf.raster_id)
 
 
 def _nn_fill(padded: np.ndarray, valid: np.ndarray, info: tuple) -> np.ndarray:

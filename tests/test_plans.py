@@ -21,9 +21,10 @@ from rastr_spark.tiles import RasterFrame
 
 SF001 = "/root/testdata/sf0.01"
 
-# rf_stats(extrapolate(x)) on a 16-tile mostly-NaN raster: 19 jobs with the
-# per-purpose flags/summary/bbox/donor passes, 10 with the one census pass
-MAX_EXTRAPOLATE_STATS_JOBS = 10
+# rf_stats(extrapolate(x)) on a 16-tile mostly-NaN raster: the census and
+# donor-cell reads, then the target-key broadcast of the left-anti merge and
+# the two-stage stats aggregate
+MAX_EXTRAPOLATE_STATS_JOBS = 5
 
 
 def plan(df, mode="formatted") -> str:
@@ -458,8 +459,8 @@ class TestStencilFixedCosts:
                 assert st["nan_tiles"] > 0, f"{name} lost its NaN cells"
 
     def test_extrapolate_then_stats_job_count(self, spark):
-        # mostly-NaN raster (one donor in two of the 16 tiles): census, radii
-        # volume probe, sparse donor fill and the stats aggregate
+        # mostly-NaN raster (one donor in two of the 16 tiles): census and
+        # donor reads, then the key broadcast and the stats aggregate
         arr = np.full((32, 32), np.nan)
         arr[3, 5], arr[27, 20] = 1.0, 2.0
         meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 32), 32, 32, tile_size=8)
@@ -469,6 +470,65 @@ class TestStencilFixedCosts:
             st = src.extrapolate().stats()
         assert st["count"] == 32 * 32 and {st["min"], st["max"]} == {1.0, 2.0}
         assert len(jobs) <= MAX_EXTRAPOLATE_STATS_JOBS, len(jobs)
+
+
+    @staticmethod
+    def _holes_raster(spark):
+        # dense with scattered holes: every NaN tile takes its NaN-run bound
+        # and the dense strip round
+        rng = np.random.RandomState(8)
+        arr = rng.rand(24, 20)
+        arr[rng.rand(24, 20) < 0.05] = np.nan
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 24), 24, 20, tile_size=8)
+        return RasterFrame.from_numpy(spark, arr, meta)
+
+    @staticmethod
+    def _sparse_raster(spark):
+        arr = np.full((32, 32), np.nan)
+        arr[3, 5], arr[27, 20] = 1.0, 2.0
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 32), 32, 32, tile_size=8)
+        return RasterFrame.from_numpy(spark, arr, meta)
+
+    @pytest.mark.parametrize("shape,n_jobs", [("holes", 1), ("sparse", 2)])
+    def test_extrapolate_plans_from_one_census_read(self, spark, monkeypatch, shape, n_jobs):
+        # building the plan reads the census once (plus the donor cells on the
+        # sparse round); radii, volume and regime are planned on the driver,
+        # and the executed plan evaluates no higher-order function
+        import rastr_spark.operators.stencils as st
+
+        rounds = []
+        orig, orig_sparse = st.stencil_apply, st._sparse_nn_fill
+        monkeypatch.setattr(
+            st, "stencil_apply", lambda *a, **kw: rounds.append("holes") or orig(*a, **kw)
+        )
+        monkeypatch.setattr(
+            st, "_sparse_nn_fill", lambda *a: rounds.append("sparse") or orig_sparse(*a)
+        )
+        src = self._holes_raster(spark) if shape == "holes" else self._sparse_raster(spark)
+        src.df.cache().count()
+        with job_group(spark, f"extrapolate-plan-{shape}") as jobs:
+            out = st.extrapolate(src)
+        assert rounds == [shape], rounds
+        assert len(jobs) == n_jobs, f"building extrapolate launched {len(jobs)} job(s)"
+        out.df.collect()
+        p = out.df._jdf.queryExecution().executedPlan().toString()
+        assert "lambdafunction" not in p, f"extrapolate evaluates a higher-order function:\n{p}"
+        assert not np.isnan(out.to_numpy()).any()
+
+    def test_sparse_round_keeps_parallelism(self, spark, monkeypatch):
+        # each radii row is milliseconds of kernel work: the fill must not
+        # collapse onto one partition (a byte-coalesced radii shuffle once ran
+        # every kernel on one core, 28 s against ~1 s spread)
+        import rastr_spark.operators.stencils as st
+
+        fills = []
+        orig = st._sparse_nn_fill
+        monkeypatch.setattr(st, "_sparse_nn_fill", lambda *a: fills.append(orig(*a)) or fills[-1])
+        st.extrapolate(self._sparse_raster(spark))
+        assert len(fills) == 1, fills
+        n_targets = 16  # every tile holds NaN, the two donor tiles too
+        want = min(n_targets, spark.sparkContext.defaultParallelism)
+        assert fills[0].rdd.getNumPartitions() >= want, fills[0].rdd.getNumPartitions()
 
 
 class _HookStub:

@@ -545,6 +545,52 @@ class TestTargetedHalo:
         assert got(halo_messages_targeted(rf, targets)) == want
 
 
+_LAYOUTS = ("scattered", "sparse9", "blob", "column", "nanrows", "allnan", "nonan")
+
+
+def _layout(name, H=70, W=94):
+    """The seven extrapolate layouts on a 70×94 grid (edge tiles on both axes
+    at 16-cell tiles), plus a single corner donor."""
+    rng = np.random.RandomState(11)
+    if name in ("scattered", "blob", "nanrows", "nonan"):
+        arr = rng.rand(H, W)
+    else:
+        arr = np.full((H, W), np.nan)
+    if name == "scattered":
+        arr[rng.rand(H, W) < 0.05] = np.nan
+    elif name == "sparse9":
+        pts = rng.choice(H * W, 9, replace=False)
+        arr[pts // W, pts % W] = rng.rand(9) * 10
+    elif name == "blob":
+        yy, xx = np.mgrid[:H, :W]
+        arr[(yy - 30) ** 2 + (xx - 50) ** 2 < 22**2] = np.nan
+    elif name == "column":
+        arr[:, 3] = np.arange(H) + 1.0
+    elif name == "nanrows":
+        arr[10:14] = np.nan
+        arr[40:60] = np.nan
+    elif name == "corner":
+        arr[0, 0] = 5.0
+    return arr
+
+
+def _brute_nn(arr):
+    """(filled, dist): the nearest-donor fill by brute force (Euclidean index
+    distance, ties → lowest (row, col)) and each NaN cell's nearest-donor
+    distance (NaN at donors; unchanged when there is no donor)."""
+    out, dist = arr.copy(), np.full(arr.shape, np.nan)
+    donors = np.argwhere(~np.isnan(arr))  # row-major = (row, col) order
+    holes = np.argwhere(np.isnan(arr))
+    if not donors.size:
+        return out, dist
+    for blk in np.array_split(holes, max(1, len(holes) // 256)):
+        d2 = ((blk[:, None, :] - donors[None, :, :]) ** 2).sum(-1)
+        j = d2.argmin(1)  # first minimum = lowest (row, col)
+        out[blk[:, 0], blk[:, 1]] = arr[donors[j, 0], donors[j, 1]]
+        dist[blk[:, 0], blk[:, 1]] = np.sqrt(d2[np.arange(len(blk)), j])
+    return out, dist
+
+
 class TestExtrapolateCappedRounds:
     def test_mostly_nan_exact_vs_brute(self, spark):
         # sparse donors on a multi-tile grid: the census radii + the one
@@ -648,83 +694,88 @@ class TestExtrapolateCappedRounds:
     def test_exact_radius_is_tight_per_tile(self, spark):
         # the per-tile radii must bound the true worst-case nearest-donor
         # distance from above WITHOUT collapsing to the grid diagonal: a
-        # donor-dense left half means right-half tiles need ~their distance
-        # to the donor column, not the diagonal
-        import numpy as np
-
+        # donor column at c=0 means the all-NaN tiles to its right need ~their
+        # distance to the column, not the diagonal
         import rastr_spark.operators.stencils as st
-        from rastr_spark.meta import Affine, RasterMeta
-        from rastr_spark.tiles import RasterFrame
 
         H = W = 64
         arr = np.full((H, W), np.nan)
         arr[:, 0] = np.arange(H, dtype=float)  # donor column at c=0
         meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, H), H, W, tile_size=16)
         rf = RasterFrame.from_numpy(spark, arr, meta)
-        summary = st._donor_reps(st._tile_census(rf))
-        # fully-NaN tiles: bbox = whole tile
-        flags = spark.createDataFrame(
-            [(r, c, 0, 15, 0, 15) for r in range(4) for c in range(1, 4)],
-            "tile_row int, tile_col int, rmin int, rmax int, cmin int, cmax int",
-        )
-        # both broadcast sides of the cross join give the same radii
-        for broadcast_flags in (True, False):
-            radii = {
-                (r["tile_row"], r["tile_col"]): r["h"]
-                for r in st._exact_target_radii(
-                    flags, summary, meta, 91, broadcast_flags=broadcast_flags
-                ).collect()
-            }
-            for (tr, tc), h in radii.items():
-                # true worst case: the tile's far-column cell to the donor
-                # column, same row (donor column is full) → distance = far
-                # col index
-                true_worst = tc * 16 + 15
-                assert h >= true_worst, (broadcast_flags, tr, tc, h)
-                # tight within a tile diagonal of slack (rep = centre-nearest
-                # donor of the best tile, ±half a tile in each axis)
-                assert h <= true_worst + 24, (broadcast_flags, tr, tc, h)
-            # the ring-doubling variant (the bounded-pair-count path for huge
-            # target × rep products) must agree wherever a ring contains the
-            # globally-best rep — here ring K=4 covers the whole 4-tile grid
-            ring = {
-                (r["tile_row"], r["tile_col"]): r["h"]
-                for r in st._exact_target_radii(
-                    flags, summary, meta, 91, broadcast_flags=broadcast_flags, ring=True
-                ).collect()
-            }
-            assert ring == radii, broadcast_flags
+        tr, tc, h = st._census_radii(st._tile_census(rf).toArrow(), meta)
+        radii = dict(zip(zip(tr.tolist(), tc.tolist()), h.tolist()))
+        assert set(radii) == {(r, c) for r in range(4) for c in range(4)}, radii
+        for (r, c), h_ in radii.items():
+            if c == 0:
+                continue  # the donor column's tiles take their NaN-run bound
+            # true worst case: the tile's far-column cell to the donor column,
+            # same row (the donor column is full) → distance = far col index
+            true_worst = c * 16 + 15
+            assert h_ >= true_worst, (r, c, h_)
+            # tight within a tile diagonal of slack (rep = centre-nearest
+            # donor of the best tile, ±half a tile in each axis)
+            assert h_ <= true_worst + 24, (r, c, h_)
 
-    @pytest.mark.parametrize("layout", ["mostly-nan", "donor-column"])
-    def test_ring_radii_gate_end_to_end(self, spark, monkeypatch, layout):
-        # the radii gate's ring join (forced: any target × rep product
-        # exceeds a pair bound of -1) must fill bit-equal to the default
-        # single cross join
+    @pytest.mark.parametrize("layout", [*_LAYOUTS, "corner"])
+    def test_radii_sound_and_fill_exact(self, spark, layout):
+        # the seven 70×94 layouts plus a single corner donor: every NaN
+        # tile's radius covers the largest nearest-donor distance of its NaN
+        # cells, and the fill equals the brute-force nearest-donor fill
         import rastr_spark.operators.stencils as st
 
-        H, W = 72, 88
-        arr = np.full((H, W), np.nan)
-        if layout == "mostly-nan":
-            rng = np.random.RandomState(13)
-            pts = rng.choice(H * W, 10, replace=False)
-            arr[pts // W, pts % W] = rng.rand(10) * 10
-        else:
-            arr[:, 0] = np.arange(H, dtype=float) + 1.0
+        arr = _layout(layout)
+        H, W = arr.shape
         meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, H), H, W, tile_size=16)
         rf = RasterFrame.from_numpy(spark, arr, meta)
+        want, dist = _brute_nn(arr)
+        census = st._tile_census(rf).toArrow()
+        if np.isnan(arr).any() and not np.isnan(arr).all():
+            tr, tc, h = st._census_radii(census, meta)
+            for r, c, h_ in zip(tr, tc, h):
+                worst = np.nanmax(dist[r * 16 : (r + 1) * 16, c * 16 : (c + 1) * 16])
+                assert h_ >= worst, (layout, r, c, h_, worst)
+        np.testing.assert_array_equal(st.extrapolate(rf).to_numpy(), want)
 
-        modes = []
-        orig = st._exact_target_radii
-        monkeypatch.setattr(
-            st, "_exact_target_radii",
-            lambda *a, **kw: modes.append(kw["ring"]) or orig(*a, **kw),
-        )
-        want = st.extrapolate(rf).to_numpy()
-        monkeypatch.setattr(st, "EXTRAPOLATE_RADII_MAX_PAIRS", -1)
-        got = st.extrapolate(rf).to_numpy()
-        assert modes == [False, True], modes
-        assert not np.isnan(got).any()
-        np.testing.assert_array_equal(got, want)
+    def test_census_radii_never_build_the_target_rep_product(self):
+        # a synthetic 256×256-tile census, every tile mostly NaN (no run bound)
+        # with one rep: n_need × n_reps is 2³² pairs; the ring blocks must stay
+        # within a few dozen MB and give the brute-force global-min radius
+        import tracemalloc
+
+        import pyarrow as pa
+
+        import rastr_spark.operators.stencils as st
+
+        n, T = 256, 16
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, n * T), n * T, n * T, tile_size=T)
+        rng = np.random.RandomState(2)
+        tr, tc = np.divmod(np.arange(n * n, dtype=np.int32), n)
+        rep_r = tr * T + rng.randint(0, T, n * n).astype(np.int32)
+        rep_c = tc * T + rng.randint(0, T, n * n).astype(np.int32)
+        i32 = lambda v: pa.array(np.broadcast_to(np.int32(v), tr.shape))  # noqa: E731
+        census = pa.table({
+            "tile_row": tr, "tile_col": tc,
+            "n_nan": i32(T * T - 1).cast(pa.int64()), "n_donors": i32(1).cast(pa.int64()),
+            "max_run": pa.nulls(n * n, pa.int32()),
+            "rmin": i32(0), "rmax": i32(T - 1), "cmin": i32(0), "cmax": i32(T - 1),
+            "rep_r": pa.ListArray.from_arrays(np.arange(n * n + 1, dtype=np.int32), rep_r),
+            "rep_c": pa.ListArray.from_arrays(np.arange(n * n + 1, dtype=np.int32), rep_c),
+        })
+        tracemalloc.start()
+        try:
+            got_r, got_c, h = st._census_radii(census, meta)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 64 * 2**20, f"peak {peak / 2**20:.0f} MiB"
+        np.testing.assert_array_equal(got_r, tr)
+        np.testing.assert_array_equal(got_c, tc)
+        for i in np.random.RandomState(3).choice(n * n, 32, replace=False):
+            r0, c0 = tr[i] * T, tc[i] * T
+            dr = np.maximum(np.abs(r0 - rep_r), np.abs(r0 + T - 1 - rep_r)).astype(np.int64)
+            dc = np.maximum(np.abs(c0 - rep_c), np.abs(c0 + T - 1 - rep_c)).astype(np.int64)
+            assert h[i] == int(np.ceil(np.sqrt((dr * dr + dc * dc).min()))), i
 
     def test_dense_with_scattered_holes_uses_run_bound(self, spark):
         # the dense-raster-with-small-holes shape (every tile flagged, donors
