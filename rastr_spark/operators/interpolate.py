@@ -362,7 +362,7 @@ def raster_distance_from_polygon(
     """Per-cell distance to the polygon; NaN inside the polygon or outside the
     extent polygon. The distance is a bounded kNN(k=1) join from cell centres to
     the broadcast polygon's boundary segments (SURVEY.md §2.3)."""
-    from ..geometry import distance_to_geometry, points_in_geometry
+    from ..geometry import centre_mask, distance_to_segments, segments_of
 
     if _crs_is_geographic(raster_meta.crs):
         raise ValueError("The provided CRS is geographic (lat/lon). Please use a projected CRS.")
@@ -405,14 +405,12 @@ def raster_distance_from_polygon(
             cg, rg = np.meshgrid(cols, rows)
             px = t.a * (cg.ravel() + 0.5) + t.b * (rg.ravel() + 0.5) + t.c
             py = t.d * (cg.ravel() + 0.5) + t.e * (rg.ravel() + 0.5) + t.f
-            # mask: inside extent (if given) and NOT inside polygon
-            in_poly = points_in_geometry(px, py, geom)
+            # mask: inside extent (if given) and NOT inside polygon; the
+            # masked cells lie outside, where the distance is the boundary's
+            mask = ~centre_mask(geom, meta, [r0], [c0], th, tw).ravel()
             if ext is not None:
-                in_ext = points_in_geometry(px, py, ext)
-            else:
-                in_ext = np.ones_like(in_poly)
-            mask = in_ext & ~in_poly
-            d = distance_to_geometry(px, py, geom)
+                mask &= centre_mask(ext, meta, [r0], [c0], th, tw).ravel()
+            d = distance_to_segments(px, py, *segments_of(geom))
             out.append(np.where(mask, d, np.nan))
         return pd.Series(out)
 

@@ -6,15 +6,16 @@ The reference has no relational joins, but four of its ops *are* joins (SURVEY.m
 
 - **PIP semi/anti-join** (clip, reference src/rastr/raster.py:1512-1552 +
   `_polygon_indicator` 1727-1755): polygons are small → broadcast (closure-captured
-  coords); each tile runs one vectorized crossing-number test of its T×T cell
-  centres. Tile-level bbox pruning happens JVM-side *before* the kernel, so tiles
-  away from the polygon never cross the Arrow boundary.
+  coords); each tile fills its cell-centre mask by scanline
+  (``geometry.centre_mask``: crossings once per grid row, not per cell).
+  Tile-level bbox pruning happens JVM-side *before* the kernel, so tiles away
+  from the polygon never cross the Arrow boundary.
 - **point-in-grid lookup join** (sample, reference src/rastr/raster.py:417-541):
   inverse-affine + floor are closed-form JVM column expressions; the gather is
   ``element_at(values, idx)`` after an equi-join on the tile key — the whole path
   stays in whole-stage codegen, zero Python.
 - **zonal stats** (north rule; reference form = clip→mean composition): one
-  partial/final hash agg — per-(tile, zone) masked partials in a pandas UDF, then
+  partial/final hash agg — per-(tile, zone) masked partials in an Arrow kernel, then
   ``groupBy(zone)`` finalize. One narrow shuffle of tiny partial rows.
 - **kNN lookup** (north rule): grid-cell ring expansion → equi-join → windowed
   top-k with deterministic tie-break (distance, row, col).
@@ -32,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..geometry import Geometry, points_in_geometry
+from ..geometry import Geometry, centre_mask
 from ..meta import RasterMeta
 from ..tiles import RasterFrame, denull, tile_dims_cols
 
@@ -63,16 +64,12 @@ def tile_world_bbox_cols(meta: RasterMeta) -> tuple[Column, Column, Column, Colu
     return F.least(*xs), F.least(*ys), F.greatest(*xs), F.greatest(*ys)
 
 
-def _tile_centres(meta: RasterMeta, tr: int, tc: int) -> tuple[np.ndarray, np.ndarray, int, int]:
-    """Cell-centre coordinates of one tile as flat arrays (+ th, tw)."""
+def _tile_mask(geom: Geometry, meta: RasterMeta, tr: int, tc: int) -> np.ndarray:
+    """Flat cell-centre coverage mask of one tile (geometry.centre_mask)."""
     Tsz = meta.tile_size
     r0, c0 = tr * Tsz, tc * Tsz
     th, tw = min(Tsz, meta.height - r0), min(Tsz, meta.width - c0)
-    rows = np.arange(r0, r0 + th, dtype=np.float64)
-    cols = np.arange(c0, c0 + tw, dtype=np.float64)
-    cg, rg = np.meshgrid(cols, rows)
-    x, y = meta.transform.forward(cg.ravel() + 0.5, rg.ravel() + 0.5)
-    return x, y, th, tw
+    return centre_mask(geom, meta, [r0], [c0], th, tw).ravel()
 
 
 def _require_polygonal(geom: Geometry, op: str) -> None:
@@ -89,7 +86,7 @@ def _require_polygonal(geom: Geometry, op: str) -> None:
 def clip(rf: RasterFrame, polygon: Geometry, *, strategy: str = "centres") -> RasterFrame:
     """Cells whose centre falls outside the polygon → NaN
     (reference src/rastr/raster.py:1512-1552). PIP semi-join: broadcast polygon,
-    per-tile crossing-number kernel; bbox-pruned tiles are NaN'd JVM-side."""
+    per-tile scanline coverage kernel; bbox-pruned tiles are NaN'd JVM-side."""
     _require_polygonal(polygon, "clipping")
     if strategy != "centres":
         raise NotImplementedError(f"Unsupported clipping strategy: {strategy}")
@@ -102,10 +99,8 @@ def clip(rf: RasterFrame, polygon: Geometry, *, strategy: str = "centres") -> Ra
         geom = Geometry.from_row(geom_row)
         out = []
         for v, tr, tc in zip(values, trs, tcs):
-            x, y, th, tw = _tile_centres(meta, int(tr), int(tc))
-            inside = points_in_geometry(x, y, geom)
-            arr = np.asarray(v, dtype=np.float64)
-            out.append(np.where(inside, arr, np.nan))
+            inside = _tile_mask(geom, meta, int(tr), int(tc))
+            out.append(np.where(inside, np.asarray(v, dtype=np.float64), np.nan))
         return pd.Series(out)
 
     xmin, ymin, xmax, ymax = tile_world_bbox_cols(meta)
@@ -149,11 +144,9 @@ def replace_polygon(rf: RasterFrame, polygon, value: float | None = None) -> Ras
         geoms = [(Geometry.from_row(gr), v) for gr, v in rows]
         out = []
         for v, tr, tc in zip(values, trs, tcs):
-            x, y, th, tw = _tile_centres(meta, int(tr), int(tc))
-            orig = np.asarray(v, dtype=np.float64)
-            new = orig.copy()
+            new = np.array(v, dtype=np.float64)
             for geom, val in geoms:
-                new[points_in_geometry(x, y, geom)] = val
+                new[_tile_mask(geom, meta, int(tr), int(tc))] = val
             out.append(new)
         return pd.Series(out)
 

@@ -1,7 +1,8 @@
 """Vector → raster: rasterize_gdf, rasterize_z_gdf (reference src/rastr/create.py:152-310).
 
 Burn rules replicate ``rasterio.features.rasterize`` (GDAL all_touched=False):
-- polygons: cell burned iff its CENTRE is inside (even-odd, geometry.points_in_rings)
+- polygons: cell burned iff its CENTRE is inside (even-odd, filled by scanline
+  per grid row as GDAL fills it: geometry.centre_mask)
 - points: the containing cell
 - linestrings: every cell the segment passes through (supercover DDA traversal)
 
@@ -23,7 +24,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..geometry import Geometry, points_in_geometry
+from ..geometry import Geometry, centre_mask
 from ..grid import point_grid_shape
 from ..meta import Affine, RasterMeta, affine_sign_for_crs
 from ..tiles import RasterFrame, denull
@@ -46,16 +47,11 @@ def _burn_geometry(
     geom: Geometry, meta: RasterMeta, r0: int, c0: int, th: int, tw: int
 ) -> np.ndarray:
     """Boolean burn mask of one geometry over a tile window (GDAL rules)."""
+    if geom.kind in ("polygon", "multipolygon"):
+        return centre_mask(geom, meta, [r0], [c0], th, tw)[0]
     t = meta.transform
     mask = np.zeros((th, tw), dtype=bool)
-    if geom.kind in ("polygon", "multipolygon"):
-        rows = np.arange(r0, r0 + th, dtype=np.float64)
-        cols = np.arange(c0, c0 + tw, dtype=np.float64)
-        cg, rg = np.meshgrid(cols, rows)
-        px = t.a * (cg.ravel() + 0.5) + t.b * (rg.ravel() + 0.5) + t.c
-        py = t.d * (cg.ravel() + 0.5) + t.e * (rg.ravel() + 0.5) + t.f
-        mask |= points_in_geometry(px, py, geom).reshape(th, tw)
-    elif geom.kind in ("point", "multipoint"):
+    if geom.kind in ("point", "multipoint"):
         rr, cc = meta.world_to_index(geom.xy[:, 0], geom.xy[:, 1])
         for r, c in zip(rr, cc):
             if r0 <= r < r0 + th and c0 <= c < c0 + tw:

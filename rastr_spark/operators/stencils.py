@@ -47,7 +47,7 @@ from typing import Callable
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -295,6 +295,13 @@ def _corr1d(a: np.ndarray, w: np.ndarray, axis: int) -> np.ndarray:
     return out
 
 
+def _has_nan() -> Column:
+    """Whether a tile's ``values`` hold a NaN, as a codegen ``array_max``:
+    Spark orders NaN above every number, so one NaN makes the max NaN — no
+    interpreted higher-order function over every cell."""
+    return F.isnan(F.array_max("values"))
+
+
 def blur(rf: RasterFrame, sigma: float, *, preserve_nan: bool = True) -> RasterFrame:
     """Gaussian blur, σ in world units (reference src/rastr/raster.py:1185-1221).
 
@@ -312,10 +319,7 @@ def blur(rf: RasterFrame, sigma: float, *, preserve_nan: bool = True) -> RasterF
     dtype = np.dtype(rf.meta.dtype)
 
     has_nan = preserve_nan and (
-        rf.df.select(
-            F.max(F.exists("values", lambda v: F.isnan(v)).cast("int")).alias("x")
-        ).collect()[0]["x"]
-        or 0
+        rf.df.select(F.max(_has_nan().cast("int")).alias("x")).collect()[0]["x"] or 0
     )
     if has_nan:
         # FUSED single round (r7): local exact NN fill + reflect + blur + NaN
@@ -745,10 +749,11 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
     drift). That round gathers either dense window strips
     (:func:`stencil_apply` with ``targets``) or a broadcast donor set
     (:func:`_sparse_nn_fill`), picked from the driver-known dense window
-    volume Σ(T+2h)². The radii travel as one driver-built table, which also
-    merges the untouched tiles back through a broadcast left-anti join:
-    NaN-free tiles never enter the round. NaN-free and all-NaN rasters return
-    unchanged after the census read.
+    volume Σ(T+2h)². The radii travel as one driver-built table; the
+    untouched tiles merge back through the codegen NaN-free filter
+    (:func:`_has_nan`) — the targets are exactly the tiles holding NaN, so
+    NaN-free tiles never enter the round and no second broadcast is needed.
+    NaN-free and all-NaN rasters return unchanged after the census read.
     """
     if method not in ("nearest",):
         raise NotImplementedError(f"Unsupported extrapolation method: {method}")
@@ -777,9 +782,8 @@ def extrapolate(rf: RasterFrame, method: str = "nearest") -> RasterFrame:
         filled_df = _sparse_nn_fill(rf, radii, _donor_cells(rf))
     else:
         filled_df = stencil_apply(rf, None, _nn_fill, targets=radii).df
-    keys = F.broadcast(radii.select("tile_row", "tile_col"))
-    kept = rf.df.join(keys, ["tile_row", "tile_col"], "left_anti").select(*rf.df.columns)
-    return RasterFrame(kept.unionByName(filled_df), meta, rf.raster_id)
+    # the targets are exactly the tiles holding NaN
+    return RasterFrame(rf.df.filter(~_has_nan()).unionByName(filled_df), meta, rf.raster_id)
 
 
 def _nn_fill(padded: np.ndarray, valid: np.ndarray, info: tuple) -> np.ndarray:

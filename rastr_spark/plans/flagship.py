@@ -2,8 +2,9 @@
 the interleaved document table.
 
     docs → explode spans → resolve media_ref to tiles (equi-join on tile key)
-         → PIP against a broadcast polygon set (per-tile vectorized kernel)
-         → zonal partials (cnt/sum/sumsq/min/max masked per zone)
+         → cell-centre coverage of a broadcast polygon set (scanline per grid
+           row, ``geometry.centre_mask``, in one ``mapInArrow`` kernel)
+         → zonal partials (cnt/sum/m2/min/max masked per zone)
          → groupBy (zone_id, doc_id) finalize
 
 Physical shape, by design:
@@ -18,7 +19,7 @@ Physical shape, by design:
   ``salt = xxhash64(doc_id) % S`` (north rule "explicit salting for skewed dense
   regions").
 - polygons are **broadcast** (closure-captured ndarray coords — tiny).
-- the PIP + masked partial agg runs ONCE per distinct (tile, zone) pair, then joins
+- the coverage + masked partial agg runs ONCE per distinct (tile, zone) pair, then joins
   back to (doc, tile) pairs — docs referencing the same hot tile reuse the kernel
   output instead of recomputing it (the 100 TB regime has ~10⁶ docs per hot tile;
   recomputing PIP per doc would be quadratic).
@@ -32,15 +33,15 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..geometry import Geometry, points_in_geometry
+from ..geometry import Geometry, centre_mask
 from ..meta import RasterMeta
 from ..sources.documents import media_refs
-from ..tiles import RasterFrame
+from ..tiles import RasterFrame, list_parts
 
 # Broadcast guard for the partials side of the flagship join: rows are bounded
 # by n_tiles × n_zones. At or below this row bound the partials are broadcast
@@ -58,99 +59,95 @@ BROADCAST_PARTIALS_MAX_ROWS = 10_000_000
 # ~0.05·threshold times in the sample (thresholds are ≫ 1/fraction).
 SALT_SAMPLE_FRACTION = 0.05
 
-TILE_ZONE_PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("tile_row", T.IntegerType(), False),
-        T.StructField("tile_col", T.IntegerType(), False),
-        T.StructField("zone_id", T.StringType(), False),
-        T.StructField("cnt", T.LongType(), False),
-        T.StructField("s", T.DoubleType(), False),
-        T.StructField("m2", T.DoubleType(), False),
-        T.StructField("mn", T.DoubleType(), True),
-        T.StructField("mx", T.DoubleType(), True),
-    ]
+TILE_ZONE_PARTIAL_SCHEMA = pa.schema(
+    [pa.field(k, tp, nullable=False) for k, tp in (
+        ("tile_row", pa.int32()), ("tile_col", pa.int32()), ("zone_id", pa.string()),
+        ("cnt", pa.int64()), ("s", pa.float64()), ("m2", pa.float64()))]
+    + [pa.field(k, pa.float64()) for k in ("mn", "mx")]
 )
 
 
+def _zone_partials(batch: pa.RecordBatch, meta: RasterMeta, zones) -> pa.RecordBatch:
+    """The partials of one Arrow batch of tiles. Equal-shaped tiles are
+    stacked from the flat ``values`` buffer and each zone's coverage
+    (:func:`~rastr_spark.geometry.centre_mask`) runs ONCE over the stacked
+    tiles its bbox hits — per-tile Python overhead (the scaling bottleneck at
+    thousands of small tiles) disappears; only edge-tile shape groups run
+    separately. Stats are computed for the tiles a zone covers (cnt > 0)."""
+    Tsz, t = meta.tile_size, meta.transform
+    trs = batch.column("tile_row").to_numpy()
+    tcs = batch.column("tile_col").to_numpy()
+    flat, offs = list_parts(batch.column("values"))
+    th_all = np.minimum(Tsz, meta.height - trs * Tsz)
+    tw_all = np.minimum(Tsz, meta.width - tcs * Tsz)
+    out: dict = {k: [] for k in TILE_ZONE_PARTIAL_SCHEMA.names}
+    for th, tw in set(zip(th_all.tolist(), tw_all.tolist())):
+        sel = np.flatnonzero((th_all == th) & (tw_all == tw))
+        V = flat[offs[sel][:, None] + np.arange(th * tw)]  # (n, th*tw)
+        valid = ~np.isnan(V)
+        r0 = (trs[sel] * Tsz).astype(np.float64)
+        c0 = (tcs[sel] * Tsz).astype(np.float64)
+        # centre x/y extremes sit at the 4 corner centres (affine in col, row)
+        xs, ys = [], []
+        for cc, rr in ((c0 + 0.5, r0 + 0.5), (c0 + (tw - 0.5), r0 + 0.5),
+                       (c0 + 0.5, r0 + (th - 0.5)), (c0 + (tw - 0.5), r0 + (th - 0.5))):
+            xs.append(t.a * cc + t.b * rr + t.c)
+            ys.append(t.d * cc + t.e * rr + t.f)
+        txmin, txmax = np.minimum.reduce(xs), np.maximum.reduce(xs)
+        tymin, tymax = np.minimum.reduce(ys), np.maximum.reduce(ys)
+        for zid, geom, (bxmin, bymin, bxmax, bymax) in zones:
+            hit = np.flatnonzero(
+                (txmin <= bxmax) & (txmax >= bxmin) & (tymin <= bymax) & (tymax >= bymin)
+            )
+            if len(hit) == 0:
+                continue
+            m = centre_mask(geom, meta, r0[hit], c0[hit], th, tw).reshape(len(hit), -1)
+            m &= valid[hit]
+            cnt = m.sum(axis=1)
+            keep = np.flatnonzero(cnt > 0)
+            if len(keep) == 0:
+                continue
+            m, cnt, Vh = m[keep], cnt[keep], V[hit[keep]]
+            s = np.where(m, Vh, 0.0).sum(axis=1)
+            # squared deviations about the partial's own mean: exact to merge
+            # (joins.zonal_stats), unlike raw Σv², which cancels when
+            # |mean| ≫ std
+            dev = Vh - (s / cnt)[:, None]
+            gi = sel[hit[keep]]
+            out["tile_row"].append(trs[gi])
+            out["tile_col"].append(tcs[gi])
+            out["zone_id"].append(np.full(len(keep), zid, dtype=object))
+            out["cnt"].append(cnt)
+            out["s"].append(s)
+            out["m2"].append(np.where(m, dev * dev, 0.0).sum(axis=1))
+            out["mn"].append(np.where(m, Vh, np.inf).min(axis=1))
+            out["mx"].append(np.where(m, Vh, -np.inf).max(axis=1))
+    cols = [np.concatenate(v) if v else [] for v in out.values()]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, TILE_ZONE_PARTIAL_SCHEMA)],
+        schema=TILE_ZONE_PARTIAL_SCHEMA,
+    )
+
+
 def tile_zone_partials(rf: RasterFrame, zones: Sequence[tuple[str, Geometry]]) -> DataFrame:
-    """Per (tile, zone) NaN-ignoring masked partials — the PIP kernel pass.
+    """Per (tile, zone) NaN-ignoring masked partials — the PIP kernel pass,
+    one ``mapInArrow`` over the tiles' flat ``values`` buffers
+    (:func:`_zone_partials`): (tile_row, tile_col, zone_id, cnt, s, m2, mn,
+    mx) for every tile a zone covers at least one valid cell centre of.
 
     Runs once per tile regardless of how many documents reference the tile.
     """
     meta = rf.meta
     zone_rows = [(zid, g.to_row(), g.bbox()) for zid, g in zones]
 
-    def kernel(pdf_iter):
-        """Batched across tiles: the whole Arrow batch's equal-shaped tiles are
-        stacked and each zone's PIP runs ONCE over the stacked centre arrays —
-        per-tile Python overhead (the scaling bottleneck at thousands of small
-        tiles) disappears; only edge-tile shape groups run separately."""
+    def kernel(batches):
         zs = [(zid, Geometry.from_row(gr), bb) for zid, gr, bb in zone_rows]
-        Tsz = meta.tile_size
-        t = meta.transform
-        for pdf in pdf_iter:
-            recs: list = []
-            trs = pdf["tile_row"].to_numpy()
-            tcs = pdf["tile_col"].to_numpy()
-            vals = pdf["values"].to_numpy()
-            th_all = np.minimum(Tsz, meta.height - trs * Tsz)
-            tw_all = np.minimum(Tsz, meta.width - tcs * Tsz)
-            for th, tw in set(zip(th_all.tolist(), tw_all.tolist())):
-                sel = np.nonzero((th_all == th) & (tw_all == tw))[0]
-                V = np.stack([np.asarray(vals[i], dtype=np.float64) for i in sel])  # (n, th*tw)
-                n = len(sel)
-                r0 = (trs[sel] * Tsz).astype(np.float64)
-                c0 = (tcs[sel] * Tsz).astype(np.float64)
-                rr = np.arange(th, dtype=np.float64)[:, None]
-                cc = np.arange(tw, dtype=np.float64)[None, :]
-                # per-tile global cell centres, shape (n, th, tw) → flat (n, th*tw)
-                colg = (c0[:, None, None] + cc + 0.5)
-                rowg = (r0[:, None, None] + rr + 0.5)
-                X = (t.a * colg + t.b * rowg + t.c).reshape(n, -1)
-                Y = (t.d * colg + t.e * rowg + t.f).reshape(n, -1)
-                valid = ~np.isnan(V)
-                txmin, txmax = X.min(axis=1), X.max(axis=1)
-                tymin, tymax = Y.min(axis=1), Y.max(axis=1)
-                for zid, geom, (bxmin, bymin, bxmax, bymax) in zs:
-                    hit = np.nonzero(
-                        (txmin <= bxmax) & (txmax >= bxmin) & (tymin <= bymax) & (tymax >= bymin)
-                    )[0]
-                    if len(hit) == 0:
-                        continue
-                    m = points_in_geometry(X[hit].ravel(), Y[hit].ravel(), geom).reshape(len(hit), -1)
-                    m &= valid[hit]
-                    cnt = m.sum(axis=1)
-                    keep = np.nonzero(cnt > 0)[0]
-                    if len(keep) == 0:
-                        continue
-                    Vh = V[hit]
-                    s = np.where(m, Vh, 0.0).sum(axis=1)
-                    # squared deviations about the partial's own mean: exact
-                    # to merge (joins.zonal_stats), unlike raw Σv², which
-                    # cancels when |mean| ≫ std
-                    dev = Vh - (s / np.maximum(cnt, 1))[:, None]
-                    m2 = np.where(m, dev * dev, 0.0).sum(axis=1)
-                    mn = np.where(m, Vh, np.inf).min(axis=1)
-                    mx = np.where(m, Vh, -np.inf).max(axis=1)
-                    for k in keep:
-                        gi = sel[hit[k]]
-                        recs.append(
-                            (
-                                int(trs[gi]),
-                                int(tcs[gi]),
-                                zid,
-                                int(cnt[k]),
-                                float(s[k]),
-                                float(m2[k]),
-                                float(mn[k]),
-                                float(mx[k]),
-                            )
-                        )
-            yield pd.DataFrame(
-                recs, columns=["tile_row", "tile_col", "zone_id", "cnt", "s", "m2", "mn", "mx"]
-            )
+        for b in batches:
+            yield _zone_partials(b, meta, zs)
 
-    return rf.df.select("tile_row", "tile_col", "values").mapInPandas(kernel, TILE_ZONE_PARTIAL_SCHEMA)
+    return rf.df.select("tile_row", "tile_col", "values").mapInArrow(
+        kernel, from_arrow_schema(TILE_ZONE_PARTIAL_SCHEMA)
+    )
 
 
 def doc_zonal_stats(

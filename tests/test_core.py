@@ -3,7 +3,15 @@
 import numpy as np
 import pytest
 
-from rastr_spark.geometry import Geometry, catmull_rom_smooth, distance_to_geometry, points_in_geometry, segmentize_line
+from rastr_spark.geometry import (
+    Geometry,
+    catmull_rom_smooth,
+    centre_mask,
+    distance_to_geometry,
+    points_in_geometry,
+    points_in_rings,
+    segmentize_line,
+)
 from rastr_spark.grid import k_ring, morton_decode, morton_encode, point_grid, point_grid_shape
 from rastr_spark.meta import Affine, Bounds, RasterMeta
 from rastr_spark.tiles import RasterFrame
@@ -159,6 +167,102 @@ class TestGeometry:
         sm = catmull_rom_smooth(xy, 8)
         np.testing.assert_allclose(sm[0], sm[-1])
         assert len(sm) > len(xy)
+
+
+def _raycast_windows(geom, meta, r0s, c0s, th, tw):
+    """The arbitrary-point PIP on every window's cell centres, built the way
+    the operators built them before the scanline kernel."""
+    t = meta.transform
+    out = []
+    for r0, c0 in zip(r0s, c0s):
+        colg = float(c0) + np.arange(tw, dtype=np.float64)[None, :] + 0.5
+        rowg = float(r0) + np.arange(th, dtype=np.float64)[:, None] + 0.5
+        px, py = np.broadcast_arrays(t.a * colg + t.b * rowg + t.c, t.d * colg + t.e * rowg + t.f)
+        out.append(points_in_rings(px.ravel(), py.ravel(), list(geom.rings())).reshape(th, tw))
+    return np.array(out, dtype=bool).reshape(len(r0s), th, tw)
+
+
+class TestCentreMask:
+    """geometry.centre_mask (scanline per grid row) is bit-identical to
+    points_in_rings (ray cast per cell centre)."""
+
+    @staticmethod
+    def _random_case(rng, it):
+        H, W, T = int(rng.integers(5, 40)), int(rng.integers(5, 40)), int(rng.integers(2, 12))
+        a = float(rng.choice([1.0, 0.5, 2.5, -1.0, -0.75]))  # a < 0 mirrors the columns
+        e = float(rng.choice([-1.0, -0.5, 1.0, 1.5]))  # e > 0 puts row 0 at the bottom
+        t = Affine(a, 0.0, rng.uniform(-10, 10), 0.0, e, rng.uniform(-10, 10))
+        meta = RasterMeta(1.0, "EPSG:2193", t, H, W, tile_size=T)
+
+        def ring(k):
+            c, r = rng.uniform(-2, W + 2, k), rng.uniform(-2, H + 2, k)
+            if it % 3 == 1:  # vertices on cell centres
+                c, r = np.floor(c) + 0.5, np.floor(r) + 0.5
+            elif it % 3 == 2:  # vertices on cell edges and corners
+                c, r = np.round(c), np.round(r)
+            return np.column_stack([t.a * c + t.c, t.e * r + t.f])
+
+        polys = [
+            Geometry.polygon(ring(int(rng.integers(3, 12))),
+                             [ring(int(rng.integers(3, 6)))] if rng.random() < 0.4 else [])
+            for _ in range(int(rng.integers(1, 3)))
+        ]
+        geom = polys[0] if len(polys) == 1 else Geometry.multipolygon(polys)
+        return geom, meta
+
+    def test_bit_identical_to_raycast_on_random_polygons(self):
+        from rastr_spark.tiles import tile_spans
+
+        rng = np.random.default_rng(20)
+        for it in range(300):
+            geom, meta = self._random_case(rng, it)
+            shapes: dict = {}
+            for _, _, r0, c0, th, tw in tile_spans(meta):  # ragged edge tiles group apart
+                shapes.setdefault((th, tw), []).append((r0, c0))
+            for (th, tw), origins in shapes.items():
+                r0s, c0s = np.array(origins).T
+                pick = rng.random(len(origins)) < 0.8
+                pick[0] = True
+                got = centre_mask(geom, meta, r0s[pick], c0s[pick], th, tw)
+                want = _raycast_windows(geom, meta, r0s[pick], c0s[pick], th, tw)
+                assert got.shape == want.shape == (pick.sum(), th, tw)
+                np.testing.assert_array_equal(got, want, err_msg=f"case {it}, window {th}x{tw}")
+
+    def test_edges_through_centres_follow_the_half_open_rule(self):
+        # a box whose every edge runs through a row or column of centres: the
+        # half-open rule keeps the bottom/left centres and drops top/right
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 8), 8, 8, tile_size=8)
+        geom = Geometry.box(1.5, 1.5, 5.5, 5.5)
+        got = centre_mask(geom, meta, [0], [0], 8, 8)[0]
+        np.testing.assert_array_equal(got, _raycast_windows(geom, meta, [0], [0], 8, 8)[0])
+        assert got.sum() == 16
+
+    def test_rotated_transform_takes_the_raycast_branch(self, monkeypatch):
+        import rastr_spark.geometry as G
+
+        calls = []
+        orig = G.points_in_rings
+        monkeypatch.setattr(G, "points_in_rings", lambda *a: calls.append(1) or orig(*a))
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1.0, 0.3, 0, -0.2, -1.0, 10), 10, 9, tile_size=4)
+        geom = Geometry.polygon([(1, 1), (7, 2), (6, 8), (2, 6)], [[(3, 3), (4, 3), (4, 4)]])
+        got = centre_mask(geom, meta, [0, 4, 8], [4, 0, 4], 2, 4)
+        assert calls == [1]
+        monkeypatch.undo()
+        np.testing.assert_array_equal(got, _raycast_windows(geom, meta, [0, 4, 8], [4, 0, 4], 2, 4))
+
+    def test_degenerate_and_empty_inputs(self):
+        meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 4), 4, 4, tile_size=2)
+        sliver = Geometry("polygon", np.array([0.0, 0, 3, 3, 0, 0]), np.array([0, 3]), np.array([0, 1]))
+        assert not centre_mask(sliver, meta, [0, 2], [0, 2], 2, 2).any()
+        assert centre_mask(Geometry.box(0, 0, 4, 4), meta, [], [], 2, 2).shape == (0, 2, 2)
+        # a NaN vertex: its edges' crossing x is NaN, which no centre lies left of
+        nan_vertex = Geometry.polygon([(0.2, 0.2), (3.7, 0.4), (np.nan, 2.0), (3.6, 3.8), (0.3, 3.5)])
+        np.testing.assert_array_equal(
+            centre_mask(nan_vertex, meta, [0, 2], [0, 2], 2, 2),
+            _raycast_windows(nan_vertex, meta, [0, 2], [0, 2], 2, 2),
+        )
+        with pytest.raises(ValueError):
+            centre_mask(Geometry.point(1, 1), meta, [0], [0], 2, 2)
 
 
 class TestFishnet:

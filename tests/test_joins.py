@@ -153,6 +153,53 @@ class TestZonalStats:
         assert out["all"]["count"] == 16
         assert out["corner"]["count"] == 1 and out["corner"]["sum"] == 1.0
 
+    @pytest.mark.parametrize("transform", [Affine(2.0, 0, 10, 0, -2.0, 120), Affine(-1.5, 0, 90, 0, 1.5, -7)])
+    def test_partials_match_numpy_recompute(self, spark, transform):
+        # NaN-holed 53×41 raster in 8-cell tiles (ragged right and bottom
+        # edges): every (tile, zone) partial against a brute-force recompute
+        # from the whole grid's cell centres
+        from rastr_spark.geometry import points_in_geometry
+        from rastr_spark.plans.flagship import tile_zone_partials
+
+        rng = np.random.RandomState(17)
+        arr = rng.normal(3.0, 2.0, (53, 41))
+        arr[rng.rand(53, 41) < 0.1] = np.nan
+        t = transform
+        meta = RasterMeta(2.0, "EPSG:2193", t, 53, 41, tile_size=8)
+        rf = RasterFrame.from_numpy(spark, arr, meta)
+
+        def at(c, r):
+            return (t.a * c + t.c, t.e * r + t.f)
+
+        zones = [
+            ("tri", Geometry.polygon([at(0.5, 0.5), at(30.5, 5.5), at(10.5, 40)])),
+            ("donut", Geometry.polygon([at(5, 5), at(35, 5), at(35, 45), at(5, 45)],
+                                       [[at(15, 15), at(25, 15), at(25, 30), at(15, 30)]])),
+            ("parts", Geometry.multipolygon([Geometry.polygon([at(0, 0), at(3, 0), at(3, 3)]),
+                                             Geometry.box(*at(38, 53), *at(41, 50))])),
+        ]
+        got = {
+            (r["tile_row"], r["tile_col"], r["zone_id"]): r
+            for r in tile_zone_partials(rf, zones).collect()
+        }
+        cg, rg = np.meshgrid(np.arange(41) + 0.5, np.arange(53) + 0.5)
+        px, py = t.forward(cg.ravel(), rg.ravel())
+        want = {}
+        for zid, g in zones:
+            inside = points_in_geometry(px, py, g).reshape(53, 41) & ~np.isnan(arr)
+            for tr in range(7):
+                for tc in range(6):
+                    win = (slice(tr * 8, tr * 8 + 8), slice(tc * 8, tc * 8 + 8))
+                    v = arr[win][inside[win]]
+                    if v.size:
+                        want[(tr, tc, zid)] = v
+        assert set(got) == set(want)
+        for key, v in want.items():
+            r = got[key]
+            assert (r["cnt"], r["mn"], r["mx"]) == (v.size, v.min(), v.max()), key
+            assert r["s"] == pytest.approx(v.sum(), rel=1e-12, abs=1e-12), key
+            assert r["m2"] == pytest.approx(((v - v.mean()) ** 2).sum(), rel=1e-12, abs=1e-12), key
+
     def test_std_stable_at_large_offset(self, spark):
         # 1e6 ± 1e-3 over 16 tiles: Σv² − (Σv)²/n cancels to noise at this
         # offset; the per-partial m2 merge keeps np.nanstd's answer

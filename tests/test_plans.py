@@ -22,9 +22,9 @@ from rastr_spark.tiles import RasterFrame
 SF001 = "/root/testdata/sf0.01"
 
 # rf_stats(extrapolate(x)) on a 16-tile mostly-NaN raster: the census and
-# donor-cell reads, then the target-key broadcast of the left-anti merge and
-# the two-stage stats aggregate
-MAX_EXTRAPOLATE_STATS_JOBS = 5
+# donor-cell reads, then the two-stage stats aggregate (the untouched tiles
+# merge back through a filter, not a broadcast)
+MAX_EXTRAPOLATE_STATS_JOBS = 4
 
 
 def plan(df, mode="formatted") -> str:
@@ -70,6 +70,15 @@ class TestJoinShapes:
         salted = doc_zonal_stats(docs, rf, [("z", Geometry.box(0, 0, 8, 8))], salt_threshold=1)
         p = plan(salted)
         assert "salt" in p, f"salted flagship plan lost its salt key:\n{p}"
+
+    def test_flagship_partials_run_an_arrow_kernel(self, spark, rf):
+        # the (tile, zone) partials cross the Python boundary as Arrow
+        # batches over the flat values buffer, never as pandas frames
+        from rastr_spark.plans.flagship import tile_zone_partials
+
+        p = plan(tile_zone_partials(rf, [("z", Geometry.box(0, 0, 5, 5))]))
+        assert "MapInArrow" in p, f"partials lost their mapInArrow kernel:\n{p}"
+        assert "MapInPandas" not in p, f"partials cross pandas:\n{p}"
 
     def test_mosaic_and_resample_shapes(self, spark, rf):
         from rastr_spark.meta import Affine, RasterMeta
@@ -407,6 +416,38 @@ class TestStencilFixedCosts:
         assert jobs == [], f"radius-0 blur launched {len(jobs)} job(s)"
         np.testing.assert_array_equal(out.to_numpy(), arr)
 
+    @pytest.mark.parametrize("holes", [False, True])
+    def test_blur_nan_probe_is_codegen(self, spark, monkeypatch, holes):
+        # preserve_nan's probe is one codegen array_max aggregate, not an
+        # interpreted higher-order function over every cell; the blur it
+        # picks is the plain round without NaN and the fused
+        # extrapolate → blur → restore composition with NaN
+        from rastr_spark.operators.stencils import extrapolate
+
+        src = self._nan_raster(spark)
+        arr = src.to_numpy()
+        if not holes:
+            arr = np.nan_to_num(arr, nan=0.5)
+            src = RasterFrame.from_numpy(spark, arr, src.meta)
+        probes = []
+        orig = type(src.df).collect
+
+        def collect(df):
+            rows = orig(df)
+            probes.append(df._jdf.queryExecution().executedPlan().toString())
+            return rows
+
+        with monkeypatch.context() as m:
+            m.setattr(type(src.df), "collect", collect)
+            out = src.blur(1.0)
+        assert len(probes) == 1, probes
+        assert "lambdafunction" not in probes[0], f"the NaN probe evaluates a HOF:\n{probes[0]}"
+        assert "array_max" in probes[0], probes[0]
+        base = extrapolate(src) if holes else src
+        want = base.blur(1.0, preserve_nan=False).to_numpy()
+        want[np.isnan(arr)] = np.nan
+        np.testing.assert_array_equal(out.to_numpy(), want)
+
     @staticmethod
     def _nan_raster(spark):
         rng = np.random.RandomState(6)
@@ -514,6 +555,18 @@ class TestStencilFixedCosts:
         p = out.df._jdf.queryExecution().executedPlan().toString()
         assert "lambdafunction" not in p, f"extrapolate evaluates a higher-order function:\n{p}"
         assert not np.isnan(out.to_numpy()).any()
+
+    def test_dense_round_collect_job_count(self, spark):
+        # collecting the dense-with-holes fill: the strip round and the
+        # grouped kernel's stages; the NaN-free tiles merge back through the
+        # codegen no-NaN filter, so no broadcast of the target keys runs
+        src = self._holes_raster(spark)
+        src.df.cache().count()
+        out = src.extrapolate()
+        with job_group(spark, "extrapolate-dense-collect") as jobs:
+            got = RasterFrame(out.df, out.meta).to_numpy()
+        assert len(jobs) <= 3, len(jobs)
+        assert not np.isnan(got).any()
 
     def test_sparse_round_keeps_parallelism(self, spark, monkeypatch):
         # each radii row is milliseconds of kernel work: the fill must not
