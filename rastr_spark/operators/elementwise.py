@@ -3,9 +3,9 @@
 Every op here is a pure projection stage in Spark terms — ``tile → tile'`` —
 expressed as Catalyst higher-order functions (``F.transform`` / ``zip_with``) when the
 raster dtype is float64, so the whole chain stays inside whole-stage codegen, and as
-vectorized Arrow pandas UDFs when dtype is float16/32 (NumPy's reduced-precision
-rounding must be reproduced bit-for-bit; reference preserves dtype through all ops,
-tests/conftest.py:29-62).
+numpy kernels through ``RasterFrame.map_tiles`` (one ``mapInArrow`` pass) when dtype
+is float16/32 (NumPy's reduced-precision rounding must be reproduced bit-for-bit;
+reference preserves dtype through all ops, tests/conftest.py:29-62).
 
 Semantics mirrored from reference src/rastr/raster.py:185-325 (arithmetic/abs/log/
 exp/clamp), 659-681 (normalize), 995-1065 (fillna/replace), 882-917 (apply),
@@ -19,15 +19,10 @@ import math
 from typing import Callable
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..meta import RasterMeta
-from ..tiles import RasterFrame, tile_dims_cols
-
-_ARR = T.ArrayType(T.DoubleType())
+from ..tiles import RasterFrame
 
 
 def _is_scalar(x) -> bool:
@@ -45,25 +40,14 @@ def _elementwise(
     return rf.map_kernel(np_fn)
 
 
-def _zip_tiles(va: pd.Series, vb: pd.Series, np_fn, dtype) -> pd.Series:
-    """``_binary``'s reduced-dtype kernel body: ``np_fn`` on each tile pair in
-    ``dtype``. Module-level, so unpickling the kernel that calls it imports the
-    package and installs :mod:`rastr_spark.zipcache` on the worker."""
-    return pd.Series(
-        [
-            np_fn(np.asarray(x, dtype=dtype), np.asarray(y, dtype=dtype)).astype(np.float64)
-            for x, y in zip(va, vb)
-        ]
-    )
-
-
 def _binary(
     a: RasterFrame,
     b: RasterFrame,
     jvm_fn: Callable[[Column, Column], Column],
     np_fn: Callable[[np.ndarray, np.ndarray], np.ndarray],
 ) -> RasterFrame:
-    """Aligned raster⊕raster zip: equi-join on tile key + zip_with.
+    """Aligned raster⊕raster zip: equi-join on tile key + ``zip_with`` (float64)
+    or the numpy kernel through ``map_tiles`` (reduced dtypes).
 
     Precondition identical meta+shape (reference src/rastr/raster.py:191-202) is
     checked eagerly on the driver; the join itself is 1:1 on (tile_row, tile_col),
@@ -71,31 +55,21 @@ def _binary(
     co-partitioned (same writer), AQE plans this as a local join, no wide shuffle.
     """
     a.check_aligned(b)
-    joined = a.df.alias("a").join(
-        b.df.select("tile_row", "tile_col", F.col("values").alias("values_b")).alias("b"),
-        ["tile_row", "tile_col"],
-        "inner",
+    joined = RasterFrame(
+        a.df.join(
+            b.df.select("tile_row", "tile_col", F.col("values").alias("values_b")),
+            ["tile_row", "tile_col"],
+            "inner",
+        ),
+        a.meta,
+        a.raster_id,
     )
     if a.meta.dtype == "float64" and b.meta.dtype == "float64":
-        values = F.zip_with("values", "values_b", jvm_fn)
-    else:
-        dtype = np.dtype(a.meta.dtype)
-
-        @F.pandas_udf(_ARR)
-        def _k(va: pd.Series, vb: pd.Series) -> pd.Series:
-            return _zip_tiles(va, vb, np_fn, dtype)
-
-        from ..tiles import denull
-
-        values = denull(_k(F.col("values"), F.col("values_b")))
-    df = joined.select(
-        F.col("a.raster_id").alias("raster_id"),
-        "tile_row",
-        "tile_col",
-        F.col("a.cell_id").alias("cell_id"),
-        values.alias("values"),
+        return joined.with_values(F.zip_with("values", "values_b", jvm_fn))
+    dtype = np.dtype(a.meta.dtype)
+    return joined.map_tiles(
+        lambda r0, c0, th, tw, va, vb: np_fn(va.astype(dtype), vb.astype(dtype)), "values", "values_b"
     )
-    return RasterFrame(df, a.meta, a.raster_id)
 
 
 # -- arithmetic (reference src/rastr/raster.py:185-265) ---------------------------
@@ -227,7 +201,7 @@ def replace(rf: RasterFrame, to_replace, value: float | None = None) -> RasterFr
 def apply(rf: RasterFrame, func: Callable, *, raw: bool = True) -> RasterFrame:
     """User-function surface (reference src/rastr/raster.py:882-917):
     raw=True → func sees the whole tile array; raw=False → per-cell via
-    np.vectorize, both inside one Arrow-batched pandas UDF."""
+    np.vectorize, both through ``RasterFrame.map_kernel``."""
     if raw:
         return rf.map_kernel(lambda a: np.asarray(func(a)))
     vec = np.vectorize(func)
@@ -257,16 +231,20 @@ def normalize(rf: RasterFrame, *, vmin: float | None = None, vmax: float | None 
     return rf.full_like(0.0)
 
 
-def _taper_tiles(values, trs, tcs, meta: RasterMeta, width_cells: float, lim: float) -> pd.Series:
-    """``taper_border``'s kernel body, module-level so that unpickling the
-    kernel imports the package (installs :mod:`rastr_spark.zipcache`)."""
-    H, W, Tsz = meta.height, meta.width, meta.tile_size
+def taper_border(rf: RasterFrame, width: float, *, limit: float = 0.0) -> RasterFrame:
+    """Linear ramp toward ``limit`` within ``width`` of the grid edge
+    (reference src/rastr/raster.py:1461-1510). Distance is measured in cell
+    indices from the nearest edge — a *global-coordinate* elementwise map: the
+    kernel receives the tile's grid window and computes absolute indices; no halo.
+    """
+    meta = rf.meta
+    H, W = meta.height, meta.width
     dtype = np.dtype(meta.dtype)
-    out = []
-    for v, tr, tc in zip(values, trs, tcs):
-        r0, c0 = int(tr) * Tsz, int(tc) * Tsz
-        th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
-        arr = np.asarray(v, dtype=dtype).reshape(th, tw)
+    width_cells = width / meta.cell_size
+    lim = float(limit)
+
+    def taper(r0, c0, th, tw, v):
+        arr = v.astype(dtype).reshape(th, tw)
         rows = np.arange(r0, r0 + th)[:, None]
         cols = np.arange(c0, c0 + tw)[None, :]
         dist = np.minimum.reduce(
@@ -280,36 +258,10 @@ def _taper_tiles(values, trs, tcs, meta: RasterMeta, width_cells: float, lim: fl
         mask = dist < np.ceil(width_cells)
         factor = np.clip(dist / width_cells, 0.0, 1.0)
         tapered = lim + (arr - lim) * factor
-        new = arr.copy()
-        new[mask] = tapered[mask].astype(dtype)
-        out.append(new.ravel().astype(np.float64))
-    return pd.Series(out)
+        arr[mask] = tapered[mask].astype(dtype)
+        return arr
 
-
-def taper_border(rf: RasterFrame, width: float, *, limit: float = 0.0) -> RasterFrame:
-    """Linear ramp toward ``limit`` within ``width`` of the grid edge
-    (reference src/rastr/raster.py:1461-1510). Distance is measured in cell
-    indices from the nearest edge — a *global-coordinate* elementwise map: the
-    kernel receives (tile_row, tile_col) and computes absolute indices; no halo.
-    """
-    meta = rf.meta
-    width_cells = width / meta.cell_size
-    lim = float(limit)
-
-    @F.pandas_udf(_ARR)
-    def _k(values: pd.Series, trs: pd.Series, tcs: pd.Series) -> pd.Series:
-        return _taper_tiles(values, trs, tcs, meta, width_cells, lim)
-
-    from ..tiles import denull
-
-    df = rf.df.select(
-        "raster_id",
-        "tile_row",
-        "tile_col",
-        "cell_id",
-        denull(_k(F.col("values"), F.col("tile_row"), F.col("tile_col"))).alias("values"),
-    )
-    return RasterFrame(df, meta, rf.raster_id)
+    return rf.map_tiles(taper, "values")
 
 
 def equals(a: RasterFrame, b: RasterFrame) -> bool:

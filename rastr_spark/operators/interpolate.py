@@ -19,13 +19,10 @@ Replicates the reference's scipy-backed pipeline (absent here) from scratch:
 
 from __future__ import annotations
 
-import math
 from typing import Collection, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..geometry import Geometry, segmentize_line
 from ..meta import RasterMeta, infer_cell_size
@@ -244,40 +241,12 @@ def raster_from_point_cloud(
     tris = delaunay(pts)
     tri_pts = pts[tris]
     tri_vals = np.asarray(z, dtype=np.float64)[tris]
-    base = RasterFrame.full(spark, meta, np.nan, raster_id=raster_id)
-    t = meta.transform
-    Tsz = meta.tile_size
-    H, W = meta.height, meta.width
-    tp_list = tri_pts.tolist()
-    tv_list = tri_vals.tolist()
 
-    @F.pandas_udf("array<double>")
-    def _eval(values: pd.Series, trs: pd.Series, tcs: pd.Series) -> pd.Series:
-        tp = np.array(tp_list)
-        tv = np.array(tv_list)
-        out = []
-        for v, tr, tc in zip(values, trs, tcs):
-            r0, c0 = int(tr) * Tsz, int(tc) * Tsz
-            th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
-            rows = np.arange(r0, r0 + th, dtype=np.float64)
-            cols = np.arange(c0, c0 + tw, dtype=np.float64)
-            cg, rg = np.meshgrid(cols, rows)
-            px = t.a * (cg + 0.5) + t.b * (rg + 0.5) + t.c
-            py = t.d * (cg + 0.5) + t.e * (rg + 0.5) + t.f
-            vals = barycentric_interpolate(tp, tv, px.ravel(), py.ravel())
-            out.append(vals.astype(np.float64))
-        return pd.Series(out)
+    def evaluate(r0, c0, th, tw):
+        px, py = meta.cell_centres(*np.mgrid[r0 : r0 + th, c0 : c0 + tw].reshape(2, -1))
+        return barycentric_interpolate(tri_pts, tri_vals, px, py)
 
-    from ..tiles import denull
-
-    df = base.df.select(
-        "raster_id",
-        "tile_row",
-        "tile_col",
-        "cell_id",
-        denull(_eval(F.col("values"), F.col("tile_row"), F.col("tile_col"))).alias("values"),
-    )
-    return RasterFrame(df, meta, raster_id)
+    return RasterFrame.generate_tiles(spark, meta, evaluate, raster_id=raster_id)
 
 
 # ---------------------------------------------------------------------------
@@ -385,45 +354,16 @@ def raster_distance_from_polygon(
         meta = raster_meta.with_(transform=t, height=h, width=w)
         extent_geom = extent_polygon
 
-    geom_row = polygon.to_row()
-    ext_row = extent_geom.to_row() if extent_geom is not None else None
-    t = meta.transform
-    Tsz = meta.tile_size
-    H, W = meta.height, meta.width
-    base = RasterFrame.full(spark, meta, np.nan, raster_id=raster_id)
+    def dist(r0, c0, th, tw):
+        px, py = meta.cell_centres(*np.mgrid[r0 : r0 + th, c0 : c0 + tw].reshape(2, -1))
+        # mask: inside extent (if given) and NOT inside polygon; the masked
+        # cells lie outside, where the distance is the boundary's
+        mask = ~centre_mask(polygon, meta, [r0], [c0], th, tw).ravel()
+        if extent_geom is not None:
+            mask &= centre_mask(extent_geom, meta, [r0], [c0], th, tw).ravel()
+        return np.where(mask, distance_to_segments(px, py, *segments_of(polygon)), np.nan)
 
-    @F.pandas_udf("array<double>")
-    def _dist(values: pd.Series, trs: pd.Series, tcs: pd.Series) -> pd.Series:
-        geom = Geometry.from_row(geom_row)
-        ext = Geometry.from_row(ext_row) if ext_row is not None else None
-        out = []
-        for v, tr, tc in zip(values, trs, tcs):
-            r0, c0 = int(tr) * Tsz, int(tc) * Tsz
-            th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
-            rows = np.arange(r0, r0 + th, dtype=np.float64)
-            cols = np.arange(c0, c0 + tw, dtype=np.float64)
-            cg, rg = np.meshgrid(cols, rows)
-            px = t.a * (cg.ravel() + 0.5) + t.b * (rg.ravel() + 0.5) + t.c
-            py = t.d * (cg.ravel() + 0.5) + t.e * (rg.ravel() + 0.5) + t.f
-            # mask: inside extent (if given) and NOT inside polygon; the
-            # masked cells lie outside, where the distance is the boundary's
-            mask = ~centre_mask(geom, meta, [r0], [c0], th, tw).ravel()
-            if ext is not None:
-                mask &= centre_mask(ext, meta, [r0], [c0], th, tw).ravel()
-            d = distance_to_segments(px, py, *segments_of(geom))
-            out.append(np.where(mask, d, np.nan))
-        return pd.Series(out)
-
-    from ..tiles import denull
-
-    df = base.df.select(
-        "raster_id",
-        "tile_row",
-        "tile_col",
-        "cell_id",
-        denull(_dist(F.col("values"), F.col("tile_row"), F.col("tile_col"))).alias("values"),
-    )
-    return RasterFrame(df, meta, raster_id)
+    return RasterFrame.generate_tiles(spark, meta, dist, raster_id=raster_id)
 
 
 def _crs_is_geographic(crs: str) -> bool:

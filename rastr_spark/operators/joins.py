@@ -25,19 +25,15 @@ The reference has no relational joins, but four of its ops *are* joins (SURVEY.m
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..geometry import Geometry, centre_mask
 from ..meta import RasterMeta
-from ..tiles import RasterFrame, denull, tile_dims_cols
-
-_ARR = T.ArrayType(T.DoubleType())
+from ..tiles import RasterFrame, tile_dims_cols
 
 
 # ---------------------------------------------------------------------------
@@ -64,12 +60,11 @@ def tile_world_bbox_cols(meta: RasterMeta) -> tuple[Column, Column, Column, Colu
     return F.least(*xs), F.least(*ys), F.greatest(*xs), F.greatest(*ys)
 
 
-def _tile_mask(geom: Geometry, meta: RasterMeta, tr: int, tc: int) -> np.ndarray:
-    """Flat cell-centre coverage mask of one tile (geometry.centre_mask)."""
-    Tsz = meta.tile_size
-    r0, c0 = tr * Tsz, tc * Tsz
-    th, tw = min(Tsz, meta.height - r0), min(Tsz, meta.width - c0)
-    return centre_mask(geom, meta, [r0], [c0], th, tw).ravel()
+def _overlaps(meta: RasterMeta, bbox) -> Column:
+    """Tiles whose world bbox meets ``bbox`` (xmin, ymin, xmax, ymax), JVM-side."""
+    xmin, ymin, xmax, ymax = tile_world_bbox_cols(meta)
+    gxmin, gymin, gxmax, gymax = (F.lit(float(v)) for v in bbox)
+    return (xmin <= gxmax) & (xmax >= gxmin) & (ymin <= gymax) & (ymax >= gymin)
 
 
 def _require_polygonal(geom: Geometry, op: str) -> None:
@@ -91,35 +86,14 @@ def clip(rf: RasterFrame, polygon: Geometry, *, strategy: str = "centres") -> Ra
     if strategy != "centres":
         raise NotImplementedError(f"Unsupported clipping strategy: {strategy}")
     meta = rf.meta
-    gxmin, gymin, gxmax, gymax = polygon.bbox()
-    geom_row = polygon.to_row()
 
-    @F.pandas_udf(_ARR)
-    def _mask_k(values: pd.Series, trs: pd.Series, tcs: pd.Series) -> pd.Series:
-        geom = Geometry.from_row(geom_row)
-        out = []
-        for v, tr, tc in zip(values, trs, tcs):
-            inside = _tile_mask(geom, meta, int(tr), int(tc))
-            out.append(np.where(inside, np.asarray(v, dtype=np.float64), np.nan))
-        return pd.Series(out)
+    def mask(r0, c0, th, tw, v):
+        return np.where(centre_mask(polygon, meta, [r0], [c0], th, tw).ravel(), v, np.nan)
 
-    xmin, ymin, xmax, ymax = tile_world_bbox_cols(meta)
-    overlaps = (xmin <= F.lit(gxmax)) & (xmax >= F.lit(gxmin)) & (ymin <= F.lit(gymax)) & (ymax >= F.lit(gymin))
-    hit = rf.df.filter(overlaps).select(
-        "raster_id",
-        "tile_row",
-        "tile_col",
-        "cell_id",
-        denull(_mask_k(F.col("values"), F.col("tile_row"), F.col("tile_col"))).alias("values"),
-    )
-    miss = rf.df.filter(~overlaps).select(
-        "raster_id",
-        "tile_row",
-        "tile_col",
-        "cell_id",
-        F.transform("values", lambda _: F.lit(float("nan"))).alias("values"),
-    )
-    return RasterFrame(hit.unionByName(miss), meta, rf.raster_id)
+    overlaps = _overlaps(meta, polygon.bbox())
+    hit = RasterFrame(rf.df.filter(overlaps), meta, rf.raster_id).map_tiles(mask, "values")
+    miss = RasterFrame(rf.df.filter(~overlaps), meta, rf.raster_id).full_like(np.nan)
+    return RasterFrame(hit.df.unionByName(miss.df), meta, rf.raster_id)
 
 
 def replace_polygon(rf: RasterFrame, polygon, value: float | None = None) -> RasterFrame:
@@ -137,34 +111,18 @@ def replace_polygon(rf: RasterFrame, polygon, value: float | None = None) -> Ras
     for g, _ in pairs:
         _require_polygonal(g, "replace_polygon")
     meta = rf.meta
-    rows = [(g.to_row(), v) for g, v in pairs]
 
-    @F.pandas_udf(_ARR)
-    def _replace_k(values: pd.Series, trs: pd.Series, tcs: pd.Series) -> pd.Series:
-        geoms = [(Geometry.from_row(gr), v) for gr, v in rows]
-        out = []
-        for v, tr, tc in zip(values, trs, tcs):
-            new = np.array(v, dtype=np.float64)
-            for geom, val in geoms:
-                new[_tile_mask(geom, meta, int(tr), int(tc))] = val
-            out.append(new)
-        return pd.Series(out)
+    def burn(r0, c0, th, tw, v):
+        new = v.copy()
+        for geom, val in pairs:
+            new[centre_mask(geom, meta, [r0], [c0], th, tw).ravel()] = val
+        return new
 
     # prune: tiles outside the union bbox of all polygons are unchanged
     bxs = np.array([g.bbox() for g, _ in pairs])
-    gxmin, gymin = bxs[:, 0].min(), bxs[:, 1].min()
-    gxmax, gymax = bxs[:, 2].max(), bxs[:, 3].max()
-    xmin, ymin, xmax, ymax = tile_world_bbox_cols(meta)
-    overlaps = (xmin <= F.lit(gxmax)) & (xmax >= F.lit(gxmin)) & (ymin <= F.lit(gymax)) & (ymax >= F.lit(gymin))
-    hit = rf.df.filter(overlaps).select(
-        "raster_id",
-        "tile_row",
-        "tile_col",
-        "cell_id",
-        denull(_replace_k(F.col("values"), F.col("tile_row"), F.col("tile_col"))).alias("values"),
-    )
-    miss = rf.df.filter(~overlaps)
-    return RasterFrame(hit.unionByName(miss), meta, rf.raster_id)
+    overlaps = _overlaps(meta, (*bxs[:, :2].min(axis=0), *bxs[:, 2:].max(axis=0)))
+    hit = RasterFrame(rf.df.filter(overlaps), meta, rf.raster_id).map_tiles(burn, "values")
+    return RasterFrame(hit.df.unionByName(rf.df.filter(~overlaps)), meta, rf.raster_id)
 
 
 # ---------------------------------------------------------------------------

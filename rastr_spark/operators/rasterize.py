@@ -7,8 +7,9 @@ Burn rules replicate ``rasterio.features.rasterize`` (GDAL all_touched=False):
 - linestrings: every cell the segment passes through (supercover DDA traversal)
 
 Spark shape: the geometry table is small relative to the grid → geometries are
-closure-broadcast; each tile burns its own window in one vectorized kernel pass
-(bbox-pruned per geometry). Overlap validation is NOT the reference's O(n²)
+closure-broadcast; each tile burns its own window in one
+``RasterFrame.generate_tiles`` pass over the tile keys (bbox-pruned per
+geometry). Overlap validation is NOT the reference's O(n²)
 shapely loop (create.py:400-427, SURVEY.md §4.1 "must NOT be ported as-is") — it
 is a distributed **burn-collision check**: geometries are burned to (cell, geom_id)
 pairs and a groupBy(cell) detects interior co-occupancy, i.e. a bucketed spatial
@@ -21,13 +22,14 @@ from typing import Collection, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..geometry import Geometry, centre_mask
 from ..grid import point_grid_shape
 from ..meta import Affine, RasterMeta, affine_sign_for_crs
-from ..tiles import RasterFrame, denull
+from ..tiles import RasterFrame, _tile_keys
 from .interpolate import InterpolationError, interpn_kernel
 
 
@@ -112,65 +114,65 @@ def rasterize_geometries(
     agg='mean'/'min'/'max': NaN-ignoring aggregation across overlapping burns
     (rasterize_z path). One kernel pass per tile; geometries bbox-pruned per tile.
     """
-    rows = [(g.to_row(), float(v), g.bbox()) for g, v in zip(geoms, values)]
-    Tsz = meta.tile_size
-    H, W = meta.height, meta.width
-    t = meta.transform
-    base = RasterFrame.full(spark, meta, np.nan, raster_id=raster_id)
+    if agg not in ("last", "mean", "min", "max"):
+        raise ValueError(f"unknown agg {agg}")
+    pairs = [(g, float(v)) for g, v in zip(geoms, values)]
+    bbs = _bboxes([g for g, _ in pairs])
 
-    @F.pandas_udf("array<double>")
-    def _burn(values_col: pd.Series, trs: pd.Series, tcs: pd.Series) -> pd.Series:
-        gs = [(Geometry.from_row(gr), v, bb) for gr, v, bb in rows]
-        out = []
-        for v0, tr, tc in zip(values_col, trs, tcs):
-            r0, c0 = int(tr) * Tsz, int(tc) * Tsz
-            th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
-            # tile world bbox for pruning
-            xs, ys = [], []
-            for cc, rr in ((c0, r0), (c0 + tw, r0), (c0, r0 + th), (c0 + tw, r0 + th)):
-                xs.append(t.a * cc + t.b * rr + t.c)
-                ys.append(t.d * cc + t.e * rr + t.f)
-            txmin, txmax, tymin, tymax = min(xs), max(xs), min(ys), max(ys)
-            if agg == "last":
-                acc = np.full((th, tw), np.nan)
-                for geom, val, (bxmin, bymin, bxmax, bymax) in gs:
-                    if bxmin > txmax or bxmax < txmin or bymin > tymax or bymax < tymin:
-                        continue
-                    m = _burn_geometry(geom, meta, r0, c0, th, tw)
-                    acc[m] = val
-            else:
-                cnt = np.zeros((th, tw))
-                s = np.zeros((th, tw))
-                mn = np.full((th, tw), np.inf)
-                mx = np.full((th, tw), -np.inf)
-                for geom, val, (bxmin, bymin, bxmax, bymax) in gs:
-                    if bxmin > txmax or bxmax < txmin or bymin > tymax or bymax < tymin:
-                        continue
-                    m = _burn_geometry(geom, meta, r0, c0, th, tw)
-                    cnt[m] += 1
-                    s[m] += val
-                    mn[m] = np.minimum(mn[m], val)
-                    mx[m] = np.maximum(mx[m], val)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    if agg == "mean":
-                        acc = np.where(cnt > 0, s / cnt, np.nan)
-                    elif agg == "min":
-                        acc = np.where(cnt > 0, mn, np.nan)
-                    elif agg == "max":
-                        acc = np.where(cnt > 0, mx, np.nan)
-                    else:
-                        raise ValueError(f"unknown agg {agg}")
-            out.append(acc.ravel())
-        return pd.Series(out)
+    def burn(r0, c0, th, tw):
+        hits = [pairs[i] for i in _tile_hits(bbs, meta, r0, c0, th, tw)]
+        if agg == "last":
+            acc = np.full((th, tw), np.nan)
+            for geom, val in hits:
+                acc[_burn_geometry(geom, meta, r0, c0, th, tw)] = val
+            return acc
+        cnt = np.zeros((th, tw))
+        s = np.zeros((th, tw))
+        mn = np.full((th, tw), np.inf)
+        mx = np.full((th, tw), -np.inf)
+        for geom, val in hits:
+            m = _burn_geometry(geom, meta, r0, c0, th, tw)
+            cnt[m] += 1
+            s[m] += val
+            mn[m] = np.minimum(mn[m], val)
+            mx[m] = np.maximum(mx[m], val)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            acc = {"mean": s / cnt, "min": mn, "max": mx}[agg]
+        return np.where(cnt > 0, acc, np.nan)
 
-    df = base.df.select(
-        "raster_id",
-        "tile_row",
-        "tile_col",
-        "cell_id",
-        denull(_burn(F.col("values"), F.col("tile_row"), F.col("tile_col"))).alias("values"),
+    return RasterFrame.generate_tiles(spark, meta, burn, raster_id=raster_id)
+
+
+def _bboxes(geoms: Sequence[Geometry]) -> np.ndarray:
+    """(n, 4) world bboxes (xmin, ymin, xmax, ymax) of ``geoms``."""
+    return np.array([g.bbox() for g in geoms], dtype=np.float64).reshape(-1, 4)
+
+
+def _tile_hits(bbs: np.ndarray, meta: RasterMeta, r0: int, c0: int, th: int, tw: int) -> np.ndarray:
+    """Indices of the bboxes that meet the grid window's world bbox — the
+    per-tile pruning that keeps a burn from costing O(n_tiles × n_geoms × T²)."""
+    xs, ys = meta.transform.forward(
+        np.array([c0, c0 + tw, c0, c0 + tw], np.float64), np.array([r0, r0, r0 + th, r0 + th], np.float64)
     )
-    return RasterFrame(df, meta, raster_id)
+    miss = (bbs[:, 0] > xs.max()) | (bbs[:, 2] < xs.min()) | (bbs[:, 1] > ys.max()) | (bbs[:, 3] < ys.min())
+    return np.flatnonzero(~miss)
+
+
+def _burned_cells(batch: pa.RecordBatch, polys, bbs: np.ndarray, meta: RasterMeta) -> pa.RecordBatch:
+    """(row, col, gid) of every cell each polygon burns in the batch's tiles."""
+    Tsz = meta.tile_size
+    rows, cols, gids = [], [], []
+    for tr, tc in zip(batch.column("tile_row").to_pylist(), batch.column("tile_col").to_pylist()):
+        r0, c0 = tr * Tsz, tc * Tsz
+        th, tw = min(Tsz, meta.height - r0), min(Tsz, meta.width - c0)
+        for k in _tile_hits(bbs, meta, r0, c0, th, tw):
+            i, geom = polys[k]
+            rr, cc = np.nonzero(_burn_geometry(geom, meta, r0, c0, th, tw))
+            rows.append(r0 + rr)
+            cols.append(c0 + cc)
+            gids.append(np.full(rr.size, i))
+    flat = [np.concatenate(v) if v else np.empty(0) for v in (rows, cols, gids)]
+    return pa.RecordBatch.from_arrays([pa.array(v.astype(np.int32)) for v in flat], ["row", "col", "gid"])
 
 
 def validate_no_overlapping_geometries(
@@ -182,40 +184,13 @@ def validate_no_overlapping_geometries(
     polys = [(i, g) for i, g in enumerate(geoms) if g.kind in ("polygon", "multipolygon")]
     if len(polys) < 2:
         return
-    rows = [(i, g.to_row(), g.bbox()) for i, g in polys]
-    Tsz = meta.tile_size
-    H, W = meta.height, meta.width
+    bbs = _bboxes([g for _, g in polys])
 
-    t = meta.transform
+    def emit(batches):
+        for b in batches:
+            yield _burned_cells(b, polys, bbs, meta)
 
-    def emit(pdf_iter):
-        gs = [(i, Geometry.from_row(gr), bb) for i, gr, bb in rows]
-        for pdf in pdf_iter:
-            recs = []
-            for tr, tc in zip(pdf["tile_row"], pdf["tile_col"]):
-                r0, c0 = int(tr) * Tsz, int(tc) * Tsz
-                th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
-                # tile world bbox: skip geometries that cannot touch this tile
-                # (same pruning as the burn kernel above — without it every tile
-                # burns every geometry: O(n_tiles × n_geoms × T²))
-                xs, ys = [], []
-                for cc, rr in ((c0, r0), (c0 + tw, r0), (c0, r0 + th), (c0 + tw, r0 + th)):
-                    xs.append(t.a * cc + t.b * rr + t.c)
-                    ys.append(t.d * cc + t.e * rr + t.f)
-                txmin, txmax, tymin, tymax = min(xs), max(xs), min(ys), max(ys)
-                for i, geom, (bxmin, bymin, bxmax, bymax) in gs:
-                    if bxmin > txmax or bxmax < txmin or bymin > tymax or bymax < tymin:
-                        continue
-                    m = _burn_geometry(geom, meta, r0, c0, th, tw)
-                    rr, cc = np.nonzero(m)
-                    for a, b in zip(rr, cc):
-                        recs.append((int(r0 + a), int(c0 + b), i))
-            yield pd.DataFrame(recs, columns=["row", "col", "gid"])
-
-    base = RasterFrame.full(spark, meta, np.nan)
-    burned = base.df.select("tile_row", "tile_col").mapInPandas(
-        emit, "row int, col int, gid int"
-    )
+    burned = _tile_keys(spark, meta).mapInArrow(emit, "row int, col int, gid int")
     clash = (
         burned.groupBy("row", "col")
         .agg(F.countDistinct("gid").alias("n"), F.min("gid").alias("i"), F.max("gid").alias("j"))
@@ -300,56 +275,26 @@ def rasterize_z_gdf(
         crs=crs,
         cell_size=cell_size,
     ).with_(tile_size=tile_size)
-    tri_tables = []
-    for g, z in zip(geoms, zs):
-        coords = g.xy
-        tri_tables.append((coords.tolist(), np.asarray(z, dtype=np.float64).tolist()))
-    Tsz = meta.tile_size
-    H, W = meta.height, meta.width
-    t = meta.transform
-    base = RasterFrame.full(spark, meta, np.nan, raster_id="rz_z")
+    tri_tables = [(g.xy, np.asarray(z, dtype=np.float64)) for g, z in zip(geoms, zs)]
 
-    @F.pandas_udf("array<double>")
-    def _interp(values_col: pd.Series, trs: pd.Series, tcs: pd.Series) -> pd.Series:
-        out = []
-        for v0, tr, tc in zip(values_col, trs, tcs):
-            r0, c0 = int(tr) * Tsz, int(tc) * Tsz
-            th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
-            rows = np.arange(r0, r0 + th, dtype=np.float64)
-            cols = np.arange(c0, c0 + tw, dtype=np.float64)
-            cg, rg = np.meshgrid(cols, rows)
-            px = t.a * (cg.ravel() + 0.5) + t.b * (rg.ravel() + 0.5) + t.c
-            py = t.d * (cg.ravel() + 0.5) + t.e * (rg.ravel() + 0.5) + t.f
-            cnt = np.zeros(px.shape)
-            s = np.zeros(px.shape)
-            mn = np.full(px.shape, np.inf)
-            mx = np.full(px.shape, -np.inf)
-            for coords, zvals in tri_tables:
-                pts = np.asarray(coords)
-                try:
-                    zi = interpn_kernel(pts, np.asarray(zvals), xi=np.column_stack((px, py)))
-                except InterpolationError:
-                    zi = np.full(px.shape, np.nan)
-                ok = ~np.isnan(zi)
-                cnt[ok] += 1
-                s[ok] += zi[ok]
-                mn[ok] = np.minimum(mn[ok], zi[ok])
-                mx[ok] = np.maximum(mx[ok], zi[ok])
-            with np.errstate(invalid="ignore", divide="ignore"):
-                if agg == "mean":
-                    acc = np.where(cnt > 0, s / cnt, np.nan)
-                elif agg == "min":
-                    acc = np.where(cnt > 0, mn, np.nan)
-                else:
-                    acc = np.where(cnt > 0, mx, np.nan)
-            out.append(acc)
-        return pd.Series(out)
+    def interp(r0, c0, th, tw):
+        px, py = meta.cell_centres(*np.mgrid[r0 : r0 + th, c0 : c0 + tw].reshape(2, -1))
+        cnt = np.zeros(px.shape)
+        s = np.zeros(px.shape)
+        mn = np.full(px.shape, np.inf)
+        mx = np.full(px.shape, -np.inf)
+        for pts, zvals in tri_tables:
+            try:
+                zi = interpn_kernel(pts, zvals, xi=np.column_stack((px, py)))
+            except InterpolationError:
+                continue
+            ok = ~np.isnan(zi)
+            cnt[ok] += 1
+            s[ok] += zi[ok]
+            mn[ok] = np.minimum(mn[ok], zi[ok])
+            mx[ok] = np.maximum(mx[ok], zi[ok])
+        with np.errstate(invalid="ignore", divide="ignore"):
+            acc = {"mean": s / cnt, "min": mn, "max": mx}[agg]
+        return np.where(cnt > 0, acc, np.nan)
 
-    df = base.df.select(
-        "raster_id",
-        "tile_row",
-        "tile_col",
-        "cell_id",
-        denull(_interp(F.col("values"), F.col("tile_row"), F.col("tile_col"))).alias("values"),
-    )
-    return RasterFrame(df, meta, "rz_z")
+    return RasterFrame.generate_tiles(spark, meta, interp, raster_id="rz_z")

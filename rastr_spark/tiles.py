@@ -15,16 +15,22 @@ operator surface as lazy DataFrame transformations; nothing materializes until a
 action. Meta lives on the driver (one tiny object), so alignment preconditions
 (reference: src/rastr/raster.py:191-202) are checked eagerly at plan-build time,
 exactly like the reference raises before computing.
+
+Python crosses the boundary per tile in one form, Arrow end to end:
+:meth:`RasterFrame.map_tiles` (one ``mapInArrow`` pass, each tile's slices of
+the batch's flat buffers in, :func:`tile_batch` out) for elementwise kernels,
+PIP masks and the generators, ``mapInArrow``/``applyInArrow`` with
+:func:`tile_batch` for the stencils. A float64 buffer carries no validity
+bitmap, so NaN stays the nodata sentinel inside ``values`` and SQL NULL never
+appears there.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,24 +49,10 @@ TILE_FIELDS = [
 TILE_SCHEMA = T.StructType(TILE_FIELDS)
 
 
-def denull(values: Column) -> Column:
-    """NULL→NaN inside a values array.
-
-    Spark's Arrow serializer converts NaN to SQL NULL when a pandas UDF returns
-    float arrays (pandas from_pandas semantics). The engine's contract is the
-    reference's: NaN is the nodata sentinel INSIDE arrays, SQL NULL never appears
-    (SURVEY.md §1.2) — so every pandas-UDF output boundary re-normalizes with
-    this transform. It is a higher-order function, evaluated interpretively per
-    cell, so kernels that can emit Arrow directly (:func:`tile_batch` from
-    ``mapInArrow``/``applyInArrow``) keep NaN as NaN and skip it.
-    """
-    return F.transform(values, lambda v: F.coalesce(v, F.lit(float("nan"))))
-
-
 def list_parts(col) -> tuple[np.ndarray, np.ndarray]:
-    """(flat float64 values, offsets) of an Arrow ``list<double>`` column, so
-    row i is ``flat[offs[i]:offs[i + 1]]``. Zero-copy for one chunk without
-    NULL elements; a NULL element reads as NaN."""
+    """(flat values, offsets) of an Arrow numeric list column, so row i is
+    ``flat[offs[i]:offs[i + 1]]``. Zero-copy (read-only) for one chunk without
+    NULL elements; a NULL float element reads as NaN."""
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     return col.values.to_numpy(zero_copy_only=False), col.offsets.to_numpy()
@@ -113,11 +105,31 @@ def tile_dims_cols(meta: RasterMeta) -> tuple[Column, Column]:
     return th.cast("int"), tw.cast("int")
 
 
-def _map_tiles(s: pd.Series, np_fn: Callable[[np.ndarray], np.ndarray], dtype) -> pd.Series:
-    """``RasterFrame.map_kernel``'s kernel body: ``np_fn`` on each tile's values
-    in ``dtype``. Module-level, so unpickling the kernel that calls it imports
-    the package and installs :mod:`rastr_spark.zipcache` on the worker."""
-    return s.map(lambda v: np_fn(np.asarray(v, dtype=dtype)).astype(np.float64))
+def _tile_keys(spark: SparkSession, meta: RasterMeta) -> DataFrame:
+    """(tile_row, tile_col) of every tile of the grid, generated JVM-side."""
+    ntc = meta.n_tile_cols
+    return spark.range(meta.n_tile_rows * ntc).select(
+        (F.col("id") / ntc).cast("int").alias("tile_row"),
+        (F.col("id") % ntc).cast("int").alias("tile_col"),
+    )
+
+
+def _map_tile_batches(batches, fn, cols, meta: RasterMeta, raster_id: str):
+    """:meth:`RasterFrame.map_tiles`' batch body: ``fn(r0, c0, th, tw, *slices)``
+    per tile, emitted through :func:`tile_batch`. Module-level, so unpickling
+    the kernel that calls it imports the package and installs
+    :mod:`rastr_spark.zipcache` on the worker."""
+    Tsz, H, W = meta.tile_size, meta.height, meta.width
+    for b in batches:
+        trs = b.column("tile_row").to_numpy()
+        tcs = b.column("tile_col").to_numpy()
+        parts = [list_parts(b.column(c)) for c in cols]
+        cores = []
+        for i, (tr, tc) in enumerate(zip(trs.tolist(), tcs.tolist())):
+            r0, c0 = tr * Tsz, tc * Tsz
+            slices = [flat[offs[i] : offs[i + 1]] for flat, offs in parts]
+            cores.append(fn(r0, c0, min(Tsz, H - r0), min(Tsz, W - c0), *slices))
+        yield tile_batch(raster_id, trs, tcs, cores)
 
 
 @dataclass
@@ -188,19 +200,9 @@ class RasterFrame:
         Distributed generator: ``spark.range(n_tiles)`` → array_repeat — no driver
         materialization, scales to arbitrarily many tiles.
         """
-        ntr, ntc = meta.n_tile_rows, meta.n_tile_cols
-        Tsz = meta.tile_size
-        df = (
-            spark.range(ntr * ntc)
-            .select(
-                F.lit(raster_id).alias("raster_id"),
-                (F.col("id") / ntc).cast("int").alias("tile_row"),
-                (F.col("id") % ntc).cast("int").alias("tile_col"),
-            )
-        )
-        th, tw = tile_dims_cols(meta.with_(tile_size=Tsz))
-        df = df.select(
-            "raster_id",
+        th, tw = tile_dims_cols(meta)
+        df = _tile_keys(spark, meta).select(
+            F.lit(raster_id).alias("raster_id"),
             "tile_row",
             "tile_col",
             _morton_col(F.col("tile_row"), F.col("tile_col")).alias("cell_id"),
@@ -210,14 +212,7 @@ class RasterFrame:
 
     def full_like(self, fill_value: float) -> "RasterFrame":
         """reference ``Raster.full_like`` src/rastr/raster.py:854-867."""
-        df = self.df.select(
-            "raster_id",
-            "tile_row",
-            "tile_col",
-            "cell_id",
-            F.transform("values", lambda _: F.lit(float(fill_value)).cast("double")).alias("values"),
-        )
-        return RasterFrame(df, self.meta, self.raster_id)
+        return self.with_values(F.array_repeat(F.lit(float(fill_value)).cast("double"), F.size("values")))
 
     @staticmethod
     def example(spark: SparkSession, *, tile_size: int = 64) -> "RasterFrame":
@@ -243,56 +238,44 @@ class RasterFrame:
     ) -> "RasterFrame":
         """Assemble tiles from a (row, col, value) cell DataFrame.
 
-        One shuffle: groupBy tile key → applyInPandas packs each tile's cells into
-        its row-major array, NaN where absent. ``dense=True`` unions in empty tiles
+        One shuffle: groupBy tile key → ``collect_list`` of each tile's (row-major
+        position, value) cells, then one :meth:`map_tiles` pass scatters them
+        into the tile's array, NaN where absent. ``dense=True`` unions in empty tiles
         so the raster covers the full grid (all-NaN tiles present); ``dense=False``
         keeps only touched tiles (sparse representation, SURVEY.md §1.2).
         """
         Tsz = meta.tile_size
-        H, W = meta.height, meta.width
+        row, col = F.col(row_col).cast("int"), F.col(col_col).cast("int")
         keyed = cells.select(
-            (F.col(row_col).cast("int") / Tsz).cast("int").alias("tile_row"),
-            (F.col(col_col).cast("int") / Tsz).cast("int").alias("tile_col"),
-            F.col(row_col).cast("int").alias("row"),
-            F.col(col_col).cast("int").alias("col"),
+            (row / Tsz).cast("int").alias("tile_row"),
+            (col / Tsz).cast("int").alias("tile_col"),
+            row.alias("row"),
+            col.alias("col"),
             F.col(value_col).cast("double").alias("value"),
         )
-
-        def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            tr, tc = int(key[0]), int(key[1])
-            r0, c0 = tr * Tsz, tc * Tsz
-            th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
-            buf = np.full(th * tw, np.nan)
-            idx = (pdf["row"].to_numpy() - r0) * tw + (pdf["col"].to_numpy() - c0)
-            buf[idx] = pdf["value"].to_numpy()
-            return pd.DataFrame(
-                {
-                    "raster_id": [raster_id],
-                    "tile_row": [tr],
-                    "tile_col": [tc],
-                    "cell_id": [int(morton_encode(np.array([tr]), np.array([tc]))[0])],
-                    "values": [buf],
-                }
+        _, tw = tile_dims_cols(meta)
+        pos = (F.col("row") - F.col("tile_row") * Tsz) * tw + F.col("col") - F.col("tile_col") * Tsz
+        grouped = (
+            keyed.groupBy("tile_row", "tile_col")
+            .agg(F.collect_list(F.struct(pos.alias("pos"), "value")).alias("cells"))
+            .select("tile_row", "tile_col", F.col("cells.pos").alias("pos"), F.col("cells.value").alias("value"))
+        )
+        rf = RasterFrame(grouped, meta, raster_id).map_tiles(_scatter, "pos", "value")
+        if not dense:
+            return rf
+        base = RasterFrame.full(cells.sparkSession, meta, np.nan, raster_id=raster_id)
+        merged = (
+            base.df.alias("b")
+            .join(rf.df.alias("t"), ["tile_row", "tile_col"], "left")
+            .select(
+                F.col("b.raster_id").alias("raster_id"),
+                "tile_row",
+                "tile_col",
+                F.col("b.cell_id").alias("cell_id"),
+                F.coalesce(F.col("t.values"), F.col("b.values")).alias("values"),
             )
-
-        tiles = keyed.groupBy("tile_row", "tile_col").applyInPandas(assemble, TILE_SCHEMA)
-        tiles = tiles.withColumn("values", denull(F.col("values")))
-        rf = RasterFrame(tiles, meta, raster_id)
-        if dense:
-            base = RasterFrame.full(tiles.sparkSession, meta, np.nan, raster_id=raster_id)
-            merged = (
-                base.df.alias("b")
-                .join(tiles.alias("t"), ["tile_row", "tile_col"], "left")
-                .select(
-                    F.col("b.raster_id").alias("raster_id"),
-                    "tile_row",
-                    "tile_col",
-                    F.col("b.cell_id").alias("cell_id"),
-                    F.coalesce(F.col("t.values"), F.col("b.values")).alias("values"),
-                )
-            )
-            rf = RasterFrame(merged, meta, raster_id)
-        return rf
+        )
+        return RasterFrame(merged, meta, raster_id)
 
     # ------------------------------------------------------------------
     # deconstruction
@@ -343,19 +326,38 @@ class RasterFrame:
         """Elementwise op as a JVM higher-order transform (whole-stage codegen)."""
         return self.with_values(F.transform("values", fn))
 
+    def map_tiles(self, fn: Callable[..., np.ndarray], *list_cols: str) -> "RasterFrame":
+        """The engine's one per-tile Python boundary: ``fn(r0, c0, th, tw,
+        *slices)`` returns tile (r0, c0)'s th×tw float values, where ``slices``
+        are the tile's flat, read-only slices of the named list columns.
+
+        One ``mapInArrow`` pass: the kernel reads each Arrow batch's flat
+        buffers (:func:`list_parts`) and emits its tiles through
+        :func:`tile_batch`, so NaN stays NaN and ``cell_id`` is the tile key's
+        Morton code. With no list column it runs over the tile keys alone."""
+        meta, raster_id = self.meta, self.raster_id
+
+        def kernel(batches):
+            return _map_tile_batches(batches, fn, list_cols, meta, raster_id)
+
+        df = self.df.select("tile_row", "tile_col", *list_cols).mapInArrow(kernel, TILE_SCHEMA)
+        return RasterFrame(df, meta, raster_id)
+
+    @staticmethod
+    def generate_tiles(
+        spark: SparkSession, meta: RasterMeta, fn: Callable[..., np.ndarray], *, raster_id: str
+    ) -> "RasterFrame":
+        """Raster of ``fn(r0, c0, th, tw)`` per tile: :meth:`map_tiles` over the
+        grid's tile keys, so no input array crosses into Python."""
+        return RasterFrame(_tile_keys(spark, meta), meta, raster_id).map_tiles(fn)
+
     def map_kernel(self, np_fn: Callable[[np.ndarray], np.ndarray]) -> "RasterFrame":
-        """Elementwise op as a vectorized Arrow/pandas UDF (numpy semantics).
-
-        The kernel sees one 1-D float array per tile. dtype discipline: compute in
-        the raster's dtype so float16/32 goldens match bit-for-bit (reference
-        preserves dtype through all ops, tests/conftest.py:29-62)."""
+        """Elementwise op as a numpy kernel over each tile's flat values
+        (:meth:`map_tiles`). dtype discipline: compute in the raster's dtype so
+        float16/32 goldens match bit-for-bit (reference preserves dtype through
+        all ops, tests/conftest.py:29-62)."""
         dtype = np.dtype(self.meta.dtype)
-
-        @F.pandas_udf(T.ArrayType(T.DoubleType()))
-        def _k(s: pd.Series) -> pd.Series:
-            return _map_tiles(s, np_fn, dtype)
-
-        return self.with_values(denull(_k(F.col("values"))))
+        return self.map_tiles(lambda r0, c0, th, tw, v: np_fn(v.astype(dtype)), "values")
 
     def check_aligned(self, other: "RasterFrame") -> None:
         """Binary-op precondition (reference: src/rastr/raster.py:191-202):
@@ -422,6 +424,14 @@ class RasterFrame:
         if self.meta.crs and not allow_override and self.meta.crs != crs:
             raise ValueError("raster already has a CRS; pass allow_override=True")
         return RasterFrame(self.df, self.meta.with_(crs=crs), self.raster_id)
+
+
+def _scatter(r0: int, c0: int, th: int, tw: int, pos: np.ndarray, value: np.ndarray) -> np.ndarray:
+    """``from_cells``' tile kernel: a tile's (position, value) cells into its
+    row-major array, NaN where absent."""
+    buf = np.full(th * tw, np.nan)
+    buf[pos] = value
+    return buf
 
 
 def _morton_col(tile_row: Column, tile_col: Column) -> Column:

@@ -478,9 +478,48 @@ class TestStencilFixedCosts:
             assert "InPandas" not in p, f"{name} crosses pandas:\n{p}"
             assert "FlatMapGroupsInArrow" in p, f"{name} lost its grouped Arrow kernel:\n{p}"
 
+    def _tile_kernel_ops(self, spark):
+        from rastr_spark.operators import interpolate, joins, rasterize
+
+        nan_rf = self._nan_raster(spark)
+        meta = nan_rf.meta
+        f32 = RasterFrame.from_numpy(spark, nan_rf.to_numpy().astype(np.float32), meta.with_(dtype="float32"))
+        box = Geometry.box(2.5, 3.5, 13.0, 15.5)
+        tri = Geometry.polygon([(0.5, 0.5), (9.5, 1.0), (4.0, 8.5)])
+        return {
+            "clip": joins.clip(nan_rf, box),
+            "replace_polygon": joins.replace_polygon(nan_rf, box, 1.0),
+            "taper_border": nan_rf.taper_border(3.0, limit=-1.0),
+            "map_kernel": f32 + 0.5,
+            "binary": f32 * f32,
+            "rasterize_geometries": rasterize.rasterize_geometries(spark, [box, tri], [1.0, 2.0], meta),
+            "rasterize_z_gdf": rasterize.rasterize_z_gdf(
+                spark, [tri], [np.array([1.0, 2.0, 3.0, 1.0])], cell_size=1.0, crs="EPSG:2193",
+                tile_size=4,
+            ),
+            "raster_from_point_cloud": interpolate.raster_from_point_cloud(
+                spark, [0.0, 9.0, 4.0, 5.0], [0.0, 1.0, 8.0, 3.0], [1.0, 2.0, 3.0, 4.0],
+                crs="EPSG:2193", cell_size=1.0, tile_size=4,
+            ),
+            "raster_distance_from_polygon": interpolate.raster_distance_from_polygon(
+                spark, tri, raster_meta=meta, snap_raster=nan_rf
+            ),
+            "from_cells": RasterFrame.from_cells(nan_rf.cells(drop_nan=True), meta),
+        }
+
+    def test_tile_kernel_plans_run_map_in_arrow_without_hofs(self, spark):
+        # every per-tile raster kernel crosses into Python as one mapInArrow
+        # pass emitting Arrow: no pandas UDF, no NULL→NaN higher-order function
+        for name, out in self._tile_kernel_ops(spark).items():
+            out.df.collect()
+            p = out.df._jdf.queryExecution().executedPlan().toString()
+            assert "MapInArrow" in p, f"{name} lost its Arrow tile kernel:\n{p}"
+            for node in ("lambdafunction", "ArrowEvalPython", "InPandas"):
+                assert node not in p, f"{name} plans {node}:\n{p}"
+
     def test_stencil_outputs_hold_nan_never_null(self, spark, rf):
-        # the contract denull used to enforce: NaN is the nodata sentinel
-        # inside values, SQL NULL never appears
+        # NaN is the nodata sentinel inside values, SQL NULL never appears:
+        # Arrow-emitting kernels keep it with no re-normalizing pass
         from rastr_spark.operators.stencils import extrapolate
 
         ops = self._stencil_ops(spark, rf)
@@ -490,6 +529,7 @@ class TestStencilFixedCosts:
         sparse[3, 5], sparse[27, 20] = 1.0, 2.0  # the sparse broadcast round
         meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, 32), 32, 32, tile_size=8)
         ops["extrapolate_sparse"] = extrapolate(RasterFrame.from_numpy(spark, sparse, meta))
+        ops.update(self._tile_kernel_ops(spark))
         for name, out in ops.items():
             st = out.df.agg(
                 F.sum(F.exists("values", F.isnull).cast("int")).alias("null_tiles"),
