@@ -299,11 +299,14 @@ def minhash_signatures_df(
         raise ValueError(f"unknown hash_family: {hash_family!r}")
     # tokens are hashed once in the JVM (codegen string hashing); the shingle
     # fold + distinct + per-hash-fn min run vectorized in the Arrow stage,
-    # bit-identical to the former interpreted HOF expression (test-locked)
+    # bit-identical to the former interpreted HOF expression (test-locked).
+    # No Spark filter on the token count: Catalyst would evaluate the
+    # tokenize + hash chain once in the Filter and again in the Project; the
+    # Arrow stage drops docs with fewer than n hashes instead
     toks_df = docs.select(
         F.col(id_col).alias("id"),
         F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t)).alias("th"),
-    ).filter(F.size("th") >= n)
+    )
     return _minhash_sigs_arrow(toks_df, n=n, num_hashes=num_hashes)
 
 
@@ -416,10 +419,10 @@ def _distinct_per_doc(h, doc_of):
 
 
 def _minhash_sig_batch(b: pa.RecordBatch, n: int, num_hashes: int) -> pa.RecordBatch:
-    """(id, sig) for one Arrow batch of (id, th) rows, each with ≥ n token
-    hashes: per doc the distinct n-token shingle hashes ``xxhash64(th[i..i+n-1])``
-    (left fold, seed 42), and per hash function i the signed min of
-    ``xxhash64(h, lit(i))``."""
+    """(id, sig) for one Arrow batch of (id, th) rows: per doc the distinct
+    n-token shingle hashes ``xxhash64(th[i..i+n-1])`` (left fold, seed 42),
+    and per hash function i the signed min of ``xxhash64(h, lit(i))``. A doc
+    with fewer than n token hashes (or NULL ones) has no shingle and no row."""
     flat, starts, doc_of = _doc_windows(b.column("th"), n)
     h = _xx_long(flat[starts], _U(42))
     for k in range(1, n):
@@ -427,13 +430,13 @@ def _minhash_sig_batch(b: pa.RecordBatch, n: int, num_hashes: int) -> pa.RecordB
     hu, du = _distinct_per_doc(h, doc_of)
     seg = np.flatnonzero(np.diff(du, prepend=-1))  # first shingle of each doc
     base = _xx_long(hu, _U(42))
-    sig = np.empty((b.num_rows, num_hashes), dtype=np.int64)
+    sig = np.empty((seg.size, num_hashes), dtype=np.int64)
     for i in range(num_hashes):
         # Spark's array_min over BIGINT is SIGNED — compare as int64
         sig[:, i] = np.minimum.reduceat(_xx_int(i, base).view(np.int64), seg)
-    offs = np.arange(b.num_rows + 1, dtype=np.int32) * num_hashes
+    offs = np.arange(seg.size + 1, dtype=np.int32) * num_hashes
     sigs = pa.ListArray.from_arrays(pa.array(offs), pa.array(sig.ravel()))
-    return pa.RecordBatch.from_arrays([b.column("id"), sigs], names=["id", "sig"])
+    return pa.RecordBatch.from_arrays([b.column("id").take(du[seg]), sigs], names=["id", "sig"])
 
 
 def _minhash_sigs_arrow(th_df: DataFrame, *, n: int, num_hashes: int) -> DataFrame:
@@ -444,8 +447,8 @@ def _minhash_sigs_arrow(th_df: DataFrame, *, n: int, num_hashes: int) -> DataFra
     runs :func:`_minhash_sig_batch` over each batch's flat ``th`` buffer
     (guide §4.2: batch work belongs in vectorized native code); the kernel
     calls that module-level function, so unpickling it on a worker imports
-    the package and installs :mod:`rastr_spark.zipcache`. Every input doc
-    must have ≥ n token hashes (callers filter first)."""
+    the package and installs :mod:`rastr_spark.zipcache`. Docs with fewer
+    than n token hashes drop out there, so callers need no filter."""
 
     def kernel(batches):
         for b in batches:

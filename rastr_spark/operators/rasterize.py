@@ -30,7 +30,7 @@ from ..geometry import Geometry, centre_mask
 from ..grid import point_grid_shape
 from ..meta import Affine, RasterMeta, affine_sign_for_crs
 from ..tiles import RasterFrame, _tile_keys
-from .interpolate import InterpolationError, interpn_kernel
+from .interpolate import InterpolationError, barycentric_interpolate, delaunay
 
 
 class MissingColumnsError(ValueError):
@@ -275,7 +275,16 @@ def rasterize_z_gdf(
         crs=crs,
         cell_size=cell_size,
     ).with_(tile_size=tile_size)
-    tri_tables = [(g.xy, np.asarray(z, dtype=np.float64)) for g, z in zip(geoms, zs)]
+    # each geometry is triangulated once, here, as raster_from_point_cloud
+    # does; a degenerate one (collinear, < 3 vertices) adds no surface
+    surfaces = []
+    for g, z in zip(geoms, zs):
+        pts = np.asarray(g.xy, dtype=np.float64)
+        try:
+            tris = delaunay(pts)
+        except InterpolationError:
+            continue
+        surfaces.append((pts[tris], np.asarray(z, dtype=np.float64)[tris]))
 
     def interp(r0, c0, th, tw):
         px, py = meta.cell_centres(*np.mgrid[r0 : r0 + th, c0 : c0 + tw].reshape(2, -1))
@@ -283,11 +292,8 @@ def rasterize_z_gdf(
         s = np.zeros(px.shape)
         mn = np.full(px.shape, np.inf)
         mx = np.full(px.shape, -np.inf)
-        for pts, zvals in tri_tables:
-            try:
-                zi = interpn_kernel(pts, zvals, xi=np.column_stack((px, py)))
-            except InterpolationError:
-                continue
+        for tri_pts, tri_vals in surfaces:
+            zi = barycentric_interpolate(tri_pts, tri_vals, px, py)
             ok = ~np.isnan(zi)
             cnt[ok] += 1
             s[ok] += zi[ok]

@@ -8,23 +8,41 @@ Semantics replicate GDAL ``Resampling.bilinear`` through rasterio's
     bilinear among the 4 surrounding input cells, edge-clamped
     new_transform = transform · scale(W/new_W, H/new_H)  (raster.py:1653-1657)
 
-Physical shape: **output-tile driven gather** — the output tile table is generated
-with ``spark.range`` (no driver data); each output tile computes (closed form,
-JVM) which input tiles its source window touches, explodes that tile-key list, and
-equi-joins the input tile table. One shuffle groups the gathered input fragments
-per output tile (``groupBy(otr, otc).applyInArrow``); a numpy kernel evaluates the
-bilinear weights for the whole tile at once and returns Arrow float64, so NaN
-stays NaN without a pandas hop. Never a cartesian join (SURVEY.md §2.3 "range joins ... never cartesian").
+Physical shape: **input-tile driven scatter** — for each input tile the driver
+plans, in numpy from the closed-form source window of every output tile, the
+contiguous range of output tile rows and columns that read it; each input tile
+then sends itself to those output tiles through a JVM
+``explode(sequence(lo, hi))`` per axis (no output-tile table, no join). One
+shuffle streams each output tile's input tiles together
+(:func:`tiles.group_map`: one Python call per Arrow batch, not per output
+tile); a numpy kernel evaluates the bilinear weights for the whole tile at once
+and returns Arrow float64, so NaN stays NaN without a pandas hop. Never a
+cartesian join (SURVEY.md §2.3 "range joins ... never cartesian").
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import functions as F
 
 from ..meta import Affine
-from ..tiles import TILE_SCHEMA, RasterFrame, list_parts, tile_batch
+from ..tiles import TILE_SCHEMA, RasterFrame, group_map, list_parts, tile_groups
+
+
+def _scatter_ranges(n_in: int, n_out: int, n: int, N: int, scale: float, Tsz: int):
+    """(lo, hi) per input tile index along one axis of n input cells in
+    n_in tiles and N output cells in n_out tiles: the output tiles lo..hi
+    read that input tile (none when lo > hi).
+
+    An output tile's source cells are (o+0.5)·scale−0.5 ± 1 over its cells,
+    clamped to the grid; both ends grow with the output tile index, so the
+    output tiles reading input tile t form one contiguous range."""
+    o0 = np.arange(n_out, dtype=np.int64) * Tsz
+    o1 = np.minimum(o0 + Tsz, N)  # one past the output tile's last cell
+    first = np.maximum(np.floor((o0 + 0.5) * scale - 0.5) - 1, 0).astype(np.int64) // Tsz
+    last = np.minimum(np.ceil((o1 - 0.5) * scale - 0.5) + 1, n - 1).astype(np.int64) // Tsz
+    ins = np.arange(n_in)
+    return np.searchsorted(last, ins, "left"), np.searchsorted(first, ins, "right") - 1
 
 
 def resample(rf: RasterFrame, cell_size: float, *, method: str = "bilinear") -> RasterFrame:
@@ -44,61 +62,30 @@ def resample(rf: RasterFrame, cell_size: float, *, method: str = "bilinear") -> 
     )
     new_meta = meta.with_(cell_size=cell_size, transform=new_t, height=new_H, width=new_W)
 
-    ntr_out = new_meta.n_tile_rows
-    ntc_out = new_meta.n_tile_cols
-    spark = rf.df.sparkSession
-
-    # output tiles → needed input tile ranges (closed form, JVM)
-    out_tiles = spark.range(ntr_out * ntc_out).select(
-        (F.col("id") / ntc_out).cast("int").alias("otr"),
-        (F.col("id") % ntc_out).cast("int").alias("otc"),
-    )
-    oth, otw = (
-        F.least(F.lit(Tsz), F.lit(new_H) - F.col("otr") * Tsz).cast("int"),
-        F.least(F.lit(Tsz), F.lit(new_W) - F.col("otc") * Tsz).cast("int"),
-    )
-    # source row range of this output tile: rows [otr*T .. otr*T+oth-1] map to
-    # src in [(o+0.5)*ry-0.5 ± 1]; take floor/ceil with clamping
-    src_r0 = F.greatest(F.floor((F.col("otr") * Tsz + 0.5) * ry - 0.5) - 1, F.lit(0)).cast("int")
-    src_r1 = F.least(
-        F.ceil((F.col("otr") * Tsz + oth - 0.5) * ry - 0.5) + 1, F.lit(H - 1)
-    ).cast("int")
-    src_c0 = F.greatest(F.floor((F.col("otc") * Tsz + 0.5) * rx - 0.5) - 1, F.lit(0)).cast("int")
-    src_c1 = F.least(
-        F.ceil((F.col("otc") * Tsz + otw - 0.5) * rx - 0.5) + 1, F.lit(W - 1)
-    ).cast("int")
-    needed = out_tiles.select(
-        "otr",
-        "otc",
-        F.explode(F.sequence((src_r0 / Tsz).cast("int"), (src_r1 / Tsz).cast("int"))).alias("tile_row"),
-        src_c0.alias("_c0"),
-        src_c1.alias("_c1"),
-    ).select(
-        "otr",
-        "otc",
-        "tile_row",
-        F.explode(F.sequence((F.col("_c0") / Tsz).cast("int"), (F.col("_c1") / Tsz).cast("int"))).alias(
-            "tile_col"
-        ),
-    )
-    gathered = needed.join(rf.df.select("tile_row", "tile_col", "values"), ["tile_row", "tile_col"])
+    # each input tile goes to the output tiles that read it, per axis
+    msgs = rf.df.select("tile_row", "tile_col", "values")
+    for key, out_key, axis in (
+        ("tile_row", "otr", (meta.n_tile_rows, new_meta.n_tile_rows, H, new_H, ry)),
+        ("tile_col", "otc", (meta.n_tile_cols, new_meta.n_tile_cols, W, new_W, rx)),
+    ):
+        lo, hi = (F.element_at(F.lit(a.astype(np.int32)), F.col(key) + 1) for a in _scatter_ranges(*axis, Tsz))
+        msgs = msgs.filter(lo <= hi).withColumn(out_key, F.explode(F.sequence(lo, hi)))
     raster_id = rf.raster_id  # primitive capture (closure must not capture rf)
 
-    # no annotations: applyInArrow infers its eval type from them
-    def kern(key, table):
-        otr, otc = key[0].as_py(), key[1].as_py()
+    def kern(key, group):
+        otr, otc = key
         or0, oc0 = otr * Tsz, otc * Tsz
         oth_ = min(Tsz, new_H - or0)
         otw_ = min(Tsz, new_W - oc0)
         # assemble the needed source window
-        srs = table.column("tile_row").to_pylist()
-        scs = table.column("tile_col").to_pylist()
+        srs = group.column("tile_row").to_pylist()
+        scs = group.column("tile_col").to_pylist()
         r_lo = min(srs) * Tsz
         c_lo = min(scs) * Tsz
         r_hi = min(max(srs) * Tsz + Tsz, H)
         c_hi = min(max(scs) * Tsz + Tsz, W)
         win = np.full((r_hi - r_lo, c_hi - c_lo), np.nan)
-        flat, offs = list_parts(table.column("values"))
+        flat, offs = list_parts(group.column("values"))
         for i, (tr_, tc_) in enumerate(zip(srs, scs)):
             rr, cc = tr_ * Tsz, tc_ * Tsz
             th_ = min(Tsz, H - rr)
@@ -126,12 +113,10 @@ def resample(rf: RasterFrame, cell_size: float, *, method: str = "bilinear") -> 
             + a10 * wy * (1 - wx)
             + a11 * wy * wx
         )
-        return pa.Table.from_batches([tile_batch(raster_id, [otr], [otc], [out])])
+        return out
 
-    # grouped by the output tile's own columns: aliasing otr/otc onto the
-    # input's tile_row/tile_col would duplicate a field of the Arrow struct
-    out_df = gathered.groupBy("otr", "otc").applyInArrow(kern, TILE_SCHEMA)
-    return RasterFrame(out_df, new_meta, rf.raster_id)
+    out = group_map(msgs, ["otr", "otc"], lambda g: tile_groups(raster_id, g, kern), TILE_SCHEMA)
+    return RasterFrame(out, new_meta, raster_id)
 
 
 RasterFrame.resample = lambda self, cell_size, method="bilinear": resample(self, cell_size, method=method)

@@ -6,10 +6,11 @@ Spark has no stencil concept; the engine builds one: each tile needs a ring of
 into (target_tile ← neighbour strips) messages — **strips, not whole tiles**: the
 shuffle carries O(h·T) cells per neighbour edge instead of O(T²). The Python
 boundary is Arrow end to end: one ``mapInArrow`` pass cuts the strips in numpy
-from each batch's flat ``values`` buffer, and one ``groupBy(tile).applyInArrow``
-assembles each padded window and runs the numpy kernel, whose output goes back
-as Arrow float64 — NaN stays NaN, with no pandas hop and no per-cell
-higher-order function anywhere in the plan.
+from each batch's flat ``values`` buffer, and one sorted stream of strips per
+target tile (:func:`tiles.group_map`: one Python call per Arrow batch, never a
+grouped map per tile) assembles each padded window and runs the numpy kernel,
+whose output goes back as Arrow float64 — NaN stays NaN, with no pandas hop
+and no per-cell higher-order function anywhere in the plan.
 
 Numerics are replicated from the reference's scipy/skimage backends (none of which
 exist here):
@@ -17,7 +18,7 @@ exist here):
 - blur   ≡ scipy.ndimage.gaussian_filter(sigma, truncate=4.0, mode='reflect')
            (reference src/rastr/raster.py:1185-1221); preserve_nan's
            extrapolate → blur → restore-mask composition runs as ONE fused
-           stencil round, and a radius-0 σ is the identity (no job)
+           stencil round (no NaN probe); a radius-0 σ is the identity (no job)
 - sobel  ≡ skimage.filters.sobel: sqrt(2·(h²+v²)) with smooth [1,2,1]/4 ⊗ deriv
            [1,0,-1]/2 kernels, reflect border, / cell_size
            (reference src/rastr/raster.py:1164-1183; golden test_raster.py:1878-1906)
@@ -52,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..meta import RasterMeta
-from ..tiles import TILE_SCHEMA, RasterFrame, float_lists, list_parts, tile_batch
+from ..tiles import TILE_SCHEMA, RasterFrame, float_lists, group_map, list_parts, tile_batch, tile_groups
 
 
 def _cut_strips(meta: RasterMeta, values, src, s_tr, s_tc, ttr, ttc, h) -> pa.RecordBatch:
@@ -167,6 +168,17 @@ def halo_messages_targeted(rf: RasterFrame, targets: DataFrame) -> DataFrame:
     )
 
 
+def halo_window(group, rs: int, re: int, cs: int, ce: int) -> np.ndarray:
+    """One target tile's strip messages (a :func:`tiles.group_map` group) pasted
+    into the (re−rs)×(ce−cs) window at global origin (rs, cs), NaN elsewhere."""
+    padded = np.full((re - rs, ce - cs), np.nan)
+    flat, offs = list_parts(group.column("strip"))
+    dims = zip(*(group.column(k).to_numpy() for k in ("gr0", "gc0", "n_rows", "n_cols")))
+    for i, (r, c, n, m) in enumerate(dims):
+        padded[r - rs : r - rs + n, c - cs : c - cs + m] = flat[offs[i] : offs[i + 1]].reshape(n, m)
+    return padded
+
+
 def stencil_apply(
     rf: RasterFrame,
     h: int | None,
@@ -174,9 +186,10 @@ def stencil_apply(
     *,
     targets: DataFrame | None = None,
 ) -> RasterFrame:
-    """Run ``kernel(padded, valid_mask, info)`` per tile through one
-    ``groupBy(tile).applyInArrow``; the kernel returns the (th, tw) core,
-    emitted as Arrow float64 so NaN stays NaN. Two forms, one plan each:
+    """Run ``kernel(padded, valid_mask, info)`` per tile through one sorted
+    stream of halo messages (:func:`tiles.group_map`: one Python call per
+    Arrow batch, not per tile); the kernel returns the (th, tw) core, emitted
+    as Arrow float64 so NaN stays NaN. Two message builders:
 
     - ``targets is None``: every tile at radius ``h``, messages from the
       ring-offset builder (:func:`halo_messages`). ``padded`` is the full
@@ -193,7 +206,8 @@ def stencil_apply(
       ``(r0, c0, th, tw, h, top, left)``, (top, left) the core's offset
       inside the clipped window, and ``valid_mask`` is all-true. Per-tile
       radii routinely reach far above T, up to the grid diagonal. This is
-      the exact-radius extrapolate round.
+      the exact-radius extrapolate round; its strips stay rows of the
+      stream, so a whole-raster window never becomes one row.
     """
     meta = rf.meta
     Tsz = meta.tile_size
@@ -202,27 +216,17 @@ def stencil_apply(
     clip = targets is not None
     msgs = halo_messages(rf, h) if targets is None else halo_messages_targeted(rf, targets)
 
-    # no annotations: applyInArrow infers its eval type from them
-    def assemble(key, table):
-        tr, tc = key[0].as_py(), key[1].as_py()
+    def assemble(key, group):
+        tr, tc = key
         # per-group radius from the messages (constant within a target tile;
         # differs across tiles in the exact-radius extrapolate round)
-        h_ = table.column("h")[0].as_py()
+        h_ = group.column("h")[0].as_py()
         r0, c0 = tr * Tsz, tc * Tsz
         th_, tw_ = min(Tsz, H - r0), min(Tsz, W - c0)
+        rs, re, cs, ce = r0 - h_, r0 + th_ + h_, c0 - h_, c0 + tw_ + h_
         if clip:
-            rs, re = max(r0 - h_, 0), min(r0 + th_ + h_, H)
-            cs, ce = max(c0 - h_, 0), min(c0 + tw_ + h_, W)
-        else:
-            rs, re = r0 - h_, r0 + th_ + h_
-            cs, ce = c0 - h_, c0 + tw_ + h_
-        padded = np.full((re - rs, ce - cs), np.nan)
-        flat, offs = list_parts(table.column("strip"))
-        dims = zip(*(table.column(k).to_numpy() for k in ("gr0", "gc0", "n_rows", "n_cols")))
-        for i, (gr0, gc0, n_rows, n_cols) in enumerate(dims):
-            padded[gr0 - rs : gr0 - rs + n_rows, gc0 - cs : gc0 - cs + n_cols] = flat[
-                offs[i] : offs[i + 1]
-            ].reshape(n_rows, n_cols)
+            rs, re, cs, ce = max(rs, 0), min(re, H), max(cs, 0), min(ce, W)
+        padded = halo_window(group, rs, re, cs, ce)
         if clip:
             valid = np.ones(padded.shape, dtype=bool)
             info = (r0, c0, th_, tw_, h_, r0 - rs, c0 - cs)
@@ -233,11 +237,10 @@ def stencil_apply(
                 (rows >= 0) & (rows < H) & (cols >= 0) & (cols < W), padded.shape
             )
             info = (r0, c0, th_, tw_, h_)
-        core = kernel(padded, valid, info)
-        return pa.Table.from_batches([tile_batch(raster_id, [tr], [tc], [core])])
+        return kernel(padded, valid, info)
 
-    out = msgs.groupBy("tile_row", "tile_col").applyInArrow(assemble, TILE_SCHEMA)
-    return RasterFrame(out, meta, rf.raster_id)
+    out = group_map(msgs, ["tile_row", "tile_col"], lambda g: tile_groups(raster_id, g, assemble), TILE_SCHEMA)
+    return RasterFrame(out, meta, raster_id)
 
 
 def _reflect_index(i: int, lo: int, hi: int) -> int:
@@ -306,8 +309,9 @@ def blur(rf: RasterFrame, sigma: float, *, preserve_nan: bool = True) -> RasterF
     """Gaussian blur, σ in world units (reference src/rastr/raster.py:1185-1221).
 
     preserve_nan: the reference composition NN-extrapolate → blur → restore
-    NaN mask, run as ONE fused stencil round (see below); a raster without NaN
-    takes the plain round. A σ whose truncated kernel radius is 0 returns
+    NaN mask, run as ONE fused stencil round (see below), NaN or not: on a
+    NaN-free raster the fused kernel IS the plain blur bit for bit, so no
+    probe job picks the round. A σ whose truncated kernel radius is 0 returns
     ``rf`` unchanged without running a job: scipy's radius-0 kernel is
     ``[1.0]``, so the blur is the identity and, with preserve_nan, extrapolate
     → identity → restore mask gives back the input too.
@@ -318,10 +322,7 @@ def blur(rf: RasterFrame, sigma: float, *, preserve_nan: bool = True) -> RasterF
         return rf
     dtype = np.dtype(rf.meta.dtype)
 
-    has_nan = preserve_nan and (
-        rf.df.select(F.max(_has_nan().cast("int")).alias("x")).collect()[0]["x"] or 0
-    )
-    if has_nan:
+    if preserve_nan:
         # FUSED single round (r7): local exact NN fill + reflect + blur + NaN
         # restore in ONE stencil pass over the ORIGINAL raster — no
         # extrapolate pre-pass and no restore join. Exactness: the restored
@@ -336,11 +337,9 @@ def blur(rf: RasterFrame, sigma: float, *, preserve_nan: bool = True) -> RasterF
         # restored to NaN anyway. Reflection needs no extra margin: an
         # out-of-grid position read by valid cell v mirrors to an in-grid cell
         # within Chebyshev radius of v (|r_v − (k−1)| ≤ radius − 1 when r_v +
-        # k ≤ radius), so reflected reads obey the same bound. Interleaved A/B
-        # on the 16.8M-cell bench raster: 6.7-8.5 s → (see
-        # OPTIMIZATION_r07.md), full-raster bit-equality against the composed
-        # path verified on scattered-NaN, blob, edge-band, and mostly-NaN
-        # layouts.
+        # k ≤ radius), so reflected reads obey the same bound. Bit-equal to
+        # the composed path on scattered-NaN, blob, edge-band and mostly-NaN
+        # layouts (OPTIMIZATION_r07.md).
         ext = radius
         hp = int(math.ceil(radius * math.sqrt(2.0)))
         h_fused = ext + hp

@@ -29,12 +29,13 @@ from typing import Collection
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geometry import Geometry, catmull_rom_smooth
-from ..tiles import RasterFrame, tile_dims_cols
-from .stencils import halo_messages
+from ..tiles import RasterFrame, group_map
+from .stencils import halo_messages, halo_window
 
 CONTOUR_PERTURB_EPS = 1e-10
 
@@ -182,7 +183,10 @@ def contour_segments(rf: RasterFrame, levels) -> DataFrame:
     Exposed separately so the distributed part of contouring (cross-tile
     segment extraction over halo exchange) can be materialized and the stitch/
     dissolve replayed independently (the artifact-oracle pattern); the kernel
-    itself (_block_segments) stays the only non-SQL step.
+    itself (_block_segments) stays the only non-SQL step. Each tile's 1-cell
+    halo strips arrive as one run of a sorted Arrow stream
+    (:func:`tiles.group_map`), so one Python call extracts the segments of
+    every tile that ends in its batch.
     """
     from .aggregates import rf_stats
 
@@ -200,33 +204,26 @@ def contour_segments(rf: RasterFrame, levels) -> DataFrame:
 
     Tsz = meta.tile_size
     H, W = meta.height, meta.width
-    msgs = halo_messages(rf, 1)
 
-    def extract(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tr, tc = int(key[0]), int(key[1])
-        r0, c0 = tr * Tsz, tc * Tsz
-        th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
-        padded = np.full((th + 2, tw + 2), np.nan)
-        for gr0, gc0, n_rows, n_cols, strip in zip(
-            pdf["gr0"].to_numpy(), pdf["gc0"].to_numpy(),
-            pdf["n_rows"].to_numpy(), pdf["n_cols"].to_numpy(), pdf["strip"].to_numpy(),
-        ):
-            rr = int(gr0) - (r0 - 1)
-            cc = int(gc0) - (c0 - 1)
-            frag = np.asarray(strip, dtype=np.float64).reshape(int(n_rows), int(n_cols))
-            padded[rr : rr + frag.shape[0], cc : cc + frag.shape[1]] = frag
+    def extract(groups):
         recs = []
-        # blocks owned by this tile: top-left sample (r, c) with r in [r0, r0+th),
-        # c in [c0, c0+tw) — use padded window rows [1, 1+th+1) to include the
-        # boundary block reaching into the next tile
-        win = padded[1 : 2 + th, 1 : 2 + tw]
-        for level, p in plevels:
-            for (ra, ca), (rb, cb) in _block_segments(win, p, r0, c0):
-                recs.append((level, ra, ca, rb, cb))
-        return pd.DataFrame(recs, columns=["level", "ra", "ca", "rb", "cb"])
+        for (tr, tc), group in groups:
+            r0, c0 = tr * Tsz, tc * Tsz
+            th, tw = min(Tsz, H - r0), min(Tsz, W - c0)
+            padded = halo_window(group, r0 - 1, r0 + th + 1, c0 - 1, c0 + tw + 1)
+            # blocks owned by this tile: top-left sample (r, c) with r in [r0, r0+th),
+            # c in [c0, c0+tw) — use padded window rows [1, 1+th+1) to include the
+            # boundary block reaching into the next tile
+            win = padded[1 : 2 + th, 1 : 2 + tw]
+            for level, p in plevels:
+                for (ra, ca), (rb, cb) in _block_segments(win, p, r0, c0):
+                    recs.append((level, ra, ca, rb, cb))
+        cols = np.array(recs, dtype=np.float64).reshape(-1, 5).T
+        return pa.RecordBatch.from_arrays([pa.array(c) for c in cols], names=["level", "ra", "ca", "rb", "cb"])
 
-    return msgs.groupBy("tile_row", "tile_col").applyInPandas(
-        extract, "level double, ra double, ca double, rb double, cb double"
+    return group_map(
+        halo_messages(rf, 1), ["tile_row", "tile_col"], extract,
+        "level double, ra double, ca double, rb double, cb double",
     )
 
 

@@ -16,13 +16,14 @@ action. Meta lives on the driver (one tiny object), so alignment preconditions
 (reference: src/rastr/raster.py:191-202) are checked eagerly at plan-build time,
 exactly like the reference raises before computing.
 
-Python crosses the boundary per tile in one form, Arrow end to end:
+Python crosses the boundary in Arrow batches end to end, never once per tile:
 :meth:`RasterFrame.map_tiles` (one ``mapInArrow`` pass, each tile's slices of
 the batch's flat buffers in, :func:`tile_batch` out) for elementwise kernels,
-PIP masks and the generators, ``mapInArrow``/``applyInArrow`` with
-:func:`tile_batch` for the stencils. A float64 buffer carries no validity
-bitmap, so NaN stays the nodata sentinel inside ``values`` and SQL NULL never
-appears there.
+PIP masks and the generators, and :func:`group_map` (one ``mapInArrow`` pass
+over a stream sorted by key, groups cut per batch) for the kernels that need
+several rows per tile: the stencils, resample and contour segments. A float64
+buffer carries no validity bitmap, so NaN stays the nodata sentinel inside
+``values`` and SQL NULL never appears there.
 """
 
 from __future__ import annotations
@@ -130,6 +131,66 @@ def _map_tile_batches(batches, fn, cols, meta: RasterMeta, raster_id: str):
             slices = [flat[offs[i] : offs[i + 1]] for flat, offs in parts]
             cores.append(fn(r0, c0, min(Tsz, H - r0), min(Tsz, W - c0), *slices))
         yield tile_batch(raster_id, trs, tcs, cores)
+
+
+def tile_groups(raster_id: str, groups, fn: Callable) -> pa.RecordBatch:
+    """One :func:`tile_batch` of ``fn(key, rows)`` per :func:`group_map` group
+    keyed by a tile's (row, col)."""
+    return tile_batch(
+        raster_id, [k[0] for k, _ in groups], [k[1] for k, _ in groups], [fn(k, g) for k, g in groups]
+    )
+
+
+def group_map(df: DataFrame, keys: list[str], fn: Callable, schema) -> DataFrame:
+    """The engine's grouped map without one Python call per group:
+    ``fn(groups)`` gets the list of ``(key, rows)`` groups that end inside one
+    Arrow batch — ``key`` a tuple of Python scalars, ``rows`` a
+    ``pa.RecordBatch`` of all the group's rows — and returns one
+    ``pa.RecordBatch`` of ``schema`` for all of them.
+
+    One ``mapInArrow`` pass over ``df.repartition(*keys)
+    .sortWithinPartitions(*keys)``: a hash exchange puts each group in one
+    partition (whole, never split: no ``rebalance``), the sort makes it one
+    contiguous run of rows, and :func:`_group_map_batches` cuts the runs
+    in numpy, carrying an unfinished group across the Arrow batch boundary.
+    The rows stay Arrow rows, so no group is ever packed into one giant row."""
+
+    def kernel(batches):
+        return _group_map_batches(batches, keys, fn)
+
+    return df.repartition(*keys).sortWithinPartitions(*keys).mapInArrow(kernel, schema)
+
+
+def _group_map_batches(batches, keys, fn):
+    """:func:`group_map`'s batch body, module-level like
+    :func:`_map_tile_batches` (unpickling the kernel installs
+    :mod:`rastr_spark.zipcache`). The open group's slices wait in a list and
+    are combined once, when the group ends."""
+    open_key, parts = None, []
+    for b in batches:
+        n = b.num_rows
+        if not n:
+            continue
+        cols = [b.column(k).to_numpy(zero_copy_only=False) for k in keys]
+        starts = np.flatnonzero(np.any([c[1:] != c[:-1] for c in cols], axis=0)) + 1
+        runs = [0, *starts.tolist(), n]
+        done = []
+        for lo, hi in zip(runs[:-1], runs[1:]):
+            key = tuple(b.column(k)[lo].as_py() for k in keys)
+            if parts and key != open_key:
+                done.append((open_key, _whole(parts)))
+                parts = []
+            open_key = key
+            parts.append(b.slice(lo, hi - lo))
+        if done:
+            yield fn(done)
+    if parts:
+        yield fn([(open_key, _whole(parts))])
+
+
+def _whole(parts: list) -> pa.RecordBatch:
+    """One batch of a group's slices (no copy for a group inside one batch)."""
+    return parts[0] if len(parts) == 1 else pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
 
 
 @dataclass

@@ -30,7 +30,7 @@ from rastr_spark.operators.rasterize import (
     rasterize_z_gdf,
     validate_no_overlapping_geometries,
 )
-from rastr_spark.tiles import RasterFrame
+from rastr_spark.tiles import RasterFrame, tile_spans
 
 
 class TestDelaunay:
@@ -291,6 +291,58 @@ class TestRasterizeZ:
         max_rf = rasterize_z_gdf(spark, [t1, t2], [z1, z2], cell_size=1.0, crs="EPSG:2193", agg="max", tile_size=8)
         np.testing.assert_allclose(max_rf.to_numpy()[np.isfinite(max_rf.to_numpy())], 2.0)
 
+    def test_triangulates_each_geometry_once(self, spark, monkeypatch):
+        # a 40-vertex ring over 36 tiles, a triangle and a collinear (skipped)
+        # line: one Delaunay call per geometry, none inside the tile kernel,
+        # and every cell bit-equal to interpolating each geometry over the
+        # whole grid at once
+        from rastr_spark.operators import interpolate, rasterize
+
+        t = np.linspace(0, 2 * np.pi, 41)[:-1]
+        ring = Geometry.polygon(np.column_stack([12 + 11.5 * np.cos(t), 12 + 11.5 * np.sin(t)]))
+        tri = Geometry.polygon([(2, 3), (20, 5), (9, 21)])
+        line = Geometry.linestring(np.array([(1.0, 1.0), (5.0, 5.0), (9.0, 9.0)]))
+        geoms = [ring, tri, line]
+        zs = [np.append(np.sin(3 * t), 0.0), np.array([1.0, 4.0, 2.0, 1.0]), np.array([0.0, 1.0, 2.0])]
+        calls, kernels = [], []
+        orig_delaunay, orig_generate = interpolate.delaunay, RasterFrame.generate_tiles
+
+        def counting(points):
+            calls.append(len(points))
+            return orig_delaunay(points)
+
+        def capture(spark_, meta, fn, *, raster_id):
+            kernels.append((meta, fn))
+            return orig_generate(spark_, meta, fn, raster_id=raster_id)
+
+        monkeypatch.setattr(interpolate, "delaunay", counting)
+        monkeypatch.setattr(rasterize, "delaunay", counting, raising=False)
+        monkeypatch.setattr(RasterFrame, "generate_tiles", staticmethod(capture))
+        rf = rasterize_z_gdf(spark, geoms, zs, cell_size=1.0, crs="EPSG:2193", agg="mean", tile_size=4)
+        (meta, fn), = kernels
+        assert meta.n_tile_rows * meta.n_tile_cols == 36
+        n_build = len(calls)
+        for _, _, r0, c0, th, tw in tile_spans(meta):
+            fn(r0, c0, th, tw)
+        assert n_build == len(geoms) and len(calls) == n_build, (n_build, len(calls))
+        monkeypatch.undo()
+
+        px, py = meta.cell_centres(*np.mgrid[: meta.height, : meta.width].reshape(2, -1))
+        cnt, s = np.zeros(px.shape), np.zeros(px.shape)
+        for g, z in zip(geoms, zs):
+            try:
+                zi = interpn_kernel(g.xy, z, xi=np.column_stack((px, py)))
+            except InterpolationError:
+                continue
+            ok = ~np.isnan(zi)
+            cnt[ok] += 1
+            s[ok] += zi[ok]
+        with np.errstate(invalid="ignore", divide="ignore"):
+            want = np.where(cnt > 0, s / cnt, np.nan).reshape(meta.shape)
+        got = rf.to_numpy()
+        assert np.isfinite(got).sum() > 300
+        assert got.tobytes() == want.tobytes()
+
     def test_empty_raises(self, spark):
         with pytest.raises(ValueError, match="empty"):
             rasterize_z_gdf(spark, [], [], cell_size=1.0, crs="EPSG:2193")
@@ -373,24 +425,15 @@ class TestVectorize:
 
     def test_contour_distributed_stitch_large_grid(self, spark):
         # a single isoline crossing 16 tiles of a 1024² grid must come back as ONE
-        # stitched polyline spanning the full width — the stitch runs inside
+        # stitched polyline spanning the full width — segments come from one
+        # sorted halo stream (tiles.group_map) and the stitch runs inside
         # groupBy(level).applyInPandas, never on the driver
         N, TS = 1024, 256
         meta = RasterMeta(1.0, "EPSG:2193", Affine(1, 0, 0, 0, -1, N), N, N, tile_size=TS)
-        rf = RasterFrame.generate(
-            spark, meta, lambda r, c: r.cast("double")
-        ) if hasattr(RasterFrame, "generate") else None
-        if rf is None:
-            import pyspark.sql.functions as F
-            base = RasterFrame.full(spark, meta, 0.0)
-            df = base.df.select(
-                "raster_id", "tile_row", "tile_col", "cell_id",
-                F.transform(
-                    F.sequence(F.lit(0), F.size("values") - 1),
-                    lambda i: (F.col("tile_row") * TS + (i / TS).cast("int")).cast("double"),
-                ).alias("values"),
-            )
-            rf = RasterFrame(df, meta, base.raster_id)
+        rf = RasterFrame.generate_tiles(
+            spark, meta, lambda r0, c0, th, tw: np.repeat(np.arange(r0, r0 + th, dtype=float), tw),
+            raster_id="ramp",
+        )
         lines = rf.contour_lines([511.5], smoothing=False).collect()
         assert len(lines) == 1  # one polyline despite 16-tile extraction
         xs = np.asarray(lines[0]["xs"])

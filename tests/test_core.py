@@ -117,6 +117,81 @@ class TestTilesRoundtrip:
         assert rf.meta.crs == "EPSG:4326"
 
 
+class TestGroupMap:
+    """``tiles.group_map``: one Python call per Arrow batch over a sorted
+    stream, every group handed to ``fn`` whole and exactly once."""
+
+    SCHEMA = "a int, b int, n long, total long, lo long, hi long"
+
+    @staticmethod
+    def _want(rows):
+        want = {}
+        for a, b, v in rows:
+            n, t, lo, hi = want.get((a, b), (0, 0, v, v))
+            want[(a, b)] = (n + 1, t + v, min(lo, v), max(hi, v))
+        return want
+
+    def _run(self, spark, rows, conf):
+        import pyarrow as pa
+
+        from rastr_spark.tiles import group_map
+
+        def summary(groups):  # nested: a worker cannot import this test module
+            rows = [
+                (a, b, g.num_rows, sum(v := g.column("v").to_pylist()), min(v), max(v))
+                for (a, b), g in groups
+            ]
+            cols = list(zip(*rows))
+            return pa.RecordBatch.from_arrays(
+                [pa.array(cols[0], pa.int32()), pa.array(cols[1], pa.int32())]
+                + [pa.array(c, pa.int64()) for c in cols[2:]],
+                names=["a", "b", "n", "total", "lo", "hi"],
+            )
+
+        prev = {k: spark.conf.get(k) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            df = spark.createDataFrame(rows, "a int, b int, v long")
+            out = group_map(df, ["a", "b"], summary, self.SCHEMA)
+            got = out.collect()
+            p = out._jdf.queryExecution().executedPlan().toString()
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+        assert "MapInArrow" in p and "FlatMapGroups" not in p, p
+        keys = [(r["a"], r["b"]) for r in got]
+        assert len(keys) == len(set(keys)), "a group was handed to fn more than once"
+        return {(r["a"], r["b"]): (r["n"], r["total"], r["lo"], r["hi"]) for r in got}
+
+    @pytest.mark.parametrize("per_batch", [1, 2, 7])
+    def test_groups_span_batch_boundaries(self, spark, per_batch):
+        rng = np.random.RandomState(per_batch)
+        rows = [
+            (int(a), int(b), int(v))
+            for a in range(5)
+            for b in range(4)
+            for v in rng.randint(-50, 50, size=1 + (a * 4 + b) % 9)
+        ]
+        rng.shuffle(rows)
+        got = self._run(spark, rows, {"spark.sql.execution.arrow.maxRecordsPerBatch": str(per_batch)})
+        assert got == self._want(rows)
+
+    def test_empty_partitions(self, spark):
+        # two groups over 8 shuffle partitions, without AQE coalescing: most
+        # partitions reach the kernel empty; an empty input yields no row
+        conf = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "8"}
+        rows = [(0, 0, 1), (3, 1, 2), (0, 0, 5)]
+        assert self._run(spark, rows, conf) == self._want(rows)
+        assert self._run(spark, [], conf) == {}
+
+    def test_one_group_larger_than_many_batches(self, spark):
+        rows = [(1, 2, v) for v in range(1000)] + [(0, 0, 7), (2, 0, 3)]
+        got = self._run(spark, rows, {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"})
+        assert got == self._want(rows)
+        assert got[(1, 2)] == (1000, sum(range(1000)), 0, 999)
+
+
 class TestGeometry:
     def test_encode_decode(self):
         g = Geometry.polygon([(0, 0), (4, 0), (4, 4), (0, 4)], holes=[[(1, 1), (2, 1), (2, 2), (1, 2)]])

@@ -106,6 +106,17 @@ class TestMinHashFamilies:
         }
         assert jvm == arrow
 
+    def test_signature_plan_tokenizes_once(self, spark):
+        """The tokenize + hash chain runs once per doc: docs with fewer than n
+        token hashes (short, empty, NULL) drop out in the Arrow stage, not in
+        a Spark filter that would evaluate the chain a second time."""
+        docs = _docs(spark, [(0, "a b c d"), (1, "a b"), (2, ""), (3, None), (4, "x  y z"), (5, "q")])
+        sig = D.minhash_signatures_df(docs, n=3, num_hashes=4)
+        got = {r["id"]: r["sig"] for r in sig.collect()}
+        assert sorted(got) == [0, 4] and all(len(s) == 4 for s in got.values())
+        p = sig._jdf.queryExecution().executedPlan().toString()
+        assert p.count("transform(") == 1, p
+
     def test_signature_batch_emits_no_warning(self):
         """The numpy XXH64 wraps without numpy's scalar-overflow warning
         (raised here as an error); equal token streams give equal signatures."""

@@ -417,11 +417,10 @@ class TestStencilFixedCosts:
         np.testing.assert_array_equal(out.to_numpy(), arr)
 
     @pytest.mark.parametrize("holes", [False, True])
-    def test_blur_nan_probe_is_codegen(self, spark, monkeypatch, holes):
-        # preserve_nan's probe is one codegen array_max aggregate, not an
-        # interpreted higher-order function over every cell; the blur it
-        # picks is the plain round without NaN and the fused
-        # extrapolate → blur → restore composition with NaN
+    def test_blur_plans_without_a_job(self, spark, holes):
+        # preserve_nan always runs the fused extrapolate → blur → restore
+        # round: no probe job decides whether the raster holds NaN, and a
+        # NaN-free raster comes out as the plain blur
         from rastr_spark.operators.stencils import extrapolate
 
         src = self._nan_raster(spark)
@@ -429,20 +428,9 @@ class TestStencilFixedCosts:
         if not holes:
             arr = np.nan_to_num(arr, nan=0.5)
             src = RasterFrame.from_numpy(spark, arr, src.meta)
-        probes = []
-        orig = type(src.df).collect
-
-        def collect(df):
-            rows = orig(df)
-            probes.append(df._jdf.queryExecution().executedPlan().toString())
-            return rows
-
-        with monkeypatch.context() as m:
-            m.setattr(type(src.df), "collect", collect)
+        with job_group(spark, f"blur-plan-{holes}") as jobs:
             out = src.blur(1.0)
-        assert len(probes) == 1, probes
-        assert "lambdafunction" not in probes[0], f"the NaN probe evaluates a HOF:\n{probes[0]}"
-        assert "array_max" in probes[0], probes[0]
+        assert jobs == [], f"blur launched {len(jobs)} job(s) before its stencil runs"
         base = extrapolate(src) if holes else src
         want = base.blur(1.0, preserve_nan=False).to_numpy()
         want[np.isnan(arr)] = np.nan
@@ -469,14 +457,24 @@ class TestStencilFixedCosts:
         }
 
     def test_stencil_plans_run_arrow_kernels_without_hofs(self, spark, rf):
-        # the halo strips are cut and the kernels run through mapInArrow /
-        # applyInArrow: no interpreted higher-order function, no pandas hop
-        for name, out in self._stencil_ops(spark, rf).items():
-            out.df.collect()
-            p = out.df._jdf.queryExecution().executedPlan().toString()
+        # the halo strips are cut and the kernels run through mapInArrow over
+        # one sorted stream (tiles.group_map): no grouped map per tile, no
+        # interpreted higher-order function, no pandas hop
+        from rastr_spark.operators.stencils import extrapolate
+        from rastr_spark.operators.vectorize import contour_segments
+
+        ops = {k: v.df for k, v in self._stencil_ops(spark, rf).items()}
+        # the holes raster takes the targeted dense-strip round (locked in
+        # test_extrapolate_plans_from_one_census_read)
+        ops["extrapolate_targeted"] = extrapolate(self._holes_raster(spark)).df
+        ops["contour_segments"] = contour_segments(self._nan_raster(spark), [0.5])
+        for name, df in ops.items():
+            df.collect()
+            p = df._jdf.queryExecution().executedPlan().toString()
             assert "lambdafunction" not in p, f"{name} evaluates a higher-order function:\n{p}"
-            assert "InPandas" not in p, f"{name} crosses pandas:\n{p}"
-            assert "FlatMapGroupsInArrow" in p, f"{name} lost its grouped Arrow kernel:\n{p}"
+            assert "MapInArrow" in p, f"{name} lost its Arrow kernel:\n{p}"
+            for node in ("InPandas", "FlatMapGroupsIn"):
+                assert node not in p, f"{name} plans {node}:\n{p}"
 
     def _tile_kernel_ops(self, spark):
         from rastr_spark.operators import interpolate, joins, rasterize

@@ -317,6 +317,35 @@ class TestResample:
         with pytest.raises(NotImplementedError):
             base_raster.resample(5.0, method="cubic")
 
+    @pytest.mark.parametrize(
+        "n,tile,factor", [(70, 16, 1 / 0.3), (70, 16, 2.0), (94, 16, 0.5), (94, 4, 1 / 7), (70, 4, 1 / 40),
+                          (94, 16, 1 / 1.7), (9, 4, 4.0), (5, 8, 0.5)],
+    )
+    def test_scatter_ranges_equal_the_gather_windows(self, spark, n, tile, factor):
+        # the (output tile, input tile) pairs the driver plans per axis are
+        # exactly those whose closed-form source window, evaluated by Spark
+        # per output tile, covers the input tile; (70, 4, 1/40) leaves input
+        # tiles that no output tile reads
+        from pyspark.sql import functions as F
+
+        from rastr_spark.operators.resample import _scatter_ranges
+
+        N = int(np.ceil(n * factor))
+        scale = n / N
+        o = F.col("o")
+        ot = F.least(F.lit(tile), F.lit(N) - o * tile).cast("int")
+        first = F.greatest(F.floor((o * tile + 0.5) * scale - 0.5) - 1, F.lit(0)).cast("int")
+        last = F.least(F.ceil((o * tile + ot - 0.5) * scale - 0.5) + 1, F.lit(n - 1)).cast("int")
+        rows = spark.range(-(-N // tile)).select(F.col("id").cast("int").alias("o")).select(
+            "o", F.explode(F.sequence((first / tile).cast("int"), (last / tile).cast("int"))).alias("t")
+        )
+        want = {(r["o"], r["t"]) for r in rows.collect()}
+        lo, hi = _scatter_ranges(-(-n // tile), -(-N // tile), n, N, scale, tile)
+        got = {(int(u), t) for t in range(lo.size) for u in range(lo[t], hi[t] + 1)}
+        assert got == want
+        if (n, tile, factor) == (70, 4, 1 / 40):
+            assert (lo > hi).any(), "no input tile was left unread"
+
 
 class TestDilateProperties:
     """Port of the reference's Hypothesis dilate contract (test_raster.py:2126-2209),
